@@ -12,10 +12,16 @@ reference's hardcoded service-path depth, LuceneReaderImpl.java:104) hits
 ordered (score desc, doc_id asc).
 
 Visibility model: the reference soft-commits after ≥16 docs or 1 s
-(LuceneIndexBean.java:78-79).  Batch-Spark makes this strict instead:
-mutations buffer on the driver and are committed (index rebuilt at a new
-snapshot) lazily before the next search — the analogue of commit+reopen at
-SearcherUpdateServiceImpl.java:117-127.  ``commit()`` forces it.
+(LuceneIndexBean.java:78-79).  Here mutations buffer on the driver (the
+last state per key) and are committed lazily before the next search — the
+analogue of commit+reopen at SearcherUpdateServiceImpl.java:117-127;
+``commit()`` forces it.  The first commit into an empty warehouse is a full
+build.  Every later commit clears the collections cleared since the last
+one, then applies all pending upserts and deletes as ONE IndexMutator pass
+at a new snapshot; deletes reach every live key, whoever wrote it.  That
+commit is the wait a searcher sees after writing: for 16 writes and 4
+deletes over a 10k-doc index at local[4] on a 4-vCPU host it takes about
+7 s, and the search that runs it about 10 s (perfbench ``index_refresh``).
 
 Each hit is a ``LuceneEntry(id, score, external_id)`` —
 client/src/main/java/com/caucho/lucene/LuceneEntry.java:3-28.
@@ -71,8 +77,9 @@ class LuceneFacade:
         # (collection, id) -> row dict or None (deleted); final state of the
         # ops since the last commit (last-write-wins within a batch)
         self._pending: dict[tuple[str, str], dict | None] = {}
-        # keys known to exist in the committed index
-        self._committed_keys: set[tuple[str, str]] = set()
+        # collections cleared since the last commit; cleared before the
+        # pending ops apply, so writes after a clear survive it
+        self._cleared: set[str] = set()
         self._dirty = False
         self._engine: SearchEngine | None = None
 
@@ -140,10 +147,9 @@ class LuceneFacade:
     def clear(self, collection: str) -> None:
         self._check(collection, "collection")
         collection = sanitize_collection(collection)
-        for key in [k for k in self._pending if k[0] == collection]:
-            self._pending[key] = None
-        for key in [k for k in self._committed_keys if k[0] == collection]:
-            self._pending[key] = None
+        self._pending = {k: v for k, v in self._pending.items()
+                         if k[0] != collection}
+        self._cleared.add(collection)
         self._dirty = True
 
     # --------------------------------------------------------------- commit
@@ -152,9 +158,9 @@ class LuceneFacade:
         reference's soft-commit + searcher reopen,
         SearcherUpdateServiceImpl.java:117-127).
 
-        First commit = full build; later commits run the incremental path
-        (tombstones + segment append) via IndexMutator — full rebuild never
-        happens again."""
+        First commit = full build; every later commit runs pending clears,
+        then ONE IndexMutator pass over all pending upserts and deletes —
+        full rebuild never happens again."""
         if not self._dirty:
             return
         schema = ("repo string, path string, commit string, lang string, "
@@ -167,27 +173,26 @@ class LuceneFacade:
             return self.spark.createDataFrame(rows, schema=schema) if rows else \
                 self.spark.createDataFrame([], schema=schema)
 
-        has_index = self.catalog.table("docs_meta").exists()
-        if not has_index:
+        if not self.catalog.table("docs_meta").exists():
             live = [v for v in self._pending.values() if v is not None]
             self.builder.build(df_of(live), fields_map_col="fields")
-            self._committed_keys = {k for k, v in self._pending.items()
-                                    if v is not None}
         else:
-            from lucene_plugin_spark.index.mutations import IndexMutator
+            from lucene_plugin_spark.index.mutations import KEY_SCHEMA, IndexMutator
             mut = IndexMutator(self.spark, self.catalog, self.builder)
-            deletes = [k for k, v in self._pending.items()
-                       if v is None and k in self._committed_keys]
+            for collection in sorted(self._cleared):
+                mut.clear(collection)
+            # every pending delete goes to the pass, which resolves it
+            # against the live index (a delete of a missing key is a no-op)
+            deletes = [k for k, v in self._pending.items() if v is None]
             upserts = [v for v in self._pending.values() if v is not None]
-            if deletes:
-                mut.delete_keys(self.spark.createDataFrame(
-                    deletes, "repo string, path string"))
-                self._committed_keys -= set(deletes)
+            dels = (self.spark.createDataFrame(deletes, KEY_SCHEMA)
+                    if deletes else None)
             if upserts:
-                mut.upsert(df_of(upserts), fields_map_col="fields")
-                self._committed_keys |= {k for k, v in self._pending.items()
-                                         if v is not None}
+                mut.upsert(df_of(upserts), deletes=dels, fields_map_col="fields")
+            elif dels is not None:
+                mut.delete_keys(dels)
         self._pending = {}
+        self._cleared = set()
         self._engine = SearchEngine(self.spark, self.catalog)
         self._dirty = False
 

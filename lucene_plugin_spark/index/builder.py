@@ -214,6 +214,11 @@ class IndexBuilder:
                      .withColumn("_mid", F.monotonically_increasing_id())
                      .persist())
         self._id_cache = sorted_df
+        out_cols = [c for c in sorted_df.columns if c != "_mid"]
+        if n_parts == 1:
+            # one range partition: the row ordinal IS the dense docID, so
+            # no offsets (and no count job) are needed
+            return sorted_df.select(*out_cols, F.col("_mid").alias("doc_id"))
         counts = (sorted_df
                   .groupBy(F.shiftrightunsigned("_mid", 33).alias("_pid"))
                   .count().collect())
@@ -224,13 +229,12 @@ class IndexBuilder:
         offs_df = self.spark.createDataFrame(
             [(int(p), int(offsets[p])) for p in range(n_parts)],
             "_pid long, _off long")
-        out_cols = [c for c in sorted_df.columns if c != "_mid"] + ["doc_id"]
         return (sorted_df
                 .withColumn("_pid", F.shiftrightunsigned("_mid", 33))
                 .join(F.broadcast(offs_df), "_pid")
                 .withColumn("doc_id",
                             F.col("_off") + (F.col("_mid") % F.lit(1 << 33)))
-                .select(*out_cols))
+                .select(*out_cols, "doc_id"))
 
     def _release_id_cache(self) -> None:
         cache = getattr(self, "_id_cache", None)

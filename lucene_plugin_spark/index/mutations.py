@@ -1,47 +1,79 @@
 """Incremental index mutations: upsert / delete / clear (reference W2-W4,
-SURVEY.md §2.3) without full rebuild — O(touched partitions), not O(corpus).
+SURVEY.md §2.3) without full rebuild — O(batch + touched partitions), not
+O(corpus).
 
 Semantics (LuceneIndexBean.java:256,343 updateDocument; :462-540 deletes):
-- upsert = last-write-wins by (repo, path): the old doc's postings are dead,
-  the new content gets a NEW docID (exactly like Lucene's delete+add);
-- delete by key / clear collection = tombstone the docIDs.
+- upsert = last-write-wins by (repo, path): the old doc is dead and the new
+  content gets a NEW docID (exactly like Lucene's delete+add);
+- delete by key / clear collection = tombstone the docIDs; a delete of a key
+  that is not live is a no-op.
 
-Mechanics, Spark-first — every step is partition-scoped:
-- the ``docs`` table is hive-partitioned by (repo, key-bucket); upsert/delete
-  rewrite ONLY the buckets their keys hash into (``Table.replace_partitions``
-  = Iceberg overwritePartitions), and ``clear`` is a metadata-only partition
-  drop.  An upsert of k docs rewrites O(k/doc_buckets · bucket size) bytes —
-  at 100 TB, one upserted doc touches one bucket of one repo, never the table;
-- tombstones: a doc_id table partitioned by dslice; the query kernel reads
-  its slice's tombstones task-locally (like the norms sidecar) and the
-  DataFrame path anti-joins — the analogue of Lucene's liveDocs bitmap;
-- new docs get dense docIDs starting at the next slice boundary above
-  max_doc, ordered by (repo, path): new docs only ever create FRESH
-  doc-slices, so existing segment/norms files are never rewritten (pure
-  append; docs_meta carries a ``gen`` column so collection filters stay
-  numeric range predicates — per (repo, gen) runs);
-- term_dict/stats are updated by EXACT DELTAS, never recomputed from a full
-  scan: the dead docs' postings are decoded from the tombstoned slices only
-  (segments partition-pruned to those dslices — flat_postings_view), the new
-  batch contributes its own tiny aggregate, and both deltas merge into the
-  previous term_dict/stats snapshot.  BM25 df/N/avgdl always reflect the
-  live doc set — *stronger* than Lucene, which serves stale df until merge;
-- ``compact()`` = the tiered merge stage (W7, the analogue of Lucene's
-  TieredMergePolicy at LuceneIndexBean.java:681-686): only doc-slices whose
-  tombstone fraction crosses a threshold are rewritten (dirty-slice
-  partition swap); clean slices' files are untouched, their manifests
-  carried forward.
+One commit is ONE mutation pass — ``upsert(updates, deletes=keys)``, or
+``delete_keys(keys)`` when nothing is upserted — and writes each table at
+most once:
+
+1. resolve: one query joins every batch key (upserted ∪ deleted) with the
+   live docs_meta, computes the key's (repo, kb) docs bucket and the next
+   docID base.  Victims, touched buckets and the base come back to the
+   driver as O(batch) rows.
+2. tombstones: one append of the victims' docIDs, partitioned by dslice (the
+   query kernel reads its slice's tombstones task-locally, like the norms
+   sidecar, and the DataFrame path anti-joins — Lucene's liveDocs bitmap).
+3. docs: one ``Table.replace_partitions`` (Iceberg overwritePartitions) of
+   ONLY the touched (repo, kb) buckets — an upsert of k docs rewrites
+   O(k/doc_buckets · bucket size) bytes, never the table.
+4. new docs get dense docIDs from the next slice boundary above max_doc, in
+   (repo, path) order, so they only ever create FRESH doc-slices: docs_meta,
+   doc_norms and segments take one pure append each and existing slice files
+   are never rewritten.  docs_meta carries a ``gen`` column so collection
+   filters stay numeric range predicates (per (repo, gen) runs).
+5. term_dict / stats: EXACT DELTAS, one overwrite each, never a full
+   recompute.  The dead docs' stored ``docs`` rows — read from the
+   pre-rewrite snapshot, pruned to the touched buckets — are re-analysed in
+   the same tokenize pass as the new docs, signed −1 against the new docs'
+   +1, so the delta is O(batch) work, not a decode of every posting in the
+   victims' doc-slices.  BM25 df/N/avgdl always reflect the live doc set —
+   *stronger* than Lucene, which serves stale df until merge.
+
+Steps 2-5 write different tables and read only snapshots pinned before
+they start, so they run side by side (``_run_concurrently``).
+
+``clear`` tombstones a whole collection, drops its docs partitions as a
+metadata-only commit and takes the same re-analysed dead delta.
+``compact()`` = the tiered merge stage (W7, the analogue of Lucene's
+TieredMergePolicy at LuceneIndexBean.java:681-686): only doc-slices whose
+tombstone fraction crosses a threshold are rewritten (dirty-slice partition
+swap); clean slices' files are untouched, their manifests carried forward.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from lucene_plugin_spark.index.builder import IndexBuilder, flat_postings_view
 from lucene_plugin_spark.storage.catalog import Catalog
 
-TOMBSTONE_SCHEMA = "doc_id long, dslice int"
+KEY_SCHEMA = "repo string, path string"
+META_COLS = ("repo", "path", "commit", "lang", "doc_id", "dslice", "gen")
+
+
+def _run_concurrently(spark: SparkSession, writes: list) -> None:
+    """Run a pass's table writes side by side.  Each writes a different
+    table and reads only snapshots pinned before the pass started, so their
+    order does not matter; at batch size each is a small Spark job plus a
+    catalog commit, so overlapping them hides per-job latency.  Spark local
+    properties (job group, description) follow each write into its thread."""
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        inherit = inheritable_thread_target(spark)
+        if isinstance(inherit, SparkSession):  # pinned-thread mode is off
+            inherit = lambda w: w  # noqa: E731
+        for fut in [pool.submit(inherit(w)) for w in writes]:
+            fut.result()
 
 
 class IndexMutator:
@@ -54,12 +86,13 @@ class IndexMutator:
     def _meta(self) -> DataFrame:
         return self.catalog.table("docs_meta").read(self.spark)
 
-    def _live_meta(self) -> DataFrame:
-        """docs_meta minus already-tombstoned rows.  Victim resolution MUST
-        use this: docs_meta keeps dead rows until compaction, and re-killing
-        an already-dead docID would subtract its postings from term_dict and
-        stats a second time (the aggregates are delta-maintained)."""
-        meta = self._meta()
+    def _live_meta(self, meta: DataFrame | None = None) -> DataFrame:
+        """docs_meta (or the given read of it) minus already-tombstoned
+        rows.  Victim resolution MUST use this: docs_meta keeps dead rows
+        until compaction, and re-killing an already-dead docID would subtract
+        its postings from term_dict and stats a second time (the aggregates
+        are delta-maintained)."""
+        meta = self._meta() if meta is None else meta
         tt = self.catalog.table("tombstones")
         if tt.exists():
             meta = meta.join(tt.read(self.spark).select("doc_id"),
@@ -78,131 +111,38 @@ class IndexMutator:
         else:
             tt.overwrite(t, partition_by=["dslice"])
 
-    def _docs_is_bucketed(self, docs: DataFrame) -> bool:
-        return "kb" in docs.columns
+    def _docs_properties(self) -> dict:
+        """Properties of a new docs snapshot.  ``doc_buckets`` must carry
+        over to every snapshot: later mutations hash keys to buckets by it."""
+        return {"stage": "docs", "doc_buckets": self.builder._bucket_count() or 8}
 
-    def _rewrite_docs_partitions(self, delete_keys: DataFrame,
-                                 updates: DataFrame | None) -> None:
-        """Copy-on-write of ONLY the (repo, kb) buckets the keys hash into.
-
-        The scan of the touched buckets is partition-pruned (the OR-of-equals
-        predicate is on the two partition columns), so bytes read AND written
-        are O(touched buckets), independent of table size."""
-        docs_t = self.catalog.table("docs")
-        docs = docs_t.read(self.spark)
-        if not self._docs_is_bucketed(docs):
-            # legacy unpartitioned layout: full copy-on-write (only path
-            # available without a bucketed layout; new builds never take it)
-            live = docs.join(delete_keys.select("repo", "path"),
-                             ["repo", "path"], "left_anti")
-            if updates is not None:
-                live = live.unionByName(updates.drop("kb"),
-                                        allowMissingColumns=True)
-            docs_t.overwrite(live, properties={"stage": "docs"})
-            return
-        pairs = sorted({(r["repo"], int(r["kb"])) for r in
-                        delete_keys.withColumn(
-                            "kb", self.builder.key_bucket(F.col("repo"), F.col("path")))
-                        .select("repo", "kb").distinct().collect()})
-        cond = None
-        for repo, kb in pairs:
-            c = (F.col("repo") == repo) & (F.col("kb") == kb)
-            cond = c if cond is None else (cond | c)
-        touched = docs.where(cond)
-        live = touched.join(delete_keys.select("repo", "path"),
-                            ["repo", "path"], "left_anti")
-        if updates is not None:
-            live = live.unionByName(updates.select(*touched.columns))
-        docs_t.replace_partitions(
-            live, ["repo", "kb"], pairs,
-            properties={"stage": "docs",
-                        "doc_buckets": self.builder._bucket_count() or 8},
-            lineage={"replaced_buckets": [list(p) for p in pairs]})
-
-    def _apply_aggregate_deltas(self, dead: DataFrame | None,
-                                flat_new: DataFrame | None,
-                                lens_new: DataFrame | None) -> None:
-        """Exact delta update of term_dict + stats.
-
-        ``dead``: (doc_id, dslice) of newly-tombstoned docs — their postings
-        are decoded from the affected dslices ONLY (partition-pruned segments
-        scan); ``flat_new``/``lens_new``: the new batch's postings/lengths.
-        Both deltas are O(batch + touched slices); the merge joins are over
-        the (small relative to postings) term_dict / per-field stats tables.
-        """
-        deltas = []
-        stat_deltas = []
-        if dead is not None:
-            dslices = [int(r["dslice"]) for r in
-                       dead.select("dslice").distinct().collect()]
-            dead_ids = dead.select("doc_id")
-            dead_flat = (flat_postings_view(self.spark, self.catalog,
-                                            dslices=dslices)
-                         .join(F.broadcast(dead_ids), "doc_id", "left_semi"))
-            deltas.append(dead_flat.groupBy("field", "term").agg(
-                (-F.count(F.lit(1))).cast("long").alias("d_df"),
-                (-F.sum("tf")).cast("long").alias("d_cf")))
-            dead_lens = (self.catalog.table("doc_norms").read(self.spark)
-                         .where(F.col("dslice").isin(dslices))
-                         .join(F.broadcast(dead_ids), "doc_id", "left_semi"))
-            stat_deltas.append(dead_lens.groupBy("field").agg(
-                (-F.count(F.lit(1))).cast("long").alias("d_n"),
-                (-F.sum("dl")).cast("long").alias("d_sum")))
-        if flat_new is not None:
-            deltas.append(flat_new.groupBy("field", "term").agg(
-                F.count(F.lit(1)).cast("long").alias("d_df"),
-                F.sum("tf").cast("long").alias("d_cf")))
-        if lens_new is not None:
-            stat_deltas.append(lens_new.groupBy("field").agg(
-                F.count(F.lit(1)).cast("long").alias("d_n"),
-                F.sum("dl").cast("long").alias("d_sum")))
-        if deltas:
-            delta = deltas[0]
-            for d in deltas[1:]:
-                delta = delta.unionByName(d)
-            delta = delta.groupBy("field", "term").agg(
-                F.sum("d_df").alias("d_df"), F.sum("d_cf").alias("d_cf"))
-            old = self.catalog.table("term_dict").read(self.spark)
-            new = (old.join(delta, ["field", "term"], "full_outer")
-                   .select("field", "term",
-                           (F.coalesce(F.col("df"), F.lit(0))
-                            + F.coalesce(F.col("d_df"), F.lit(0))).cast("long").alias("df"),
-                           (F.coalesce(F.col("cf"), F.lit(0))
-                            + F.coalesce(F.col("d_cf"), F.lit(0))).cast("long").alias("cf"))
-                   .where(F.col("df") > 0))
-            self.catalog.table("term_dict").overwrite(
-                new, properties={"stage": "term_dict", "delta_update": True})
-        if stat_deltas:
-            sdelta = stat_deltas[0]
-            for d in stat_deltas[1:]:
-                sdelta = sdelta.unionByName(d)
-            sdelta = sdelta.groupBy("field").agg(
-                F.sum("d_n").alias("d_n"), F.sum("d_sum").alias("d_sum"))
-            st_t = self.catalog.table("stats")
-            old = st_t.read(self.spark)
-            if "sum_dl" not in old.columns:
-                # legacy stats (no exact sum): one-time rebuild from lens
-                lens = self.catalog.table("field_lens").read(self.spark)
-                old = lens.groupBy("field").agg(
-                    F.count(F.lit(1)).cast("long").alias("n_docs"),
-                    F.sum("dl").cast("long").alias("sum_dl"),
-                    F.avg("dl").alias("avgdl"))
-            new = (old.join(sdelta, "field", "full_outer")
-                   .select("field",
-                           (F.coalesce(F.col("n_docs"), F.lit(0))
-                            + F.coalesce(F.col("d_n"), F.lit(0))).cast("long").alias("n_docs"),
-                           (F.coalesce(F.col("sum_dl"), F.lit(0))
-                            + F.coalesce(F.col("d_sum"), F.lit(0))).cast("long").alias("sum_dl"))
-                   .where(F.col("n_docs") > 0)
-                   .withColumn("avgdl", F.col("sum_dl").cast("double")
-                               / F.col("n_docs").cast("double")))
-            st_t.overwrite(new.select("field", "n_docs", "sum_dl", "avgdl"),
-                           properties={"stage": "stats", "delta_update": True})
+    def _resolve(self, keys: DataFrame) -> tuple[list, int | None, int | None]:
+        """The pass's one resolve query.  ``keys``: (repo, path, up) batch
+        rows.  Returns one row per (batch key, live doc) match — (repo, path,
+        up, kb, doc_id, dslice), doc_id NULL for a key with no live doc —
+        plus max(doc_id) and max(gen) over all of docs_meta, aggregated in
+        the same query."""
+        meta = self._meta()
+        live = self._live_meta(meta).select("repo", "path", "doc_id", "dslice")
+        tops = meta.agg(F.max("doc_id").alias("max_doc"),
+                        F.max("gen").alias("max_gen"))
+        rows = (keys.withColumn("kb", self.builder.key_bucket(F.col("repo"),
+                                                              F.col("path")))
+                .join(live, ["repo", "path"], "left")
+                .crossJoin(tops)
+                .collect())
+        if not rows:
+            return [], None, None
+        return rows, rows[0]["max_doc"], rows[0]["max_gen"]
 
     # ------------------------------------------------------------ mutations
-    def upsert(self, updates: DataFrame, fields_map_col: str | None = None) -> int:
+    def upsert(self, updates: DataFrame, deletes: DataFrame | None = None,
+               fields_map_col: str | None = None) -> int:
         """Last-write-wins upsert of (repo, path, commit, lang, content
-        [, fields]) rows.  Returns the number of upserted docs."""
+        [, fields]) rows and delete of the (repo, path) ``deletes`` keys, as
+        one commit.  Deletes apply to the pre-batch state, so a key both
+        deleted and upserted ends upserted.  Returns the number of upserted
+        docs."""
         cols = [F.col(c) for c in ("repo", "path", "commit", "lang", "content")]
         if fields_map_col:
             cols.append(F.col(fields_map_col).alias("fields"))
@@ -212,114 +152,183 @@ class IndexMutator:
                    .withColumn("content_sha256", F.sha2(F.col("content"), 256))
                    .withColumn("kb", self.builder.key_bucket(F.col("repo"),
                                                              F.col("path"))))
-        n_new = updates.count()
-        if n_new == 0:
-            return 0
-        meta = self._meta()
-        keys = updates.select("repo", "path")
-        old = (self._live_meta().join(keys, ["repo", "path"], "left_semi")
-               .select("doc_id", "dslice").persist())
-        n_dead = old.count()
-        if n_dead:
-            self._tombstone(old.select("doc_id"))
-
-        # docs table: partition-scoped copy-on-write of affected buckets only
-        self._rewrite_docs_partitions(keys, updates)
-
-        # new docIDs start at the NEXT slice boundary above max_doc: new docs
-        # only ever create fresh doc-slices, so the segment append below never
-        # rewrites an existing slice file (one-live-file-per-slice invariant
-        # kept append-only; the docID gap this leaves is harmless)
-        max_doc = meta.agg(F.max("doc_id")).collect()[0][0]
-        dps = self.builder.docs_per_slice
-        base = ((int(max_doc) // dps) + 1) * dps if max_doc is not None else 0
-        gen = int(meta.agg(F.max(F.coalesce(F.col("gen"), F.lit(0)))).collect()[0][0]) + 1 \
-            if "gen" in meta.columns else 1
-        new_meta = self.builder.assign_doc_ids(updates)
-        new_meta = (new_meta.withColumn("doc_id", F.col("doc_id") + F.lit(base))
-                    .withColumn("gen", F.lit(gen))
-                    .withColumn("dslice", (F.col("doc_id") / F.lit(dps)).cast("int")))
-        meta_cols = [c for c in ("repo", "path", "commit", "lang", "doc_id",
-                                 "dslice", "gen") if c in new_meta.columns]
-        self.catalog.table("docs_meta").append(
-            new_meta.select(*meta_cols), partition_by=["dslice"],
-            properties={"stage": "docs_meta"})
-        self.builder._release_id_cache()
-
-        # incremental postings/norms/segments for the NEW docs only
-        flat_new = self.builder.doc_postings_df(new_meta).persist()
-        lens_new = (flat_new.select("field", "doc_id", "dl").distinct()
-                    .select("field", "doc_id", F.col("dl").cast("long").alias("dl")))
-        norms_new = lens_new.withColumn(
-            "dslice", (F.col("doc_id") / F.lit(dps)).cast("int"))
-        self.catalog.table("doc_norms").append(
-            norms_new.repartition(F.col("dslice")).sortWithinPartitions("field", "doc_id"),
-            partition_by=["dslice"])
-        # field_lens shares doc_norms' data files (same schema minus layout)
-        self.catalog.table("field_lens").commit_dirs(
-            self.catalog.table("doc_norms").snapshot().data_dirs,
-            properties={"stage": "field_lens"})
-        self._append_segments(flat_new, base)
-        self._apply_aggregate_deltas(old if n_dead else None, flat_new, lens_new)
-        flat_new.unpersist()
-        old.unpersist()
-        return n_new
-
-    def _append_segments(self, flat_new: DataFrame, base: int) -> None:
-        """Append compressed blocks (+ norms rows) for the new docs — pure
-        append: new docs live in fresh doc-slices (base is slice-aligned), so
-        existing slice files are untouched and the snapshot just gains new
-        dslice dirs."""
-        new_blocks = self.builder.segment_blocks(flat_new)
-        self.catalog.table("segments").append(
-            new_blocks.repartition(F.col("dslice"))
-            .sortWithinPartitions("field", "term", "first_doc"),
-            partition_by=["dslice"],
-            properties={"stage": "segments", "incremental_from": base},
-            lineage={"appended_from_doc": base})
+        return self._commit(updates, deletes)[0]
 
     def delete_keys(self, keys: DataFrame) -> int:
         """Delete by (repo, path) keys.  Returns count tombstoned."""
-        keys = keys.select("repo", "path")
-        victims = (self._live_meta().join(keys, ["repo", "path"], "left_semi")
-                   .select("doc_id", "dslice").persist())
-        n = victims.count()
-        if n == 0:
-            victims.unpersist()
-            return 0
-        self._tombstone(victims.select("doc_id"))
-        self._rewrite_docs_partitions(keys, None)
-        self._apply_aggregate_deltas(victims, None, None)
-        victims.unpersist()
-        return n
+        return self._commit(None, keys)[1]
 
     def delete(self, repo: str, path: str) -> bool:
-        keys = self.spark.createDataFrame([(repo, path)], "repo string, path string")
+        keys = self.spark.createDataFrame([(repo, path)], KEY_SCHEMA)
         return self.delete_keys(keys) > 0
 
+    def _commit(self, updates: DataFrame | None,
+                deletes: DataFrame | None) -> tuple[int, int]:
+        """The mutation pass (module docstring, steps 1-5).  ``updates`` is
+        already in docs-table shape.  Returns (upserted, tombstoned)."""
+        keys = []
+        if updates is not None:
+            keys.append(updates.select("repo", "path", F.lit(True).alias("up")))
+        if deletes is not None:
+            keys.append(deletes.select("repo", "path", F.lit(False).alias("up")))
+        rows, max_doc, max_gen = self._resolve(reduce(DataFrame.unionByName, keys))
+        ups = [r for r in rows if r["up"]]
+        victims = {r["doc_id"]: r for r in rows if r["doc_id"] is not None}
+        if not ups and not victims:
+            return 0, 0
+        kv = self.spark.createDataFrame  # driver rows -> tiny local frames
+        writes = []
+        if victims:
+            tomb = kv([(int(d),) for d in victims], "doc_id long")
+            writes.append(lambda: self._tombstone(tomb))
+
+        # docs: one partition-scoped copy-on-write of the touched buckets.
+        # ``touched`` is bound to the pre-rewrite snapshot's files, so the
+        # dead rows read from it still see the victims' content.
+        pairs = sorted({(r["repo"], int(r["kb"])) for r in ups}
+                       | {(r["repo"], int(r["kb"])) for r in victims.values()})
+        cond = reduce(lambda a, b: a | b,
+                      [(F.col("repo") == repo) & (F.col("kb") == kb)
+                       for repo, kb in pairs])
+        docs_t = self.catalog.table("docs")
+        touched = docs_t.read(self.spark).where(cond)
+        gone = kv(sorted({(r["repo"], r["path"]) for r in ups}
+                         | {(r["repo"], r["path"]) for r in victims.values()}),
+                  KEY_SCHEMA)
+        live = touched.join(F.broadcast(gone), ["repo", "path"], "left_anti")
+        if ups:
+            live = live.unionByName(updates.select(*touched.columns))
+        props = self._docs_properties()
+        writes.append(lambda: docs_t.replace_partitions(
+            live, ["repo", "kb"], pairs, properties=props,
+            lineage={"replaced_buckets": [list(p) for p in pairs]}))
+        dead_docs = None
+        if victims:
+            dead_keys = kv([(r["repo"], r["path"], int(d))
+                            for d, r in victims.items()],
+                           KEY_SCHEMA + ", doc_id long")
+            dead_docs = touched.join(F.broadcast(dead_keys), ["repo", "path"])
+
+        new_meta = None
+        if ups:
+            # new docIDs start at the NEXT slice boundary above max_doc: new
+            # docs only ever create fresh doc-slices, so the appends never
+            # rewrite an existing slice file (the docID gap is harmless)
+            dps = self.builder.docs_per_slice
+            base = ((int(max_doc) // dps) + 1) * dps if max_doc is not None else 0
+            new_meta = (self.builder.assign_doc_ids(updates,
+                                                    n_parts=-(-len(ups) // dps))
+                        .withColumn("doc_id", F.col("doc_id") + F.lit(base))
+                        .withColumn("gen", F.lit(int(max_gen or 0) + 1))
+                        .withColumn("dslice",
+                                    (F.col("doc_id") / F.lit(dps)).cast("int")))
+            writes.append(lambda: self.catalog.table("docs_meta").append(
+                new_meta.select(*META_COLS), partition_by=["dslice"],
+                properties={"stage": "docs_meta"}))
+        flat = self._postings_writes(new_meta, dead_docs, writes)
+        _run_concurrently(self.spark, writes)
+        flat.unpersist()
+        self.builder._release_id_cache()
+        return len(ups), len(victims)
+
+    def _postings_writes(self, new_meta: DataFrame | None,
+                         dead_docs: DataFrame | None, writes: list) -> DataFrame:
+        """Tokenize the new docs (+1) and the dead docs' stored rows (−1) in
+        ONE persisted ``doc_postings_df`` pass, and queue the writes that
+        consume it: the new docs' norms and segment blocks (appends), and
+        both signs folded into one term_dict and one stats overwrite.  Dead
+        rows travel as doc_id ``-1 - doc_id``: the sign rides on the id, and
+        a dead id never collides with a live one.  Returns the persisted
+        postings for the caller to release once the writes have run."""
+        src = []
+        if new_meta is not None:
+            src.append(new_meta.select("doc_id", "content", "fields"))
+        if dead_docs is not None:
+            src.append(dead_docs.select((F.lit(-1) - F.col("doc_id")).alias("doc_id"),
+                                        "content", "fields"))
+        flat = self.builder.doc_postings_df(reduce(DataFrame.unionByName, src)).persist()
+        sign = F.when(F.col("doc_id") < 0, F.lit(-1)).otherwise(F.lit(1))
+        lens = (flat.select("field", "doc_id", F.col("dl").cast("long").alias("dl"))
+                .distinct())
+        if new_meta is not None:
+            dps = self.builder.docs_per_slice
+            norms_new = (lens.where(F.col("doc_id") >= 0)
+                         .withColumn("dslice", (F.col("doc_id") / F.lit(dps)).cast("int")))
+
+            def norms() -> None:
+                self.catalog.table("doc_norms").append(
+                    norms_new.repartition(F.col("dslice"))
+                    .sortWithinPartitions("field", "doc_id"),
+                    partition_by=["dslice"])
+                # field_lens shares doc_norms' data files (same schema
+                # minus layout)
+                self.catalog.table("field_lens").commit_dirs(
+                    self.catalog.table("doc_norms").snapshot().data_dirs,
+                    properties={"stage": "field_lens"})
+
+            # segment blocks for the new docs: pure append of fresh dslice
+            # dirs (the new docIDs are slice-aligned)
+            blocks = (self.builder.segment_blocks(flat.where(F.col("doc_id") >= 0))
+                      .repartition(F.col("dslice"))
+                      .sortWithinPartitions("field", "term", "first_doc"))
+            writes += [norms, lambda: self.catalog.table("segments").append(
+                blocks, partition_by=["dslice"], properties={"stage": "segments"})]
+
+        delta = flat.groupBy("field", "term").agg(
+            F.sum(sign).cast("long").alias("d_df"),
+            F.sum(sign * F.col("tf")).cast("long").alias("d_cf"))
+        td = (self.catalog.table("term_dict").read(self.spark)
+              .join(delta, ["field", "term"], "full_outer")
+              .select("field", "term",
+                      (F.coalesce(F.col("df"), F.lit(0))
+                       + F.coalesce(F.col("d_df"), F.lit(0))).cast("long").alias("df"),
+                      (F.coalesce(F.col("cf"), F.lit(0))
+                       + F.coalesce(F.col("d_cf"), F.lit(0))).cast("long").alias("cf"))
+              .where(F.col("df") > 0))
+        sdelta = lens.groupBy("field").agg(
+            F.sum(sign).cast("long").alias("d_n"),
+            F.sum(sign * F.col("dl")).cast("long").alias("d_sum"))
+        st = (self.catalog.table("stats").read(self.spark)
+              .join(sdelta, "field", "full_outer")
+              .select("field",
+                      (F.coalesce(F.col("n_docs"), F.lit(0))
+                       + F.coalesce(F.col("d_n"), F.lit(0))).cast("long").alias("n_docs"),
+                      (F.coalesce(F.col("sum_dl"), F.lit(0))
+                       + F.coalesce(F.col("d_sum"), F.lit(0))).cast("long").alias("sum_dl"))
+              .where(F.col("n_docs") > 0)
+              .withColumn("avgdl", F.col("sum_dl").cast("double")
+                          / F.col("n_docs").cast("double")))
+        writes += [
+            lambda: self.catalog.table("term_dict").overwrite(
+                td, properties={"stage": "term_dict", "delta_update": True}),
+            lambda: self.catalog.table("stats").overwrite(
+                st, properties={"stage": "stats", "delta_update": True})]
+        return flat
+
     def clear(self, repo: str) -> int:
-        """Delete every doc in a collection (reference W4 'clear') — on the
-        bucketed layout this is a METADATA-ONLY partition drop of the repo's
-        (repo, kb) partitions: no data files are read or written."""
+        """Delete every doc in a collection (reference W4 'clear'): tombstone
+        its live docIDs, drop its (repo, kb) docs partitions as a
+        METADATA-ONLY commit (no data files read or written), and take the
+        dead delta by re-analysing the dropped rows."""
         victims = (self._live_meta().where(F.col("repo") == repo)
-                   .select("doc_id", "dslice").persist())
+                   .select("repo", "path", "doc_id").persist())
         n = victims.count()
         if n == 0:
             victims.unpersist()
             return 0
-        self._tombstone(victims.select("doc_id"))
         docs_t = self.catalog.table("docs")
-        docs = docs_t.read(self.spark)
-        if self._docs_is_bucketed(docs):
-            dropped = [v for v in docs_t.partition_values(["repo", "kb"])
-                       if v[0] == repo]
-            docs_t.drop_partitions(["repo", "kb"], dropped,
-                                   properties={"stage": "docs"},
-                                   lineage={"cleared_repo": repo})
-        else:
-            docs_t.overwrite(docs.where(F.col("repo") != repo),
-                             properties={"stage": "docs"})
-        self._apply_aggregate_deltas(victims, None, None)
+        dropped = [v for v in docs_t.partition_values(["repo", "kb"])
+                   if v[0] == repo]
+        dead_docs = (docs_t.read(self.spark).where(F.col("repo") == repo)
+                     .join(victims, ["repo", "path"]))
+        props = self._docs_properties()
+        writes = [lambda: self._tombstone(victims),
+                  lambda: docs_t.drop_partitions(["repo", "kb"], dropped,
+                                                 properties=props,
+                                                 lineage={"cleared_repo": repo})]
+        flat = self._postings_writes(None, dead_docs, writes)
+        _run_concurrently(self.spark, writes)
+        flat.unpersist()
         victims.unpersist()
         return n
 

@@ -1954,7 +1954,8 @@ class SearchEngine:
         if repo is not None:
             ranges = self.repo_doc_ranges(repo)
             if not ranges:
-                return self.spark.createDataFrame([], HITS_SCHEMA)
+                # empty, with the caller's columns (not just HITS_SCHEMA's)
+                return agg.where(F.lit(False))
             cond = None
             for lo, hi in ranges:
                 c = (F.col("doc_id") >= lo) & (F.col("doc_id") <= hi)

@@ -30,14 +30,33 @@ _TOKEN = re.compile(r"\s*(?:(?P<num>\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)"
                     r"|(?P<name>[A-Za-z_][A-Za-z0-9_]*)"
                     r"|(?P<op>[-+*/(),]))")
 
+
+def _nan() -> Column:
+    return F.lit(float("nan"))
+
+
+def _java_log(log):
+    """Java's ``Math.log`` domain: -Infinity at 0 and NaN below it, where
+    Spark's logarithms return NULL."""
+    return lambda a: (F.when(a > 0, log(a))
+                      .when(a == 0, F.lit(float("-inf")))
+                      .otherwise(_nan()))
+
+
+def _java_minmax(pick):
+    """``Math.min``/``Math.max``: a NaN operand wins, where Spark's
+    least/greatest order NaN above every number."""
+    return lambda a, b: F.when(F.isnan(a) | F.isnan(b), _nan()).otherwise(pick(a, b))
+
+
 #: function name -> (arity, Column builder)
 _FUNCS = {
-    "ln": (1, lambda a: F.log(a)),
-    "log2": (1, lambda a: F.log2(a)),
+    "ln": (1, _java_log(F.log)),
+    "log2": (1, _java_log(F.log2)),
     "sqrt": (1, lambda a: F.sqrt(a)),
     "abs": (1, lambda a: F.abs(a)),
-    "min": (2, lambda a, b: F.least(a, b)),
-    "max": (2, lambda a, b: F.greatest(a, b)),
+    "min": (2, _java_minmax(F.least)),
+    "max": (2, _java_minmax(F.greatest)),
     "pow": (2, lambda a, b: F.pow(a, b)),
 }
 
@@ -48,22 +67,24 @@ class ExpressionError(ValueError):
 
 def _java_div(lhs: Column, rhs: Column) -> Column:
     """Division with Java double semantics, which Lucene's
-    ``JavascriptCompiler`` expressions follow: ``x/0`` is ±Infinity and
-    ``0/0`` is NaN.  Spark's SQL ``Divide`` yields NULL on a zero divisor,
-    and NULL sorts LAST under ``desc`` while Java's descending double
-    SortField puts NaN first, then +Infinity — so without this shim a
-    degenerate expression silently ranks OPPOSITE to the reference.
-    Spark orders NaN greater than every non-NaN double, so the emitted
-    NaN/±Infinity reproduce the Lucene sort exactly.  A NULL operand is
-    Spark's stand-in for an upstream NaN (e.g. ``ln`` of a negative
-    returns NULL where Java returns NaN) — in Java any NaN operand makes
-    the quotient NaN, so NULLs map to NaN here rather than leaking into
-    the sign branches."""
-    return (F.when(lhs.isNull() | rhs.isNull(), F.lit(float("nan")))
+    ``JavascriptCompiler`` expressions follow: ``x/±0`` is ±Infinity with
+    the sign of x times the sign of the zero, and ``0/0`` is NaN.  Spark's
+    SQL ``Divide`` yields NULL on a zero divisor, and NULL sorts LAST under
+    ``desc`` while Java's descending double SortField puts NaN first, then
+    +Infinity — so without this shim a degenerate expression silently ranks
+    OPPOSITE to the reference.  Spark orders NaN greater than every non-NaN
+    double, so the emitted NaN/±Infinity reproduce the Lucene sort exactly.
+
+    A NaN operand makes the quotient NaN (Spark evaluates ``NaN > 0`` as
+    true, so it must not reach a sign test), and so does a NULL one, Spark's
+    stand-in for an upstream NaN.  For a zero divisor, ``pow(rhs, -1)`` is
+    Java's ``1/rhs`` — ±Infinity carrying the zero's sign bit, which
+    ``rhs == 0`` cannot see — and ``lhs`` times it gives the signed
+    Infinity, or NaN for ``0/0``."""
+    return (F.when(lhs.isNull() | rhs.isNull() | F.isnan(lhs) | F.isnan(rhs),
+                   _nan())
             .when(rhs != 0, lhs / rhs)
-            .when(lhs > 0, F.lit(float("inf")))
-            .when(lhs < 0, F.lit(float("-inf")))
-            .otherwise(F.lit(float("nan"))))
+            .otherwise(lhs * F.pow(rhs, F.lit(-1.0))))
 
 
 def _lex(src: str) -> list[tuple[str, str]]:
@@ -155,7 +176,9 @@ def compile_expression(src: str, bindings: dict[str, Column]) -> Column:
     out = expr()
     if pos[0] != len(toks):
         raise ExpressionError(f"trailing tokens at {toks[pos[0]]!r}")
-    return out
+    # a NULL that survived arithmetic (a NULL binding) stands for Java's
+    # NaN, which sorts FIRST under desc
+    return F.when(out.isNull(), _nan()).otherwise(out)
 
 
 def expression_sort_search(engine, repo: str | None, query: str, expr: str,

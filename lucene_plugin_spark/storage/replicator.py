@@ -6,9 +6,10 @@ revision atomically, so a reader on the replica never sees a torn index).
 Our revision is the catalog's current snapshot set.  ``replicate`` walks the
 source warehouse, copies data files INCREMENTALLY (a file already present at
 the destination with the same size and a destination mtime no older than the
-source's is skipped — parquet part files are immutable and uuid-named, and
-the mtime guard additionally catches any fixed-name file rewritten in place
-with unchanged length), rewrites the absolute ``data_dirs`` in each manifest to the
+source's, within the destination's timestamp granularity, is skipped —
+parquet part files are immutable and uuid-named, and the mtime guard
+additionally catches any fixed-name file rewritten in place with unchanged
+length), rewrites the absolute ``data_dirs`` in each manifest to the
 destination root, and only THEN installs every table's ``CURRENT`` pointer
 with an atomic rename — the replica serves the previous revision throughout
 the copy and flips over in one step per table, exactly the replicator
@@ -33,6 +34,23 @@ def _files_under(root: str):
             yield os.path.join(dirpath, f)
 
 
+def _modify_window_ns(root: str) -> int:
+    """rsync's ``--modify-window``, measured instead of configured: how far
+    a copied file's mtime can fall below its source's on the filesystem
+    under ``root`` (0 on nanosecond filesystems, just under 2 s on FAT).
+    Stamps a probe file with an odd second plus the largest fraction and
+    reads back what the filesystem kept."""
+    probe = os.path.join(root, ".mtime-probe")
+    want = 1_000_000_001 * 10**9 + 999_999_999
+    with open(probe, "w"):
+        pass
+    try:
+        os.utime(probe, ns=(want, want))
+        return max(0, want - os.stat(probe).st_mtime_ns)
+    finally:
+        os.remove(probe)
+
+
 def replicate(src_root: str, dst_root: str) -> dict:
     """Sync the source warehouse's current revision into ``dst_root``.
 
@@ -45,6 +63,7 @@ def replicate(src_root: str, dst_root: str) -> dict:
     if src_root == dst_root:
         raise ValueError("source and destination warehouses are the same")
     os.makedirs(dst_root, exist_ok=True)
+    window = _modify_window_ns(dst_root)
     copied = skipped = nbytes = 0
     currents: list[tuple[str, str]] = []     # (dst CURRENT path, contents)
     manifests: list[tuple[str, str]] = []    # (src manifest, dst manifest)
@@ -64,10 +83,12 @@ def replicate(src_root: str, dst_root: str) -> dict:
         # ever rewritten in place with unchanged length (data files are
         # uuid-named today, but the skip rule must not depend on that).
         # copystat below makes the source mtime the replica's, so an
-        # unchanged file compares equal on the next run.
+        # unchanged file compares equal on the next run — up to the
+        # destination's granularity, which may truncate the copied mtime.
         if (os.path.exists(dst)
                 and os.path.getsize(dst) == os.path.getsize(src)
-                and os.path.getmtime(dst) >= os.path.getmtime(src)):
+                and os.stat(dst).st_mtime_ns
+                >= os.stat(src).st_mtime_ns - window):
             skipped += 1
             continue
         os.makedirs(os.path.dirname(dst), exist_ok=True)

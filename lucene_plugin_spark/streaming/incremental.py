@@ -6,13 +6,19 @@ elapsed (softCommitMaxDocs/softCommitMaxAge, LuceneIndexBean.java:78-79;
 policy at SearcherUpdateServiceImpl.java:101-115).  In Structured Streaming
 the same policy is the trigger interval + per-trigger batch bound:
 
-- ``trigger(processingTime='1 second')``  ==  softCommitMaxAge = 1 s
 - ``maxFilesPerTrigger`` / ``maxOffsetsPerTrigger``  ==  softCommitMaxDocs
 - each micro-batch commits one index snapshot via ``foreachBatch`` ->
   ``IndexMutator.upsert`` (last-write-wins by (repo, path), so replayed
   batches are idempotent — exactly-once index state from at-least-once
   delivery), and readers see it on their next snapshot acquire (the searcher
   reopen analogue, LuceneIndexBean.java:620-637).
+- ``trigger(processingTime='1 second')`` asks for softCommitMaxAge = 1 s
+  but cannot deliver it: a micro-batch's commit is one mutation pass, which
+  takes about 7 s for a 20-key batch over a 10k-doc index at local[4] on a
+  4-vCPU host (perfbench ``index_refresh``).  A trigger shorter than the
+  commit only makes the next batch start as soon as the previous one ends,
+  so new docs become visible about one commit after they arrive, not one
+  trigger interval.
 
 No event-time semantics are needed (the reference has none): documents carry
 no timestamps and ordering is by arrival, so watermarks/windows don't apply —

@@ -138,3 +138,39 @@ def test_expression_sort_degenerate_divisor(spark, built):
         eng, None, "index", "1 / (dl - dl)", limit=10).collect()]
     base = sorted(d for d, _, _ in oracle.search(None, "index", limit=10_000))
     assert got == base[:10]
+
+
+def test_domain_nan_sorts_first_like_java(spark):
+    """``ln`` of a negative is NaN in Java, and NaN survives ``*``/``+`` —
+    the compiled expression must be NaN (never NULL, which sorts LAST under
+    desc) so ``ln(x - 1) * 2`` ranks the out-of-domain row FIRST, as Java's
+    descending double SortField does.  ``ln(0)`` is -Infinity, and a NaN
+    operand of min/max wins."""
+    import pyspark.sql.functions as F
+    df = spark.createDataFrame([(0.0,), (1.0,), (3.0,)], "x double")
+    col = compile_expression("ln(x - 1) * 2", {"x": F.col("x")})
+    ordered = [(r["x"], r["v"]) for r in
+               df.select("x", col.alias("v"))
+               .orderBy(F.desc("v"), F.asc("x")).collect()]
+    assert [x for x, _ in ordered] == [0.0, 3.0, 1.0]
+    assert math.isnan(ordered[0][1]) and ordered[2][1] == -math.inf
+    mm = compile_expression("min(ln(x - 1), 5)", {"x": F.col("x")})
+    assert math.isnan(df.where("x = 0").select(mm.alias("v")).first()["v"])
+    # a NULL binding is a NaN too, at the top level
+    nul = compile_expression("x * 2", {"x": F.lit(None).cast("double")})
+    assert math.isnan(df.select(nul.alias("v")).first()["v"])
+
+
+def test_division_nan_operand_and_signed_zero(spark):
+    """Java: ``NaN/0`` is NaN (Spark evaluates ``NaN > 0`` as true, so a
+    sign test would say +Infinity), and ``x/-0.0`` is -Infinity for x > 0
+    (Spark's ``-0.0 == 0`` cannot see the sign)."""
+    import pyspark.sql.functions as F
+    df = spark.createDataFrame([(1.0,), (-2.0,)], "x double")
+    b = {"x": F.col("x")}
+    vals = lambda src: [r["v"] for r in  # noqa: E731
+                        df.select(compile_expression(src, b).alias("v")).collect()]
+    assert all(math.isnan(v) for v in vals("(x - x) / 0 / 0"))
+    assert all(math.isnan(v) for v in vals("ln(0 - x * x) / 0"))
+    assert vals("x / (0 * (0 - 1))") == [-math.inf, math.inf]
+    assert vals("x / (0 * 1)") == [math.inf, -math.inf]

@@ -323,3 +323,15 @@ def test_to_child_join_repo_scope(spark, built):
     if any(r["doc_id"] < lo or r["doc_id"] > hi for r in unscoped):
         # scoping really filtered something on this corpus
         assert len(rows_s) < len(unscoped)
+
+
+def test_to_child_join_empty_scope_keeps_schema(spark, built):
+    """A repo with no doc ranges yields an EMPTY child set that still has
+    the documented (doc_id, path, parent, score) columns."""
+    eng = _engine(spark, built)
+    parent_of = F.floor(F.col("doc_id") / 8)
+    parents = to_parent_join(eng, eng.search(None, "index", limit=50),
+                             parent_of, "total")
+    out = to_child_join(eng, parents, parent_of, repo="no-such-repo")
+    assert out.columns == ["doc_id", "path", "parent", "score"]
+    assert out.select("parent").collect() == []

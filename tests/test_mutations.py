@@ -172,3 +172,111 @@ def test_mutations_rewrite_O_of_k_not_O_of_N(spark, tmp_path_factory):
         assert any(f"dslice={d}/" in f for d in dirty), f
     # and the tombstones of those slices are reclaimed
     assert catalog.table("tombstones").read(spark).count() == 0
+
+
+# ---------------------------------------------------- facade commit = one pass
+def _facade_rows(n, seed):
+    """generate_rows with facade-searchable collection names (the facade
+    strips '-' from collection names)."""
+    return [dict(r, repo=r["repo"].replace("-", ""), fields=None)
+            for r in generate_rows(n, seed=seed)]
+
+
+def _built_facade(spark, wh, rows):
+    """A facade opened on a warehouse that IndexBuilder built (multi-slice,
+    docs_per_slice=200 like the gate's mutation index)."""
+    from lucene_plugin_spark.api import LuceneFacade
+    IndexBuilder(spark, Catalog(wh), docs_per_slice=200).build(
+        spark.createDataFrame(rows, "repo string, path string, commit string, "
+                              "lang string, content string, "
+                              "fields map<string,string>"),
+        fields_map_col="fields")
+    fac = LuceneFacade(spark, wh)
+    fac.builder.docs_per_slice = 200
+    return fac
+
+
+def _assert_facade_matches_oracle(fac, eff, queries, repos):
+    o = OracleEngine.from_rows(eff.values())
+    for repo in repos:
+        for q in queries:
+            got = {e.external_id: e.score for e in fac.search(repo, q, limit=500)}
+            want = {p: s for _, p, s in o.search(repo, q, limit=500)}
+            assert set(got) == set(want), (repo, q)
+            for p in want:
+                assert np.isclose(got[p], want[p], rtol=1e-9), (repo, q, p)
+
+
+def test_facade_deletes_and_clears_reach_base_keys(spark, tmp_path):
+    """A facade opened on an existing warehouse has committed none of its
+    keys itself: its deletes and clears must still reach every live key."""
+    rows = _facade_rows(240, seed=21)
+    fac = _built_facade(spark, str(tmp_path), rows)
+    eff = {(r["repo"], r["path"]): r for r in rows}
+    victim = rows[5]
+    fac.delete(victim["repo"], victim["path"])
+    eff.pop((victim["repo"], victim["path"]))
+    fac.clear("repo03")
+    eff = {k: v for k, v in eff.items() if k[0] != "repo03"}
+    words = victim["content"].split()[:3]
+    _assert_facade_matches_oracle(fac, eff, QUERIES + [" ".join(words)],
+                                  [victim["repo"], "repo03", "repo04"])
+    assert fac.search("repo03", "index") == []
+
+
+def test_facade_commit_is_one_pass(spark, tmp_path):
+    """Two facade commits mixing new keys, text updates of base keys, map
+    docs and deletes: the index stays CheckIndex-clean (the re-analysed
+    dead deltas keep term_dict/stats exact), searches match the oracle, and
+    every table gains at most one snapshot per commit."""
+    from lucene_plugin_spark.storage.checker import check_index
+    rows = _facade_rows(600, seed=17)
+    fac = _built_facade(spark, str(tmp_path), rows)
+    cat = fac.catalog
+    eff = {(r["repo"], r["path"]): r for r in rows}
+
+    def text(repo, key, content):
+        fac.index_text(repo, key, content)
+        eff[(repo, key)] = {"repo": repo, "path": key, "content": content}
+
+    def mapped(repo, key, m):
+        fac.index_map(repo, key, m)
+        eff[(repo, key)] = {"repo": repo, "path": key, "content": "", "fields": m}
+
+    def delete(repo, key):
+        fac.delete(repo, key)
+        eff.pop((repo, key), None)
+
+    def commit():
+        before = {t: len(cat.table(t).history()) for t in cat.table_names()}
+        fac.commit()
+        grew = {t: len(cat.table(t).history()) - before.get(t, 0)
+                for t in cat.table_names()}
+        assert max(grew.values()) == 1 and min(grew.values()) >= 0, grew
+
+    text("repo01", "new/a.py", "fresh index cache marker words")
+    text("repo02", "new/b.py", "get user parse token freshly")
+    for r in rows[10:13]:
+        text(r["repo"], r["path"], r["content"] + " updated marker")
+    mapped("repo01", "m1", {"title": "user cache", "body": "parse token"})
+    mapped("repo05", "m2", {"title": "merge index"})
+    for r in rows[300:303] + rows[590:592]:
+        delete(r["repo"], r["path"])
+    delete("repo06", "never/written.py")  # a miss is a no-op
+    commit()
+
+    text("repo01", "new/a.py", "rewritten index content")
+    text(rows[400]["repo"], rows[400]["path"], "marker replaces base text")
+    mapped("repo01", "m1", {"title": "user name"})
+    delete("repo02", "new/b.py")
+    delete("repo05", "m2")
+    delete(rows[11]["repo"], rows[11]["path"])
+    text("repo03", "new/c.py", "marker cache index")
+    commit()
+
+    assert check_index(spark, cat)["errors"] == []
+    _assert_facade_matches_oracle(
+        fac, eff, ["index", "marker", "parse AND token", '"user name"'],
+        ["repo01", "repo02", rows[400]["repo"]])
+    _assert_facade_matches_oracle(fac, eff, ["title:user", "title:merge"],
+                                  ["repo01", "repo05"])

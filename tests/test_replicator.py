@@ -106,3 +106,39 @@ def test_in_place_rewrite_detected_by_mtime(tmp_path):
     assert stats["copied"] == 1
     assert open(dstf).read() == "BBBB"
     assert replicate(src_wh, dst_wh)["copied"] == 0
+
+
+def test_coarse_destination_mtimes_skip_unchanged_files(tmp_path, monkeypatch):
+    """A destination that truncates mtimes (FAT keeps even seconds) stamps
+    every copy slightly BELOW its source; within the filesystem's measured
+    modify window an unchanged file must still be skipped, not re-copied on
+    every run — while a source rewritten after the copy still re-copies."""
+    from lucene_plugin_spark.storage import replicator
+
+    src_wh, dst_wh = str(tmp_path / "s"), str(tmp_path / "d")
+    os.makedirs(os.path.join(src_wh, "t"))
+    f = os.path.join(src_wh, "t", "part.bin")
+    with open(f, "w") as fh:
+        fh.write("AAAA")
+    t_src = 1_700_000_001 * 10**9 + 750_000_000      # odd second + fraction
+    os.utime(f, ns=(t_src, t_src))
+    assert replicate(src_wh, dst_wh)["copied"] == 1
+    # what a 2 s-granularity filesystem keeps of the copied mtime
+    dstf = os.path.join(dst_wh, "t", "part.bin")
+    t_fat = (t_src // (2 * 10**9)) * 2 * 10**9
+    os.utime(dstf, ns=(t_fat, t_fat))
+    monkeypatch.setattr(replicator, "_modify_window_ns",
+                        lambda root: 2 * 10**9 - 1)
+    assert replicate(src_wh, dst_wh)["copied"] == 0
+    # a rewrite well after the copy is still seen
+    t_new = t_src + 5 * 10**9
+    os.utime(f, ns=(t_new, t_new))
+    assert replicate(src_wh, dst_wh)["copied"] == 1
+
+
+def test_modify_window_measured_on_destination(tmp_path):
+    """The probe measures the destination's timestamp truncation: below
+    one FAT step on any filesystem, and it leaves no file behind."""
+    from lucene_plugin_spark.storage.replicator import _modify_window_ns
+    assert 0 <= _modify_window_ns(str(tmp_path)) < 2 * 10**9
+    assert os.listdir(tmp_path) == []

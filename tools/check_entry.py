@@ -1,6 +1,7 @@
 """Local replica of the driver's correctness gate: run every queries() entry
 on Spark and its oracle_sql() through DuckDB on the same sf dir; compare
-row-count, column names, and order-insensitive values.
+row-count, column names, and order-insensitive values.  Each entry's line
+shows its wall time (Spark side, first call builds any index it needs).
 
 Usage: python tools/check_entry.py [sf_dir] [query_name ...]
 """
@@ -8,11 +9,13 @@ Usage: python tools/check_entry.py [sf_dir] [query_name ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
+import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E  # noqa: E402
 
@@ -50,33 +53,35 @@ def run(sf_dir: str, names: list[str] | None = None) -> int:
     for name, fn in qs.items():
         if names and name not in names:
             continue
+        t0 = time.perf_counter()
         try:
             sdf = fn(spark, sf_dir)
             srows = [tuple(norm(v) for v in r) for r in sdf.collect()]
             scols = sdf.columns
         except Exception as ex:
-            print(f"FAIL {name}: spark error: {ex}")
+            print(f"FAIL {name} [{time.perf_counter() - t0:.2f} s]: spark error: {ex}")
             failures += 1
             continue
+        wall = f"[{time.perf_counter() - t0:.2f} s]"
         if name not in oracles:
-            print(f"ROWS-ONLY {name}: {len(srows)} rows (no oracle)")
+            print(f"ROWS-ONLY {name} {wall}: {len(srows)} rows (no oracle)")
             continue
         try:
             ores = con.sql(oracles[name])
             ocols = [c for c in ores.columns]
             orows = [tuple(norm(v) for v in r) for r in ores.fetchall()]
         except Exception as ex:
-            print(f"FAIL {name}: duckdb error: {ex}")
+            print(f"FAIL {name} {wall}: duckdb error: {ex}")
             failures += 1
             continue
         ok_cols = [c.lower() for c in scols] == [c.lower() for c in ocols]
         ok_count = len(srows) == len(orows)
         ok_vals = sorted(map(repr, srows)) == sorted(map(repr, orows))
         if ok_cols and ok_count and ok_vals:
-            print(f"OK   {name}: {len(srows)} rows")
+            print(f"OK   {name} {wall}: {len(srows)} rows")
         else:
             failures += 1
-            print(f"FAIL {name}: cols {scols} vs {ocols} | rows {len(srows)} vs {len(orows)}")
+            print(f"FAIL {name} {wall}: cols {scols} vs {ocols} | rows {len(srows)} vs {len(orows)}")
             sset = set(map(repr, srows))
             oset = set(map(repr, orows))
             for x in list(sset - oset)[:3]:
