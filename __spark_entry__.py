@@ -2094,26 +2094,26 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # Every entry keeps its queries()+oracle_sql() pair — this is check-slot
 # scheduling, not coverage reduction.
 #
-# Round-5 window (exactly 50): the 4 entries with no driver row in ANY
-# round (ft_batch / ft_phonetic / stream_sessionize / stream_window_counts
-# — added in r4 after that round's window filled; after this round every
-# one of the 150 registry entries has a driver row in some round), then
-# ft_sort_field (its r4 search_sorted probe fix was exercised in-window
-# only via ft_index_sort — a direct fresh row removes the inference), then
-# 45 of the 50 entries whose LATEST driver row is r1/r2 — re-proving the
-# classic query surface / mutations / dedup / similarity / tpch against
-# the executor as it stands after the r3/r4 churn.  The 5 stale-r2
-# entries deliberately left out (ev_json_extract, ev_hier_rollup,
-# ev_kmv_distinct, text_token_counts, sim_ivf_kmeans) are the ones whose
-# modules are UNTOUCHED since r2 and that have an in-window cousin on the
-# same machinery (ev_rollup for hier_rollup; ev_window/sliding for
-# sketch-windows; sim_ivf_topk exercises the same IVF index as
-# sim_ivf_kmeans; text stats have nine r3-green siblings) — they keep
-# their r2-green rows plus the r5 local 3-SF sweep.
+# Current window (exactly 50), in gate order:
+#
+# 1. the 11 entries whose operators were rewritten as one per-slice numpy
+#    kernel behind the engine's single driver/distributed route
+#    (query/advanced.py: TF-IDF, LM Dirichlet / Jelinek-Mercer, DFR, IB,
+#    SweetSpot, SpanFirst / SpanPositionRange, TermsQuery, SpanOr, SpanNot);
+# 2. the 5 entries whose latest driver row is r2 (_GATE_TAIL below) — they
+#    were deferred past the round-5 window and are now due;
+# 3. 34 entries over the other code this window's changes touch: the query
+#    route of search / search_sorted (classic query surface, nested and
+#    filtered shapes, the index-sort collection filter), the persisted
+#    segments properties (analyzer, slice width) and the mutation path.
+#
+# Pushed past slot 50: entries whose modules are untouched since their
+# last green driver row (search_many, phonetic, streaming windows, table
+# statistics, dedup / similarity / TPC-H / event analytics) — every one
+# keeps its queries()+oracle_sql() pair and its local 3-SF gating.
 _GATE_TAIL = [
-    # the 5 stale-r2 entries deferred past the r5 window (see above):
-    # untouched modules, r2-green rows stand, in-window cousins cover
-    # their machinery, r5 local 3-SF sweeps re-confirm them at HEAD
+    # the 5 stale-r2 entries (untouched modules; r2-green rows, re-confirmed
+    # by the local 3-SF sweeps)
     "ev_json_extract", "ev_hier_rollup", "ev_kmv_distinct",
     "text_token_counts", "sim_ivf_kmeans",
 ]
@@ -2121,40 +2121,27 @@ _GATE_TAIL = [
 
 def _rotate_for_gate(q: dict) -> dict:
     head_priority = [
-        # --- the round-5 window: 50 entries, in gate order ---
-        # never driver-checked in any round (added in r4 post-window)
-        "ft_batch", "ft_phonetic", "stream_sessionize",
-        "stream_window_counts",
-        # r4 probe fix so far proven only via its ft_index_sort cousin
-        "ft_sort_field",
-        # latest driver row r1/r2 — re-prove against the r3/r4 executor:
-        # classic query surface
+        # 1. rewritten advanced operators
+        "ft_tfidf", "ft_lmdirichlet", "ft_lmjm", "ft_dfr", "ft_ib",
+        "ft_sweetspot", "ft_span_first", "ft_span_range", "ft_terms_set",
+        "ft_span_or", "ft_span_not",
+        # 2. the stale-r2 entries
+        *_GATE_TAIL,
+        # 3. the query route, persisted index properties and mutations
         "ft_term_topk", "ft_or_topk", "ft_and", "ft_not", "ft_phrase",
         "ft_range", "ft_wildcard", "ft_fuzzy", "ft_boost", "ft_phrase_slop",
         "ft_range_excl", "ft_more_like", "ft_regexp", "ft_field_lang",
-        "ft_collection", "ft_term_dict", "ft_doc_len", "ft_corpus_stats",
-        "ft_sha256", "ft_punct_doc_len", "ft_punct_term",
-        # mutations / merge
+        "ft_collection", "ft_sort_field", "ft_index_sort", "ft_min_should",
+        "ft_filter", "ft_synonym", "ft_dismax", "ft_nested", "ft_span_near",
+        "ft_match_all", "ft_paging", "ft_replica_search", "ft_stem",
         "merge_upsert", "delete_where", "mut_upsert_search",
         "mut_delete_search", "mut_docs_sha", "mut_compact_search",
-        # dedup + similarity + embeddings
-        "dedup_exact", "dedup_ngram_pairs", "dedup_minhash", "dedup_simhash",
-        "dedup_simhash_pairs", "dedup_clusters", "dedup_embedding",
-        "sim_cosine_topk", "sim_ivf_topk", "sim_rplsh_topk",
-        # analytics / windows / joins
-        "tpch_q1_pricing", "tpch_q3_topk",
-        "ev_window_counts", "ev_sessionize", "ev_sliding_counts",
-        "ev_rollup", "ev_asof_join", "ev_range_join",
-        # --- beyond slot 50: r3/r4-green entries follow in registry
-        # order (the `mid` bucket), then _GATE_TAIL's 5 deferred entries —
-        # every one keeps its queries()+oracle_sql() pair and its local
-        # 3-SF gating; this is check-slot scheduling, not coverage
-        # reduction ---
+        "stream_index_search",
+        # --- beyond slot 50: the rest in registry order ---
     ]
     head = [k for k in head_priority if k in q]
-    mid = [k for k in q if k not in head and k not in _GATE_TAIL]
-    tail = [k for k in _GATE_TAIL if k in q]
-    return {k: q[k] for k in head + mid + tail}
+    return {**{k: q[k] for k in head},
+            **{k: v for k, v in q.items() if k not in head}}
 
 
 def oracle_sql() -> dict[str, str]:

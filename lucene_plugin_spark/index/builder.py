@@ -124,6 +124,30 @@ class IndexBuilder:
         self.index_sort = list(index_sort) if index_sort else None
         self.stage_times: dict[str, float] = {}
 
+    @property
+    def docs_per_slice(self) -> int:
+        """Docs per doc-slice.  A build lays the index out with the width
+        this builder was given and persists it on the segments snapshot;
+        once that table exists the persisted width is the source of truth
+        for everything else (tombstone dslices, the new-doc slice base of a
+        mutation) — a builder opened with another width must still address
+        the slices on disk."""
+        p = self.segments_properties().get("docs_per_slice")
+        return int(p) if p else self._docs_per_slice
+
+    @docs_per_slice.setter
+    def docs_per_slice(self, value: int) -> None:
+        self._docs_per_slice = value
+
+    def segments_properties(self, **extra) -> dict:
+        """The index-level properties of the current segments snapshot
+        (analyzer, index_sort, docs_per_slice) plus ``extra``: every new
+        segments snapshot carries them forward."""
+        t = self.catalog.table("segments")
+        props = t.snapshot().properties if t.exists() else {}
+        keep = ("analyzer", "index_sort", "docs_per_slice")
+        return {**{k: props[k] for k in keep if k in props}, **extra}
+
     # ------------------------------------------------------------------ docs
     #: adaptive layout target: one key bucket per ~this many docs (the
     #: mutation rewrite unit, aligned with the docs_per_slice default)
@@ -349,6 +373,7 @@ class IndexBuilder:
         if self.index_sort:
             fp += "-sort:" + ",".join(self.index_sort)
         self.stage_times = {}
+        dps = self._docs_per_slice  # a build rewrites every slice
         _t0 = _time.perf_counter()
 
         def _mark(stage: str) -> None:
@@ -367,11 +392,11 @@ class IndexBuilder:
         _mark("count")
         meta_df = None
         if not self._stage_done("docs_meta", fp):
-            n_parts = max(int(np.ceil(max(n_docs, 1) / self.docs_per_slice)),
+            n_parts = max(int(np.ceil(max(n_docs, 1) / dps)),
                           self.spark.sparkContext.defaultParallelism, 1)
             meta_df = (self.assign_doc_ids(docs, n_parts)
                        .withColumn("dslice", (F.col("doc_id")
-                                              / F.lit(self.docs_per_slice)).cast("int"))
+                                              / F.lit(dps)).cast("int"))
                        .withColumn("gen", F.lit(0)))
             # the persisted mapping is SKINNY (no content/fields): the corpus
             # already lives in the docs table, and at 100 TB writing it a
@@ -427,7 +452,7 @@ class IndexBuilder:
             if fused_tasks > 0:
                 seg_in = seg_in.coalesce(fused_tasks)
             seg = seg_in.mapInArrow(
-                fused.make_fused_segment_kernel(self.docs_per_slice,
+                fused.make_fused_segment_kernel(dps,
                                                 self.block_size,
                                                 self.analyzer),
                 fused.SEGMENT_DDL)
@@ -435,8 +460,9 @@ class IndexBuilder:
                 seg, partition_by=["dslice"],
                 properties={"stage": "segments", "fingerprint": fp,
                             "analyzer": self.analyzer,
-                            "index_sort": self.index_sort},
-                lineage={"doc_slices": "dslice = doc_id // %d" % self.docs_per_slice,
+                            "index_sort": self.index_sort,
+                            "docs_per_slice": dps},
+                lineage={"doc_slices": "dslice = doc_id // %d" % dps,
                          "input": {"table": "docs_meta", "fingerprint": fp}})
         self._release_id_cache()
         _mark("segments")

@@ -26,7 +26,10 @@ most once:
    (repo, path) order, so they only ever create FRESH doc-slices: docs_meta,
    doc_norms and segments take one pure append each and existing slice files
    are never rewritten.  docs_meta carries a ``gen`` column so collection
-   filters stay numeric range predicates (per (repo, gen) runs).
+   filters stay numeric range predicates (per (repo, gen) runs).  The
+   slice width is the one persisted on the segments snapshot
+   (``IndexBuilder.docs_per_slice``), whatever the mutator's builder was
+   opened with, and every new segments snapshot carries it forward.
 5. term_dict / stats: EXACT DELTAS, one overwrite each, never a full
    recompute.  The dead docs' stored ``docs`` rows — read from the
    pre-rewrite snapshot, pruned to the touched buckets — are re-analysed in
@@ -271,8 +274,9 @@ class IndexMutator:
             blocks = (self.builder.segment_blocks(flat.where(F.col("doc_id") >= 0))
                       .repartition(F.col("dslice"))
                       .sortWithinPartitions("field", "term", "first_doc"))
+            seg_props = self.builder.segments_properties(stage="segments")
             writes += [norms, lambda: self.catalog.table("segments").append(
-                blocks, partition_by=["dslice"], properties={"stage": "segments"})]
+                blocks, partition_by=["dslice"], properties=seg_props)]
 
         delta = flat.groupBy("field", "term").agg(
             F.sum(sign).cast("long").alias("d_df"),
@@ -369,7 +373,8 @@ class IndexMutator:
                       .sortWithinPartitions("field", "term", "first_doc"))
         self.catalog.table("segments").replace_partitions(
             new_blocks, ["dslice"], [(d,) for d in dirty],
-            properties={"stage": "segments", "compacted_slices": dirty},
+            properties=self.builder.segments_properties(
+                stage="segments", compacted_slices=dirty),
             lineage={"compacted": dirty})
 
         # norms sidecar: same partition swap

@@ -27,8 +27,24 @@ Lucene analogues (reference reaches all of these through the same
 
 Module-level functions over a :class:`SearchEngine` (the pattern of
 ``query/results.py``): the engine carries the catalog, snapshot pins and
-analyzer; these compose its primitives declaratively so Catalyst keeps
-owning the physical plan.
+analyzer.  What runs:
+
+- **Route operators** — :func:`terms_set_query`, :func:`tfidf_search`,
+  :func:`sweetspot_search`, the LM / DFR / IB similarities,
+  :func:`span_position_range` (and :func:`span_first`), :func:`span_or`
+  and :func:`span_not`.  Each is per-query constants computed on the
+  driver plus ONE per-slice numpy scoring function, handed to
+  ``SearchEngine._search_postings``.  The engine's one route runs that
+  function on the driver over the resident block cache (warmed engine,
+  small predicted posting volume) or inside one ``mapInPandas`` over the
+  term-pruned segments scan, slice by slice; either way it applies
+  liveDocs and the collection filter, cuts the (score desc, doc_id asc)
+  top-k and joins the paths — the two routes plain queries take.
+- **Compositions** — rescore, constant/function score, boosting and
+  multi-field reuse ``search`` / ``search_node``.
+- **DataFrame plans** — span containment, explain, multi-phrase, common
+  terms and the join query are declarative plans over the flat postings
+  view.
 """
 
 from __future__ import annotations
@@ -41,47 +57,63 @@ from pyspark.sql import DataFrame
 import numpy as np
 
 from lucene_plugin_spark.index.builder import flat_postings_view
+from lucene_plugin_spark.query import bm25
 from lucene_plugin_spark.query.parser import parse_query
 
 #: "everything" limit for paths that legitimately need the full match set
 #: (Lucene's field/function collectors also visit every hit)
 _ALL = (1 << 31) - 1  # Integer.MAX_VALUE: .limit() takes a Java int
 
+#: a route scorer's "no match in this slice"
+_NO_HITS = (np.empty(0, np.int64), np.empty(0, np.float64))
 
 
-
-def _driver_live_mask(engine, ids: np.ndarray, slices, repo) -> np.ndarray:
-    """liveDocs + collection-range mask for a driver-path id vector (the
-    same tombstone/range logic as SearchEngine._search_driver)."""
-    from lucene_plugin_spark.query.executor import _read_tombstones
-    mask = np.ones(ids.shape, dtype=bool)
-    _, tomb_dirs = engine._sidecar_dirs()
-    if tomb_dirs:
-        parts = [_read_tombstones(tomb_dirs, d) for d in slices]
-        dead = np.unique(np.concatenate(parts)) if parts else np.empty(0, np.int64)
-        if dead.size:
-            pos = np.searchsorted(dead, ids)
-            pos[pos == dead.size] = 0
-            mask &= dead[pos] != ids
-    if repo is not None:
-        rmask = np.zeros(ids.shape, dtype=bool)
-        for lo, hi in engine.repo_doc_ranges(repo):
-            rmask |= (ids >= lo) & (ids <= hi)
-        mask &= rmask
-    return mask
-
-
-def _driver_topk_df(engine, ids: np.ndarray, scores: np.ndarray, limit: int):
-    """(score desc, doc_id asc) top-k -> DataFrame(doc_id, path, score) via
-    the warmed path map (zero jobs)."""
-    order = np.lexsort((ids, -scores))[:limit]
-    pm = engine._path_map
-    import pandas as pd
-    res = pd.DataFrame({"doc_id": ids[order],
-                        "path": [pm.get(int(d)) for d in ids[order]],
-                        "score": scores[order]})
+def _empty(engine) -> DataFrame:
     return engine.spark.createDataFrame(
-        res, "doc_id long, path string, score double")
+        [], "doc_id long, path string, score double")
+
+
+def _term_sum(engine, repo: str | None, field: str, ts: list[str],
+              limit: int, term_score) -> DataFrame:
+    """Top-k of ``Σ_t term_score(t, tf, dl)`` over the docs holding any of
+    the terms ``ts`` (``tf``, ``dl``: float64 arrays over the docs holding
+    ``t``) — the per-slice kernel shared by the similarity operators, run
+    through the engine's one route."""
+
+    def score_slice(idx, norms, dead, doc_ranges, k):
+        id_parts, s_parts = [], []
+        for t in ts:
+            ids, tfs, _ = idx.decoded(field, t, False)
+            if ids.size:
+                nd, dls = norms[field]
+                id_parts.append(ids)
+                s_parts.append(term_score(t, tfs.astype(np.float64),
+                                          dls[np.searchsorted(nd, ids)]))
+        if not id_parts:
+            return _NO_HITS
+        uids, inv = np.unique(np.concatenate(id_parts), return_inverse=True)
+        return uids, np.bincount(inv, weights=np.concatenate(s_parts),
+                                 minlength=uids.size)
+
+    return engine._search_postings([(field, t) for t in ts], repo,
+                                   score_slice, limit)
+
+
+def _term_stats(engine, field: str, terms: list[str]):
+    """(sorted lower-cased terms, df per term, N, avgdl) of ``field`` — the
+    driver-side statistics every route operator starts from — or None when
+    no term occurs in ``field`` (nothing can match)."""
+    ts = sorted({t.lower() for t in terms})
+    dfm = engine._df_for_pairs([(field, t) for t in ts])
+    n_docs, avgdl = engine._field_stats().get(field, (0.0, 1.0))
+    if n_docs == 0.0 or not any(dfm.values()):
+        return None
+    return ts, {t: dfm[(field, t)] for t in ts}, n_docs, avgdl
+
+
+def _h2(tf, dl, c: float, avgdl: float):
+    """DFR normalization H2: ``tfn = tf * log2(1 + c * avgdl / dl)``."""
+    return tf * np.log2(1.0 + c * avgdl / dl)
 
 
 def rescore(engine, repo: str | None, query: str, rescore_query: str,
@@ -143,13 +175,6 @@ def constant_score(engine, repo: str | None, query: str, boost: float = 1.0,
             .orderBy(F.asc("doc_id")).limit(limit))
 
 
-#: term-count threshold where a literal ``term IN (...)`` predicate stops
-#: being the right pushdown vehicle and the term set becomes a broadcast
-#: relation instead (Catalyst converts large IN lists poorly and the plan
-#: string itself grows linearly)
-_TERMS_SET_LITERAL_MAX = 1024
-
-
 def terms_set_query(engine, repo: str | None, terms: list[str],
                     field: str = "text", boost: float = 1.0,
                     limit: int = 255) -> DataFrame:
@@ -160,60 +185,23 @@ def terms_set_query(engine, repo: str | None, terms: list[str],
     a bitset; every match scores ``boost`` and ranking degenerates to docID
     order (the ConstantScore tie-break, same as :func:`constant_score`).
 
-    Scale shape: ≤{lit} terms ride a literal ``term IN (...)`` predicate
-    pushed into the term-sorted pruned segments scan (O(matching blocks)
-    decode); larger sets become a BROADCAST semi-join against the postings
-    scan — the term relation is query-sized, never the corpus, so the
-    corpus side still streams map-only with no shuffle.  The distinct-doc
-    union is one map-side-combined aggregate.
+    Scale shape: absent terms drop out against the term dictionary first;
+    the per-slice kernel unions the present terms' docID streams (tf
+    streams are never decoded) — zero scoring arithmetic, like Lucene's
+    bitset union — through the engine's route (module docstring).
     """
-    toks = sorted({t.lower() for t in terms if t})
-    if not toks:
-        return engine.spark.createDataFrame(
-            [], "doc_id long, path string, score double")
-    pairs = [(field, t) for t in toks]
-    dfm = engine._df_for_pairs(pairs)
-    if (engine._path_map is not None
-            and 0 < sum(dfm.values()) <= engine.driver_exec_max_postings):
-        # driver fast path (same block cache as term queries): union the
-        # decoded docID vectors, constant score, docID-order cut — zero
-        # scoring arithmetic, like Lucene's bitset union
-        present = [(field, t) for t in toks if dfm.get((field, t))]
-        idx, slices = engine._blocks_for(present)
-        parts = []
-        for f, t in present:
-            ids, _tfs, _ = idx.decoded(f, t, False)
-            if ids.size:
-                parts.append(ids)
-        if not parts:
-            return engine.spark.createDataFrame(
-                [], "doc_id long, path string, score double")
-        ids = np.unique(np.concatenate(parts))
-        ids = ids[_driver_live_mask(engine, ids, slices, repo)][:limit]
-        return _driver_topk_df(engine, ids,
-                               np.full(ids.shape, float(boost)), limit)
-    if len(toks) <= _TERMS_SET_LITERAL_MAX:
-        flat = (flat_postings_view(engine.spark, engine.catalog, terms=toks)
-                .where(F.col("field") == field))
-    else:
-        flat = (flat_postings_view(engine.spark, engine.catalog)
-                .where(F.col("field") == field))
-        tdf = engine.spark.createDataFrame(
-            [(t,) for t in toks], "term string")
-        flat = flat.join(F.broadcast(tdf), "term", "left_semi")
-    matches = flat.select("doc_id").distinct() \
-        .withColumn("score", F.lit(float(boost)))
-    matches = engine._finalize_df_hits(matches, repo)
-    meta = engine._meta_path_df()
-    topk = matches.orderBy(F.asc("doc_id")).limit(limit)
-    return (meta.join(F.broadcast(topk), "doc_id")
-            .select("doc_id", "path",
-                    F.lit(float(boost)).alias("score"))
-            .orderBy(F.asc("doc_id")))
+    st = _term_stats(engine, field, [t for t in terms if t])
+    if st is None:
+        return _empty(engine)
+    ts, df, _n_docs, _avgdl = st
+    present = [(field, t) for t in ts if df[t]]
 
+    def score_slice(idx, norms, dead, doc_ranges, k):
+        ids = np.unique(np.concatenate([idx.ids_only(f, t)
+                                        for f, t in present]))
+        return ids, np.full(ids.shape, float(boost))
 
-terms_set_query.__doc__ = terms_set_query.__doc__.format(
-    lit=_TERMS_SET_LITERAL_MAX)
+    return engine._search_postings(present, repo, score_slice, limit)
 
 
 def function_score(engine, repo: str | None, query: str, field: str = "text",
@@ -247,64 +235,17 @@ def tfidf_search(engine, repo: str | None, terms: list[str],
 
     ``score(d) = Σ_t sqrt(tf) * (1 + ln(N / (df + 1)))² * (1 / sqrt(dl))``
 
-    (query-norm omitted: it is rank-neutral).  Same declarative shape as the
-    BM25 DataFrame strategy — postings derived from the segments scan with
-    the term predicate pushed to the term-sorted parquet row groups, stats
-    broadcast, arithmetic in whole-stage codegen."""
-    ts = sorted({t.lower() for t in terms})
-    pairs = [(field, t) for t in ts]
-    dfm = engine._df_for_pairs(pairs)
-    n_docs0, _a = engine._field_stats().get(field, (0.0, 1.0))
-    if (engine._path_map is not None
-            and sum(dfm.values()) <= engine.driver_exec_max_postings):
-        # driver fast path: postings through the resident block cache (the
-        # same cache plain term queries ride), ClassicSimilarity in numpy
-        idx, slices = engine._blocks_for(pairs)
-        norms_dirs, _td = engine._sidecar_dirs()
-        norm_lookup = engine._norm_lookup_for(tuple(slices), (field,),
-                                              norms_dirs)
-        id_parts, s_parts = [], []
-        for t in ts:
-            ids, tfs, _ = idx.decoded(field, t, False)
-            if not ids.size:
-                continue
-            nd, dls = norm_lookup[field]
-            dl = dls[np.searchsorted(nd, ids)]
-            idf_t = 1.0 + np.log(n_docs0 / (dfm.get((field, t), 0.0) + 1.0))
-            id_parts.append(ids)
-            s_parts.append(np.sqrt(tfs.astype(np.float64)) * idf_t * idf_t
-                           / np.sqrt(dl.astype(np.float64)))
-        if not id_parts:
-            return engine.spark.createDataFrame(
-                [], "doc_id long, path string, score double")
-        all_ids = np.concatenate(id_parts)
-        all_s = np.concatenate(s_parts)
-        uids, inv = np.unique(all_ids, return_inverse=True)
-        agg = np.zeros(uids.shape, dtype=np.float64)
-        np.add.at(agg, inv, all_s)
-        live = _driver_live_mask(engine, uids, slices, repo)
-        return _driver_topk_df(engine, uids[live], agg[live], limit)
-    flat = (flat_postings_view(engine.spark, engine.catalog, terms=ts)
-            .where(F.col("field") == field))
-    td = (engine._tbl("term_dict")
-          .where((F.col("field") == field) & F.col("term").isin(ts))
-          .select("term", "df"))
-    n_docs, _avgdl = engine._field_stats().get(field, (0.0, 1.0))
-    if n_docs == 0.0:
-        return engine.spark.createDataFrame(
-            [], "doc_id long, path string, score double")
-    idf = F.lit(1.0) + F.log(F.lit(float(n_docs)) / (F.col("df") + 1.0))
-    per_term = (F.sqrt(F.col("tf").cast("double")) * idf * idf
-                / F.sqrt(F.col("dl").cast("double")))
-    agg = (flat.join(F.broadcast(td), "term")
-           .select("doc_id", per_term.alias("s"))
-           .groupBy("doc_id").agg(F.sum("s").alias("score")))
-    agg = engine._finalize_df_hits(agg, repo)
-    meta = engine._meta_path_df()
-    topk = agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
-    return (meta.join(F.broadcast(topk), "doc_id")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "path", "score"))
+    (query-norm omitted: it is rank-neutral).  Scale shape: idf per term
+    is a driver constant; one per-slice numpy kernel sums the per-term
+    contributions, run through the engine's route (module docstring)."""
+    st = _term_stats(engine, field, terms)
+    if st is None:
+        return _empty(engine)
+    ts, df, n_docs, _avgdl = st
+    idf = {t: 1.0 + math.log(n_docs / (df[t] + 1.0)) for t in ts}
+    return _term_sum(engine, repo, field, ts, limit,
+                     lambda t, tf, dl: np.sqrt(tf) * idf[t] * idf[t]
+                     / np.sqrt(dl))
 
 
 def sweetspot_search(engine, repo: str | None, terms: list[str],
@@ -321,72 +262,27 @@ def sweetspot_search(engine, repo: str | None, terms: list[str],
     is ``Σ_t sqrt(tf) * (1 + ln(N/(df+1)))² * plateau(dl)``.  The
     baseline-tf hyperbola is left at its identity defaults, like Lucene's.
 
-    Two-path shape identical to :func:`tfidf_search`: resident driver
-    block cache when predicted postings are small, else the term-pruned
-    postings scan with broadcast stats and codegen arithmetic.
+    Scale shape: the same one-kernel, two-route shape as
+    :func:`tfidf_search`.
     """
     if not (0 < ln_min <= ln_max):
         raise ValueError(f"need 0 < ln_min <= ln_max, got [{ln_min},"
                          f" {ln_max}]")
     if steepness < 0:
         raise ValueError(f"steepness must be >= 0, got {steepness}")
-    ts = sorted({t.lower() for t in terms})
-    pairs = [(field, t) for t in ts]
-    dfm = engine._df_for_pairs(pairs)
-    n_docs0, _a = engine._field_stats().get(field, (0.0, 1.0))
+    st = _term_stats(engine, field, terms)
+    if st is None:
+        return _empty(engine)
+    ts, df, n_docs, _avgdl = st
+    idf = {t: 1.0 + math.log(n_docs / (df[t] + 1.0)) for t in ts}
     lo, hi, s = float(ln_min), float(ln_max), float(steepness)
-    if (engine._path_map is not None
-            and sum(dfm.values()) <= engine.driver_exec_max_postings):
-        idx, slices = engine._blocks_for(pairs)
-        norms_dirs, _td = engine._sidecar_dirs()
-        norm_lookup = engine._norm_lookup_for(tuple(slices), (field,),
-                                              norms_dirs)
-        id_parts, s_parts = [], []
-        for t in ts:
-            ids, tfs, _ = idx.decoded(field, t, False)
-            if not ids.size:
-                continue
-            nd, dls = norm_lookup[field]
-            dl = dls[np.searchsorted(nd, ids)].astype(np.float64)
-            norm = 1.0 / np.sqrt(
-                s * (np.abs(dl - lo) + np.abs(dl - hi) - (hi - lo)) + 1.0)
-            idf_t = 1.0 + np.log(n_docs0 / (dfm.get((field, t), 0.0) + 1.0))
-            id_parts.append(ids)
-            s_parts.append(np.sqrt(tfs.astype(np.float64))
-                           * idf_t * idf_t * norm)
-        if not id_parts:
-            return engine.spark.createDataFrame(
-                [], "doc_id long, path string, score double")
-        all_ids = np.concatenate(id_parts)
-        all_s = np.concatenate(s_parts)
-        uids, inv = np.unique(all_ids, return_inverse=True)
-        agg = np.zeros(uids.shape, dtype=np.float64)
-        np.add.at(agg, inv, all_s)
-        live = _driver_live_mask(engine, uids, slices, repo)
-        return _driver_topk_df(engine, uids[live], agg[live], limit)
-    flat = (flat_postings_view(engine.spark, engine.catalog, terms=ts)
-            .where(F.col("field") == field))
-    td = (engine._tbl("term_dict")
-          .where((F.col("field") == field) & F.col("term").isin(ts))
-          .select("term", "df"))
-    n_docs, _avgdl = engine._field_stats().get(field, (0.0, 1.0))
-    if n_docs == 0.0:
-        return engine.spark.createDataFrame(
-            [], "doc_id long, path string, score double")
-    dl = F.col("dl").cast("double")
-    norm = 1.0 / F.sqrt(F.lit(s) * (F.abs(dl - lo) + F.abs(dl - hi)
-                                    - (hi - lo)) + 1.0)
-    idf = F.lit(1.0) + F.log(F.lit(float(n_docs)) / (F.col("df") + 1.0))
-    per_term = F.sqrt(F.col("tf").cast("double")) * idf * idf * norm
-    agg = (flat.join(F.broadcast(td), "term")
-           .select("doc_id", per_term.alias("s"))
-           .groupBy("doc_id").agg(F.sum("s").alias("score")))
-    agg = engine._finalize_df_hits(agg, repo)
-    meta = engine._meta_path_df()
-    topk = agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
-    return (meta.join(F.broadcast(topk), "doc_id")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "path", "score"))
+
+    def term_score(t, tf, dl):
+        norm = 1.0 / np.sqrt(
+            s * (np.abs(dl - lo) + np.abs(dl - hi) - (hi - lo)) + 1.0)
+        return np.sqrt(tf) * idf[t] * idf[t] * norm
+
+    return _term_sum(engine, repo, field, ts, limit, term_score)
 
 
 def _lm_search(engine, repo: str | None, terms: list[str], field: str,
@@ -404,82 +300,27 @@ def _lm_search(engine, repo: str | None, terms: list[str], field: str,
       (the per-term clamp is Lucene's ``score > 0 ? score : 0``)
     - jelinek-mercer: ``ln(1 + ((1 - λ) * tf / dl) / (λ * p))``
 
-    summed over the query terms.  Scale shape: identical to
-    :func:`tfidf_search`'s DataFrame strategy — the term predicate is pushed
-    into the term-sorted segments scan, the per-term collection stats ride a
-    broadcast (terms are query-sized), the arithmetic is whole-stage codegen,
-    and the only shuffle is the doc_id partial-aggregated groupBy.  The
-    collection token count comes from the delta-maintained ``stats.sum_dl``
-    (one cached tiny-table read), never a corpus scan.
+    summed over the query terms.  Scale shape: ``p(t|C)`` per term is a
+    driver constant — the collection token count comes from the
+    delta-maintained ``stats.sum_dl`` (one cached tiny-table read), never a
+    corpus scan — and one per-slice numpy kernel sums the per-term scores
+    through the engine's route (module docstring).
     """
-    ts = sorted({t.lower() for t in terms})
-    pairs = [(field, t) for t in ts]
-    dfm = engine._df_for_pairs(pairs)  # also fills the cf cache
-    n_docs, _avgdl = engine._field_stats().get(field, (0.0, 1.0))
-    empty = "doc_id long, path string, score double"
-    if n_docs == 0.0 or all(dfm.get(p, 0.0) == 0.0 for p in pairs):
-        return engine.spark.createDataFrame([], empty)
+    st = _term_stats(engine, field, terms)  # also fills the cf cache
+    if st is None:
+        return _empty(engine)
+    ts = st[0]
     sum_dl = engine._field_sum_dl(field)
-    probs = [(t, (engine._cf_cache.get((field, t), 0.0) + 1.0)
-              / (sum_dl + 1.0)) for t in ts]
-    if (engine._path_map is not None
-            and sum(dfm.values()) <= engine.driver_exec_max_postings):
-        # driver fast path: postings through the resident block cache (the
-        # same cache the term/TF-IDF paths ride), LM arithmetic in numpy —
-        # result-identical to the distributed path (pytest-checked)
-        p_by_term = dict(probs)
-        idx, slices = engine._blocks_for(pairs)
-        norms_dirs, _td = engine._sidecar_dirs()
-        norm_lookup = engine._norm_lookup_for(tuple(slices), (field,),
-                                              norms_dirs)
-        id_parts, s_parts = [], []
-        for t in ts:
-            ids, tfs, _ = idx.decoded(field, t, False)
-            if not ids.size:
-                continue
-            nd, dls = norm_lookup[field]
-            dl = dls[np.searchsorted(nd, ids)].astype(np.float64)
-            tfv = tfs.astype(np.float64)
-            p = p_by_term[t]
-            if kind == "dirichlet":
-                sv = np.log(1.0 + tfv / (mu * p)) + np.log(mu / (dl + mu))
-                np.maximum(sv, 0.0, out=sv)
-            else:
-                sv = np.log1p(((1.0 - lam) * tfv / dl) / (lam * p))
-            id_parts.append(ids)
-            s_parts.append(sv)
-        if not id_parts:
-            return engine.spark.createDataFrame([], empty)
-        all_ids = np.concatenate(id_parts)
-        all_s = np.concatenate(s_parts)
-        uids, inv = np.unique(all_ids, return_inverse=True)
-        agg = np.zeros(uids.shape, dtype=np.float64)
-        np.add.at(agg, inv, all_s)
-        live = _driver_live_mask(engine, uids, slices, repo)
-        return _driver_topk_df(engine, uids[live], agg[live], limit)
-    pdf = engine.spark.createDataFrame(probs, "term string, p double")
-    flat = (flat_postings_view(engine.spark, engine.catalog, terms=ts)
-            .where(F.col("field") == field))
-    j = flat.join(F.broadcast(pdf), "term")
-    tfc = F.col("tf").cast("double")
-    dlc = F.col("dl").cast("double")
-    mu_l, lam_l = F.lit(float(mu)), F.lit(float(lam))
-    if kind == "dirichlet":
-        s = (F.log(F.lit(1.0) + tfc / (mu_l * F.col("p")))
-             + F.log(mu_l / (dlc + mu_l)))
-        s = F.greatest(s, F.lit(0.0))
-    else:
-        s = F.log(F.lit(1.0)
-                  + ((F.lit(1.0) - lam_l) * tfc / dlc)
-                  / (lam_l * F.col("p")))
-    agg = (j.select("doc_id", s.alias("s"))
-           .groupBy("doc_id").agg(F.sum("s").alias("score")))
-    agg = engine._finalize_df_hits(agg, repo)
-    meta = engine._meta_path_df()
-    topk = agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
-    return (meta.join(F.broadcast(topk), "doc_id")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "path", "score"))
+    p = {t: (engine._cf_cache.get((field, t), 0.0) + 1.0) / (sum_dl + 1.0)
+         for t in ts}
+
+    def term_score(t, tf, dl):
+        if kind == "dirichlet":
+            return np.maximum(np.log(1.0 + tf / (mu * p[t]))
+                              + np.log(mu / (dl + mu)), 0.0)
+        return np.log1p(((1.0 - lam) * tf / dl) / (lam * p[t]))
+
+    return _term_sum(engine, repo, field, ts, limit, term_score)
 
 
 def lm_dirichlet_search(engine, repo: str | None, terms: list[str],
@@ -513,64 +354,21 @@ def dfr_search(engine, repo: str | None, terms: list[str],
     - I(n) basic model with the L after-effect:
       ``score = (tfn / (1 + tfn)) * log2((N + 1) / (df + 0.5))``
 
-    summed over the query terms.  Same two-path shape as
-    :func:`tfidf_search` / :func:`_lm_search`: warmed engines score the
-    postings through the resident driver block cache in numpy
-    (path-identical, pytest-checked); otherwise the term-pruned
-    flat-postings scan with broadcast per-term stats, arithmetic in
-    whole-stage codegen, one map-side-combined groupBy(doc_id)."""
-    ts = sorted({t.lower() for t in terms})
-    pairs = [(field, t) for t in ts]
-    dfm = engine._df_for_pairs(pairs)
-    n_docs, avgdl = engine._field_stats().get(field, (0.0, 1.0))
-    empty = "doc_id long, path string, score double"
-    if n_docs == 0.0 or all(dfm.get(p, 0.0) == 0.0 for p in pairs):
-        return engine.spark.createDataFrame([], empty)
-    LOG2 = math.log(2.0)
-    idf2 = {t: math.log((n_docs + 1.0) / (dfm.get((field, t), 0.0) + 0.5))
-            / LOG2 for t in ts}
-    if (engine._path_map is not None
-            and sum(dfm.values()) <= engine.driver_exec_max_postings):
-        idx, slices = engine._blocks_for(pairs)
-        norms_dirs, _td = engine._sidecar_dirs()
-        norm_lookup = engine._norm_lookup_for(tuple(slices), (field,),
-                                              norms_dirs)
-        id_parts, s_parts = [], []
-        for t in ts:
-            ids, tfs, _ = idx.decoded(field, t, False)
-            if not ids.size:
-                continue
-            nd, dls = norm_lookup[field]
-            dl = dls[np.searchsorted(nd, ids)].astype(np.float64)
-            tfn = tfs.astype(np.float64) * np.log2(1.0 + c * avgdl / dl)
-            id_parts.append(ids)
-            s_parts.append(tfn / (1.0 + tfn) * idf2[t])
-        if not id_parts:
-            return engine.spark.createDataFrame([], empty)
-        all_ids = np.concatenate(id_parts)
-        all_s = np.concatenate(s_parts)
-        uids, inv = np.unique(all_ids, return_inverse=True)
-        agg = np.zeros(uids.shape, dtype=np.float64)
-        np.add.at(agg, inv, all_s)
-        live = _driver_live_mask(engine, uids, slices, repo)
-        return _driver_topk_df(engine, uids[live], agg[live], limit)
-    sdf = engine.spark.createDataFrame(
-        [(t, idf2[t]) for t in ts], "term string, idf2 double")
-    flat = (flat_postings_view(engine.spark, engine.catalog, terms=ts)
-            .where(F.col("field") == field))
-    tfn = (F.col("tf").cast("double")
-           * F.log2(F.lit(1.0) + F.lit(float(c * avgdl))
-                    / F.col("dl").cast("double")))
-    s = tfn / (F.lit(1.0) + tfn) * F.col("idf2")
-    agg = (flat.join(F.broadcast(sdf), "term")
-           .select("doc_id", s.alias("s"))
-           .groupBy("doc_id").agg(F.sum("s").alias("score")))
-    agg = engine._finalize_df_hits(agg, repo)
-    meta = engine._meta_path_df()
-    topk = agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
-    return (meta.join(F.broadcast(topk), "doc_id")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "path", "score"))
+    summed over the query terms.  Scale shape: the per-term
+    ``log2((N + 1) / (df + 0.5))`` is a driver constant; one per-slice
+    numpy kernel through the engine's route (module docstring)."""
+    st = _term_stats(engine, field, terms)
+    if st is None:
+        return _empty(engine)
+    ts, df, n_docs, avgdl = st
+    idf2 = {t: math.log((n_docs + 1.0) / (df[t] + 0.5)) / math.log(2.0)
+            for t in ts}
+
+    def term_score(t, tf, dl):
+        tfn = _h2(tf, dl, c, avgdl)
+        return tfn / (1.0 + tfn) * idf2[t]
+
+    return _term_sum(engine, repo, field, ts, limit, term_score)
 
 
 def ib_search(engine, repo: str | None, terms: list[str],
@@ -586,60 +384,16 @@ def ib_search(engine, repo: str | None, terms: list[str],
     - log-logistic distribution with the document-frequency lambda
       ``λ = df / N``: ``score = ln((tfn + λ) / λ) = ln(1 + tfn/λ)``
 
-    summed over the query terms.  Same two-path shape as
-    :func:`dfr_search` (driver block-cache numpy fast path on warmed
-    engines, else broadcast per-term stats onto the term-pruned postings
-    scan; one map-side-combined groupBy)."""
-    ts = sorted({t.lower() for t in terms})
-    pairs = [(field, t) for t in ts]
-    dfm = engine._df_for_pairs(pairs)
-    n_docs, avgdl = engine._field_stats().get(field, (0.0, 1.0))
-    empty = "doc_id long, path string, score double"
-    if n_docs == 0.0 or all(dfm.get(p, 0.0) == 0.0 for p in pairs):
-        return engine.spark.createDataFrame([], empty)
-    lam = {t: max(dfm.get((field, t), 0.0), 0.5) / n_docs for t in ts}
-    if (engine._path_map is not None
-            and sum(dfm.values()) <= engine.driver_exec_max_postings):
-        idx, slices = engine._blocks_for(pairs)
-        norms_dirs, _td = engine._sidecar_dirs()
-        norm_lookup = engine._norm_lookup_for(tuple(slices), (field,),
-                                              norms_dirs)
-        id_parts, s_parts = [], []
-        for t in ts:
-            ids, tfs, _ = idx.decoded(field, t, False)
-            if not ids.size:
-                continue
-            nd, dls = norm_lookup[field]
-            dl = dls[np.searchsorted(nd, ids)].astype(np.float64)
-            tfn = tfs.astype(np.float64) * np.log2(1.0 + c * avgdl / dl)
-            id_parts.append(ids)
-            s_parts.append(np.log1p(tfn / lam[t]))
-        if not id_parts:
-            return engine.spark.createDataFrame([], empty)
-        all_ids = np.concatenate(id_parts)
-        all_s = np.concatenate(s_parts)
-        uids, inv = np.unique(all_ids, return_inverse=True)
-        agg = np.zeros(uids.shape, dtype=np.float64)
-        np.add.at(agg, inv, all_s)
-        live = _driver_live_mask(engine, uids, slices, repo)
-        return _driver_topk_df(engine, uids[live], agg[live], limit)
-    sdf = engine.spark.createDataFrame(
-        [(t, lam[t]) for t in ts], "term string, lam double")
-    flat = (flat_postings_view(engine.spark, engine.catalog, terms=ts)
-            .where(F.col("field") == field))
-    tfn = (F.col("tf").cast("double")
-           * F.log2(F.lit(1.0) + F.lit(float(c * avgdl))
-                    / F.col("dl").cast("double")))
-    s = F.log(F.lit(1.0) + tfn / F.col("lam"))
-    agg = (flat.join(F.broadcast(sdf), "term")
-           .select("doc_id", s.alias("s"))
-           .groupBy("doc_id").agg(F.sum("s").alias("score")))
-    agg = engine._finalize_df_hits(agg, repo)
-    meta = engine._meta_path_df()
-    topk = agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
-    return (meta.join(F.broadcast(topk), "doc_id")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "path", "score"))
+    summed over the query terms.  Scale shape: ``λ`` per term is a driver
+    constant; one per-slice numpy kernel through the engine's route, as
+    :func:`dfr_search`."""
+    st = _term_stats(engine, field, terms)
+    if st is None:
+        return _empty(engine)
+    ts, df, n_docs, avgdl = st
+    lam = {t: max(df[t], 0.5) / n_docs for t in ts}
+    return _term_sum(engine, repo, field, ts, limit,
+                     lambda t, tf, dl: np.log1p(_h2(tf, dl, c, avgdl) / lam[t]))
 
 
 def span_position_range(engine, repo: str | None, term: str, start: int,
@@ -656,74 +410,39 @@ def span_position_range(engine, repo: str | None, term: str, start: int,
     docFreq, exactly like Lucene's SpanWeight building termStates from the
     term itself.
 
-    Declarative: positions come from the same pruned segments decode as a
-    phrase; the position filter is a higher-order array function, no Python.
+    Scale shape: one per-slice numpy kernel counts each doc's in-range
+    positions (a segmented ``reduceat``) over the one term's postings,
+    positions included, through the engine's route (module docstring).
     """
-    from lucene_plugin_spark.query import bm25
     if int(start) < 0:
         raise ValueError(f"start must be >= 0, got {start}")
     if int(end) <= int(start):
         # Lucene's SpanPositionRangeQuery with an empty window is
         # valid-and-empty, not an error (and SpanFirstQuery(end=0) relies
         # on it through the facade/HTTP surface)
-        return engine.spark.createDataFrame(
-            [], "doc_id long, path string, score double")
-    start = int(start)
-    t = term.lower()
-    dfv0 = engine._df_for_pairs([(field, t)]).get((field, t), 0.0)
-    if (engine._path_map is not None
-            and dfv0 <= engine.driver_exec_max_postings):
-        # driver fast path: one term's cached blocks, positions included
-        stats = engine._field_stats()
-        n_docs0, avgdl0 = stats.get(field, (0.0, 1.0))
-        if n_docs0 == 0.0 or not dfv0:
-            return engine.spark.createDataFrame(
-                [], "doc_id long, path string, score double")
-        idx, slices = engine._blocks_for([(field, t)],
-                                         pos_pairs={(field, t)})
+        return _empty(engine)
+    start, end = int(start), int(end)
+    st = _term_stats(engine, field, [term])
+    if st is None:
+        return _empty(engine)
+    (t,), df, n_docs, avgdl = st
+
+    def score_slice(idx, norms, dead, doc_ranges, k):
         ids, tfs, pos = idx.decoded(field, t, True)
         if not ids.size or pos is None:
-            return engine.spark.createDataFrame(
-                [], "doc_id long, path string, score double")
-        ends = np.cumsum(tfs.astype(np.int64))
-        starts = ends - tfs
-        in_range = (pos >= start) & (pos < int(end))
-        tf_first = np.add.reduceat(in_range.astype(np.int64), starts)
-        # reduceat on an empty trailing segment repeats — tfs>0 always here
-        keep = tf_first > 0
-        ids_k, tff = ids[keep], tf_first[keep]
-        norms_dirs, _td = engine._sidecar_dirs()
-        nd, dls = engine._norm_lookup_for(tuple(slices), (field,),
-                                          norms_dirs)[field]
-        dl = dls[np.searchsorted(nd, ids_k)]
-        sc = bm25.score(tff.astype(np.float64), dl.astype(np.float64),
-                        float(dfv0), n_docs0, avgdl0)
-        live = _driver_live_mask(engine, ids_k, slices, repo)
-        return _driver_topk_df(engine, ids_k[live], sc[live], limit)
-    flat = (flat_postings_view(engine.spark, engine.catalog, terms=[t])
-            .where((F.col("field") == field) & (F.col("term") == t)))
-    stats = engine._field_stats()
-    n_docs, avgdl = stats.get(field, (0.0, 1.0))
-    dfv = engine._df_for_pairs([(field, t)]).get((field, t), 0.0)
-    if n_docs == 0.0 or not dfv:
-        return engine.spark.createDataFrame(
-            [], "doc_id long, path string, score double")
-    tf_first = F.size(F.filter(
-        "positions",
-        lambda p: (p >= F.lit(start)) & (p < F.lit(int(end)))))
-    idf = float(bm25.idf(float(dfv), n_docs))
-    tfn = (tf_first.cast("double") * (bm25.K1 + 1.0)
-           / (tf_first.cast("double")
-              + bm25.K1 * (1.0 - bm25.B + bm25.B * F.col("dl") / F.lit(avgdl))))
-    agg = (flat.where(tf_first > 0)
-           .select("doc_id", (F.lit(idf) * tfn).alias("score"))
-           .groupBy("doc_id").agg(F.sum("score").alias("score")))
-    agg = engine._finalize_df_hits(agg, repo)
-    meta = engine._meta_path_df()
-    topk = agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
-    return (meta.join(F.broadcast(topk), "doc_id")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "path", "score"))
+            return _NO_HITS
+        in_range = ((pos >= start) & (pos < end)).astype(np.int64)
+        # tfs > 0 always, so no reduceat segment is empty
+        tf_in = np.add.reduceat(in_range, np.cumsum(tfs) - tfs)
+        keep = tf_in > 0
+        nd, dls = norms[field]
+        ids = ids[keep]
+        return ids, bm25.score(tf_in[keep].astype(np.float64),
+                               dls[np.searchsorted(nd, ids)], df[t],
+                               n_docs, avgdl)
+
+    return engine._search_postings([(field, t)], repo, score_slice, limit,
+                                   pos_pairs={(field, t)})
 
 
 def span_first(engine, repo: str | None, term: str, end: int,
@@ -745,61 +464,30 @@ def span_or(engine, repo: str | None, terms: list[str],
     and sums the per-term scores: span-or blends the frequencies FIRST and
     saturates them through a single tf-norm.
 
-    Scale shape: identical to the ordinary OR — driver fast path over the
-    resident block cache when postings fit, else the flat-postings view with
-    the term predicate pushed into the term-sorted parquet scan, one
-    map-side-combined groupBy(doc_id), arithmetic in whole-stage codegen.
+    Scale shape: ``idf_sum`` is a driver constant; one per-slice numpy
+    kernel accumulates freq per doc and saturates it once, through the
+    engine's route (module docstring).
     """
-    from lucene_plugin_spark.query import bm25
-    empty = "doc_id long, path string, score double"
-    ts = sorted({t.lower() for t in terms})
-    pairs = [(field, t) for t in ts]
-    dfm = engine._df_for_pairs(pairs)
-    stats = engine._field_stats()
-    n_docs, avgdl = stats.get(field, (0.0, 1.0))
-    idf_sum = float(sum(bm25.idf(dfv, n_docs)
-                        for dfv in dfm.values() if dfv > 0.0))
-    if n_docs == 0.0 or idf_sum == 0.0:
-        return engine.spark.createDataFrame([], empty)
-    if (engine._path_map is not None
-            and sum(dfm.values()) <= engine.driver_exec_max_postings):
-        # driver fast path: per-term cached blocks, one freq accumulation
-        idx, slices = engine._blocks_for(pairs)
-        id_parts, tf_parts = [], []
-        for t in ts:
-            ids, tfs, _ = idx.decoded(field, t, False)
-            if ids.size:
-                id_parts.append(ids)
-                tf_parts.append(tfs.astype(np.float64))
-        if not id_parts:
-            return engine.spark.createDataFrame([], empty)
-        all_ids = np.concatenate(id_parts)
-        all_tf = np.concatenate(tf_parts)
-        uids, inv = np.unique(all_ids, return_inverse=True)
-        freq = np.zeros(uids.shape, dtype=np.float64)
-        np.add.at(freq, inv, all_tf)
-        norms_dirs, _td = engine._sidecar_dirs()
-        nd, dls = engine._norm_lookup_for(tuple(slices), (field,),
-                                          norms_dirs)[field]
-        dl = dls[np.searchsorted(nd, uids)].astype(np.float64)
-        sc = idf_sum * bm25.tf_norm(freq, dl, avgdl)
-        live = _driver_live_mask(engine, uids, slices, repo)
-        return _driver_topk_df(engine, uids[live], sc[live], limit)
-    flat = (flat_postings_view(engine.spark, engine.catalog, terms=ts)
-            .where(F.col("field") == field))
-    freq = (flat.groupBy("doc_id")
-            .agg(F.sum(F.col("tf").cast("double")).alias("freq"),
-                 F.max("dl").alias("dl")))
-    tfn = (F.col("freq") * (bm25.K1 + 1.0)
-           / (F.col("freq") + bm25.K1 * (1.0 - bm25.B
-                                         + bm25.B * F.col("dl") / F.lit(avgdl))))
-    agg = freq.select("doc_id", (F.lit(idf_sum) * tfn).alias("score"))
-    agg = engine._finalize_df_hits(agg, repo)
-    meta = engine._meta_path_df()
-    topk = agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
-    return (meta.join(F.broadcast(topk), "doc_id")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "path", "score"))
+    st = _term_stats(engine, field, terms)
+    if st is None:
+        return _empty(engine)
+    ts, df, n_docs, avgdl = st
+    idf_sum = float(sum(bm25.idf(d, n_docs) for d in df.values() if d > 0.0))
+
+    def score_slice(idx, norms, dead, doc_ranges, k):
+        got = [idx.decoded(field, t, False) for t in ts]
+        ids = np.concatenate([g[0] for g in got])
+        if not ids.size:
+            return _NO_HITS
+        uids, inv = np.unique(ids, return_inverse=True)
+        freq = np.bincount(inv, weights=np.concatenate(
+            [g[1] for g in got]).astype(np.float64), minlength=uids.size)
+        nd, dls = norms[field]
+        return uids, idf_sum * bm25.tf_norm(
+            freq, dls[np.searchsorted(nd, uids)], avgdl)
+
+    return engine._search_postings([(field, t) for t in ts], repo,
+                                   score_slice, limit)
 
 
 def span_not(engine, repo: str | None, include: str, exclude: str,
@@ -815,83 +503,45 @@ def span_not(engine, repo: str | None, include: str, exclude: str,
     scored through BM25 with the INCLUDE term's ordinary docFreq (only
     include spans are scored; the exclusion is a positional filter).
 
-    Scale shape: both posting lists arrive term-pruned from the segments
-    scan; the exclusion is a left join on doc_id (docs without the exclude
-    term skip the position filter entirely) and the per-position window
-    test runs as nested higher-order array functions in the JVM — no
-    shuffle beyond the doc_id join, no Python.
+    Scale shape: one per-slice numpy kernel over both terms' postings,
+    positions included: combined (docID, position) keys make the window
+    test two ``searchsorted`` probes over the sorted exclude keys.  It runs
+    through the engine's route (module docstring).
     """
-    from lucene_plugin_spark.query import bm25
-    empty = "doc_id long, path string, score double"
     inc, exc = include.lower(), exclude.lower()
-    dfv = engine._df_for_pairs([(field, inc)]).get((field, inc), 0.0)
-    stats = engine._field_stats()
-    n_docs, avgdl = stats.get(field, (0.0, 1.0))
-    if n_docs == 0.0 or not dfv:
-        return engine.spark.createDataFrame([], empty)
-    idf_inc = float(bm25.idf(float(dfv), n_docs))
-    dfm2 = engine._df_for_pairs([(field, inc), (field, exc)])
-    if (engine._path_map is not None
-            and sum(dfm2.values()) <= engine.driver_exec_max_postings):
-        # driver fast path: combined (docID, position) keys make the window
-        # test two searchsorted probes over the exclude stream
-        idx, slices = engine._blocks_for(
-            [(field, inc), (field, exc)],
-            pos_pairs={(field, inc), (field, exc)})
+    pre, post = int(pre), int(post)
+    st = _term_stats(engine, field, [inc])
+    if st is None:
+        return _empty(engine)
+    _, df, n_docs, avgdl = st
+    idf_inc = float(bm25.idf(df[inc], n_docs))
+
+    def score_slice(idx, norms, dead, doc_ranges, k):
         ids_i, tfs_i, pos_i = idx.decoded(field, inc, True)
         if not ids_i.size or pos_i is None:
-            return engine.spark.createDataFrame([], empty)
+            return _NO_HITS
         ids_e, tfs_e, pos_e = idx.decoded(field, exc, True)
+        survive = np.ones(pos_i.size, dtype=np.int64)
         if ids_e.size and pos_e is not None and pos_e.size:
-            mx = int(max(pos_i.max() if pos_i.size else 0, pos_e.max()))
-            m = mx + max(int(pre), int(post)) + 2
-            ik = (np.repeat(ids_i, tfs_i).astype(np.int64) * m
-                  + pos_i.astype(np.int64))
-            ek = (np.repeat(ids_e, tfs_e).astype(np.int64) * m
-                  + pos_e.astype(np.int64))
-            ek.sort()
-            lo = np.searchsorted(ek, ik - int(pre), side="left")
-            hi = np.searchsorted(ek, ik + int(post), side="right")
-            survive = (lo == hi).astype(np.int64)
-        else:
-            survive = np.ones(int(tfs_i.sum()), dtype=np.int64)
-        ends = np.cumsum(tfs_i.astype(np.int64))
-        tf_surv = np.add.reduceat(survive, ends - tfs_i)
+            # key stride past every position plus the window: a shifted
+            # key never reaches a neighbouring doc's keys
+            m = int(max(pos_i.max(), pos_e.max())) + max(pre, post) + 2
+            ik = np.repeat(ids_i, tfs_i).astype(np.int64) * m + pos_i
+            ek = np.sort(np.repeat(ids_e, tfs_e).astype(np.int64) * m + pos_e)
+            survive = (np.searchsorted(ek, ik - pre, side="left")
+                       == np.searchsorted(ek, ik + post, side="right")
+                       ).astype(np.int64)
+        tf_surv = np.add.reduceat(survive, np.cumsum(tfs_i) - tfs_i)
         keep = tf_surv > 0
-        ids_k, tfk = ids_i[keep], tf_surv[keep].astype(np.float64)
-        if not ids_k.size:
-            return engine.spark.createDataFrame([], empty)
-        norms_dirs, _td = engine._sidecar_dirs()
-        nd, dls = engine._norm_lookup_for(tuple(slices), (field,),
-                                          norms_dirs)[field]
-        dl = dls[np.searchsorted(nd, ids_k)].astype(np.float64)
-        sc = idf_inc * bm25.tf_norm(tfk, dl, avgdl)
-        live = _driver_live_mask(engine, ids_k, slices, repo)
-        return _driver_topk_df(engine, ids_k[live], sc[live], limit)
-    flat = (flat_postings_view(engine.spark, engine.catalog,
-                               terms=sorted({inc, exc}))
-            .where(F.col("field") == field))
-    inc_df = (flat.where(F.col("term") == inc)
-              .select("doc_id", "dl", F.col("positions").alias("ip")))
-    exc_df = (flat.where(F.col("term") == exc)
-              .select("doc_id", F.col("positions").alias("ep")))
-    j = inc_df.join(exc_df, "doc_id", "left")
-    pre_l, post_l = F.lit(int(pre)), F.lit(int(post))
-    surv = F.when(F.col("ep").isNull(), F.size("ip")).otherwise(
-        F.size(F.filter("ip", lambda p: ~F.exists(
-            F.col("ep"), lambda q: (q >= p - pre_l) & (q <= p + post_l)))))
-    tfc = surv.cast("double")
-    tfn = (tfc * (bm25.K1 + 1.0)
-           / (tfc + bm25.K1 * (1.0 - bm25.B
-                               + bm25.B * F.col("dl") / F.lit(avgdl))))
-    agg = (j.where(surv > 0)
-           .select("doc_id", (F.lit(idf_inc) * tfn).alias("score")))
-    agg = engine._finalize_df_hits(agg, repo)
-    meta = engine._meta_path_df()
-    topk = agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
-    return (meta.join(F.broadcast(topk), "doc_id")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "path", "score"))
+        nd, dls = norms[field]
+        ids = ids_i[keep]
+        return ids, idf_inc * bm25.tf_norm(
+            tf_surv[keep].astype(np.float64), dls[np.searchsorted(nd, ids)],
+            avgdl)
+
+    pairs = {(field, inc), (field, exc)}
+    return engine._search_postings(pairs, repo, score_slice, limit,
+                                   pos_pairs=pairs)
 
 
 def _span_contain(engine, repo: str | None, big: tuple[str, str],
@@ -925,8 +575,6 @@ def _span_contain(engine, repo: str | None, big: tuple[str, str],
     top-k is a broadcast path join.  Cost is O(the three terms' postings),
     independent of corpus size.
     """
-    from lucene_plugin_spark.query import bm25
-    empty = "doc_id long, path string, score double"
     a, b = big[0].lower(), big[1].lower()
     c = little.lower()
     dfm = engine._df_for_pairs([(field, a), (field, b), (field, c)])
@@ -934,7 +582,7 @@ def _span_contain(engine, repo: str | None, big: tuple[str, str],
     n_docs, avgdl = stats.get(field, (0.0, 1.0))
     if n_docs == 0.0 or any(dfm.get((field, t), 0.0) == 0.0
                             for t in (a, b, c)):
-        return engine.spark.createDataFrame([], empty)
+        return _empty(engine)
     idf_sum = float(sum(bm25.idf(v, n_docs) for v in dfm.values()))
     flat = (flat_postings_view(engine.spark, engine.catalog,
                                terms=sorted({a, b, c}))
@@ -1009,7 +657,6 @@ def explain_scores(engine, repo: str | None, terms: list[str],
     broadcast of the k winners, so explain cost is independent of corpus
     size (Lucene's explain also re-scores one doc at a time).
     """
-    from lucene_plugin_spark.query import bm25
     ts = sorted({t.lower() for t in terms})
     stats = engine._field_stats()
     n_docs, avgdl = stats.get(field, (0.0, 1.0))
@@ -1066,8 +713,6 @@ def multi_phrase(engine, repo: str | None, slots: list[list[str]],
     per-slot unions are doc_id-keyed aggs over ≤|alternatives| arrays, the
     alignment runs in whole-stage codegen via higher-order array functions
     (no Python), and only the top-k joins the path map."""
-    from lucene_plugin_spark.query import bm25
-
     slots_l = [[t.lower() for t in s] for s in slots]
     if not blended:
         from itertools import product
@@ -1080,7 +725,6 @@ def multi_phrase(engine, repo: str | None, slots: list[list[str]],
                                    slop=int(slop)))
         return engine.search_node(Bool(should=tuple(variants)), repo, limit)
 
-    empty = "doc_id long, path string, score double"
     stats = engine._field_stats()
     n, avgdl = stats.get(field, (0.0, 1.0))
     all_terms = sorted({t for s in slots_l for t in s})
@@ -1091,7 +735,7 @@ def multi_phrase(engine, repo: str | None, slots: list[list[str]],
                         for s in slots_l for t in s
                         if dfm.get((field, t), 0.0) > 0.0))
     if n == 0.0 or idf_sum == 0.0:
-        return engine.spark.createDataFrame([], empty)
+        return _empty(engine)
     flat = (flat_postings_view(engine.spark, engine.catalog, terms=all_terms)
             .where(F.col("field") == field))
     j = None
@@ -1161,8 +805,7 @@ def phrase_prefix(engine, repo: str | None, terms: list[str], prefix: str,
     w = Wildcard(field=field, pattern=prefix.lower() + "*")
     exp = engine._expand_ranges([w])[w][:max_expansions]
     if not exp:
-        return engine.spark.createDataFrame(
-            [], "doc_id long, path string, score double")
+        return _empty(engine)
     slots = [[t] for t in terms] + [exp]
     return multi_phrase(engine, repo, slots, field=field, slop=slop,
                         limit=limit)
@@ -1189,7 +832,6 @@ def complex_phrase(engine, repo: str | None, slots: list[str],
     import re as _re
 
     from lucene_plugin_spark.query.plan import Fuzzy, Wildcard
-    empty = "doc_id long, path string, score double"
     parsed: list[object] = []
     for s in slots:
         s = s.lower()
@@ -1210,7 +852,7 @@ def complex_phrase(engine, repo: str | None, slots: list[str],
         else:
             terms = exp[p][:max_expansions]
             if not terms:  # a dead slot kills the whole phrase
-                return engine.spark.createDataFrame([], empty)
+                return _empty(engine)
             out_slots.append(terms)
     return multi_phrase(engine, repo, out_slots, field=field, slop=slop,
                         limit=limit)
@@ -1237,15 +879,13 @@ def common_terms(engine, repo: str | None, terms: list[str],
     a literal term->idf map, and one map-side-combined groupBy(doc_id);
     the must-match-low requirement rides the same aggregation as a
     max(flag) — no second scan, no extra shuffle."""
-    from lucene_plugin_spark.query import bm25
-    empty = "doc_id long, path string, score double"
     ts = sorted({t.lower() for t in terms})
     stats = engine._field_stats()
     n_docs, avgdl = stats.get(field, (0.0, 1.0))
     dfm = engine._df_for_pairs([(field, t) for t in ts])
     present = [t for t in ts if dfm.get((field, t), 0.0) > 0.0]
     if n_docs == 0.0 or not present:
-        return engine.spark.createDataFrame([], empty)
+        return _empty(engine)
     cut = (float(max_term_frequency) if max_term_frequency >= 1.0
            else float(max_term_frequency) * n_docs)
     low = [t for t in present if dfm[(field, t)] <= cut]

@@ -370,9 +370,12 @@ class SearchEngine:
     def repo_doc_ranges(self, repo: str) -> list[tuple[int, int]]:
         if self._repo_ranges is None:
             meta = self._tbl("docs_meta")
-            # docIDs are contiguous per (repo, build generation); without a
-            # gen column there has been exactly one generation
+            # docIDs are contiguous per (repo, build generation) — without a
+            # gen column there has been exactly one generation — and, on an
+            # index_sort index (ids in (sort..., repo, path) order), per
+            # (repo, gen, sort key)
             keys = ["repo", "gen"] if "gen" in meta.columns else ["repo"]
+            keys += self.index_sort or []
             rows = (meta.groupBy(*keys)
                     .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
                     .collect())
@@ -702,28 +705,28 @@ class SearchEngine:
             cq = self._compile_query(node, repo)
             if cq is None:
                 hits = self.spark.createDataFrame([], HITS_SCHEMA)
-            elif (self._path_map is not None
-                  and cq["est_postings"] <= self.driver_exec_max_postings):
-                # driver fast path: small predicted posting volume -> one
-                # JVM-only filtered collect + local kernel + cached path map
-                res = self._search_driver(cq, limit)
-                pm = self._path_map
-                res = res.assign(path=[pm.get(int(d)) for d in res["doc_id"]])
-                return self.spark.createDataFrame(
-                    res[["doc_id", "path", "score"]],
-                    "doc_id long, path string, score double")
             else:
-                hits = self._search_kernel_compiled(cq, limit)
+                hits = self._route(cq, _query_scorer(cq, self._field_stats()),
+                                   limit)
         else:
             hits = self._search_dataframe(node, repo, limit)
-        meta = self._meta_path_df()
-        # top-k first (TakeOrderedAndProject on the per-slice heaps), THEN
-        # resolve paths by broadcasting the K-ROW side and probing docs_meta
-        # (broadcasting docs_meta itself would serialize the whole corpus's
-        # path map on every query — the stored-field fetch S7 wants the k ids
-        # broadcast, not the table)
+        return self._with_paths(hits, limit)
+
+    def _with_paths(self, hits, limit: int) -> DataFrame:
+        """(score desc, doc_id asc) top-k of ``hits`` with stored paths, as
+        DataFrame(doc_id, path, score).  A driver-route pandas top-k takes
+        its paths from the warmed path map (no job); a lazy DataFrame is cut
+        first (TakeOrderedAndProject on the per-slice heaps), THEN probes
+        docs_meta with the broadcast K-ROW side — broadcasting docs_meta
+        itself would serialize the whole corpus's path map on every query."""
+        if isinstance(hits, pd.DataFrame):
+            pm = self._path_map
+            res = hits.assign(path=[pm.get(int(d)) for d in hits["doc_id"]])
+            return self.spark.createDataFrame(
+                res[["doc_id", "path", "score"]],
+                "doc_id long, path string, score double")
         topk = (hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit))
-        return (meta.join(F.broadcast(topk), "doc_id")
+        return (self._meta_path_df().join(F.broadcast(topk), "doc_id")
                 .orderBy(F.desc("score"), F.asc("doc_id"))
                 .select("doc_id", "path", "score"))
 
@@ -772,12 +775,10 @@ class SearchEngine:
                 lo <= doc_id <= hi for lo, hi in cq["doc_ranges"]):
             return out  # doc outside the collection
         stats = self._field_stats()
-        pairs = sorted({(sp["field"], t) for sp in cq["specs"]
-                        for t in sp["terms"]})
-        idx, slices = self._blocks_for(pairs, _phrase_pairs(cq["specs"]))
+        idx, slices = self._blocks_for(cq["pairs"], cq["pos_pairs"])
         norms_dirs, tomb_dirs = self._sidecar_dirs()
-        norms = self._norm_lookup_for(tuple(slices), tuple(cq["fields"]),
-                                      norms_dirs)
+        fields = tuple(sorted({f for f, _ in cq["pairs"]}))
+        norms = self._norm_lookup_for(tuple(slices), fields, norms_dirs)
         dead = None
         if tomb_dirs:
             parts = [_read_tombstones(tomb_dirs, d) for d in slices]
@@ -1012,7 +1013,7 @@ class SearchEngine:
             # (_filtered_segments), so each attempt reads only the slices
             # it needs; the loop stops the moment k matches surface.  At
             # 10^12 docs a selective sort prefix answers from the first
-            # few slices instead of scanning the corpus.  Driver fast path
+            # few slices instead of scanning the corpus.  The driver route
             # (small-df queries) skips the loop — its blocks are already
             # resident and range-filtered locally.
             cq = self._compile_query(node, repo)
@@ -1020,14 +1021,14 @@ class SearchEngine:
                 return self.spark.createDataFrame(
                     [], "doc_id long, path string, sort_key string")
             key = F.col(sort_field).cast("string").alias("sort_key")
-            if (self._path_map is not None
-                    and cq["est_postings"] <= self.driver_exec_max_postings):
-                # untruncated limit: a score-bounded cut (e.g. 1 << 20)
-                # would silently take the lowest docIDs OF A SCORE-SELECTED
-                # SUBSET when the match set exceeds it; driver match sets
-                # are already bounded by driver_exec_max_postings
-                res = self._search_driver(cq, 1 << 31)
-                ids = np.sort(res["doc_id"].to_numpy())[:limit]
+            score = _query_scorer(cq, self._field_stats())
+            # untruncated limit: a score-bounded cut (e.g. 1 << 20) would
+            # silently take the lowest docIDs OF A SCORE-SELECTED SUBSET when
+            # the match set exceeds it; driver-route match sets are already
+            # bounded by the route's posting ceiling
+            hits = self._route(cq, score, 1 << 31)
+            if isinstance(hits, pd.DataFrame):
+                ids = np.sort(hits["doc_id"].to_numpy())[:limit]
                 topk = self.spark.createDataFrame(
                     [(int(i),) for i in ids], "doc_id long")
             else:
@@ -1050,7 +1051,7 @@ class SearchEngine:
                         # untruncated for the same reason as the driver
                         # branch: the probe needs the FIRST k matching
                         # docIDs in [0, bound), not k of a score-top subset
-                        got = (self._search_kernel_compiled(cq2, 1 << 31)
+                        got = (self._route(cq2, score, 1 << 31)
                                .select("doc_id").orderBy(F.asc("doc_id"))
                                .limit(limit).collect())
                     if len(got) >= limit or bound > max_doc:
@@ -1068,13 +1069,12 @@ class SearchEngine:
             cq = self._compile_query(node, repo)
             if cq is None:
                 hits = self.spark.createDataFrame([], HITS_SCHEMA)
-            elif (self._path_map is not None
-                  and cq["est_postings"] <= self.driver_exec_max_postings):
-                res = self._search_driver(cq, 1 << 31)
-                hits = self.spark.createDataFrame(
-                    res[["doc_id", "score"]], "doc_id long, score double")
             else:
-                hits = self._search_kernel_compiled(cq, 1 << 31)
+                hits = self._route(cq, _query_scorer(cq, self._field_stats()),
+                                   1 << 31)
+                if isinstance(hits, pd.DataFrame):
+                    hits = self.spark.createDataFrame(
+                        hits, "doc_id long, score double")
         key = F.col(sort_field).cast("string").alias("sort_key")
         order = (F.col("sort_key").asc() if ascending
                  else F.col("sort_key").desc())
@@ -2023,8 +2023,8 @@ class SearchEngine:
         return {
             "specs": specs,
             "df_map": df_map,
-            "fields": sorted({f for f, _ in all_terms}),
-            "terms_only": sorted({t for _, t in all_terms}),
+            "pairs": all_terms,
+            "pos_pairs": _phrase_pairs(specs),
             "doc_ranges": doc_ranges,
             "needs_positions": any(s["kind"] == "phrase" for s in specs),
             "min_should": min_should,
@@ -2046,24 +2046,105 @@ class SearchEngine:
                 for s in specs for t in s["terms"]),
         }
 
-    def _filtered_segments(self, cq) -> DataFrame:
+    def _filtered_segments(self, scan) -> DataFrame:
+        """The segments scan pruned to a route scan's (field, term) pairs
+        and docID ranges, with positions kept only for ``pos_pairs``."""
+        fields = sorted({f for f, _ in scan["pairs"]})
+        terms = sorted({t for _, t in scan["pairs"]})
         seg = self._segments_df()
-        seg = seg.where(f"field IN ({_sql_in_list(cq['fields'])}) "
-                        f"AND term IN ({_sql_in_list(cq['terms_only'])})")
-        if cq["doc_ranges"] is not None:
+        seg = seg.where(f"field IN ({_sql_in_list(fields)}) "
+                        f"AND term IN ({_sql_in_list(terms)})")
+        if scan["doc_ranges"] is not None:
             # docID ranges -> dslice partition pruning + block-range pruning
             cond = None
-            for lo, hi in cq["doc_ranges"]:
+            for lo, hi in scan["doc_ranges"]:
                 c = (F.col("last_doc") >= lo) & (F.col("first_doc") <= hi)
                 cond = c if cond is None else cond | c
             seg = seg.where(cond)
-        if not cq["needs_positions"]:
+        if not scan["pos_pairs"]:
             # column-prune the positions stream (the bulkiest column) out of
             # the scan — term/range queries never decode it
             seg = seg.drop("positions", "pos_lens_ok")
         else:
-            seg = _null_nonphrase_positions(seg, _phrase_pairs(cq["specs"]))
+            seg = _null_nonphrase_positions(seg, scan["pos_pairs"])
         return seg
+
+    #: driver-route ceiling (read by :meth:`_route` only): operators whose
+    #: term dictionary predicts fewer total postings than this are scored on
+    #: the driver from one JVM-only filtered collect (the shape of a Lucene
+    #: query node).  Above it, the distributed per-slice kernel runs — at
+    #: 100 TB hot terms go distributed, tail terms stay sub-second on the
+    #: driver.
+    driver_exec_max_postings = 8_000_000
+
+    def _route(self, scan, score_slice, limit: int):
+        """The one place a scoring operator's route is chosen.
+
+        ``scan``: ``pairs`` (the (field, term) postings read), ``pos_pairs``
+        (the subset whose positions are decoded), ``doc_ranges`` (collection
+        filter or None) and ``est_postings`` (the predicted posting volume).
+        ``score_slice(idx, norms, dead, doc_ranges, k) -> (ids, scores)``
+        is the operator, written once in numpy: ``idx`` a :class:`_SliceIndex`
+        over the pairs' blocks, ``norms`` the field -> (ids, dls) lookup,
+        ``dead`` the tombstoned docIDs.  Whatever it returns, liveDocs and
+        the collection mask are applied here and the (score desc, doc_id
+        asc) top-``limit`` is cut.
+
+        - **driver** (warmed engine, ``est_postings`` within
+          ``driver_exec_max_postings``): every block comes from the driver
+          postings cache and the whole block set scores as ONE logical
+          slice (docIDs are globally unique).  Returns the top-k as pandas
+          (doc_id, score).
+        - **distributed** (otherwise): one ``mapInPandas`` over the pruned
+          segments scan; each task groups its rows by dslice and reads that
+          slice's norms and tombstones task-locally.  Returns the per-slice
+          top-k hits as a lazy DataFrame (doc_id, score).
+        """
+        fields = sorted({f for f, _ in scan["pairs"]})
+        norms_dirs, tomb_dirs = self._sidecar_dirs()
+        if (self._path_map is not None
+                and scan["est_postings"] <= self.driver_exec_max_postings):
+            idx, slices = self._blocks_for(scan["pairs"], scan["pos_pairs"])
+            if not idx.entries:
+                return _empty_hits()
+            norms = self._norm_lookup_for(tuple(slices), tuple(fields),
+                                          norms_dirs)
+            dead = None
+            if tomb_dirs and slices:
+                dead = np.unique(np.concatenate(
+                    [_read_tombstones(tomb_dirs, d) for d in slices]))
+            return _slice_topk(score_slice, idx, norms, dead,
+                               scan["doc_ranges"], limit)
+        # No shuffle: scan tasks align with whole segment files (one live
+        # file per doc-slice, non-split reads via large maxPartitionBytes in
+        # session.py), so each task holds complete doc-slices — all query
+        # terms' postings for its doc ranges.  Parquet predicate pushdown on
+        # the term-sorted files means a task only reads the query terms' row
+        # groups regardless of file size.  Doc lengths come from the
+        # dslice-partitioned norms sidecar, read task-locally with pyarrow
+        # (the analogue of Lucene reading its per-segment norms file) — no
+        # per-query shuffle of corpus-sized data anywhere.
+        kernel = _make_route_kernel(score_slice, limit, scan["doc_ranges"],
+                                    norms_dirs, fields, tomb_dirs)
+        return self._filtered_segments(scan).mapInPandas(kernel,
+                                                         schema=HITS_SCHEMA)
+
+    def _search_postings(self, pairs, repo: str | None, score_slice,
+                         limit: int, pos_pairs=frozenset()) -> DataFrame:
+        """Top-k DataFrame(doc_id, path, score) of a per-slice numpy scorer
+        (:meth:`_route`) over the postings of ``pairs`` — the entry point of
+        the operators in ``query/advanced.py``.  The route is predicted
+        from Σ df over ``pairs``."""
+        doc_ranges = None
+        if repo is not None:
+            doc_ranges = self.repo_doc_ranges(repo)
+            if not doc_ranges:
+                return self.spark.createDataFrame(
+                    [], "doc_id long, path string, score double")
+        scan = {"pairs": sorted(pairs), "pos_pairs": set(pos_pairs),
+                "doc_ranges": doc_ranges,
+                "est_postings": sum(self._df_for_pairs(pairs).values())}
+        return self._with_paths(self._route(scan, score_slice, limit), limit)
 
     def _sidecar_dirs(self):
         norms_dirs = self._tbl_snapshot("doc_norms").data_dirs
@@ -2071,13 +2152,6 @@ class SearchEngine:
         tomb_dirs = (self._tbl_snapshot("tombstones").data_dirs
                      if tt is not None else [])
         return norms_dirs, tomb_dirs
-
-    #: driver fast-path ceiling: queries whose term dictionary predicts fewer
-    #: total postings than this are scored on the driver from one JVM-only
-    #: filtered collect (the shape of a Lucene query node).  Above it, the
-    #: distributed per-slice kernel runs — at 100 TB hot terms go distributed,
-    #: tail terms stay sub-second on the driver.
-    driver_exec_max_postings = 8_000_000
 
     def _norms_for_slice(self, dslice: int, fields, norms_dirs) -> pd.DataFrame:
         """Per-slice norms frame with a driver-side cache (the per-segment
@@ -2158,75 +2232,6 @@ class SearchEngine:
                 self._norm_lookup_cache.clear()
             self._norm_lookup_cache[key] = hit
         return hit
-
-    def _search_driver(self, cq, limit: int) -> pd.DataFrame:
-        """Driver fast path: resolve the query terms' posting blocks through
-        the driver cache (at most one JVM collect for the misses) and score
-        locally with the SAME per-slice kernels — bit-identical rankings, no
-        Python-worker round trips."""
-        stats = self._field_stats()
-        pairs = sorted({(sp["field"], t) for sp in cq["specs"] for t in sp["terms"]})
-        idx, slices = self._blocks_for(pairs, _phrase_pairs(cq["specs"]))
-        if not idx.entries:
-            return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                                 "score": pd.Series([], dtype="float64")})
-        norms_dirs, tomb_dirs = self._sidecar_dirs()
-        norms_pdf = self._norm_lookup_for(tuple(slices), tuple(cq["fields"]),
-                                          norms_dirs)
-        if tomb_dirs:
-            dead_parts = [_read_tombstones(tomb_dirs, d) for d in slices]
-            dead = np.unique(np.concatenate(dead_parts)) if dead_parts else None
-            if dead is not None and not dead.size:
-                dead = None
-        else:
-            dead = None
-        # docIDs are globally unique, so the whole matched block set scores as
-        # ONE logical slice — no per-slice loop, no partial-top-k merge
-        if cq["only_terms"]:
-            out = _score_slice_wand(idx, norms_pdf, cq["specs"], cq["df_map"],
-                                    stats, cq["doc_ranges"], limit, dead=dead)
-        else:
-            out = _score_slice(idx, norms_pdf, cq["specs"], cq["df_map"],
-                               stats, cq["doc_ranges"], limit,
-                               cq["needs_positions"], dead=dead,
-                               min_should=cq.get("min_should", 0),
-                               dismax_tie=cq.get("dismax_tie"),
-                               tree=cq.get("tree"))
-        if out is None or not len(out):
-            return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                                 "score": pd.Series([], dtype="float64")})
-        return out
-
-    def _search_kernel(self, node: Node, repo: str | None, limit: int) -> DataFrame:
-        cq = self._compile_query(node, repo)
-        if cq is None:
-            return self.spark.createDataFrame([], HITS_SCHEMA)
-        return self._search_kernel_compiled(cq, limit)
-
-    def _search_kernel_compiled(self, cq, limit: int) -> DataFrame:
-        specs, df_map = cq["specs"], cq["df_map"]
-        fields = cq["fields"]
-        doc_ranges = cq["doc_ranges"]
-        needs_positions = cq["needs_positions"]
-        stats = self._field_stats()
-        seg = self._filtered_segments(cq)
-        norms_dirs, tomb_dirs = self._sidecar_dirs()
-        kernel = _make_slice_kernel(specs, df_map, stats, doc_ranges, limit,
-                                    needs_positions, norms_dirs, fields,
-                                    tomb_dirs,
-                                    min_should=cq.get("min_should", 0),
-                                    dismax_tie=cq.get("dismax_tie"),
-                                    tree=cq.get("tree"))
-        # No shuffle: scan tasks align with whole segment files (one live file
-        # per doc-slice, non-split reads via large maxPartitionBytes in
-        # session.py), so each task holds complete doc-slices — all query
-        # terms' postings for its doc ranges.  Parquet predicate pushdown on
-        # the term-sorted files means a task only reads the query terms' row
-        # groups regardless of file size.  Doc lengths come from the
-        # dslice-partitioned norms sidecar, read task-locally with pyarrow
-        # (the analogue of Lucene reading its per-segment norms file) — no
-        # per-query shuffle of corpus-sized data anywhere.
-        return seg.mapInPandas(kernel, schema=HITS_SCHEMA)
 
 
 def _read_norms(norms_dirs: list, dslice: int, fields: list[str]) -> pd.DataFrame:
@@ -2318,23 +2323,22 @@ def _null_nonphrase_positions(seg: DataFrame, phrase_pairs) -> DataFrame:
         "pos_lens_ok": F.expr(f"CASE WHEN {pcond} THEN pos_lens_ok END")})
 
 
-def _make_slice_kernel(specs, df_map, stats, doc_ranges, k, needs_positions,
-                       norms_dirs, fields, tomb_dirs=(), *,
-                       min_should=0, dismax_tie=None, tree=None):
-    """Build the per-task numpy scoring kernel (closure shipped to executors).
+def _slice_topk(score_slice, idx, norms, dead, doc_ranges, k) -> pd.DataFrame:
+    """Run a route scorer on one slice (or the driver's one logical slice):
+    liveDocs + collection mask, then the (score desc, doc_id asc) top-k."""
+    ids, scores = score_slice(idx, norms, dead, doc_ranges, k)
+    keep = _in_ranges(ids, doc_ranges, dead)
+    ids, scores = ids[keep], scores[keep]
+    order = np.lexsort((ids, -scores))[:k]
+    return pd.DataFrame({"doc_id": ids[order].astype(np.int64),
+                         "score": scores[order].astype(np.float64)})
 
-    Input: arrow batches of segment block rows; a task's rows are whole
-    doc-slices.  Output: top-k (doc_id, score) per doc-slice.  Pure-OR term
-    queries go through the block-max WAND path (_score_slice_wand): exact
-    scoring proceeds in descending upper-bound order and stops once the next
-    doc's bound cannot beat the running k-th score, so low-bound blocks'
-    tf streams are never decoded (SURVEY.md §4 P6).
-    """
-    only_terms = (all(s["kind"] == "term" and s["polarity"] == "should"
-                      and s.get("boost", 1.0) == 1.0
-                      for s in specs) and len(specs) > 0
-                  and min_should <= 1 and dismax_tie is None
-                  and tree is None)
+
+def _make_route_kernel(score_slice, k, doc_ranges, norms_dirs, fields,
+                       tomb_dirs):
+    """The distributed route's per-task kernel (closure shipped to
+    executors).  Input: arrow batches of segment block rows; a task's rows
+    are whole doc-slices.  Output: the top-k (doc_id, score) per slice."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         frames = [b for b in batches if len(b)]
@@ -2342,26 +2346,49 @@ def _make_slice_kernel(specs, df_map, stats, doc_ranges, k, needs_positions,
             return
         pdf = pd.concat(frames, ignore_index=True)
         for dslice, sl in pdf.groupby("dslice", sort=False):
-            norms_pdf = _read_norms(norms_dirs, int(dslice), fields)
-            dead = _read_tombstones(list(tomb_dirs), int(dslice)) if tomb_dirs \
-                else None
-            if only_terms:
-                out = _score_slice_wand(sl, norms_pdf, specs, df_map, stats,
-                                        doc_ranges, k, dead=dead)
-            else:
-                out = _score_slice(sl, norms_pdf, specs, df_map, stats,
-                                   doc_ranges, k, needs_positions, dead=dead,
-                                   min_should=min_should,
-                                   dismax_tie=dismax_tie, tree=tree)
-            if out is not None and len(out):
+            norms = _build_norm_lookup(_read_norms(norms_dirs, int(dslice),
+                                                   fields))
+            dead = (_read_tombstones(tomb_dirs, int(dslice))
+                    if tomb_dirs else None)
+            out = _slice_topk(score_slice, _SliceIndex(sl), norms, dead,
+                              doc_ranges, k)
+            if len(out):
                 yield out
 
     return kernel
 
 
+def _query_scorer(cq, stats):
+    """Route scorer of a compiled query (:meth:`SearchEngine._compile_query`).
+    Pure-OR term queries go through the block-max WAND path
+    (_score_slice_wand): exact scoring proceeds in descending upper-bound
+    order and stops once the next doc's bound cannot beat the running k-th
+    score, so low-bound blocks' tf streams are never decoded (SURVEY.md §4
+    P6).  Everything else runs the general kernel (_score_slice)."""
+    specs, df_map = cq["specs"], cq["df_map"]
+    only_terms, needs_positions = cq["only_terms"], cq["needs_positions"]
+    min_should, dismax_tie, tree = (cq["min_should"], cq["dismax_tie"],
+                                    cq["tree"])
+
+    def score(idx, norms, dead, doc_ranges, k):
+        if only_terms:
+            out = _score_slice_wand(idx, norms, specs, df_map, stats,
+                                    doc_ranges, k, dead=dead)
+        else:
+            out = _score_slice(idx, norms, specs, df_map, stats, doc_ranges,
+                               k, needs_positions, dead=dead,
+                               min_should=min_should, dismax_tie=dismax_tie,
+                               tree=tree)
+        if out is None or not len(out):
+            return np.empty(0, np.int64), np.empty(0, np.float64)
+        return out["doc_id"].to_numpy(np.int64), out["score"].to_numpy(np.float64)
+
+    return score
+
+
 def _make_multi_slice_kernel(compiled, df_map, stats, k, norms_dirs, fields,
                              tomb_dirs=()):
-    """Batched variant of _make_slice_kernel: per doc-slice, read norms and
+    """Batched variant of _make_route_kernel: per doc-slice, read norms and
     tombstones once, then score every compiled query against the slice."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

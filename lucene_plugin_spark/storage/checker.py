@@ -24,7 +24,10 @@ with whole doc-slices exactly like query execution — no shuffle):
 - ``term_dict.df``/``cf`` equal the live postings' true per-term counts
   (tombstone-aware — mutations maintain these incrementally, so drift
   here means the delta-aggregate path broke);
-- ``stats.n_docs``/``sum_dl`` per field equal the live ``field_lens``.
+- ``stats.n_docs``/``sum_dl`` per field equal the live ``field_lens``;
+- every tombstone sits in its doc's slice, ``doc_id // docs_per_slice``
+  (the width persisted on the segments snapshot) — the query kernels read
+  a slice's tombstones by that partition, so a misfiled one never masks.
 
 Returns a summary dict; a healthy index reports ``errors == []``.  Only
 violations are collected to the driver (bounded), never corpus-sized data.
@@ -189,6 +192,15 @@ def check_index(spark: SparkSession, catalog) -> dict:
     for r in bad_st:
         errors.append(f"stats[{r['field']}]: n_docs {r['n_docs']} vs live "
                       f"{r['n2']}, sum_dl {r['sum_dl']} vs {r['sum2']}")
+
+    dps = seg_t.snapshot().properties.get("docs_per_slice")
+    if tt.exists() and dps:
+        bad_tomb = (tt.read(spark)
+                    .where(F.col("dslice") != F.floor(F.col("doc_id") / int(dps)))
+                    .limit(20).collect())
+        for r in bad_tomb:
+            errors.append(f"tombstone doc_id {r['doc_id']} in dslice "
+                          f"{r['dslice']}, not {r['doc_id'] // int(dps)}")
 
     return {"slices": int(agg["slices"]), "terms": int(agg["terms"] or 0),
             "postings": int(agg["postings"] or 0), "errors": errors}

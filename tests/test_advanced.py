@@ -480,16 +480,12 @@ def test_terms_set_query(spark, built):
                              for t, _ in d.tokens.get("text", [])))
     assert want_ids and [g[0] for g in got] == want_ids
     assert all(g[2] == boost for g in got)
-    # huge-set strategy (broadcast semi-join instead of the IN literal)
-    # must produce the identical match set
-    old = advanced._TERMS_SET_LITERAL_MAX
-    try:
-        advanced._TERMS_SET_LITERAL_MAX = 1
-        got_join = _got(advanced.terms_set_query(
-            eng, None, terms, boost=boost, limit=1_000_000))
-    finally:
-        advanced._TERMS_SET_LITERAL_MAX = old
-    assert got_join == got
+    # a term set far beyond maxClauseCount (mostly absent terms) must
+    # produce the identical match set
+    huge = terms + [f"zz_absent_{i}" for i in range(1500)]
+    got_huge = _got(advanced.terms_set_query(
+        eng, None, huge, boost=boost, limit=1_000_000))
+    assert got_huge == got
     # the top-k cut is docID order (ConstantScore tie-break)
     got_k = _got(advanced.terms_set_query(eng, None, terms, boost=boost,
                                           limit=5))
@@ -1066,3 +1062,99 @@ def test_complex_phrase_equals_phrase_prefix_special_case(spark, built):
     a = _got(advanced.complex_phrase(eng, None, ["index", "ca*"], limit=20))
     b = _got(advanced.phrase_prefix(eng, None, ["index"], "ca", limit=20))
     assert a and a == b
+
+
+# --------------------------------------------------------------------------
+# route identity of the per-slice operators
+# --------------------------------------------------------------------------
+
+ROUTE_REPO = "repo-03"
+
+ROUTE_OPS = {
+    "tfidf": lambda e: advanced.tfidf_search(
+        e, ROUTE_REPO, ["index", "query", "cache"], limit=40),
+    "sweetspot": lambda e: advanced.sweetspot_search(
+        e, ROUTE_REPO, ["index", "query"], ln_min=40, ln_max=80, limit=40),
+    "lm_dirichlet": lambda e: advanced.lm_dirichlet_search(
+        e, ROUTE_REPO, ["index", "query", "cache"], mu=500.0, limit=40),
+    "lm_jm": lambda e: advanced.lm_jm_search(
+        e, ROUTE_REPO, ["index", "query", "cache"], lam=0.3, limit=40),
+    "dfr": lambda e: advanced.dfr_search(
+        e, ROUTE_REPO, ["index", "query", "cache"], c=1.5, limit=40),
+    "ib": lambda e: advanced.ib_search(
+        e, ROUTE_REPO, ["index", "query", "cache"], c=1.5, limit=40),
+    "span_first": lambda e: advanced.span_first(
+        e, ROUTE_REPO, "index", 8, limit=40),
+    "span_range": lambda e: advanced.span_position_range(
+        e, ROUTE_REPO, "index", 2, 12, limit=40),
+    "terms_set": lambda e: advanced.terms_set_query(
+        e, ROUTE_REPO, ["index", "cache", "zz_no_such_term"], boost=2.0,
+        limit=40),
+    "span_or": lambda e: advanced.span_or(
+        e, ROUTE_REPO, ["index", "cache"], limit=40),
+    "span_not": lambda e: advanced.span_not(
+        e, ROUTE_REPO, "index", "query", pre=1, post=2, limit=40),
+}
+
+
+@pytest.fixture(scope="module")
+def mutated(spark, tmp_path_factory):
+    """A multi-slice index after one upsert and one delete inside
+    ROUTE_REPO: tombstones, a second docID generation and a collection
+    filter all take part in every route."""
+    wh = str(tmp_path_factory.mktemp("wh-route"))
+    rows = generate_rows(N_DOCS, seed=29)
+    catalog = Catalog(wh)
+    builder = IndexBuilder(spark, catalog, docs_per_slice=64)
+    builder.build(_src(spark, rows))
+    mine = [r for r in rows if r["repo"] == ROUTE_REPO]
+    mut = IndexMutator(spark, catalog, builder)
+    up = dict(mine[0], content="index query cache index " + mine[0]["content"])
+    mut.upsert(_src(spark, [up]))
+    gone = next(r for r in mine[1:] if " index" in " " + r["content"])
+    mut.delete(gone["repo"], gone["path"])
+    warm = SearchEngine(spark, catalog).warm()
+    return catalog, warm, {r["path"] for r in mine}, gone["path"]
+
+
+@pytest.mark.parametrize("op", sorted(ROUTE_OPS))
+def test_operator_routes_identical(spark, mutated, monkeypatch, op):
+    catalog, warm, repo_paths, gone_path = mutated
+    run = ROUTE_OPS[op]
+    driver = [(r["doc_id"], r["path"], r["score"]) for r in run(warm).collect()]
+    monkeypatch.setattr(SearchEngine, "driver_exec_max_postings", 0)
+    dist_warm = [(r["doc_id"], r["path"], r["score"])
+                 for r in run(warm).collect()]
+    monkeypatch.undo()
+    cold = [(r["doc_id"], r["path"], r["score"])
+            for r in run(SearchEngine(spark, catalog)).collect()]
+    assert driver, op
+    assert {p for _, p, _ in driver} <= repo_paths - {gone_path}
+    for other in (dist_warm, cold):
+        assert [g[:2] for g in other] == [g[:2] for g in driver], op
+        assert np.allclose([g[2] for g in other], [g[2] for g in driver])
+
+
+def test_index_sort_collection_filter_matches_oracle(spark, tmp_path_factory):
+    """On an index_sort index docIDs run in (lang, repo, path) order, so a
+    collection's docs are not one contiguous docID run: every repo's hits
+    must still be exactly the oracle's."""
+    wh = str(tmp_path_factory.mktemp("wh-isort-repo"))
+    # generate_rows ties lang to repo (i % 4 vs i % 8): rotate it so every
+    # repo spans several sort keys
+    langs = ["java", "py", "js", "go"]
+    rows = [dict(r, lang=langs[(i // 8) % 4])
+            for i, r in enumerate(generate_rows(150, seed=13))]
+    catalog = Catalog(wh)
+    IndexBuilder(spark, catalog, docs_per_slice=64,
+                 index_sort=["lang"]).build(_src(spark, rows))
+    oracle = OracleEngine.from_rows(rows)
+    for eng in (SearchEngine(spark, catalog),
+                SearchEngine(spark, catalog).warm()):
+        for repo in sorted({r["repo"] for r in rows}):
+            got = {r["path"]: r["score"]
+                   for r in eng.search(repo, "index", limit=1000).collect()}
+            want = {p: s for _, p, s in oracle.search(repo, "index",
+                                                      limit=1000)}
+            assert want and set(got) == set(want), repo
+            assert all(np.isclose(got[p], want[p], rtol=1e-9) for p in want)

@@ -280,3 +280,42 @@ def test_facade_commit_is_one_pass(spark, tmp_path):
         ["repo01", "repo02", rows[400]["repo"]])
     _assert_facade_matches_oracle(fac, eff, ["title:user", "title:merge"],
                                   ["repo01", "repo05"])
+
+
+def test_facade_adopts_persisted_docs_per_slice(spark, tmp_path):
+    """A facade opened on a warehouse built with a non-default slice width
+    must file its tombstones (and new docs) by the width on disk: deleted
+    docs past the first slice stop matching and CheckIndex stays clean.  A
+    tombstone filed under the wrong slice is a CheckIndex error."""
+    from lucene_plugin_spark.api import LuceneFacade
+    from lucene_plugin_spark.storage.checker import check_index
+    rows = _facade_rows(200, seed=31)
+    wh = str(tmp_path)
+    IndexBuilder(spark, Catalog(wh), docs_per_slice=64).build(
+        spark.createDataFrame(rows, "repo string, path string, commit string, "
+                              "lang string, content string, "
+                              "fields map<string,string>"),
+        fields_map_col="fields")
+    fac = LuceneFacade(spark, wh)
+    assert fac.builder.docs_per_slice == 64
+    victims = (fac.catalog.table("docs_meta").read(spark)
+               .where("doc_id >= 64").orderBy("doc_id").limit(3).collect())
+    eff = {(r["repo"], r["path"]): r for r in rows}
+    for v in victims:
+        fac.delete(v["repo"], v["path"])
+        eff.pop((v["repo"], v["path"]))
+    fac.index_text(victims[0]["repo"], "added-doc", "index parse token")
+    eff[(victims[0]["repo"], "added-doc")] = {
+        "repo": victims[0]["repo"], "path": "added-doc",
+        "content": "index parse token"}
+    _assert_facade_matches_oracle(fac, eff, QUERIES,
+                                  sorted({v["repo"] for v in victims}))
+    assert check_index(spark, fac.catalog)["errors"] == []
+    # every later snapshot carries the width forward
+    props = fac.catalog.table("segments").snapshot().properties
+    assert props["docs_per_slice"] == 64
+    fac.catalog.table("tombstones").append(
+        spark.createDataFrame([(5, 3)], "doc_id long, dslice int"),
+        partition_by=["dslice"])
+    assert any("tombstone doc_id 5" in e
+               for e in check_index(spark, fac.catalog)["errors"])
