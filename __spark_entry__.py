@@ -2096,21 +2096,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 #
 # Current window (exactly 50), in gate order:
 #
-# 1. the 11 entries whose operators were rewritten as one per-slice numpy
-#    kernel behind the engine's single driver/distributed route
-#    (query/advanced.py: TF-IDF, LM Dirichlet / Jelinek-Mercer, DFR, IB,
-#    SweetSpot, SpanFirst / SpanPositionRange, TermsQuery, SpanOr, SpanNot);
-# 2. the 5 entries whose latest driver row is r2 (_GATE_TAIL below) — they
-#    were deferred past the round-5 window and are now due;
-# 3. 34 entries over the other code this window's changes touch: the query
-#    route of search / search_sorted (classic query surface, nested and
-#    filtered shapes, the index-sort collection filter), the persisted
-#    segments properties (analyzer, slice width) and the mutation path.
+# 1. the 13 entries this window's change reaches most directly: *:* and the
+#    SimpleQueryParser negation wrap now run as a per-slice match-all leaf
+#    (query/executor.py, query/simple.py), the facade drops its strategy
+#    option (api.py), and search_many compiles MatchAll leaves to reject
+#    them — simple_qp, match_all, sort_field / index_sort (the sorted search
+#    paths lost their *:* and DataFrame branches), paging, more_like,
+#    nested, min_should, filter, the mutated-index searches and the batch;
+# 2. 23 further entries over the same query route and mutation path
+#    (classic query surface, synonyms, dismax, span_near, replica, stem,
+#    merge/delete, stream indexing);
+# 3. the 5 entries whose latest driver row is r2 (_GATE_TAIL below);
+# 4. 9 of the 11 advanced-operator entries of the previous window
+#    (query/advanced.py, untouched here).
 #
-# Pushed past slot 50: entries whose modules are untouched since their
-# last green driver row (search_many, phonetic, streaming windows, table
-# statistics, dedup / similarity / TPC-H / event analytics) — every one
-# keeps its queries()+oracle_sql() pair and its local 3-SF gating.
+# Pushed past slot 50: ft_span_or and ft_span_not (advanced operators,
+# module untouched since their last window) and, as before, search_many
+# siblings, phonetic, streaming windows, table statistics, dedup /
+# similarity / TPC-H / event analytics — every one keeps its
+# queries()+oracle_sql() pair and its local 3-SF gating.
 _GATE_TAIL = [
     # the 5 stale-r2 entries (untouched modules; r2-green rows, re-confirmed
     # by the local 3-SF sweeps)
@@ -2121,22 +2125,23 @@ _GATE_TAIL = [
 
 def _rotate_for_gate(q: dict) -> dict:
     head_priority = [
-        # 1. rewritten advanced operators
-        "ft_tfidf", "ft_lmdirichlet", "ft_lmjm", "ft_dfr", "ft_ib",
-        "ft_sweetspot", "ft_span_first", "ft_span_range", "ft_terms_set",
-        "ft_span_or", "ft_span_not",
-        # 2. the stale-r2 entries
-        *_GATE_TAIL,
-        # 3. the query route, persisted index properties and mutations
+        # 1. the match-all leaf, the single strategy and the facade
+        "ft_simple_qp", "ft_match_all", "ft_sort_field", "ft_paging",
+        "ft_more_like", "ft_nested", "ft_index_sort", "ft_min_should",
+        "ft_filter", "mut_upsert_search", "mut_delete_search",
+        "mut_compact_search", "ft_batch",
+        # 2. the rest of the query route and the mutation path
         "ft_term_topk", "ft_or_topk", "ft_and", "ft_not", "ft_phrase",
         "ft_range", "ft_wildcard", "ft_fuzzy", "ft_boost", "ft_phrase_slop",
-        "ft_range_excl", "ft_more_like", "ft_regexp", "ft_field_lang",
-        "ft_collection", "ft_sort_field", "ft_index_sort", "ft_min_should",
-        "ft_filter", "ft_synonym", "ft_dismax", "ft_nested", "ft_span_near",
-        "ft_match_all", "ft_paging", "ft_replica_search", "ft_stem",
-        "merge_upsert", "delete_where", "mut_upsert_search",
-        "mut_delete_search", "mut_docs_sha", "mut_compact_search",
+        "ft_range_excl", "ft_regexp", "ft_field_lang", "ft_collection",
+        "ft_synonym", "ft_dismax", "ft_span_near", "ft_replica_search",
+        "ft_stem", "merge_upsert", "delete_where", "mut_docs_sha",
         "stream_index_search",
+        # 3. the stale-r2 entries
+        *_GATE_TAIL,
+        # 4. advanced operators (module untouched by this window's change)
+        "ft_tfidf", "ft_lmdirichlet", "ft_lmjm", "ft_dfr", "ft_ib",
+        "ft_sweetspot", "ft_span_first", "ft_span_range", "ft_terms_set",
         # --- beyond slot 50: the rest in registry order ---
     ]
     head = [k for k in head_priority if k in q]

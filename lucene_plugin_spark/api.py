@@ -66,12 +66,11 @@ class LuceneEntry:
 
 
 class LuceneFacade:
-    def __init__(self, spark: SparkSession, warehouse: str, mode: str = "kernel",
+    def __init__(self, spark: SparkSession, warehouse: str,
                  service_limit_drop: bool = False):
         self.spark = spark
         self.catalog = Catalog(warehouse)
         self.builder = IndexBuilder(spark, self.catalog)
-        self.mode = mode
         self.service_limit_drop = service_limit_drop
         self._mailbox: concurrent.futures.ThreadPoolExecutor | None = None
         # (collection, id) -> row dict or None (deleted); final state of the
@@ -202,22 +201,21 @@ class LuceneFacade:
         self._check(query, "query")
         if self.service_limit_drop:
             limit = 255  # LuceneReaderImpl.java:100-104 ignores the caller's k
-        self.commit()  # commit() replaces the engine -> caches invalidate
-        if self._engine is None:
-            self._engine = SearchEngine(self.spark, self.catalog)
-        if not self.catalog.table("docs_meta").exists():
+        # _live_engine() commits, and a commit replaces the engine ->
+        # caches invalidate
+        eng = self._live_engine()
+        if eng is None:
             return []
         # per-searcher results LRU (the reference's 512-entry _resultsCache,
         # LuceneIndexBean.java:792,373-378; invalidated by searcher
         # replacement = our engine replacement on commit)
-        key = (collection, query, limit, self.mode)
-        cache = getattr(self._engine, "_results_cache", None)
+        key = (collection, query, limit)
+        cache = getattr(eng, "_results_cache", None)
         if cache is None:
-            cache = self._engine._results_cache = {}
+            cache = eng._results_cache = {}
         if key in cache:
             return cache[key]
-        df = self._engine.search(sanitize_collection(collection), query,
-                                 limit=limit, mode=self.mode)
+        df = eng.search(sanitize_collection(collection), query, limit=limit)
         out = [LuceneEntry(id=r["doc_id"], score=r["score"], external_id=r["path"])
                for r in df.collect()]
         if len(cache) >= 512:
@@ -232,16 +230,12 @@ class LuceneFacade:
         extension beyond the reference's six facade methods."""
         self._check(collection, "collection")
         self._check(key, "externalId")
-        self.commit()
-        if self._engine is None:
-            self._engine = SearchEngine(self.spark, self.catalog)
-        if not self.catalog.table("docs_meta").exists():
+        eng = self._live_engine()
+        if eng is None:
             return []
-        df = self._engine.more_like_this(sanitize_collection(collection), key,
-                                         limit=limit, max_terms=max_terms,
-                                         mode=self.mode)
-        return [LuceneEntry(id=r["doc_id"], score=r["score"],
-                            external_id=r["path"]) for r in df.collect()]
+        return self._entries(eng.more_like_this(
+            sanitize_collection(collection), key, limit=limit,
+            max_terms=max_terms))
 
     def _live_engine(self) -> "SearchEngine | None":
         """Commit pending mutations and return the current engine, or None
@@ -263,10 +257,9 @@ class LuceneFacade:
         eng = self._live_engine()
         if eng is None:
             return []
-        df = eng.search_page(sanitize_collection(collection), query,
-                             limit=limit, offset=offset, mode=self.mode)
-        return [LuceneEntry(id=r["doc_id"], score=r["score"],
-                            external_id=r["path"]) for r in df.collect()]
+        return self._entries(eng.search_page(
+            sanitize_collection(collection), query, limit=limit,
+            offset=offset))
 
     def suggest(self, prefix: str, limit: int = 10) -> list[tuple[str, int]]:
         """Prefix autocomplete from the term dictionary (lucene-suggest
@@ -358,8 +351,7 @@ class LuceneFacade:
         if eng is None:
             return []
         from lucene_plugin_spark.query.results import highlight as _hl
-        hits = eng.search(sanitize_collection(collection), term,
-                          limit=limit, mode=self.mode)
+        hits = eng.search(sanitize_collection(collection), term, limit=limit)
         return [{"externalId": r["path"], "score": r["score"],
                  "snippet": r["snippet"]}
                 for r in _hl(eng, hits, term, window=window).collect()]
@@ -373,11 +365,9 @@ class LuceneFacade:
         eng = self._live_engine()
         if eng is None or not terms:
             return []
-        df = eng.span_near(sanitize_collection(collection), "text", terms,
-                           slop=slop, in_order=in_order, limit=limit,
-                           mode=self.mode)
-        return [LuceneEntry(id=r["doc_id"], score=r["score"],
-                            external_id=r["path"]) for r in df.collect()]
+        return self._entries(eng.span_near(
+            sanitize_collection(collection), "text", terms, slop=slop,
+            in_order=in_order, limit=limit))
 
     def search_sorted(self, collection: str, query: str, sort_field: str,
                       limit: int = 10, ascending: bool = True) -> list[dict]:
@@ -389,8 +379,7 @@ class LuceneFacade:
         if eng is None:
             return []
         df = eng.search_sorted(sanitize_collection(collection), query,
-                               sort_field, limit=limit, ascending=ascending,
-                               mode=self.mode)
+                               sort_field, limit=limit, ascending=ascending)
         return [{"externalId": r["path"], "sortKey": r["sort_key"]}
                 for r in df.collect()]
 
@@ -410,7 +399,7 @@ class LuceneFacade:
             return []
         return self._entries(eng.search_min_match(
             sanitize_collection(collection), query, min_should,
-            limit=limit, mode=self.mode))
+            limit=limit))
 
     def search_filtered(self, collection: str, query: str, filter_query: str,
                         limit: int = 255) -> list[LuceneEntry]:
@@ -424,7 +413,7 @@ class LuceneFacade:
             return []
         return self._entries(eng.search_filtered(
             sanitize_collection(collection), query, filter_query,
-            limit=limit, mode=self.mode))
+            limit=limit))
 
     def search_synonyms(self, collection: str, query: str,
                         synonyms: dict[str, list[str]],

@@ -1,21 +1,22 @@
-"""Query execution — two physical strategies over the same index tables.
+"""Query execution — one strategy over the compressed doc-range segments.
 
-``DataFrameExecutor`` — fully declarative Catalyst plan over the flat
-postings table: term filters push down to parquet, BM25 is built-in column
-arithmetic, boolean logic is joins, top-k is TakeOrderedAndProject.  This is
-the oracle-checkable path (every step expressible in ANSI SQL).
-
-``KernelExecutor`` — the scale path over the compressed doc-range segments:
-driver compiles the query (term-dict lookup for df/idf — the analogue of
-Lucene's term dictionary seek), executors run a numpy kernel per doc-slice
-that decodes posting blocks and computes top-k BM25 with block-max pruning
-(the WAND idea from SURVEY.md §4 P6: blocks/docs whose upper bound
+The driver compiles the query (term-dict lookup for df/idf — the analogue
+of Lucene's term dictionary seek) into per-leaf specs; a numpy kernel per
+doc-slice decodes posting blocks and computes top-k BM25 with block-max
+pruning (the WAND idea from SURVEY.md §4 P6: blocks/docs whose upper bound
 ``sum(idf_t * block_max_w_t)`` cannot reach the running k-th score are never
-fully decoded or scored), then a global ``orderBy(score desc, doc_id).limit(k)``
-merges the per-slice top-k — per-partition heaps + driver merge, exactly the
-shape Lucene's TopScoreDocCollector + our distributed layout want.
+fully decoded or scored), then the per-slice top-k merge into one
+(score desc, doc_id asc) ranking — per-partition heaps + driver merge,
+exactly the shape Lucene's TopScoreDocCollector + our distributed layout
+want.  :meth:`SearchEngine._route` runs the kernel on the driver (warmed
+engine, small predicted posting volume) or per slice in ``mapInPandas``.
 
-Both strategies return identical rankings (pytest-gated against the oracle).
+``*:*`` (MatchAllDocsQuery) is one more leaf, as in Lucene's
+``BooleanWeight``: it matches every doc of a slice at constant boost, with
+the slice's docIDs read from ``docs_meta`` (docs with no tokens have no
+postings and no norms rows, yet still match).
+
+Rankings are pytest-gated against the pure-Python oracle.
 
 Collection filtering (reference: the implicit MUST term on __collectionKey__,
 LuceneIndexBean.java:385-393) exploits docID assignment order: docIDs are
@@ -38,7 +39,7 @@ from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
 
 from lucene_plugin_spark.index import codec
 from lucene_plugin_spark.query import bm25
-from lucene_plugin_spark.query.parser import parse_query, sanitize_collection
+from lucene_plugin_spark.query.parser import parse_query
 from lucene_plugin_spark.query.expand import (EXPANDABLE, exp_cond, exp_key,
                                               exp_mask, exp_match,
                                               wildcard_infix_gram,
@@ -47,8 +48,7 @@ from lucene_plugin_spark.query.expand import (EXPANDABLE, exp_cond, exp_key,
 from lucene_plugin_spark.query.plan import (Bool, DisMax, Fuzzy, MatchAll,
                                             Node, Phrase, Range, SynSet, Term,
                                             Wildcard, is_nested,
-                                            iter_all_leaves,
-                                            iter_positive_leaves, simplify)
+                                            iter_all_leaves, simplify)
 from lucene_plugin_spark.storage.catalog import Catalog, SnapshotError
 
 HITS_SCHEMA = StructType([
@@ -108,6 +108,10 @@ def _leaf_spec(i, l, polarity, range_terms):
         # Range/Wildcard/Fuzzy: constant-score OR over expanded terms
         return {"kind": "range", "field": l.field,
                 "terms": range_terms.get(l, []), "offsets": None,
+                "leaf_id": i, "polarity": polarity, "boost": b}
+    if isinstance(l, MatchAll):
+        # every doc of the slice at constant boost; no postings read
+        return {"kind": "all", "field": None, "terms": [], "offsets": None,
                 "leaf_id": i, "polarity": polarity, "boost": b}
     return {"kind": "phrase", "field": l.field, "terms": list(l.terms),
             "offsets": [o - l.offsets[0] for o in l.offsets],
@@ -185,6 +189,9 @@ class SearchEngine:
         #: (index_sort, repo, path) order, enabling early-terminated sorted
         #: search while the index is unmutated
         self.index_sort: list[str] | None = props.get("index_sort") or None
+        #: slice width (dslice = doc_id // width); absent on indexes built
+        #: before it was persisted
+        self._docs_per_slice = int(props.get("docs_per_slice") or 0)
         self._stats = None
         self._sum_dl: dict[str, float] | None = None
         self._repo_ranges = None
@@ -193,6 +200,10 @@ class SearchEngine:
         self._spell_local_idx: dict[str, object] = {}
         self._meta_cached: DataFrame | None = None
         self._path_map: dict[int, str] | None = None
+        # match-all docIDs: sorted path-map keys (driver route) and the
+        # docs_meta snapshot's dslice partitions
+        self._all_ids: np.ndarray | None = None
+        self._meta_slices: list[int] | None = None
         self._df_cache: dict[tuple[str, str], float] = {}
         self._cf_cache: dict[tuple[str, str], float] = {}
         self._norms_cache: dict[int, pd.DataFrame] = {}
@@ -257,7 +268,7 @@ class SearchEngine:
             if df is not None:
                 df.unpersist()
         self._seg_cached = self._td_cached = self._meta_cached = None
-        self._path_map = None
+        self._path_map = self._all_ids = None
 
     def _segments_df(self) -> DataFrame:
         if self._seg_cached is not None:
@@ -617,8 +628,8 @@ class SearchEngine:
             self._cf_cache.setdefault(p, 0.0)
 
     # ---------------------------------------------------------------- search
-    def search(self, repo: str | None, query: str, limit: int = 255,
-               mode: str = "kernel") -> DataFrame:
+    def search(self, repo: str | None, query: str, limit: int = 255
+               ) -> DataFrame:
         """Top-k hits as DataFrame(doc_id, path, score), score desc / doc_id asc.
 
         ``repo=None`` searches all collections (the reference always scopes to
@@ -628,10 +639,10 @@ class SearchEngine:
         # is a facade-level concern applied at BOTH index and search time
         # (api.py); engine-level repos are raw corpus values
         node = parse_query(query, variant=self.analyzer)
-        return self.search_node(node, repo, limit, mode)
+        return self.search_node(node, repo, limit)
 
     def search_min_match(self, repo: str | None, query: str, min_should: int,
-                         limit: int = 255, mode: str = "kernel") -> DataFrame:
+                         limit: int = 255) -> DataFrame:
         """:meth:`search` with Lucene's
         ``BooleanQuery.setMinimumNumberShouldMatch``: a doc must match at
         least ``min_should`` of the query's SHOULD clauses (MUST / FILTER
@@ -643,10 +654,10 @@ class SearchEngine:
             node = dataclasses.replace(node, min_should=int(min_should))
         else:  # single leaf = one SHOULD clause
             node = Bool(should=(node,), min_should=int(min_should))
-        return self.search_node(node, repo, limit, mode)
+        return self.search_node(node, repo, limit)
 
     def search_filtered(self, repo: str | None, query: str, filter_query: str,
-                        limit: int = 255, mode: str = "kernel") -> DataFrame:
+                        limit: int = 255) -> DataFrame:
         """:meth:`search` with a FILTER clause (BooleanClause.Occur.FILTER):
         ``filter_query`` must match but contributes nothing to the score —
         Lucene's cached-filter / ConstantScore(0) wrapping.  mm=1 makes the
@@ -655,7 +666,7 @@ class SearchEngine:
         qn, fn = parse_query(query, variant=self.analyzer), parse_query(filter_query, variant=self.analyzer)
         return self.search_node(Bool(should=(qn,), filter=(fn,),
                                      min_should=1),
-                                repo, limit, mode)
+                                repo, limit)
 
     def search_synonyms(self, repo: str | None, query: str,
                         synonyms: dict[str, list[str]], limit: int = 255
@@ -665,8 +676,7 @@ class SearchEngine:
         Lucene ``SynonymQuery`` over {term} ∪ synonyms[term] — per-doc
         tf = Σ member tfs, docFreq = max member df (SynonymQuery's blended
         statistics; reference analyzers would wire this through a
-        SynonymGraphFilter, which the classic parser consumes the same way).
-        Kernel strategy only."""
+        SynonymGraphFilter, which the classic parser consumes the same way)."""
         def rewrite(n: Node) -> Node:
             if isinstance(n, Term) and n.term in synonyms:
                 members = tuple(dict.fromkeys([n.term] + list(synonyms[n.term])))
@@ -688,28 +698,22 @@ class SearchEngine:
         """Lucene ``DisjunctionMaxQuery``: each string in ``queries`` is one
         disjunct (typically the same user terms against different fields —
         the dismax multi-field shape); a doc's score is its best disjunct's
-        score plus ``tie`` × the sum of the other disjuncts'.  Kernel
-        strategy only."""
+        score plus ``tie`` × the sum of the other disjuncts'."""
         node = DisMax(disjuncts=tuple(parse_query(q, variant=self.analyzer)
                                for q in queries),
                       tie=float(tie))
         return self.search_node(node, repo, limit)
 
-    def search_node(self, node: Node, repo: str | None, limit: int = 255,
-                    mode: str = "kernel") -> DataFrame:
+    def search_node(self, node: Node, repo: str | None,
+                    limit: int = 255) -> DataFrame:
         """:meth:`search` for an already-built query plan node (used by
         programmatic query builders like :meth:`more_like_this`)."""
-        if isinstance(node, MatchAll):
-            hits = self._match_all_hits(repo, node.boost)
-        elif mode == "kernel":
-            cq = self._compile_query(node, repo)
-            if cq is None:
-                hits = self.spark.createDataFrame([], HITS_SCHEMA)
-            else:
-                hits = self._route(cq, _query_scorer(cq, self._field_stats()),
-                                   limit)
+        cq = self._compile_query(node, repo)
+        if cq is None:
+            hits = self.spark.createDataFrame([], HITS_SCHEMA)
         else:
-            hits = self._search_dataframe(node, repo, limit)
+            hits = self._route(cq, _query_scorer(cq, self._field_stats()),
+                               limit)
         return self._with_paths(hits, limit)
 
     def _with_paths(self, hits, limit: int) -> DataFrame:
@@ -729,24 +733,6 @@ class SearchEngine:
         return (self._meta_path_df().join(F.broadcast(topk), "doc_id")
                 .orderBy(F.desc("score"), F.asc("doc_id"))
                 .select("doc_id", "path", "score"))
-
-    def _match_all_hits(self, repo: str | None, boost: float = 1.0
-                        ) -> DataFrame:
-        """MatchAllDocsQuery: every live doc at constant score, straight off
-        the skinny ``docs_meta`` table (collection filter = a pushed-down
-        ``repo`` predicate on the parquet scan; no postings touched).
-        Tombstoned docIDs (deleted or superseded by upsert) are removed with
-        a left-anti join against the tombstones table — the liveDocs mask."""
-        meta = (self._tbl("docs_meta")
-                .select("doc_id", "repo"))
-        if repo is not None:
-            meta = meta.where(F.col("repo") == repo)
-        hits = meta.select("doc_id", F.lit(float(boost)).alias("score"))
-        tomb = self.catalog.table("tombstones")
-        if tomb.exists():
-            dead = self._tbl("tombstones").select("doc_id").distinct()
-            hits = hits.join(dead, "doc_id", "left_anti")
-        return hits
 
     def explain(self, repo: str | None, query: str, key: str) -> dict:
         """Lucene ``IndexSearcher.explain`` analogue: the per-leaf BM25
@@ -779,12 +765,12 @@ class SearchEngine:
         norms_dirs, tomb_dirs = self._sidecar_dirs()
         fields = tuple(sorted({f for f, _ in cq["pairs"]}))
         norms = self._norm_lookup_for(tuple(slices), fields, norms_dirs)
-        dead = None
-        if tomb_dirs:
-            parts = [_read_tombstones(tomb_dirs, d) for d in slices]
-            dead = np.unique(np.concatenate(parts)) if parts else None
-            if dead is not None and not dead.size:
-                dead = None
+        live_slices = slices
+        if cq["match_all"]:
+            # the doc's own slice decides its liveness, whatever the terms
+            idx.all_ids = np.array([doc_id], np.int64)
+            live_slices = sorted(set(slices) | set(self._doc_slices(dr)))
+        dead = _tombstones_of(tomb_dirs, live_slices)
         total, must_ok, excluded, any_hit = 0.0, True, False, False
         for s in cq["specs"]:
             probe = {**s, "leaf_id": 0, "polarity": "should"}
@@ -817,7 +803,7 @@ class SearchEngine:
 
     def more_like_this(self, repo: str | None, key: str, limit: int = 10,
                        max_terms: int = 8, min_tf: int = 1, min_df: int = 2,
-                       mode: str = "kernel", field: str = "text") -> DataFrame:
+                       field: str = "text") -> DataFrame:
         """Lucene MoreLikeThis analogue: find docs similar to a stored doc.
 
         Term selection mirrors queries-module MoreLikeThis over stored
@@ -863,10 +849,10 @@ class SearchEngine:
         if not top:
             return empty
         node = Bool(should=tuple(Term(field, t) for _s, t in top))
-        return self.search_node(node, repo, limit=limit, mode=mode)
+        return self.search_node(node, repo, limit=limit)
 
     def search_page(self, repo: str | None, query: str, limit: int = 10,
-                    offset: int = 0, mode: str = "kernel") -> DataFrame:
+                    offset: int = 0) -> DataFrame:
         """Deep paging: rows ``offset+1 .. offset+limit`` of the ranking.
 
         Lucene ``searchAfter`` analogue with the standard distributed-engine
@@ -879,8 +865,8 @@ class SearchEngine:
         page over the full ranking (TestPaging.java).
         """
         if offset <= 0:
-            return self.search(repo, query, limit=limit, mode=mode)
-        top = self.search(repo, query, limit=offset + limit, mode=mode)
+            return self.search(repo, query, limit=limit)
+        top = self.search(repo, query, limit=offset + limit)
         w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
         return (top.withColumn("_rn", F.row_number().over(w))
                 .where(F.col("_rn") > offset)
@@ -950,8 +936,8 @@ class SearchEngine:
                 .orderBy("term"))
 
     def span_near(self, repo: str | None, field: str, terms: list[str],
-                  slop: int = 2, in_order: bool = False, limit: int = 255,
-                  mode: str = "kernel") -> DataFrame:
+                  slop: int = 2, in_order: bool = False,
+                  limit: int = 255) -> DataFrame:
         """Lucene ``SpanNearQuery`` analogue: all ``terms`` near each other
         within ``slop``, ordered or unordered.
 
@@ -974,11 +960,10 @@ class SearchEngine:
         ts = tuple(t.lower() for t in terms)
         offsets = tuple(range(len(ts))) if in_order else (0,) * len(ts)
         node = Phrase(field, ts, offsets, slop=int(slop))
-        return self.search_node(node, repo, limit=limit, mode=mode)
+        return self.search_node(node, repo, limit=limit)
 
     def search_sorted(self, repo: str | None, query: str, sort_field: str,
-                      limit: int = 10, ascending: bool = True,
-                      mode: str = "kernel") -> DataFrame:
+                      limit: int = 10, ascending: bool = True) -> DataFrame:
         """Lucene ``Sort(SortField)`` analogue: matches of ``query`` ranked
         by a stored docvalue-like column of ``docs_meta`` (``lang``,
         ``repo``, ``path``, ...) instead of BM25 score.
@@ -998,10 +983,15 @@ class SearchEngine:
         if sort_field not in meta.columns:
             raise ValueError(f"sort_field {sort_field!r} not a stored "
                              f"docs_meta column {meta.columns}")
-        node = parse_query(query, variant=self.analyzer)
+        cq = self._compile_query(parse_query(query, variant=self.analyzer),
+                                 repo)
+        if cq is None:
+            return self.spark.createDataFrame(
+                [], "doc_id long, path string, sort_key string")
+        key = F.col(sort_field).cast("string").alias("sort_key")
+        score = _query_scorer(cq, self._field_stats())
         if (ascending and self.index_sort
                 and self.index_sort[0] == sort_field
-                and not isinstance(node, MatchAll)  # *:* has no compile path
                 and len(self.catalog.table("docs_meta").history()) == 1):
             # SORTED-INDEX EARLY TERMINATION (Lucene TopFieldCollector on
             # a sorted index): docIDs were assigned in (sort_field, repo,
@@ -1016,12 +1006,7 @@ class SearchEngine:
             # few slices instead of scanning the corpus.  The driver route
             # (small-df queries) skips the loop — its blocks are already
             # resident and range-filtered locally.
-            cq = self._compile_query(node, repo)
-            if cq is None:
-                return self.spark.createDataFrame(
-                    [], "doc_id long, path string, sort_key string")
-            key = F.col(sort_field).cast("string").alias("sort_key")
-            score = _query_scorer(cq, self._field_stats())
+            #
             # untruncated limit: a score-bounded cut (e.g. 1 << 20) would
             # silently take the lowest docIDs OF A SCORE-SELECTED SUBSET when
             # the match set exceeds it; driver-route match sets are already
@@ -1063,19 +1048,9 @@ class SearchEngine:
                     .join(F.broadcast(topk), "doc_id")
                     .orderBy(F.asc("doc_id"))
                     .select("doc_id", "path", "sort_key"))
-        if mode != "kernel":
-            hits = self._search_dataframe(node, repo, limit=1 << 31)
-        else:
-            cq = self._compile_query(node, repo)
-            if cq is None:
-                hits = self.spark.createDataFrame([], HITS_SCHEMA)
-            else:
-                hits = self._route(cq, _query_scorer(cq, self._field_stats()),
-                                   1 << 31)
-                if isinstance(hits, pd.DataFrame):
-                    hits = self.spark.createDataFrame(
-                        hits, "doc_id long, score double")
-        key = F.col(sort_field).cast("string").alias("sort_key")
+        hits = self._route(cq, score, 1 << 31)
+        if isinstance(hits, pd.DataFrame):
+            hits = self.spark.createDataFrame(hits, "doc_id long, score double")
         order = (F.col("sort_key").asc() if ascending
                  else F.col("sort_key").desc())
         return (meta.select("doc_id", "path", key)
@@ -1549,6 +1524,12 @@ class SearchEngine:
                         should + must + must_not + filters)
                     specs = _compile_leaf_specs(should, must, must_not,
                                                 range_terms, filters)
+                if any(sp["kind"] == "all" for sp in specs):
+                    # the batch kernel reads no docs_meta slices; refuse
+                    # rather than answer differently from search()
+                    raise ValueError(
+                        f"query {q!r}: *:* (MatchAllDocsQuery) is not "
+                        "supported by search_many; use search()")
                 if not any(s["terms"] for s in specs if s["polarity"] != "must_not"):
                     cached = {"empty": True}  # no positive leaves -> no hits
                 else:
@@ -1673,281 +1654,12 @@ class SearchEngine:
                     exact_pairs.update((l.field, t) for t in l.terms)
         self._prefetch_batch(pending_ranges, exact_pairs)
 
-    # ----------------------------------------------------- DataFrame strategy
-    def _leaf_scores_df(self, leaves: list[Node], range_terms) -> DataFrame | None:
-        """(doc_id, leaf_id, score) for every positive leaf, one Catalyst plan.
-
-        Term leaves: postings filter + broadcast(term_dict)/stats + column
-        arithmetic.  Range leaves: constant score 1.0 per matching doc.
-        Phrase leaves: per-term position arrays self-joined on doc_id and
-        verified with higher-order array functions (no Python).
-
-        Flat postings are DERIVED from the segments table, filtered to the
-        union of the query's terms BEFORE the block decode (term predicate
-        pushed to the term-sorted parquet row groups) — segments are the only
-        durable postings store, so this path can never read stale data after
-        a mutation.
-        """
-        from lucene_plugin_spark.index.builder import flat_postings_view
-        needed: set[str] = set()
-        for l in leaves:
-            if isinstance(l, Term):
-                needed.add(l.term)
-            elif isinstance(l, EXPANDABLE):
-                needed.update(range_terms.get(l, []))
-            elif isinstance(l, Phrase):
-                needed.update(l.terms)
-        flat = flat_postings_view(self.spark, self.catalog, terms=sorted(needed))
-        lens = self._tbl("field_lens")
-        stats = self._field_stats()
-        frames = []
-        # ---- single terms, batched into one scan
-        term_leaves = [(i, l) for i, l in enumerate(leaves) if isinstance(l, Term)]
-        if term_leaves:
-            pairs = [(l.field, l.term, i, float(l.boost)) for i, l in term_leaves]
-            leaf_map = self.spark.createDataFrame(
-                pairs, "field string, term string, leaf_id int, boost double")
-            cand = flat.join(F.broadcast(leaf_map), ["field", "term"])
-            td = self._tbl("term_dict")
-            cand = cand.join(F.broadcast(td), ["field", "term"])
-            if "dl" not in cand.columns:  # older layouts carry dl in field_lens
-                cand = cand.join(lens, ["field", "doc_id"])
-            st = self.spark.createDataFrame(
-                [(f, n, a) for f, (n, a) in stats.items()],
-                "field string, n_docs double, avgdl double")
-            cand = cand.join(F.broadcast(st), "field")
-            idf = F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-            tfn = (F.col("tf") * (bm25.K1 + 1.0)
-                   / (F.col("tf") + bm25.K1 * (1.0 - bm25.B + bm25.B * F.col("dl") / F.col("avgdl"))))
-            frames.append(cand.select(
-                "doc_id", "leaf_id", (idf * tfn * F.col("boost")).alias("score")))
-        # ---- ranges / wildcards / fuzzies: constant score x boost
-        for i, l in enumerate(leaves):
-            if isinstance(l, EXPANDABLE):
-                terms = range_terms.get(l, [])
-                if not terms:
-                    continue
-                cand = (flat.where((F.col("field") == l.field) & F.col("term").isin(terms))
-                        .select("doc_id").distinct()
-                        .select("doc_id", F.lit(i).alias("leaf_id"),
-                                F.lit(float(l.boost)).alias("score")))
-                frames.append(cand)
-        # ---- phrases
-        for i, l in enumerate(leaves):
-            if isinstance(l, Phrase):
-                frames.append(self._phrase_scores_df(l, i, flat, lens, stats))
-        # ---- match-all leaves (SimpleQueryParser's negation wraps a branch
-        # in BQ{SHOULD(MatchAllDocs), MUST_NOT(x)}, so *:* can appear INSIDE
-        # a tree): every doc off the skinny docs_meta scan at constant boost;
-        # tombstones are handled once by _finalize_df_hits like every leaf
-        for i, l in enumerate(leaves):
-            if isinstance(l, MatchAll):
-                frames.append(self._tbl("docs_meta").select(
-                    "doc_id", F.lit(i).alias("leaf_id"),
-                    F.lit(float(l.boost)).alias("score")))
-        if not frames:
-            return None
-        out = frames[0]
-        for fdf in frames[1:]:
-            out = out.unionByName(fdf)
-        return out
-
-    def _phrase_scores_df(self, ph: Phrase, leaf_id: int, flat: DataFrame,
-                          lens: DataFrame, stats) -> DataFrame:
-        """Phrase matching with higher-order array functions.
-
-        tf(phrase) = count of start positions p in positions(t0) such that
-        p + offset_j ∈ positions(t_j) for all j; idf(phrase) = Σ idf(t_j)
-        (Lucene PhraseQuery/BM25 semantics); score = idf * tf_norm(tf, dl).
-
-        slop>0: anchor-displacement semantics (query/plan.py Phrase) with
-        higher-order array functions — per anchor x, displacement =
-        Σ_j array_min(transform(p_j, v -> abs(v - (x + off_j)))); anchors
-        with displacement ≤ slop contribute 1/(1+displacement) to a
-        weighted tf.  Same SQL-expressible shape as the exact path (the
-        DuckDB oracle mirrors it with list_transform/list_min).
-        """
-        n, avgdl = stats.get(ph.field, (0.0, 1.0))
-        td = self._tbl("term_dict")
-        dfs = {r["term"]: r["df"] for r in
-               td.where((F.col("field") == ph.field)
-                        & F.col("term").isin(list(set(ph.terms)))).collect()}
-        if len(dfs) < len(set(ph.terms)) or n == 0.0:
-            return self.spark.createDataFrame([], "doc_id long, leaf_id int, score double")
-        idf_sum = ph.boost * float(sum(bm25.idf(float(dfs[t]), n)
-                                       for t in ph.terms))
-        base = ph.offsets[0]
-        j = None
-        for k, (t, off) in enumerate(zip(ph.terms, ph.offsets)):
-            part = (flat.where((F.col("field") == ph.field) & (F.col("term") == t))
-                    .select("doc_id", F.col("positions").alias(f"p{k}")))
-            j = part if j is None else j.join(part, "doc_id")
-        # count start positions satisfying all offsets, via explode of the
-        # first term's positions (keeps the plan SQL-expressible for oracles)
-        ex = j.select("doc_id", F.explode("p0").alias("x"),
-                      *[F.col(f"p{k}") for k in range(1, len(ph.terms))])
-        if ph.slop:
-            # NB: the lambda must be unary — pyspark binds a second parameter
-            # to the array index, so a `_d=d` default would capture the index
-            def _absdiff(dd):
-                return lambda v: F.abs(v - (F.col("x") + F.lit(dd)))
-
-            disp = F.lit(0.0)
-            for k in range(1, len(ph.terms)):
-                disp = disp + F.array_min(F.transform(
-                    F.col(f"p{k}"), _absdiff(ph.offsets[k] - base)
-                )).cast("double")
-            keep = (ex.withColumn("_disp", disp)
-                    .where(F.col("_disp") <= float(ph.slop)))
-            tf = keep.groupBy("doc_id").agg(
-                F.sum(1.0 / (1.0 + F.col("_disp"))).alias("tf"))
-        else:
-            keep = ex
-            for k in range(1, len(ph.terms)):
-                d = ph.offsets[k] - base
-                keep = keep.where(F.array_contains(F.col(f"p{k}"), F.col("x") + F.lit(d)))
-            tf = keep.groupBy("doc_id").agg(F.count(F.lit(1)).cast("double").alias("tf"))
-        tf = tf.join(lens.where(F.col("field") == ph.field).select("doc_id", "dl"), "doc_id")
-        tfn = (F.col("tf") * (bm25.K1 + 1.0)
-               / (F.col("tf") + bm25.K1 * (1.0 - bm25.B + bm25.B * F.col("dl") / F.lit(avgdl))))
-        return tf.select("doc_id", F.lit(leaf_id).alias("leaf_id"),
-                         (F.lit(idf_sum) * tfn).alias("score"))
-
-    def _node_scores_df(self, node: Node, range_terms) -> DataFrame | None:
-        """(doc_id, score) of docs MATCHING ``node`` under recursive Lucene
-        BooleanWeight semantics — the DataFrame-strategy analogue of
-        ``_eval_tree_slice``: child sub-plans combine with joins/agg (must =
-        inner-join score sum, filter = semi-join, should = union + groupBy
-        with an mm HAVING, must_not = anti-join).  None = provably empty."""
-        if not isinstance(node, Bool):
-            sc = self._leaf_scores_df([node], range_terms)
-            if sc is None:
-                return None
-            return sc.groupBy("doc_id").agg(F.sum("score").alias("score"))
-        mu = [self._node_scores_df(c, range_terms) for c in node.must]
-        fl = [self._node_scores_df(c, range_terms) for c in node.filter]
-        if any(x is None for x in mu + fl):
-            return None
-        sh = [s for s in (self._node_scores_df(c, range_terms)
-                          for c in node.should) if s is not None]
-        eff_mm = max(node.min_should, 0 if (mu or fl) else 1)
-        sunion = None
-        if sh:
-            u = None
-            for i, s in enumerate(sh):
-                part = s.select("doc_id", "score", F.lit(i).alias("cid"))
-                u = part if u is None else u.unionByName(part)
-            g = (u.groupBy("doc_id")
-                 .agg(F.sum("score").alias("_ss"),
-                      F.countDistinct("cid").alias("_ns")))
-            if eff_mm > 0:
-                g = g.where(F.col("_ns") >= eff_mm)
-            sunion = g.select("doc_id", "_ss")
-        if not (mu or fl):
-            if sunion is None:
-                return None
-            base = sunion.select("doc_id", F.col("_ss").alias("score"))
-        else:
-            base = None
-            for m in mu:
-                m = m.select("doc_id", F.col("score").alias("_ms"))
-                base = (m.select("doc_id", F.col("_ms").alias("score"))
-                        if base is None else
-                        base.join(m, "doc_id")
-                        .select("doc_id", (F.col("score")
-                                           + F.col("_ms")).alias("score")))
-            rest = fl
-            if base is None:  # FILTER-only node: matches at score 0
-                base = (fl[0].select("doc_id").distinct()
-                        .select("doc_id", F.lit(0.0).alias("score")))
-                rest = fl[1:]
-            for f_ in rest:
-                base = base.join(f_.select("doc_id").distinct(),
-                                 "doc_id", "left_semi")
-            if eff_mm > 0:  # mm demands SHOULD matches even beside MUST
-                if sunion is None:
-                    return None
-                base = (base.join(sunion, "doc_id")
-                        .select("doc_id", (F.col("score")
-                                           + F.col("_ss")).alias("score")))
-            elif sunion is not None:  # optional SHOULD: left join the sums
-                base = (base.join(sunion, "doc_id", "left")
-                        .select("doc_id",
-                                (F.col("score") + F.coalesce(
-                                    F.col("_ss"), F.lit(0.0))).alias("score")))
-        for c in node.must_not:
-            neg = self._node_scores_df(c, range_terms)
-            if neg is not None:
-                base = base.join(neg.select("doc_id").distinct(),
-                                 "doc_id", "left_anti")
-        return base
-
-    def _search_dataframe(self, node: Node, repo: str | None, limit: int) -> DataFrame:
-        node = simplify(node)
-
-        def has_kernel_only(n):
-            if isinstance(n, (DisMax, SynSet)):
-                return True
-            if isinstance(n, Bool):
-                return any(has_kernel_only(c) for c in
-                           n.should + n.must + n.must_not + n.filter)
-            return False
-
-        if has_kernel_only(node):
-            raise NotImplementedError(
-                "DisMax / SynonymQuery run on the kernel strategy "
-                "(mode='kernel', the default)")
-        if is_nested(node):
-            range_terms = self._expand_ranges(
-                [l for l in iter_all_leaves(node) if isinstance(l, EXPANDABLE)])
-            agg = self._node_scores_df(node, range_terms)
-            if agg is None:
-                return self.spark.createDataFrame([], HITS_SCHEMA)
-            return self._finalize_df_hits(agg, repo)
-        should, must, must_not, filters, min_should = _leaves_of(node)
-        positive = should + must
-        range_terms = self._expand_ranges(positive + must_not + filters)
-        scores = self._leaf_scores_df(positive, range_terms)
-        if scores is None:
-            return self.spark.createDataFrame([], HITS_SCHEMA)
-        n_must = len(must)
-        if n_must:
-            must_ids = [len(should) + i for i in range(n_must)]
-            ok = (scores.where(F.col("leaf_id").isin(must_ids))
-                  .groupBy("doc_id")
-                  .agg(F.countDistinct("leaf_id").alias("nm"))
-                  .where(F.col("nm") == n_must)
-                  .select("doc_id"))
-            scores = scores.join(ok, "doc_id", "left_semi")
-        if filters:
-            # FILTER clauses: required, never scored — semi-join on docs
-            # matching ALL filter leaves
-            fsc = self._leaf_scores_df(filters, range_terms)
-            if fsc is None:
-                return self.spark.createDataFrame([], HITS_SCHEMA)
-            fok = (fsc.groupBy("doc_id")
-                   .agg(F.countDistinct("leaf_id").alias("nf"))
-                   .where(F.col("nf") == len(filters))
-                   .select("doc_id"))
-            scores = scores.join(fok, "doc_id", "left_semi")
-        if min_should > 1 and should:
-            should_ids = list(range(len(should)))
-            sok = (scores.where(F.col("leaf_id").isin(should_ids))
-                   .groupBy("doc_id")
-                   .agg(F.countDistinct("leaf_id").alias("ns"))
-                   .where(F.col("ns") >= min_should)
-                   .select("doc_id"))
-            scores = scores.join(sok, "doc_id", "left_semi")
-        if must_not:
-            neg = self._leaf_scores_df(must_not, range_terms)
-            if neg is not None:
-                scores = scores.join(neg.select("doc_id").distinct(), "doc_id", "left_anti")
-        agg = scores.groupBy("doc_id").agg(F.sum("score").alias("score"))
-        return self._finalize_df_hits(agg, repo)
-
+    # ------------------------------------------------ declarative operators
     def _finalize_df_hits(self, agg: DataFrame, repo: str | None) -> DataFrame:
-        """Shared DataFrame-strategy tail: liveDocs (tombstone anti-join) and
-        the collection docID-range filter."""
+        """liveDocs (tombstone anti-join) and the collection docID-range
+        filter for the operators still written as DataFrame plans over the
+        flat postings view (``query/advanced.py``, ``query/results.py``);
+        every per-slice scorer gets both from :meth:`_route` instead."""
         tt = self._tombstones_table()
         if tt is not None:
             agg = agg.join(self._tbl("tombstones").select("doc_id"), "doc_id", "left_anti")
@@ -1963,17 +1675,11 @@ class SearchEngine:
             agg = agg.where(cond)
         return agg
 
-    # ------------------------------------------------------- kernel strategy
+    # ----------------------------------------------------------- query route
     def _compile_query(self, node: Node, repo: str | None):
         """Driver-side query compilation shared by the distributed kernel and
         the driver fast path: leaves -> specs, term-df lookup, collection
         doc-ranges.  Returns None when the query can match nothing."""
-        if isinstance(node, MatchAll):
-            # match-all has no postings to compile; only search/search_node
-            # route it (straight docs_meta scan).  Fail loudly rather than
-            # returning an empty compile that would read as "no hits".
-            raise ValueError("*:* (MatchAllDocsQuery) is not supported on "
-                             "the batch/explain kernel path; use search()")
         node = simplify(node)
         dismax_tie = None
         tree = None
@@ -2011,7 +1717,8 @@ class SearchEngine:
                 should + must + must_not + filters)
             specs = _compile_leaf_specs(should, must, must_not, range_terms,
                                         filters)
-        if not any(s["terms"] for s in specs if s["polarity"] != "must_not"):
+        if not any(s["terms"] or s["kind"] == "all"
+                   for s in specs if s["polarity"] != "must_not"):
             return None
         all_terms = sorted({(s["field"], t) for s in specs for t in s["terms"]})
         df_map = self._df_for_pairs(all_terms)
@@ -2027,6 +1734,7 @@ class SearchEngine:
             "pos_pairs": _phrase_pairs(specs),
             "doc_ranges": doc_ranges,
             "needs_positions": any(s["kind"] == "phrase" for s in specs),
+            "match_all": any(s["kind"] == "all" for s in specs),
             "min_should": min_should,
             "dismax_tie": dismax_tie,
             "tree": tree,
@@ -2038,12 +1746,16 @@ class SearchEngine:
             # term — except phrase terms, whose cost is the POSITION stream
             # (cf = total occurrences), so a cold hot-term phrase routes to
             # the distributed kernel instead of a single-threaded driver
-            # decode of a multi-million-entry stream
+            # decode of a multi-million-entry stream.  A match-all leaf
+            # reads one docID per doc; only a warmed engine, which holds
+            # them all in its path map, can take the driver route
             "est_postings": sum(
                 max(self._df_cache.get((s["field"], t), 0.0),
                     self._cf_cache.get((s["field"], t), 0.0)
                     if s["kind"] == "phrase" else 0.0)
-                for s in specs for t in s["terms"]),
+                for s in specs for t in s["terms"]) + sum(
+                len(self._path_map or ()) for s in specs
+                if s["kind"] == "all"),
         }
 
     def _filtered_segments(self, scan) -> DataFrame:
@@ -2082,7 +1794,8 @@ class SearchEngine:
 
         ``scan``: ``pairs`` (the (field, term) postings read), ``pos_pairs``
         (the subset whose positions are decoded), ``doc_ranges`` (collection
-        filter or None) and ``est_postings`` (the predicted posting volume).
+        filter or None), ``est_postings`` (the predicted posting volume) and
+        ``match_all`` (the query holds a match-all leaf).
         ``score_slice(idx, norms, dead, doc_ranges, k) -> (ids, scores)``
         is the operator, written once in numpy: ``idx`` a :class:`_SliceIndex`
         over the pairs' blocks, ``norms`` the field -> (ids, dls) lookup,
@@ -2099,20 +1812,28 @@ class SearchEngine:
           segments scan; each task groups its rows by dslice and reads that
           slice's norms and tombstones task-locally.  Returns the per-slice
           top-k hits as a lazy DataFrame (doc_id, score).
+
+        A match-all query visits every slice in its doc ranges, not only
+        the slices its terms touch, with their tombstones; ``idx.all_ids``
+        holds the slice's docIDs (driver: the warmed path map; distributed:
+        the slice's ``docs_meta`` partition, read task-locally).
         """
         fields = sorted({f for f, _ in scan["pairs"]})
         norms_dirs, tomb_dirs = self._sidecar_dirs()
+        match_all = scan["match_all"]
         if (self._path_map is not None
                 and scan["est_postings"] <= self.driver_exec_max_postings):
             idx, slices = self._blocks_for(scan["pairs"], scan["pos_pairs"])
-            if not idx.entries:
+            live_slices = slices
+            if match_all:
+                idx.all_ids = self._doc_ids()
+                live_slices = sorted(set(slices) | set(
+                    self._doc_slices(scan["doc_ranges"])))
+            elif not idx.entries:
                 return _empty_hits()
             norms = self._norm_lookup_for(tuple(slices), tuple(fields),
                                           norms_dirs)
-            dead = None
-            if tomb_dirs and slices:
-                dead = np.unique(np.concatenate(
-                    [_read_tombstones(tomb_dirs, d) for d in slices]))
+            dead = _tombstones_of(tomb_dirs, live_slices)
             return _slice_topk(score_slice, idx, norms, dead,
                                scan["doc_ranges"], limit)
         # No shuffle: scan tasks align with whole segment files (one live
@@ -2124,10 +1845,52 @@ class SearchEngine:
         # dslice-partitioned norms sidecar, read task-locally with pyarrow
         # (the analogue of Lucene reading its per-segment norms file) — no
         # per-query shuffle of corpus-sized data anywhere.
+        meta_dirs = None
+        if not match_all:
+            rows = self._filtered_segments(scan)
+        else:
+            # one marker row (dslice only) per slice in the doc ranges, so a
+            # slice no query term touches is scored too; the hash exchange
+            # on dslice puts a slice's marker and its block rows in ONE task
+            slices = self._doc_slices(scan["doc_ranges"])
+            rows = self.spark.createDataFrame([(d,) for d in slices],
+                                              "dslice int")
+            if scan["pairs"]:
+                rows = self._filtered_segments(scan).unionByName(
+                    rows, allowMissingColumns=True)
+            rows = rows.repartition(
+                max(1, min(len(slices),
+                           self.spark.sparkContext.defaultParallelism)),
+                "dslice")
+            meta_dirs = self._tbl_snapshot("docs_meta").data_dirs
         kernel = _make_route_kernel(score_slice, limit, scan["doc_ranges"],
-                                    norms_dirs, fields, tomb_dirs)
-        return self._filtered_segments(scan).mapInPandas(kernel,
-                                                         schema=HITS_SCHEMA)
+                                    norms_dirs, fields, tomb_dirs, meta_dirs)
+        return rows.mapInPandas(kernel, schema=HITS_SCHEMA)
+
+    def _doc_ids(self) -> np.ndarray:
+        """Sorted docIDs of every docs_meta row (tombstoned ones too —
+        liveDocs drops them), taken once per engine from the warmed path
+        map: the driver route's match-all postings."""
+        if self._all_ids is None:
+            self._all_ids = np.sort(np.fromiter(
+                self._path_map, np.int64, len(self._path_map)))
+        return self._all_ids
+
+    def _doc_slices(self, doc_ranges) -> list[int]:
+        """The docs_meta snapshot's dslice partitions (listed once per
+        engine, no Spark job), pruned to those overlapping ``doc_ranges``
+        when the slice width is known."""
+        if self._meta_slices is None:
+            sid = self.pins.get("docs_meta") if self.pins is not None else None
+            self._meta_slices = sorted(
+                int(v) for (v,) in self.catalog.table(
+                    "docs_meta").partition_values(["dslice"], sid))
+        w = self._docs_per_slice
+        if doc_ranges is None or not w:
+            return self._meta_slices
+        return [d for d in self._meta_slices
+                if any(lo < (d + 1) * w and hi >= d * w
+                       for lo, hi in doc_ranges)]
 
     def _search_postings(self, pairs, repo: str | None, score_slice,
                          limit: int, pos_pairs=frozenset()) -> DataFrame:
@@ -2142,7 +1905,7 @@ class SearchEngine:
                 return self.spark.createDataFrame(
                     [], "doc_id long, path string, score double")
         scan = {"pairs": sorted(pairs), "pos_pairs": set(pos_pairs),
-                "doc_ranges": doc_ranges,
+                "doc_ranges": doc_ranges, "match_all": False,
                 "est_postings": sum(self._df_for_pairs(pairs).values())}
         return self._with_paths(self._route(scan, score_slice, limit), limit)
 
@@ -2256,20 +2019,30 @@ def _read_norms(norms_dirs: list, dslice: int, fields: list[str]) -> pd.DataFram
     return out[out["field"].isin(fields)]
 
 
-def _read_tombstones(tomb_dirs: list, dslice: int) -> np.ndarray:
-    """Task-local read of one slice's tombstoned docIDs (liveDocs analogue)."""
+def _read_doc_ids(data_dirs: list, dslice: int) -> np.ndarray:
+    """Task-local read of the sorted unique docIDs in one slice's partition
+    of a dslice-partitioned table: ``tombstones`` (the liveDocs mask) or
+    ``docs_meta`` (every doc of the slice, for match-all)."""
     import glob
 
     import pyarrow.parquet as pq
 
     from lucene_plugin_spark.storage.catalog import partition_data_dirs
     parts = []
-    for part in partition_data_dirs(tomb_dirs, "dslice", dslice):
+    for part in partition_data_dirs(data_dirs, "dslice", dslice):
         for f in glob.glob(os.path.join(part, "*.parquet")):
             parts.append(pq.read_table(f, columns=["doc_id"])["doc_id"].to_numpy())
     if not parts:
         return np.empty(0, np.int64)
     return np.unique(np.concatenate(parts)).astype(np.int64)
+
+
+def _tombstones_of(tomb_dirs: list, slices) -> np.ndarray | None:
+    """Tombstoned docIDs of a slice set, sorted (None: nothing to mask)."""
+    if not tomb_dirs or not slices:
+        return None
+    return np.unique(np.concatenate(
+        [_read_doc_ids(tomb_dirs, d) for d in slices]))
 
 
 def _levenshtein(a: str, b: str) -> int:
@@ -2335,10 +2108,14 @@ def _slice_topk(score_slice, idx, norms, dead, doc_ranges, k) -> pd.DataFrame:
 
 
 def _make_route_kernel(score_slice, k, doc_ranges, norms_dirs, fields,
-                       tomb_dirs):
+                       tomb_dirs, meta_dirs=None):
     """The distributed route's per-task kernel (closure shipped to
     executors).  Input: arrow batches of segment block rows; a task's rows
-    are whole doc-slices.  Output: the top-k (doc_id, score) per slice."""
+    are whole doc-slices.  Output: the top-k (doc_id, score) per slice.
+
+    ``meta_dirs`` (match-all queries): the docs_meta snapshot the slice's
+    docIDs are read from; the input then also holds one marker row per
+    slice (dslice only, no term)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         frames = [b for b in batches if len(b)]
@@ -2346,12 +2123,18 @@ def _make_route_kernel(score_slice, k, doc_ranges, norms_dirs, fields,
             return
         pdf = pd.concat(frames, ignore_index=True)
         for dslice, sl in pdf.groupby("dslice", sort=False):
-            norms = _build_norm_lookup(_read_norms(norms_dirs, int(dslice),
-                                                   fields))
-            dead = (_read_tombstones(tomb_dirs, int(dslice))
+            norms = (_build_norm_lookup(_read_norms(norms_dirs, int(dslice),
+                                                    fields))
+                     if fields else {})
+            dead = (_read_doc_ids(tomb_dirs, int(dslice))
                     if tomb_dirs else None)
-            out = _slice_topk(score_slice, _SliceIndex(sl), norms, dead,
-                              doc_ranges, k)
+            if meta_dirs is None:
+                idx = _SliceIndex(sl)
+            else:
+                idx = _SliceIndex(sl[sl["term"].notna()]
+                                  if "term" in sl else sl.iloc[:0])
+                idx.all_ids = _read_doc_ids(meta_dirs, int(dslice))
+            out = _slice_topk(score_slice, idx, norms, dead, doc_ranges, k)
             if len(out):
                 yield out
 
@@ -2401,7 +2184,7 @@ def _make_multi_slice_kernel(compiled, df_map, stats, k, norms_dirs, fields,
             # and the norms lookup are shared by every query in the batch
             sl = _SliceIndex(sl)
             norms_pdf = _build_norm_lookup(_read_norms(norms_dirs, int(dslice), fields))
-            dead = _read_tombstones(list(tomb_dirs), int(dslice)) if tomb_dirs \
+            dead = _read_doc_ids(list(tomb_dirs), int(dslice)) if tomb_dirs \
                 else None
             for c in compiled:
                 if c["only_terms"]:
@@ -2430,11 +2213,15 @@ class _SliceIndex:
     of the frame scans, sorts, or varint decodes repeat.  Lazy tf blocks
     (``tf_parts``) are shared too: a block decoded for one query is free for
     the next (the WAND guarantee only ever shrinks the decoded set).
+
+    ``all_ids``: the slice's sorted docIDs from ``docs_meta``, set only for
+    queries holding a match-all leaf.
     """
-    __slots__ = ("entries",)
+    __slots__ = ("entries", "all_ids")
 
     def __init__(self, sl: pd.DataFrame):
         self.entries: dict = {}
+        self.all_ids: np.ndarray | None = None
         if not len(sl):
             return
         f = sl["field"].to_numpy()
@@ -2474,6 +2261,7 @@ class _SliceIndex:
         every decode with past and future queries touching the same term."""
         out = cls.__new__(cls)
         out.entries = entries
+        out.all_ids = None
         return out
 
     def blocks(self, field: str, term: str):
@@ -2769,6 +2557,17 @@ def _empty_hits() -> pd.DataFrame:
                          "score": pd.Series([], dtype="float64")})
 
 
+def _constant_score_ids(idx: "_SliceIndex", s) -> np.ndarray:
+    """Sorted docIDs a constant-score leaf matches in one slice: the union
+    of a range/wildcard/fuzzy expansion's postings, or for match-all every
+    doc of the slice (``idx.all_ids``)."""
+    if s["kind"] == "all":
+        return idx.all_ids
+    ids = [idx.ids_only(s["field"], t) for t in s["terms"]
+           if idx.blocks(s["field"], t) is not None]
+    return np.unique(np.concatenate(ids)) if ids else np.empty(0, np.int64)
+
+
 def _eval_tree_slice(tree, idx, norm_lookup, df_map, stats, doc_ranges,
                      dead: np.ndarray | None = None):
     """Recursively evaluate a compiled spec tree (``_compile_tree``) over one
@@ -2805,14 +2604,12 @@ def _eval_tree_slice(tree, idx, norm_lookup, df_map, stats, doc_ranges,
                 for t in s["terms"]))
             return ids, idf_sum * bm25.tf_norm(ptf.astype(np.float64),
                                                dl_of(field, ids), avgdl)
-        decoded = {t: idx.decoded(field, t, False) for t in s["terms"]
-                   if idx.blocks(field, t) is not None}
-        if s["kind"] == "range":
-            if not decoded:
-                return empty
-            ids = np.unique(np.concatenate([v[0] for v in decoded.values()]))
+        if s["kind"] in ("range", "all"):
+            ids = _constant_score_ids(idx, s)
             ids = ids[_in_ranges(ids, doc_ranges, dead)]
             return ids, np.full(ids.size, boost, np.float64)
+        decoded = {t: idx.decoded(field, t, False) for t in s["terms"]
+                   if idx.blocks(field, t) is not None}
         if s["kind"] == "syn":
             if not decoded:
                 return empty
@@ -3030,12 +2827,8 @@ def _score_slice(sl, norms_pdf, specs, df_map,
                 must_sets.append(ids)
             if min_should > 1 and s["polarity"] == "should":
                 should_sets.append(ids)
-        elif s["kind"] == "range":
-            decoded = decoded_for(field, s["terms"], False)
-            if decoded:
-                ids = np.unique(np.concatenate([v[0] for v in decoded.values()]))
-            else:
-                ids = np.empty(0, np.int64)
+        elif s["kind"] in ("range", "all"):
+            ids = _constant_score_ids(idx, s)
             ids = ids[_in_ranges(ids, doc_ranges, dead)]
             if s["polarity"] == "must_not":
                 not_sets.append(ids)

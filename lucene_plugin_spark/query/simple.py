@@ -46,11 +46,10 @@ surface so the two parsers stay mutually consistent.
 Execution: :func:`simple_query_search` rewrites bare leaves over a
 ``weights`` field map (the ``SimpleQueryParser(analyzer, weights)``
 constructor shape, same rewrite as ``MultiFieldQueryParser``) and runs
-``SearchEngine.search_node``.  Trees containing the negation wrap carry a
-``MatchAll`` LEAF, which rides the DataFrame strategy (the docs_meta scan
-IS the physical plan for match-all — there are no postings to kernel
-over); everything else keeps the default kernel strategy with its driver
-fast path.
+``SearchEngine.search_node``.  The ``MatchAll`` leaf of the negation wrap
+is one more per-slice kernel leaf (every doc of the slice, docIDs from
+``docs_meta``), so every tree takes the engine's one route, driver fast
+path included.
 """
 
 from __future__ import annotations
@@ -245,15 +244,6 @@ def _consume_phrase(q: str, i: int, field: str,
     return _analyzed_leaf(field, "".join(out), variant, slop=slop), i
 
 
-def _has_match_all(node: Node) -> bool:
-    if isinstance(node, MatchAll):
-        return True
-    if isinstance(node, Bool):
-        return any(_has_match_all(c) for c in
-                   node.should + node.must + node.must_not + node.filter)
-    return False
-
-
 def simple_query_search(engine, repo: str | None, query: str,
                         weights: dict[str, float] | None = None,
                         default_operator: str = "should",
@@ -273,5 +263,4 @@ def simple_query_search(engine, repo: str | None, query: str,
     if weights:
         from lucene_plugin_spark.query.advanced import rewrite_multi_field
         node = rewrite_multi_field(node, list(weights), weights)
-    mode = "dataframe" if _has_match_all(node) else "kernel"
-    return engine.search_node(node, repo, limit, mode=mode)
+    return engine.search_node(node, repo, limit)

@@ -228,12 +228,15 @@ class Table:
             roots = nxt
         yield from roots
 
-    def partition_values(self, partition_by: list[str]) -> set[tuple[str, ...]]:
-        """All live partition-value tuples of the current snapshot."""
+    def partition_values(self, partition_by: list[str],
+                         snapshot_id: int | None = None
+                         ) -> set[tuple[str, ...]]:
+        """All live partition-value tuples of a snapshot (default: the
+        current one)."""
         if self.current_snapshot_id() is None:
             return set()
         out: set[tuple[str, ...]] = set()
-        for e in self.snapshot().data_dirs:
+        for e in self.snapshot(snapshot_id).data_dirs:
             for _, vals in self._partition_leaves(e, partition_by):
                 out.add(vals)
         return out

@@ -24,4 +24,4 @@ def warehouse():
 @pytest.fixture()
 def facade(spark, warehouse):
     from lucene_plugin_spark.api import LuceneFacade
-    return LuceneFacade(spark, warehouse, mode="kernel")
+    return LuceneFacade(spark, warehouse)

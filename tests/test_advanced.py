@@ -22,6 +22,7 @@ from lucene_plugin_spark.index.mutations import IndexMutator
 from lucene_plugin_spark.oracle import OracleEngine
 from lucene_plugin_spark.query import advanced, bm25
 from lucene_plugin_spark.query.executor import SearchEngine
+from lucene_plugin_spark.query.simple import simple_query_search
 from lucene_plugin_spark.storage.catalog import Catalog
 
 N_DOCS = 200
@@ -811,7 +812,7 @@ def test_multi_field_sums_per_field_scores(spark, tmp_path_factory):
     field-qualified leaves keep their field."""
     from lucene_plugin_spark import LuceneFacade
     wh = str(tmp_path_factory.mktemp("wh-mf"))
-    fac = LuceneFacade(spark, wh, mode="kernel")
+    fac = LuceneFacade(spark, wh)
     docs = {
         "a": {"title": "spark index merge", "body": "merge scan table"},
         "b": {"title": "table plan", "body": "spark join index cache"},
@@ -977,7 +978,7 @@ def test_join_query_modes(spark, tmp_path_factory):
     # ScoreMode aggregation of the from-side scores
     from lucene_plugin_spark import LuceneFacade
     wh = str(tmp_path_factory.mktemp("wh-join"))
-    fac = LuceneFacade(spark, wh, mode="kernel")
+    fac = LuceneFacade(spark, wh)
     docs = {
         "a": {"cat": "red", "body": "spark index merge"},
         "b": {"cat": "red", "body": "spark spark table plan"},
@@ -1094,6 +1095,12 @@ ROUTE_OPS = {
         e, ROUTE_REPO, ["index", "cache"], limit=40),
     "span_not": lambda e: advanced.span_not(
         e, ROUTE_REPO, "index", "query", pre=1, post=2, limit=40),
+    # match-all trees: the MatchAll leaf reads every slice's docs_meta docIDs
+    "match_all": lambda e: e.search(ROUTE_REPO, "*:*", limit=40),
+    "simple_or_not": lambda e: simple_query_search(
+        e, ROUTE_REPO, "index -query", limit=40),
+    "simple_not": lambda e: simple_query_search(
+        e, ROUTE_REPO, "-query", limit=40),
 }
 
 

@@ -132,24 +132,33 @@ def test_serve_stream_depths_and_merged_prefetch(spark, engine):
             assert norm(res) == norm(exp), depth
 
 
+def test_search_many_rejects_match_all(engine):
+    """The batch kernel has no match-all leaf: *:* must fail loudly, never
+    answer differently from search()."""
+    with pytest.raises(ValueError, match=r"search\(\)"):
+        engine.search_many([("a", None, "get"), ("b", None, "*:*")])
+
+
 def test_warmed_driver_path_mixed_phrase_positions(spark, engine):
     """Warmed single-query driver fast path with mixed phrase+term queries:
     the positions-selective block fetch (pos_pairs) must keep phrase streams
-    and null the plain terms' — rankings identical to the dataframe path,
-    and a term cached WITHOUT positions refetches when a phrase needs it."""
+    and null the plain terms' — rankings identical to an unwarmed engine's
+    distributed route, and a term cached WITHOUT positions refetches when a
+    phrase needs it."""
+    cold = SearchEngine(spark, engine.catalog)
     engine.warm()
     engine._blocks_cache.clear()
     try:
         # prime 'user' as a plain term (cached positions-free)...
-        engine.search(None, "user", limit=10, mode="kernel").collect()
+        engine.search(None, "user", limit=10).collect()
         ent = engine._blocks_cache.get(("text", "user"))
         assert ent is not None and not ent["has_pos"]
         # ...then demand it inside phrases (exact + sloppy) and mixed queries
         for q in ['"get user"', '"user name"^3 cache', '"get user"~2 index']:
             a = sorted((r["doc_id"], round(r["score"], 9)) for r in
-                       engine.search(None, q, limit=25, mode="kernel").collect())
+                       engine.search(None, q, limit=25).collect())
             b = sorted((r["doc_id"], round(r["score"], 9)) for r in
-                       engine.search(None, q, limit=25, mode="dataframe").collect())
+                       cold.search(None, q, limit=25).collect())
             assert a == b, q
         assert engine._blocks_cache[("text", "user")]["has_pos"]
     finally:

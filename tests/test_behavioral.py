@@ -299,10 +299,10 @@ def test_phrase_terms_never_cooccur(facade):
     facade.index_text("default", "a2", "beta delta beta")
     assert facade.search("default", '"alpha beta"') == []
     assert facade.search("default", '"alpha beta"~3') == []
-    # dataframe strategy too
+    # the warmed engine's driver route too
     from lucene_plugin_spark.query.executor import SearchEngine
-    eng = SearchEngine(facade.spark, facade.catalog)
-    assert eng.search(None, '"alpha beta"', limit=10, mode="dataframe").count() == 0
+    eng = SearchEngine(facade.spark, facade.catalog).warm()
+    assert eng.search(None, '"alpha beta"', limit=10).count() == 0
 
 
 def test_phrase_slop_matches_oracle(facade):
@@ -326,7 +326,7 @@ def test_phrase_slop_matches_oracle(facade):
 
 def test_more_like_this(facade):
     """MLT: the seed doc scores highest; near-duplicates outrank unrelated
-    docs; kernel and dataframe strategies agree."""
+    docs; the warmed driver route agrees with the facade's unwarmed engine."""
     docs = [("m1", "index cache merge segment block index cache"),
             ("m2", "index cache merge segment stream"),
             ("m3", "parse token stream buffer read write"),
@@ -338,12 +338,13 @@ def test_more_like_this(facade):
     assert ids[0] == "m1"                      # seed matches itself best
     assert ids.index("m4") < ids.index("m3") if "m3" in ids else True
     assert "m2" in ids and "m4" in ids
-    # strategy identity
-    eng = facade._engine
+    # route identity
+    from lucene_plugin_spark.query.executor import SearchEngine
+    warm = SearchEngine(facade.spark, facade.catalog).warm()
     a = [(r["doc_id"], round(r["score"], 9)) for r in
-         eng.more_like_this("default", "m1", limit=10, mode="kernel").collect()]
+         facade._engine.more_like_this("default", "m1", limit=10).collect()]
     b = [(r["doc_id"], round(r["score"], 9)) for r in
-         eng.more_like_this("default", "m1", limit=10, mode="dataframe").collect()]
+         warm.more_like_this("default", "m1", limit=10).collect()]
     assert a == b
     # unknown key -> empty, not an error
     assert facade.more_like_this("default", "nope") == []

@@ -40,6 +40,16 @@ def test_explain_matches_search_scores(spark, built):
                               rtol=1e-9), q
 
 
+def test_explain_match_all(spark, built):
+    """*:* is one more leaf: explain reports the score search gives."""
+    eng = built
+    for h in eng.search(None, "*:*", limit=3).collect():
+        ex = eng.explain(None, "*:*", h["path"])
+        assert ex["matches"] and ex["doc_id"] == h["doc_id"]
+        assert ex["score"] == h["score"] == 1.0
+        assert [l["kind"] for l in ex["leaves"]] == ["all"]
+
+
 def test_explain_non_match_cases(spark, built):
     eng = built
     # a doc OUTSIDE the hit set of a MUST query reports matches=False

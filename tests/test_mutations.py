@@ -20,10 +20,18 @@ def _src(spark, rows):
     return spark.createDataFrame(rows).select("repo", "path", "commit", "lang", "content")
 
 
-def _hits_by_path(spark, catalog, q, mode="kernel"):
+def _hits_by_path(spark, catalog, q, route="dataframe"):
+    """Hits of a warmed engine ("kernel": the driver route runs the kernels
+    in the driver) or an unwarmed one ("dataframe": the distributed route
+    runs them in mapInPandas tasks)."""
     eng = SearchEngine(spark, catalog)
-    return {r["path"]: round(r["score"], 9)
-            for r in eng.search(None, q, limit=500, mode=mode).collect()}
+    if route == "kernel":
+        eng.warm()
+    try:
+        return {r["path"]: round(r["score"], 9)
+                for r in eng.search(None, q, limit=500).collect()}
+    finally:
+        eng.unwarm()
 
 
 def _oracle_hits(rows, q):
@@ -66,10 +74,10 @@ def mutated(spark, tmp_path_factory):
 
 
 @pytest.mark.parametrize("q", QUERIES + ["freshMarkerToken", "fresh marker token"])
-@pytest.mark.parametrize("mode", ["kernel", "dataframe"])
-def test_mutated_index_matches_fresh_semantics(spark, mutated, q, mode):
+@pytest.mark.parametrize("route", ["kernel", "dataframe"])
+def test_mutated_index_matches_fresh_semantics(spark, mutated, q, route):
     catalog, _, _, effective = mutated
-    got = _hits_by_path(spark, catalog, q, mode)
+    got = _hits_by_path(spark, catalog, q, route)
     want = _oracle_hits(effective, q)
     assert set(got) == set(want), q
     for p in want:

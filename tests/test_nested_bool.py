@@ -113,18 +113,6 @@ def test_nested_in_search_many_batch(spark, built):
         assert by_qid.get(f"q{i}", []) == single, q
 
 
-def test_dataframe_mode_nested(spark, built):
-    """The declarative strategy evaluates nested plans recursively too
-    (joins/agg per node) — identical rankings to the kernel strategy."""
-    catalog, oracle, _ = built
-    eng = SearchEngine(spark, catalog)
-    for q in NESTED_QUERIES[:4]:
-        got = _got(eng.search(None, q, limit=30, mode="dataframe"))
-        want = oracle.search(None, q, limit=30)
-        assert got, q
-        _assert_match(got, want)
-
-
 def test_simplify_flatten_safe_shapes():
     t = lambda w: Term(field="text", term=w)  # noqa: E731
     # pure-should nesting inlines

@@ -1,7 +1,7 @@
 """Extended Lucene query surface: minimumNumberShouldMatch, FILTER clauses,
-SynonymQuery, DisjunctionMaxQuery — engine (both physical strategies where
-supported, warmed driver fast path and distributed kernel) vs the pure-Python
-oracle on the seeded synthetic code corpus.
+SynonymQuery, DisjunctionMaxQuery — engine (warmed driver fast path and
+distributed kernel) vs the pure-Python oracle on the seeded synthetic code
+corpus.
 
 Reference semantics: Lucene BooleanQuery.setMinimumNumberShouldMatch /
 BooleanClause.Occur.FILTER / SynonymQuery / DisjunctionMaxQuery (the engine
@@ -33,6 +33,14 @@ def built(spark, tmp_path_factory):
     return catalog, OracleEngine.from_rows(rows)
 
 
+def _engine(spark, catalog, route):
+    """"kernel": a warmed engine (the driver route runs the kernels in the
+    driver); "dataframe": an unwarmed one (the distributed route runs them
+    in mapInPandas tasks)."""
+    eng = SearchEngine(spark, catalog)
+    return eng.warm() if route == "kernel" else eng
+
+
 def _got(df):
     return [(r["doc_id"], r["path"], r["score"]) for r in df.collect()]
 
@@ -45,17 +53,17 @@ def _assert_match(got, want):
 
 
 @pytest.mark.parametrize("mm", [2, 3])
-@pytest.mark.parametrize("mode", ["kernel", "dataframe"])
-def test_min_should_match(spark, built, mm, mode):
+@pytest.mark.parametrize("route", ["kernel", "dataframe"])
+def test_min_should_match(spark, built, mm, route):
     catalog, oracle = built
-    eng = SearchEngine(spark, catalog)
+    eng = _engine(spark, catalog, route)
     q = "index query cache merge"
-    got = _got(eng.search_min_match(None, q, mm, limit=50, mode=mode))
+    got = _got(eng.search_min_match(None, q, mm, limit=50))
     want = oracle.search_min_match(None, q, mm, limit=50)
     assert got, "query must produce hits for the test to mean anything"
     _assert_match(got, want)
     # mm must strictly shrink (or hold) the plain-OR result set
-    plain = _got(eng.search(None, q, limit=500, mode=mode))
+    plain = _got(eng.search(None, q, limit=500))
     assert len(got) <= len(plain)
 
 
@@ -76,20 +84,18 @@ def test_min_should_match_driver_vs_kernel(spark, built):
                   _got(cold.search_min_match(None, q, 2, limit=50)))
 
 
-@pytest.mark.parametrize("mode", ["kernel", "dataframe"])
-def test_filter_clause(spark, built, mode):
+@pytest.mark.parametrize("route", ["kernel", "dataframe"])
+def test_filter_clause(spark, built, route):
     catalog, oracle = built
-    eng = SearchEngine(spark, catalog)
-    got = _got(eng.search_filtered(None, "index query", "cache",
-                                   limit=50, mode=mode))
+    eng = _engine(spark, catalog, route)
+    got = _got(eng.search_filtered(None, "index query", "cache", limit=50))
     want = oracle.search_filtered(None, "index query", "cache", limit=50)
     assert got
     _assert_match(got, want)
     # the filter gates but never scores: every hit's score must equal the
     # unfiltered query's score for that doc
     plain = {r["doc_id"]: r["score"]
-             for r in eng.search(None, "index query", limit=500,
-                                 mode=mode).collect()}
+             for r in eng.search(None, "index query", limit=500).collect()}
     for d, _, s in got:
         assert abs(plain[d] - s) < 1e-9
 

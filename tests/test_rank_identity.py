@@ -1,6 +1,6 @@
 """Rank-identity gate (BASELINE.md (b)): engine top-k docIDs and BM25 scores
-must match the pure-Python oracle on the reference query set, for BOTH
-physical strategies, over the seeded synthetic code corpus."""
+must match the pure-Python oracle on the reference query set, on BOTH places
+the query route runs, over the seeded synthetic code corpus."""
 
 import numpy as np
 import pytest
@@ -12,6 +12,12 @@ from lucene_plugin_spark.query.executor import SearchEngine
 from lucene_plugin_spark.storage.catalog import Catalog
 
 N_DOCS = 400
+
+#: "kernel": a warmed engine, whose driver route runs the per-slice kernels
+#: in the driver and returns the top-k as pandas; "dataframe": an unwarmed
+#: engine, whose distributed route runs the same kernels in mapInPandas tasks
+#: and returns the hits as a lazy DataFrame
+ROUTES = ["kernel", "dataframe"]
 
 
 @pytest.fixture(scope="module")
@@ -26,14 +32,24 @@ def built(spark, tmp_path_factory):
     return catalog, oracle
 
 
-@pytest.mark.parametrize("mode", ["kernel", "dataframe"])
+@pytest.fixture(scope="module")
+def engines(spark, built):
+    """route -> engine; the warmed one is shared by the module."""
+    catalog, _ = built
+    warm = SearchEngine(spark, catalog).warm()
+    yield {"kernel": lambda: warm,
+           "dataframe": lambda: SearchEngine(spark, catalog)}
+    warm.unwarm()
+
+
+@pytest.mark.parametrize("route", ROUTES)
 @pytest.mark.parametrize("name,query", QUERY_SET)
 @pytest.mark.parametrize("k", [10, 255])
-def test_rank_identity(spark, built, mode, name, query, k):
-    catalog, oracle = built
-    engine = SearchEngine(spark, catalog)
+def test_rank_identity(spark, built, engines, route, name, query, k):
+    _, oracle = built
+    engine = engines[route]()
     got = [(r["doc_id"], r["path"], r["score"])
-           for r in engine.search(None, query, limit=k, mode=mode).collect()]
+           for r in engine.search(None, query, limit=k).collect()]
     want = oracle.search(None, query, limit=k)
     assert [g[0] for g in got] == [w[0] for w in want], f"{name}: docID lists differ"
     assert [g[1] for g in got] == [w[1] for w in want]
@@ -41,23 +57,12 @@ def test_rank_identity(spark, built, mode, name, query, k):
 
 
 @pytest.mark.parametrize("repo", ["repo-00", "repo-03"])
-def test_rank_identity_collection_scoped(spark, built, repo):
-    catalog, oracle = built
-    engine = SearchEngine(spark, catalog)
-    for mode in ("kernel", "dataframe"):
+def test_rank_identity_collection_scoped(spark, built, engines, repo):
+    _, oracle = built
+    want = [(d, s) for d, _, s in oracle.search(repo, "index query cache", limit=50)]
+    for route in ROUTES:
         got = [(r["doc_id"], r["score"])
-               for r in engine.search(repo, "index query cache", limit=50, mode=mode).collect()]
-        want = [(d, s) for d, _, s in oracle.search(repo, "index query cache", limit=50)]
-        assert [g[0] for g in got] == [w[0] for w in want], mode
+               for r in engines[route]().search(repo, "index query cache",
+                                                limit=50).collect()]
+        assert [g[0] for g in got] == [w[0] for w in want], route
         assert np.allclose([g[1] for g in got], [w[1] for w in want], rtol=1e-9)
-
-
-def test_kernel_vs_dataframe_identical(spark, built):
-    catalog, _ = built
-    engine = SearchEngine(spark, catalog)
-    for _, q in QUERY_SET:
-        a = [(r["doc_id"], round(r["score"], 9))
-             for r in engine.search(None, q, limit=100, mode="kernel").collect()]
-        b = [(r["doc_id"], round(r["score"], 9))
-             for r in engine.search(None, q, limit=100, mode="dataframe").collect()]
-        assert a == b, q

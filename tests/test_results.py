@@ -487,7 +487,7 @@ def test_match_all_returns_every_doc(spark, built):
 
 def test_match_all_respects_deletes(spark, tmp_path):
     from lucene_plugin_spark import LuceneFacade
-    fac = LuceneFacade(spark, str(tmp_path / "wh_ma"), mode="kernel")
+    fac = LuceneFacade(spark, str(tmp_path / "wh_ma"))
     for i in range(6):
         fac.index_text("ma", f"d{i}", f"alpha doc number {i}")
     assert len(fac.search("ma", "*:*", 100)) == 6
@@ -497,3 +497,44 @@ def test_match_all_respects_deletes(spark, tmp_path):
     # upsert must not double-count the superseded generation
     fac.index_text("ma", "d0", "alpha doc number zero rewritten")
     assert len(fac.search("ma", "*:*", 100)) == 5
+
+
+def test_match_all_covers_docs_without_tokens(spark, tmp_path):
+    """Docs whose content is empty or only stopwords have no postings and no
+    norms rows, yet *:*, -x and a -x match them.  With docs_per_slice=6 the
+    slice of docIDs 12-17 holds only such docs (z02..z07, repo r0's tail),
+    and z07 is deleted; both routes must equal the oracle."""
+    from lucene_plugin_spark.index.mutations import IndexMutator
+    from lucene_plugin_spark.oracle import OracleEngine
+    from lucene_plugin_spark.query.simple import parse_simple, simple_query_search
+    texts = ["alpha beta", "beta gamma x", "", "the of a", "alpha x"]
+    rows = [{"repo": f"r{i % 2}", "path": f"p{i:02d}", "commit": "c",
+             "lang": "txt", "content": texts[i % 5]} for i in range(20)]
+    rows += [{"repo": "r0", "path": f"z{i:02d}", "commit": "c", "lang": "txt",
+              "content": "" if i % 2 else "the and of"} for i in range(12)]
+    catalog = Catalog(str(tmp_path / "wh_empty"))
+    builder = IndexBuilder(spark, catalog, docs_per_slice=6)
+    builder.build(spark.createDataFrame(rows).select(
+        "repo", "path", "commit", "lang", "content"))
+    IndexMutator(spark, catalog, builder).delete("r0", "z07")
+    oracle = OracleEngine.from_rows(rows)
+    oracle.delete("r0", "z07")
+
+    def want(q, repo):
+        docs = [d for d in oracle.docs.values() if repo in (None, d.repo)]
+        hits = oracle._eval_node(parse_simple(q), docs)
+        return sorted((d, oracle.docs[d].path, round(s, 9))
+                      for d, s in hits.items())
+
+    for eng in (SearchEngine(spark, catalog), SearchEngine(spark, catalog).warm()):
+        for repo in (None, "r0"):
+            for q, run in (("*", lambda: eng.search(repo, "*:*", limit=100)),
+                           ("-x", lambda: simple_query_search(
+                               eng, repo, "-x", limit=100)),
+                           ("alpha -x", lambda: simple_query_search(
+                               eng, repo, "alpha -x", limit=100))):
+                got = sorted((r["doc_id"], r["path"], round(r["score"], 9))
+                             for r in run().collect())
+                assert got == want(q, repo), (q, repo, eng._path_map is None)
+                assert {"z00", "z01", "z11"} <= {p for _, p, _ in got}, q
+                assert "z07" not in {p for _, p, _ in got}, q

@@ -183,14 +183,23 @@ def test_negation_contributes_not_gates(spark, built):
 
 
 def test_kernel_vs_dataframe_identity(spark, built):
+    """The warmed engine's driver route ("kernel") and the unwarmed
+    engine's distributed route ("dataframe") rank simple-parser trees
+    identically, the match-all negation wrap included."""
     catalog, _ = built
-    eng = SearchEngine(spark, catalog)
-    for q in ["index + query", "index | query cache", "que* + index"]:
-        node = parse_simple(q, variant=eng.analyzer)
-        a = _got(eng.search_node(node, None, 50, mode="kernel"))
-        b = _got(eng.search_node(node, None, 50, mode="dataframe"))
-        assert [x[0] for x in a] == [x[0] for x in b], q
-        assert np.allclose([x[2] for x in a], [x[2] for x in b]), q
+    warm = SearchEngine(spark, catalog).warm()
+    cold = SearchEngine(spark, catalog)
+    try:
+        for q in ["index + query", "index | query cache", "que* + index",
+                  "index -merge"]:
+            node = parse_simple(q, variant=warm.analyzer)
+            a = _got(warm.search_node(node, None, 50))
+            b = _got(cold.search_node(node, None, 50))
+            assert a, q
+            assert [x[0] for x in a] == [x[0] for x in b], q
+            assert np.allclose([x[2] for x in a], [x[2] for x in b]), q
+    finally:
+        warm.unwarm()
 
 
 def test_weights_map_matches_multi_field(spark, built):

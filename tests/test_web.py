@@ -16,7 +16,7 @@ from lucene_plugin_spark.web import make_server
 
 @pytest.fixture()
 def server(spark, tmp_path):
-    fac = LuceneFacade(spark, str(tmp_path / "wh"), mode="kernel")
+    fac = LuceneFacade(spark, str(tmp_path / "wh"))
     srv = make_server(fac)
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()

@@ -2,7 +2,7 @@
 
     spark-submit --py-files lps.zip tools/query_job.py \
         --warehouse /path/to/warehouse --query '"user name" AND cache' \
-        [--repo repo-00] [--k 255] [--mode kernel]
+        [--repo repo-00] [--k 255]
 
 Prints one JSON line per query with latency and the top hits.
 """
@@ -20,7 +20,6 @@ def main() -> None:
     ap.add_argument("--query", action="append", required=True)
     ap.add_argument("--repo", default=None)
     ap.add_argument("--k", type=int, default=255)
-    ap.add_argument("--mode", default="kernel", choices=["kernel", "dataframe"])
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -32,7 +31,7 @@ def main() -> None:
     engine = SearchEngine(spark, Catalog(args.warehouse))
     for q in args.query:
         t0 = time.perf_counter()
-        rows = engine.search(args.repo, q, limit=args.k, mode=args.mode).collect()
+        rows = engine.search(args.repo, q, limit=args.k).collect()
         ms = 1000 * (time.perf_counter() - t0)
         print(json.dumps({
             "query": q, "repo": args.repo, "k": args.k, "ms": round(ms, 1),
