@@ -490,10 +490,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return _hits_as_orig_ids(eng.search(None, "spark", limit=10))
 
     def ft_batch(spark, sf):
-        # the BATCHED kernel through the hard gate: search_many evaluates
-        # four query shapes (term / OR / AND / phrase) in ONE distributed
-        # job over one union-term-pruned scan; oracle = the UNION ALL of
-        # the four proven per-query SQL shapes tagged by query_id
+        # the batch route through the hard gate: search_many runs four
+        # query shapes (term / OR / AND / phrase) through the one route in
+        # one call; oracle = the UNION ALL of the four proven per-query SQL
+        # shapes tagged by query_id
         _, eng = _engine(spark, sf)
         out = eng.search_many(
             [("q_term", None, "spark"),
@@ -2096,24 +2096,26 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 #
 # Current window (exactly 50), in gate order:
 #
-# 1. the 13 entries this window's change reaches most directly: *:* and the
-#    SimpleQueryParser negation wrap now run as a per-slice match-all leaf
-#    (query/executor.py, query/simple.py), the facade drops its strategy
-#    option (api.py), and search_many compiles MatchAll leaves to reject
-#    them — simple_qp, match_all, sort_field / index_sort (the sorted search
-#    paths lost their *:* and DataFrame branches), paging, more_like,
-#    nested, min_should, filter, the mutated-index searches and the batch;
-# 2. 23 further entries over the same query route and mutation path
-#    (classic query surface, synonyms, dismax, span_near, replica, stem,
-#    merge/delete, stream indexing);
+# 1. the 9 entries this window's change reaches most directly: search_many
+#    now runs its queries through the one route (driver-route queries on
+#    the driver, the rest in one shared distributed job), the multi-query
+#    kernel and batch-only compile are gone, *:* parses to a match-all leaf
+#    in any clause (query/parser.py) and common terms is a Boolean query
+#    through search_node (query/advanced.py) — batch, common_terms,
+#    match_all, simple_qp and the term / OR / AND / phrase / collection
+#    searches that share the route with every batch;
+# 2. 27 further entries over the same single-query route (sorted search,
+#    paging, more-like-this, nested and mm/filter trees, the classic query
+#    surface, synonyms, dismax, span_near, replica, stem) and the
+#    mutation-path searches;
 # 3. the 5 entries whose latest driver row is r2 (_GATE_TAIL below);
-# 4. 9 of the 11 advanced-operator entries of the previous window
-#    (query/advanced.py, untouched here).
+# 4. 9 of the 11 advanced-operator entries of the previous window (their
+#    route operators are untouched here).
 #
-# Pushed past slot 50: ft_span_or and ft_span_not (advanced operators,
-# module untouched since their last window) and, as before, search_many
-# siblings, phonetic, streaming windows, table statistics, dedup /
-# similarity / TPC-H / event analytics — every one keeps its
+# Pushed past slot 50: mut_docs_sha (mutation path, module untouched; its
+# latest driver row is r5) and, as before, ft_span_or, ft_span_not,
+# search_many siblings, phonetic, streaming windows, table statistics,
+# dedup / similarity / TPC-H / event analytics — every one keeps its
 # queries()+oracle_sql() pair and its local 3-SF gating.
 _GATE_TAIL = [
     # the 5 stale-r2 entries (untouched modules; r2-green rows, re-confirmed
@@ -2125,21 +2127,20 @@ _GATE_TAIL = [
 
 def _rotate_for_gate(q: dict) -> dict:
     head_priority = [
-        # 1. the match-all leaf, the single strategy and the facade
-        "ft_simple_qp", "ft_match_all", "ft_sort_field", "ft_paging",
-        "ft_more_like", "ft_nested", "ft_index_sort", "ft_min_should",
-        "ft_filter", "mut_upsert_search", "mut_delete_search",
-        "mut_compact_search", "ft_batch",
-        # 2. the rest of the query route and the mutation path
-        "ft_term_topk", "ft_or_topk", "ft_and", "ft_not", "ft_phrase",
-        "ft_range", "ft_wildcard", "ft_fuzzy", "ft_boost", "ft_phrase_slop",
-        "ft_range_excl", "ft_regexp", "ft_field_lang", "ft_collection",
-        "ft_synonym", "ft_dismax", "ft_span_near", "ft_replica_search",
-        "ft_stem", "merge_upsert", "delete_where", "mut_docs_sha",
-        "stream_index_search",
+        # 1. the batch route, *:* in any clause, the common-terms rewrite
+        "ft_batch", "ft_common_terms", "ft_match_all", "ft_simple_qp",
+        "ft_term_topk", "ft_or_topk", "ft_and", "ft_phrase", "ft_collection",
+        # 2. the rest of the single-query route and the mutation searches
+        "ft_sort_field", "ft_paging", "ft_more_like", "ft_nested",
+        "ft_index_sort", "ft_min_should", "ft_filter", "mut_upsert_search",
+        "mut_delete_search", "mut_compact_search", "ft_not", "ft_range",
+        "ft_wildcard", "ft_fuzzy", "ft_boost", "ft_phrase_slop",
+        "ft_range_excl", "ft_regexp", "ft_field_lang", "ft_synonym",
+        "ft_dismax", "ft_span_near", "ft_replica_search", "ft_stem",
+        "merge_upsert", "delete_where", "stream_index_search",
         # 3. the stale-r2 entries
         *_GATE_TAIL,
-        # 4. advanced operators (module untouched by this window's change)
+        # 4. advanced route operators (untouched by this window's change)
         "ft_tfidf", "ft_lmdirichlet", "ft_lmjm", "ft_dfr", "ft_ib",
         "ft_sweetspot", "ft_span_first", "ft_span_range", "ft_terms_set",
         # --- beyond slot 50: the rest in registry order ---

@@ -40,11 +40,11 @@ analyzer.  What runs:
   term-pruned segments scan, slice by slice; either way it applies
   liveDocs and the collection filter, cuts the (score desc, doc_id asc)
   top-k and joins the paths — the two routes plain queries take.
-- **Compositions** — rescore, constant/function score, boosting and
-  multi-field reuse ``search`` / ``search_node``.
-- **DataFrame plans** — span containment, explain, multi-phrase, common
-  terms and the join query are declarative plans over the flat postings
-  view.
+- **Compositions** — rescore, constant/function score, boosting,
+  multi-field and common terms (Lucene's own rewrite to a Boolean query)
+  reuse ``search`` / ``search_node``.
+- **DataFrame plans** — span containment, explain, multi-phrase and the
+  join query are declarative plans over the flat postings view.
 """
 
 from __future__ import annotations
@@ -871,47 +871,24 @@ def common_terms(engine, repo: str | None, terms: list[str],
     stopword-free way to keep "the"-like terms from selecting the whole
     corpus.  When every term is high-frequency the query degrades to the
     plain OR over them, exactly like Lucene with an empty low group.
-    Per-term scoring is the ordinary boolean-OR BM25 (per-term idf x
-    tf-norm, summed).
-
-    Scale shape: ONE term-pruned postings scan for all terms (the low/high
-    split is a driver-side df lookup from the cached stats, no extra job),
-    a literal term->idf map, and one map-side-combined groupBy(doc_id);
-    the must-match-low requirement rides the same aggregation as a
-    max(flag) — no second scan, no extra shuffle."""
+    Scored by :meth:`SearchEngine.search_node` as that Boolean query:
+    ordinary BM25 per term, summed; the split is a driver-side df lookup
+    from the cached stats."""
+    from lucene_plugin_spark.query.plan import Bool, Term
     ts = sorted({t.lower() for t in terms})
-    stats = engine._field_stats()
-    n_docs, avgdl = stats.get(field, (0.0, 1.0))
+    n_docs, _ = engine._field_stats().get(field, (0.0, 1.0))
     dfm = engine._df_for_pairs([(field, t) for t in ts])
     present = [t for t in ts if dfm.get((field, t), 0.0) > 0.0]
     if n_docs == 0.0 or not present:
         return _empty(engine)
     cut = (float(max_term_frequency) if max_term_frequency >= 1.0
            else float(max_term_frequency) * n_docs)
-    low = [t for t in present if dfm[(field, t)] <= cut]
-    idf = {t: float(bm25.idf(dfm[(field, t)], n_docs)) for t in present}
-    flat = (flat_postings_view(engine.spark, engine.catalog, terms=present)
-            .where(F.col("field") == field))
-    idf_col = F.create_map(*[x for t in present
-                             for x in (F.lit(t), F.lit(idf[t]))])
-    tfc = F.col("tf").cast("double")
-    tfn = (tfc * (bm25.K1 + 1.0)
-           / (tfc + bm25.K1 * (1.0 - bm25.B
-                               + bm25.B * F.col("dl") / F.lit(avgdl))))
-    low_flag = (F.col("term").isin(low).cast("int") if low else F.lit(0))
-    per = flat.select("doc_id",
-                      (idf_col[F.col("term")] * tfn).alias("c"),
-                      low_flag.alias("is_low"))
-    agg = (per.groupBy("doc_id")
-           .agg(F.sum("c").alias("score"), F.max("is_low").alias("has_low")))
-    if low:
-        agg = agg.where(F.col("has_low") == 1)
-    agg = engine._finalize_df_hits(agg.select("doc_id", "score"), repo)
-    meta = engine._meta_path_df()
-    topk = agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
-    return (meta.join(F.broadcast(topk), "doc_id")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "path", "score"))
+    low = tuple(Term(field, t) for t in present if dfm[(field, t)] <= cut)
+    high = tuple(Term(field, t) for t in present if dfm[(field, t)] > cut)
+    node = (Bool(must=(Bool(should=low),),
+                 should=(Bool(should=high),) if high else ())
+            if low else Bool(should=high))
+    return engine.search_node(node, repo, limit)
 
 
 def boosting(engine, repo: str | None, query: str, negative_query: str,

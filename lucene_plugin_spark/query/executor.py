@@ -34,8 +34,7 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
-                               StructType)
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from lucene_plugin_spark.index import codec
 from lucene_plugin_spark.query import bm25
@@ -46,18 +45,14 @@ from lucene_plugin_spark.query.expand import (EXPANDABLE, exp_cond, exp_key,
                                               wildcard_min_len,
                                               wildcard_prefix)
 from lucene_plugin_spark.query.plan import (Bool, DisMax, Fuzzy, MatchAll,
-                                            Node, Phrase, Range, SynSet, Term,
+                                            Node, Phrase, SynSet, Term,
                                             Wildcard, is_nested,
                                             iter_all_leaves, simplify)
 from lucene_plugin_spark.storage.catalog import Catalog, SnapshotError
 
-HITS_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("score", DoubleType()),
-])
-
-MULTI_HITS_SCHEMA = StructType([
-    StructField("query_id", StringType()),
+#: the distributed route's kernel output: item index, docID, score
+ROUTE_HITS_SCHEMA = StructType([
+    StructField("qi", LongType()),
     StructField("doc_id", LongType()),
     StructField("score", DoubleType()),
 ])
@@ -120,8 +115,7 @@ def _leaf_spec(i, l, polarity, range_terms):
 
 
 def _compile_leaf_specs(should, must, must_not, range_terms, filters=()):
-    """Compile flattened boolean leaves -> kernel spec dicts (shared by the
-    single-query and batched kernel paths)."""
+    """Compile flattened boolean leaves -> kernel spec dicts."""
     n_s, n_m = len(should), len(must)
     return ([_leaf_spec(i, l, "should", range_terms)
              for i, l in enumerate(should)]
@@ -208,7 +202,6 @@ class SearchEngine:
         self._cf_cache: dict[tuple[str, str], float] = {}
         self._norms_cache: dict[int, pd.DataFrame] = {}
         self._norm_lookup_cache: dict = {}
-        self._compile_cache: dict = {}
         # (field, term) -> {"pdf": block rows, "has_pos": bool}; the driver
         # fast path's postings cache (Lucene page-cache/terms-cache analogue)
         self._blocks_cache: dict[tuple[str, str], dict] = {}
@@ -710,11 +703,10 @@ class SearchEngine:
         programmatic query builders like :meth:`more_like_this`)."""
         cq = self._compile_query(node, repo)
         if cq is None:
-            hits = self.spark.createDataFrame([], HITS_SCHEMA)
-        else:
-            hits = self._route(cq, _query_scorer(cq, self._field_stats()),
-                               limit)
-        return self._with_paths(hits, limit)
+            return self._with_paths(_empty_hits(), limit)
+        local, dist = self._route(
+            [(cq, _query_scorer(cq, self._field_stats()))], limit)
+        return self._with_paths(local.get(0, dist), limit)
 
     def _with_paths(self, hits, limit: int) -> DataFrame:
         """(score desc, doc_id asc) top-k of ``hits`` with stored paths, as
@@ -1011,9 +1003,9 @@ class SearchEngine:
             # silently take the lowest docIDs OF A SCORE-SELECTED SUBSET when
             # the match set exceeds it; driver-route match sets are already
             # bounded by the route's posting ceiling
-            hits = self._route(cq, score, 1 << 31)
-            if isinstance(hits, pd.DataFrame):
-                ids = np.sort(hits["doc_id"].to_numpy())[:limit]
+            local, _ = self._route([(cq, score)], 1 << 31)
+            if local:
+                ids = np.sort(local[0]["doc_id"].to_numpy())[:limit]
                 topk = self.spark.createDataFrame(
                     [(int(i),) for i in ids], "doc_id long")
             else:
@@ -1036,8 +1028,8 @@ class SearchEngine:
                         # untruncated for the same reason as the driver
                         # branch: the probe needs the FIRST k matching
                         # docIDs in [0, bound), not k of a score-top subset
-                        got = (self._route(cq2, score, 1 << 31)
-                               .select("doc_id").orderBy(F.asc("doc_id"))
+                        _, dist = self._route([(cq2, score)], 1 << 31)
+                        got = (dist.select("doc_id").orderBy(F.asc("doc_id"))
                                .limit(limit).collect())
                     if len(got) >= limit or bound > max_doc:
                         break
@@ -1048,9 +1040,10 @@ class SearchEngine:
                     .join(F.broadcast(topk), "doc_id")
                     .orderBy(F.asc("doc_id"))
                     .select("doc_id", "path", "sort_key"))
-        hits = self._route(cq, score, 1 << 31)
-        if isinstance(hits, pd.DataFrame):
-            hits = self.spark.createDataFrame(hits, "doc_id long, score double")
+        local, hits = self._route([(cq, score)], 1 << 31)
+        if local:
+            hits = self.spark.createDataFrame(local[0],
+                                              "doc_id long, score double")
         order = (F.col("sort_key").asc() if ascending
                  else F.col("sort_key").desc())
         return (meta.select("doc_id", "path", key)
@@ -1456,142 +1449,60 @@ class SearchEngine:
 
     def search_many(self, queries: list[tuple[str, str | None, str]],
                     limit: int = 10) -> DataFrame:
-        """Batched top-k search: ONE distributed job evaluates many queries.
+        """Batched top-k search: several searches through the one route
+        (:meth:`_route`), as on one Lucene ``IndexSearcher``.
 
-        ``queries``: [(query_id, repo_or_None, query_string)].  Returns
-        DataFrame(query_id, doc_id, path, score), per-query score desc /
-        doc_id asc, truncated to ``limit``.
-
-        Scale rationale: per-query fixed cost (job scheduling, scan setup,
-        Python worker round-trip) is amortized over the batch, one segments
-        scan (filtered to the union of all query terms) serves every query,
-        and the per-slice kernel shares the slice's norms across queries.
-        This micro-batched shape is how a many-executor deployment serves a
-        query stream; rankings are identical to issuing search() per query
-        (same kernels, pytest-gated).
+        ``queries``: [(query_id, repo_or_None, query_string)], any query
+        :meth:`search` accepts.  Returns DataFrame(query_id, doc_id, path,
+        score), per-query score desc / doc_id asc, truncated to ``limit`` —
+        identical to search() per query.  One term_dict prefetch serves the
+        batch; driver-route queries are scored inside this call, the rest
+        share ONE distributed job.  Identical (repo, query) entries are
+        scored once and fanned out to every query_id.
         """
+        self._prefetch_queries(queries)
         stats = self._field_stats()
-        compiled = []
-        all_pairs: set[tuple[str, str]] = set()
-        # prepass: parse every uncached query and expand ALL their range
-        # leaves in one term_dict job (one Spark job per batch, not one per
-        # range query — per-job fixed cost is serial driver time that does
-        # not shrink with cores)
-        prepass: dict[str, tuple] = {}
-        pending_ranges: list[Range] = []
-        exact_pairs: set[tuple[str, str]] = set()
-        for _qid, repo, q in queries:
-            if (repo, q) in self._compile_cache or q in prepass:
-                continue
-            node = simplify(parse_query(q, variant=self.analyzer))
-            prepass[q] = node
-            for l in iter_all_leaves(node):
-                if isinstance(l, EXPANDABLE):
-                    pending_ranges.append(l)
-                elif isinstance(l, Term):
-                    exact_pairs.add((l.field, l.term))
-                else:
-                    exact_pairs.update((l.field, t) for t in l.terms)
-        self._prefetch_batch(pending_ranges, exact_pairs)
-        # identical (repo, query) entries are evaluated ONCE in the kernel and
-        # fanned back out to every alias qid afterwards (a query stream with
-        # repeats pays per-distinct-query, like the reference's results cache)
-        rep_of: dict[tuple[str | None, str], str] = {}
-        alias_rows: list[tuple[str, str]] = []
+        items: list = []
+        item_of: dict[tuple[str | None, str], int | None] = {}
+        fan: list[tuple[int, str]] = []     # (item, query_id) per entry
         for qid, repo, q in queries:
-            ckey = (repo, q)
-            if ckey in rep_of:
-                alias_rows.append((rep_of[ckey], qid))
-                continue
-            rep_of[ckey] = qid
-            alias_rows.append((qid, qid))
-            cached = self._compile_cache.get(ckey)
-            if cached is None:
-                node = prepass.get(q)
-                if node is None:
-                    node = simplify(parse_query(q, variant=self.analyzer))
-                tree = None
-                if is_nested(node):
-                    range_terms = self._expand_ranges(
-                        [l for l in iter_all_leaves(node)
-                         if isinstance(l, EXPANDABLE)])
-                    tree, specs = _compile_tree(node, range_terms)
-                    min_should = 0
-                else:
-                    should, must, must_not, filters, min_should = \
-                        _leaves_of(node)
-                    range_terms = self._expand_ranges(
-                        should + must + must_not + filters)
-                    specs = _compile_leaf_specs(should, must, must_not,
-                                                range_terms, filters)
-                if any(sp["kind"] == "all" for sp in specs):
-                    # the batch kernel reads no docs_meta slices; refuse
-                    # rather than answer differently from search()
-                    raise ValueError(
-                        f"query {q!r}: *:* (MatchAllDocsQuery) is not "
-                        "supported by search_many; use search()")
-                if not any(s["terms"] for s in specs if s["polarity"] != "must_not"):
-                    cached = {"empty": True}  # no positive leaves -> no hits
-                else:
-                    doc_ranges = None
-                    if repo is not None:
-                        doc_ranges = self.repo_doc_ranges(repo) or [(-1, -1)]
-                    cached = {
-                        "empty": False, "specs": specs, "doc_ranges": doc_ranges,
-                        "needs_positions": any(sp["kind"] == "phrase" for sp in specs),
-                        "min_should": min_should,
-                        "tree": tree,
-                        "only_terms": (len(specs) > 0 and min_should <= 1
-                                       and tree is None and all(
-                            sp["kind"] == "term" and sp["polarity"] == "should"
-                            and sp.get("boost", 1.0) == 1.0
-                            for sp in specs)),
-                    }
-                if len(self._compile_cache) >= 1024:  # reference query-cache size
-                    self._compile_cache.clear()
-                self._compile_cache[ckey] = cached
-            if cached["empty"]:
-                continue
-            compiled.append({"qid": qid, **{k: v for k, v in cached.items()
-                                            if k != "empty"}})
-            all_pairs |= {(sp["field"], t) for sp in cached["specs"]
-                          for t in sp["terms"]}
-        if not compiled:
-            return self.spark.createDataFrame(
-                [], "query_id string, doc_id long, path string, score double")
-        df_map = self._df_for_pairs(sorted(all_pairs))
-        fields = sorted({f for f, _ in all_pairs})
-        terms_only = sorted({t for _, t in all_pairs})
-        seg = self._segments_df().where(
-            f"field IN ({_sql_in_list(fields)}) "
-            f"AND term IN ({_sql_in_list(terms_only)})")
-        if not any(c["needs_positions"] for c in compiled):
-            seg = seg.drop("positions", "pos_lens_ok")
-        else:
-            seg = _null_nonphrase_positions(
-                seg, {p for c in compiled for p in _phrase_pairs(c["specs"])})
-        norms_dirs = self._tbl_snapshot("doc_norms").data_dirs
-        tt = self._tombstones_table()
-        tomb_dirs = (self._tbl_snapshot("tombstones").data_dirs
-                     if tt is not None else [])
-        kernel = _make_multi_slice_kernel(compiled, df_map, stats, limit,
-                                          norms_dirs, fields, tomb_dirs)
-        hits = seg.mapInPandas(kernel, schema=MULTI_HITS_SCHEMA)
-        meta = self._meta_path_df()
-        # SQL-string window: the Window/F.desc object chain costs ~10 py4j
-        # round-trips of serial driver time per batch
-        topk = (hits.selectExpr(
-                    "*", "row_number() OVER (PARTITION BY query_id "
-                    "ORDER BY score DESC, doc_id ASC) AS _rn")
-                .where(f"_rn <= {int(limit)}").drop("_rn"))
-        # broadcast the (batch x k)-row hit set, probe docs_meta (S7 shape)
-        out = (meta.join(F.broadcast(topk), "doc_id")
-               .select("query_id", "doc_id", "path", "score"))
-        if len(alias_rows) > len(rep_of):  # duplicates present: fan out
-            amap = self.spark.createDataFrame(alias_rows, "rep string, qid string")
-            out = (out.withColumnRenamed("query_id", "rep")
-                   .join(F.broadcast(amap), "rep")
-                   .select(F.col("qid").alias("query_id"), "doc_id", "path", "score"))
+            if (repo, q) not in item_of:
+                cq = self._compile_query(
+                    parse_query(q, variant=self.analyzer), repo)
+                item_of[(repo, q)] = None if cq is None else len(items)
+                if cq is not None:
+                    items.append((cq, _query_scorer(cq, stats)))
+            if item_of[(repo, q)] is not None:
+                fan.append((item_of[(repo, q)], qid))
+        schema = "query_id string, doc_id long, path string, score double"
+        local, dist = self._route(items, limit) if items else ({}, None)
+        out = None
+        if local:
+            res = pd.concat([local[qi].assign(query_id=qid)
+                             for qi, qid in fan if qi in local],
+                            ignore_index=True)
+            pm = self._path_map
+            res["path"] = [pm.get(int(d)) for d in res["doc_id"]]
+            out = self.spark.createDataFrame(
+                res[["query_id", "doc_id", "path", "score"]], schema)
+        if dist is not None:
+            # SQL-string window: the Window/F.desc object chain costs ~10
+            # py4j round-trips of serial driver time per batch
+            topk = (dist.selectExpr(
+                        "*", "row_number() OVER (PARTITION BY qi "
+                        "ORDER BY score DESC, doc_id ASC) AS _rn")
+                    .where(f"_rn <= {int(limit)}").drop("_rn"))
+            qids = self.spark.createDataFrame(
+                [(qi, qid) for qi, qid in fan if qi not in local],
+                "qi long, query_id string")
+            # broadcast the (batch x k)-row hit set, probe docs_meta
+            d = (self._meta_path_df()
+                 .join(F.broadcast(topk.join(F.broadcast(qids), "qi")),
+                       "doc_id")
+                 .select("query_id", "doc_id", "path", "score"))
+            out = d if out is None else out.unionByName(d)
+        if out is None:
+            return self.spark.createDataFrame([], schema)
         return out.orderBy("query_id", F.desc("score"), F.asc("doc_id"))
 
     def serve_stream(self, batches, limit: int = 10, action=None,
@@ -1602,7 +1513,9 @@ class SearchEngine:
         :meth:`search_many`'s input.  While the cluster executes batch i's
         job (background threads drive the action), the driver compiles the
         next batches — parse, term_dict prefetch, kernel-closure
-        construction.  This is the deployment shape for a continuous query
+        construction.  Driver-route queries score inside each
+        :meth:`search_many` call, so only the distributed share of a batch
+        overlaps.  This is the deployment shape for a continuous query
         stream: the serial driver cost moves off the critical path instead
         of flattening batch scaling at high core counts.
 
@@ -1621,7 +1534,7 @@ class SearchEngine:
         from concurrent.futures import ThreadPoolExecutor
         act = action or (lambda df: df.collect())
         if isinstance(batches, (list, tuple)) and len(batches) > 1:
-            self._prefetch_stream([q for b in batches for q in b])
+            self._prefetch_queries([q for b in batches for q in b])
         results = []
         with ThreadPoolExecutor(max_workers=max(1, depth)) as pool:
             futs: list = []
@@ -1634,25 +1547,25 @@ class SearchEngine:
                 results.append(f.result())
         return results
 
-    def _prefetch_stream(self, queries: list[tuple[str, str | None, str]]) -> None:
-        """One merged term_dict prefetch over every query of a materialized
-        stream (admission batching): fills the df/cf/range caches so each
-        per-batch compile is pure driver-side dict lookups."""
-        pending_ranges: list = []
-        exact_pairs: set[tuple[str, str]] = set()
-        seen: set[str] = set()
-        for _qid, repo, q in queries:
-            if (repo, q) in self._compile_cache or q in seen:
-                continue
-            seen.add(q)
+    def _prefetch_queries(self, queries: list[tuple[str, str | None, str]]
+                          ) -> None:
+        """ONE term_dict prefetch (:meth:`_prefetch_batch`) over the leaves
+        of every distinct query string of a batch or a materialized stream:
+        the df/cf/range caches are filled up front, so each query's compile
+        is driver-side dict lookups — one Spark job per batch, not one per
+        range query (per-job fixed cost is serial driver time that does not
+        shrink with cores)."""
+        ranges: list = []
+        pairs: set[tuple[str, str]] = set()
+        for q in dict.fromkeys(q for _qid, _repo, q in queries):
             for l in iter_all_leaves(parse_query(q, variant=self.analyzer)):
                 if isinstance(l, EXPANDABLE):
-                    pending_ranges.append(l)
+                    ranges.append(l)
                 elif isinstance(l, Term):
-                    exact_pairs.add((l.field, l.term))
+                    pairs.add((l.field, l.term))
                 else:
-                    exact_pairs.update((l.field, t) for t in l.terms)
-        self._prefetch_batch(pending_ranges, exact_pairs)
+                    pairs.update((l.field, t) for t in l.terms)
+        self._prefetch_batch(ranges, pairs)
 
     # ------------------------------------------------ declarative operators
     def _finalize_df_hits(self, agg: DataFrame, repo: str | None) -> DataFrame:
@@ -1666,7 +1579,7 @@ class SearchEngine:
         if repo is not None:
             ranges = self.repo_doc_ranges(repo)
             if not ranges:
-                # empty, with the caller's columns (not just HITS_SCHEMA's)
+                # empty, with the caller's columns
                 return agg.where(F.lit(False))
             cond = None
             for lo, hi in ranges:
@@ -1677,8 +1590,8 @@ class SearchEngine:
 
     # ----------------------------------------------------------- query route
     def _compile_query(self, node: Node, repo: str | None):
-        """Driver-side query compilation shared by the distributed kernel and
-        the driver fast path: leaves -> specs, term-df lookup, collection
+        """Driver-side query compilation for both routes, single and batched
+        searches alike: leaves -> specs, term-df lookup, collection
         doc-ranges.  Returns None when the query can match nothing."""
         node = simplify(node)
         dismax_tie = None
@@ -1789,9 +1702,11 @@ class SearchEngine:
     #: driver.
     driver_exec_max_postings = 8_000_000
 
-    def _route(self, scan, score_slice, limit: int):
+    def _route(self, items, limit: int):
         """The one place a scoring operator's route is chosen.
 
+        ``items``: a list of ``(scan, score_slice)``, one per query —
+        :meth:`search_many` passes its batch, every other caller one item.
         ``scan``: ``pairs`` (the (field, term) postings read), ``pos_pairs``
         (the subset whose positions are decoded), ``doc_ranges`` (collection
         filter or None), ``est_postings`` (the predicted posting volume) and
@@ -1803,39 +1718,64 @@ class SearchEngine:
         the collection mask are applied here and the (score desc, doc_id
         asc) top-``limit`` is cut.
 
+        Each item takes its own route:
+
         - **driver** (warmed engine, ``est_postings`` within
           ``driver_exec_max_postings``): every block comes from the driver
           postings cache and the whole block set scores as ONE logical
-          slice (docIDs are globally unique).  Returns the top-k as pandas
-          (doc_id, score).
-        - **distributed** (otherwise): one ``mapInPandas`` over the pruned
-          segments scan; each task groups its rows by dslice and reads that
-          slice's norms and tombstones task-locally.  Returns the per-slice
-          top-k hits as a lazy DataFrame (doc_id, score).
+          slice (docIDs are globally unique).
+        - **distributed** (otherwise): the distributed items share one
+          ``mapInPandas`` over the segments scan pruned to the union of
+          their pairs and doc ranges; each task groups its rows by dslice,
+          reads that slice's norms and tombstones task-locally, once, and
+          runs every item's scorer on the slice.
+
+        Returns ``(local, dist)``: ``local`` maps an item's index to its
+        driver-route top-k as pandas (doc_id, score); ``dist`` is the lazy
+        DataFrame (qi, doc_id, score) of the distributed items' per-slice
+        top-k hits (``qi`` the item index), or None when no item is
+        distributed.
 
         A match-all query visits every slice in its doc ranges, not only
         the slices its terms touch, with their tombstones; ``idx.all_ids``
         holds the slice's docIDs (driver: the warmed path map; distributed:
         the slice's ``docs_meta`` partition, read task-locally).
         """
-        fields = sorted({f for f, _ in scan["pairs"]})
         norms_dirs, tomb_dirs = self._sidecar_dirs()
-        match_all = scan["match_all"]
-        if (self._path_map is not None
-                and scan["est_postings"] <= self.driver_exec_max_postings):
+        drv = [qi for qi, (scan, _) in enumerate(items)
+               if self._path_map is not None
+               and scan["est_postings"] <= self.driver_exec_max_postings]
+        if len(drv) > 1:   # the batch's block-cache misses in ONE collect
+            self._blocks_for(
+                sorted({p for qi in drv for p in items[qi][0]["pairs"]}),
+                set().union(*(items[qi][0]["pos_pairs"] for qi in drv)))
+        local = {}
+        for qi in drv:
+            scan, score_slice = items[qi]
             idx, slices = self._blocks_for(scan["pairs"], scan["pos_pairs"])
             live_slices = slices
-            if match_all:
+            if scan["match_all"]:
                 idx.all_ids = self._doc_ids()
                 live_slices = sorted(set(slices) | set(
                     self._doc_slices(scan["doc_ranges"])))
             elif not idx.entries:
-                return _empty_hits()
-            norms = self._norm_lookup_for(tuple(slices), tuple(fields),
-                                          norms_dirs)
+                local[qi] = _empty_hits()
+                continue
+            fields = tuple(sorted({f for f, _ in scan["pairs"]}))
+            norms = self._norm_lookup_for(tuple(slices), fields, norms_dirs)
             dead = _tombstones_of(tomb_dirs, live_slices)
-            return _slice_topk(score_slice, idx, norms, dead,
-                               scan["doc_ranges"], limit)
+            local[qi] = _slice_topk(score_slice, idx, norms, dead,
+                                    scan["doc_ranges"], limit)
+        dist = [qi for qi in range(len(items)) if qi not in local]
+        if not dist:
+            return local, None
+        scans = [items[qi][0] for qi in dist]
+        union = {"pairs": sorted({p for s in scans for p in s["pairs"]}),
+                 "pos_pairs": set().union(*(s["pos_pairs"] for s in scans)),
+                 "doc_ranges": None if any(s["doc_ranges"] is None
+                                           for s in scans)
+                 else sorted({tuple(r) for s in scans
+                              for r in s["doc_ranges"]})}
         # No shuffle: scan tasks align with whole segment files (one live
         # file per doc-slice, non-split reads via large maxPartitionBytes in
         # session.py), so each task holds complete doc-slices — all query
@@ -1846,26 +1786,28 @@ class SearchEngine:
         # (the analogue of Lucene reading its per-segment norms file) — no
         # per-query shuffle of corpus-sized data anywhere.
         meta_dirs = None
-        if not match_all:
-            rows = self._filtered_segments(scan)
+        if not any(s["match_all"] for s in scans):
+            rows = self._filtered_segments(union)
         else:
             # one marker row (dslice only) per slice in the doc ranges, so a
             # slice no query term touches is scored too; the hash exchange
             # on dslice puts a slice's marker and its block rows in ONE task
-            slices = self._doc_slices(scan["doc_ranges"])
+            slices = self._doc_slices(union["doc_ranges"])
             rows = self.spark.createDataFrame([(d,) for d in slices],
                                               "dslice int")
-            if scan["pairs"]:
-                rows = self._filtered_segments(scan).unionByName(
+            if union["pairs"]:
+                rows = self._filtered_segments(union).unionByName(
                     rows, allowMissingColumns=True)
             rows = rows.repartition(
                 max(1, min(len(slices),
                            self.spark.sparkContext.defaultParallelism)),
                 "dslice")
             meta_dirs = self._tbl_snapshot("docs_meta").data_dirs
-        kernel = _make_route_kernel(score_slice, limit, scan["doc_ranges"],
-                                    norms_dirs, fields, tomb_dirs, meta_dirs)
-        return rows.mapInPandas(kernel, schema=HITS_SCHEMA)
+        kernel = _make_route_kernel(
+            [(qi, items[qi][1], items[qi][0]["doc_ranges"]) for qi in dist],
+            limit, norms_dirs, sorted({f for f, _ in union["pairs"]}),
+            tomb_dirs, meta_dirs)
+        return local, rows.mapInPandas(kernel, schema=ROUTE_HITS_SCHEMA)
 
     def _doc_ids(self) -> np.ndarray:
         """Sorted docIDs of every docs_meta row (tombstoned ones too —
@@ -1902,12 +1844,12 @@ class SearchEngine:
         if repo is not None:
             doc_ranges = self.repo_doc_ranges(repo)
             if not doc_ranges:
-                return self.spark.createDataFrame(
-                    [], "doc_id long, path string, score double")
+                return self._with_paths(_empty_hits(), limit)
         scan = {"pairs": sorted(pairs), "pos_pairs": set(pos_pairs),
                 "doc_ranges": doc_ranges, "match_all": False,
                 "est_postings": sum(self._df_for_pairs(pairs).values())}
-        return self._with_paths(self._route(scan, score_slice, limit), limit)
+        local, dist = self._route([(scan, score_slice)], limit)
+        return self._with_paths(local.get(0, dist), limit)
 
     def _sidecar_dirs(self):
         norms_dirs = self._tbl_snapshot("doc_norms").data_dirs
@@ -2107,15 +2049,19 @@ def _slice_topk(score_slice, idx, norms, dead, doc_ranges, k) -> pd.DataFrame:
                          "score": scores[order].astype(np.float64)})
 
 
-def _make_route_kernel(score_slice, k, doc_ranges, norms_dirs, fields,
-                       tomb_dirs, meta_dirs=None):
+def _make_route_kernel(items, k, norms_dirs, fields, tomb_dirs,
+                       meta_dirs=None):
     """The distributed route's per-task kernel (closure shipped to
     executors).  Input: arrow batches of segment block rows; a task's rows
-    are whole doc-slices.  Output: the top-k (doc_id, score) per slice.
+    are whole doc-slices.  ``items``: ``(qi, score_slice, doc_ranges)`` per
+    distributed query.  Per slice the :class:`_SliceIndex`, the norms
+    lookup and the tombstones are built ONCE, then every item's scorer runs
+    on them with its own doc ranges.  Output: each item's top-k
+    (qi, doc_id, score) per slice.
 
-    ``meta_dirs`` (match-all queries): the docs_meta snapshot the slice's
-    docIDs are read from; the input then also holds one marker row per
-    slice (dslice only, no term)."""
+    ``meta_dirs`` (some item holds a match-all leaf): the docs_meta
+    snapshot the slice's docIDs are read from; the input then also holds
+    one marker row per slice (dslice only, no term)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         frames = [b for b in batches if len(b)]
@@ -2134,9 +2080,11 @@ def _make_route_kernel(score_slice, k, doc_ranges, norms_dirs, fields,
                 idx = _SliceIndex(sl[sl["term"].notna()]
                                   if "term" in sl else sl.iloc[:0])
                 idx.all_ids = _read_doc_ids(meta_dirs, int(dslice))
-            out = _slice_topk(score_slice, idx, norms, dead, doc_ranges, k)
-            if len(out):
-                yield out
+            for qi, score_slice, doc_ranges in items:
+                out = _slice_topk(score_slice, idx, norms, dead, doc_ranges, k)
+                if len(out):
+                    out.insert(0, "qi", qi)
+                    yield out
 
     return kernel
 
@@ -2169,48 +2117,14 @@ def _query_scorer(cq, stats):
     return score
 
 
-def _make_multi_slice_kernel(compiled, df_map, stats, k, norms_dirs, fields,
-                             tomb_dirs=()):
-    """Batched variant of _make_route_kernel: per doc-slice, read norms and
-    tombstones once, then score every compiled query against the slice."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        frames = [b for b in batches if len(b)]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True)
-        for dslice, sl in pdf.groupby("dslice", sort=False):
-            # slice prep ONCE: inverted block index (decodes cached inside)
-            # and the norms lookup are shared by every query in the batch
-            sl = _SliceIndex(sl)
-            norms_pdf = _build_norm_lookup(_read_norms(norms_dirs, int(dslice), fields))
-            dead = _read_doc_ids(list(tomb_dirs), int(dslice)) if tomb_dirs \
-                else None
-            for c in compiled:
-                if c["only_terms"]:
-                    out = _score_slice_wand(sl, norms_pdf, c["specs"], df_map,
-                                            stats, c["doc_ranges"], k, dead=dead)
-                else:
-                    out = _score_slice(sl, norms_pdf, c["specs"], df_map, stats,
-                                       c["doc_ranges"], k, c["needs_positions"],
-                                       dead=dead,
-                                       min_should=c.get("min_should", 0),
-                                       tree=c.get("tree"))
-                if out is not None and len(out):
-                    out = out.copy()
-                    out.insert(0, "query_id", c["qid"])
-                    yield out
-
-    return kernel
-
-
 class _SliceIndex:
     """Per-slice inverted access to segment block rows.
 
     Groups the slice's rows by (field, term) ONCE and caches every decode, so
-    when many queries score against the same slice (search_many, the driver
-    postings cache) the per-query cost is dict lookups + scoring math — none
-    of the frame scans, sorts, or varint decodes repeat.  Lazy tf blocks
+    when many queries score against the same slice (a batch's distributed
+    queries in the route kernel, the driver postings cache) the per-query
+    cost is dict lookups + scoring math — none of the frame scans, sorts, or
+    varint decodes repeat.  Lazy tf blocks
     (``tf_parts``) are shared too: a block decoded for one query is free for
     the next (the WAND guarantee only ever shrinks the decoded set).
 

@@ -214,6 +214,10 @@ class _Parser:
         bm = _BOOST_RE.match(raw)
         if bm:
             raw, boost = bm.group("body"), float(bm.group("boost"))
+        if field == "*" and raw == "*":
+            # MatchAllDocsQuery in any clause (QueryParserBase
+            # .getWildcardQuery)
+            return MatchAll(boost=boost)
         fm = _FUZZY_RE.match(raw)
         if fm:
             edits = int(fm.group("edits")) if fm.group("edits") is not None else 2
@@ -260,10 +264,6 @@ def parse_query(q: str, default_field: str = DEFAULT_FIELD,
     # frozen dataclasses so sharing the cached tree is safe
     if q is None or not q.strip():
         raise QueryParseError("empty query")
-    # classic QueryParser special-cases the '*:*' token (MatchAllDocsQuery)
-    # before any field/term handling — mirror that here
-    if q.strip() == "*:*":
-        return MatchAll()
     node = _Parser(q, default_field, variant).parse()
     # A query whose terms all analyzed away (e.g. pure stopwords) parses to an
     # empty Bool — Lucene returns 0 hits for this, it does not error.

@@ -106,9 +106,9 @@ class Fuzzy(Node):
 
 @dataclass(frozen=True)
 class MatchAll(Node):
-    """``*:*`` — Lucene MatchAllDocsQuery (classic QueryParser special-cases
-    the token): every live doc, constant score 1.0, collection filter and
-    tombstones respected."""
+    """``*:*`` — Lucene MatchAllDocsQuery (the classic parser's field ``*``
+    and term ``*``, in any clause): every live doc, constant score 1.0,
+    collection filter and tombstones respected."""
     boost: float = 1.0
 
 

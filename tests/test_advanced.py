@@ -942,6 +942,35 @@ def test_common_terms_all_high_degrades_to_or(spark, built):
     assert got and got == want
 
 
+@pytest.mark.parametrize("split,repo", [("mixed", None),
+                                        ("all_high", None),
+                                        ("mixed", "repo-03")])
+def test_common_terms_matches_classic_rewrite(spark, built, split, repo):
+    # CommonTermsQuery is the classic query +(low...) high... (or high...
+    # alone when no term is rare), on both routes
+    catalog, rows, oracle = built
+    terms = ["index", "query", "cache", "token"]
+    dfs = {t: oracle._df("text", t) for t in terms}
+    cut = (sorted(dfs.values())[len(dfs) // 2] if split == "mixed"
+           else 0.5 / N_DOCS)
+    n = oracle._field_stats("text")[0]
+    low = [t for t in terms if dfs[t] <= (cut if cut >= 1 else cut * n)]
+    high = [t for t in terms if t not in low]
+    q = " ".join(([f"+({' '.join(low)})"] if low else []) + high)
+    want = oracle.search(repo, q, limit=50)
+    assert want and bool(low) == (split == "mixed")
+    warm = SearchEngine(spark, catalog).warm()
+    try:
+        for eng in (SearchEngine(spark, catalog), warm):
+            got = _got(advanced.common_terms(eng, repo, terms,
+                                             max_term_frequency=cut,
+                                             limit=50))
+            assert [g[:2] for g in got] == [w[:2] for w in want], q
+            assert np.allclose([g[2] for g in got], [w[2] for w in want])
+    finally:
+        warm.unwarm()
+
+
 # --------------------------------------------------------------------------
 # BoostingQuery + JoinUtil query-time join
 # --------------------------------------------------------------------------
@@ -1140,6 +1169,58 @@ def test_operator_routes_identical(spark, mutated, monkeypatch, op):
     for other in (dist_warm, cold):
         assert [g[:2] for g in other] == [g[:2] for g in driver], op
         assert np.allclose([g[2] for g in other], [g[2] for g in driver])
+
+
+#: one batch of every query shape, collection-scoped and not; "t2"
+#: repeats "t" (scored once, fanned out to both query ids)
+ROUTE_BATCH = [
+    ("t", ROUTE_REPO, "index"),
+    ("or", None, "query cache"),
+    ("and", ROUTE_REPO, "index AND query"),
+    ("phrase", None, '"index query" cache'),
+    ("range", ROUTE_REPO, "[ca TO cz]"),
+    ("or_not", None, "index -query"),
+    ("all", ROUTE_REPO, "*:*"),
+    ("all_not", None, "*:* -query"),
+    ("t2", ROUTE_REPO, "index"),
+]
+
+
+def test_search_many_routes_identical(spark, mutated, monkeypatch):
+    """search_many runs each query on the route a single search takes — the
+    driver, the shared distributed job, or both in one batch — and every
+    state answers like per-query search() on the warmed engine."""
+    from lucene_plugin_spark.query.parser import parse_query
+    catalog, warm, _, _ = mutated
+    want = {qid: [(r["doc_id"], r["path"], r["score"]) for r in
+                  warm.search(repo, q, limit=40).collect()]
+            for qid, repo, q in ROUTE_BATCH}
+    assert all(want.values())
+    est = sorted({warm._compile_query(parse_query(q), repo)["est_postings"]
+                  for _, repo, q in ROUTE_BATCH})
+    assert len(est) >= 2
+
+    def batch(eng):
+        got = {qid: [] for qid, _, _ in ROUTE_BATCH}
+        for r in eng.search_many(ROUTE_BATCH, limit=40).collect():
+            got[r["query_id"]].append((r["doc_id"], r["path"], r["score"]))
+        return got
+
+    states = {"driver": batch(warm),
+              "cold": batch(SearchEngine(spark, catalog))}
+    monkeypatch.setattr(SearchEngine, "driver_exec_max_postings", 0)
+    states["distributed"] = batch(warm)
+    # half the batch under the ceiling, half above: both routes at once
+    monkeypatch.setattr(SearchEngine, "driver_exec_max_postings",
+                        est[len(est) // 2 - 1])
+    states["mixed"] = batch(warm)
+    monkeypatch.undo()
+    for state, got in states.items():
+        for qid, hits in want.items():
+            assert [g[:2] for g in got[qid]] == [w[:2] for w in hits], \
+                (state, qid)
+            assert np.allclose([g[2] for g in got[qid]],
+                               [w[2] for w in hits]), (state, qid)
 
 
 def test_index_sort_collection_filter_matches_oracle(spark, tmp_path_factory):

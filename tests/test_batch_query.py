@@ -98,7 +98,6 @@ def test_serve_stream_matches_search_many(spark, engine):
 
 
 def test_prefetch_batch_fills_df_and_range_caches(spark, engine):
-    engine._compile_cache.clear()
     engine._range_cache.clear()
     engine._df_cache.clear()
     engine._cf_cache.clear()
@@ -118,7 +117,6 @@ def test_serve_stream_depths_and_merged_prefetch(spark, engine):
     # order and match per-batch search_many; merged prefetch path is hit
     # because batches is a list with >1 entries
     batches = [QUERIES[:4], QUERIES[4:8], QUERIES[8:]]
-    engine._compile_cache.clear()
     engine._df_cache.clear()
     engine._cf_cache.clear()
     engine._range_cache.clear()
@@ -132,11 +130,23 @@ def test_serve_stream_depths_and_merged_prefetch(spark, engine):
             assert norm(res) == norm(exp), depth
 
 
-def test_search_many_rejects_match_all(engine):
-    """The batch kernel has no match-all leaf: *:* must fail loudly, never
-    answer differently from search()."""
-    with pytest.raises(ValueError, match=r"search\(\)"):
-        engine.search_many([("a", None, "get"), ("b", None, "*:*")])
+def test_search_many_answers_match_all(spark, engine):
+    """*:* and a match-all tree go through the batch route like any other
+    query: the batch equals per-query search(), cold and warmed."""
+    batch = [("a", None, "get"), ("b", None, "*:*"),
+             ("c", None, "*:* -user"), ("d", "repo-01", "*:* -cache")]
+    cold = SearchEngine(spark, engine.catalog)
+    warm = SearchEngine(spark, engine.catalog).warm()
+    try:
+        for eng in (cold, warm):
+            got = _rows(eng.search_many(batch, limit=40))
+            want = [(qid, r["doc_id"], round(r["score"], 9))
+                    for qid, repo, q in batch
+                    for r in eng.search(repo, q, limit=40).collect()]
+            assert sorted(got) == sorted(want)
+            assert {q for q, _, _ in got} == {"a", "b", "c", "d"}
+    finally:
+        warm.unwarm()
 
 
 def test_warmed_driver_path_mixed_phrase_positions(spark, engine):

@@ -4,8 +4,8 @@ import pytest
 
 from lucene_plugin_spark.query.parser import (QueryParseError, parse_query,
                                               sanitize_collection)
-from lucene_plugin_spark.query.plan import (Bool, Fuzzy, Phrase, Range, Term,
-                                            Wildcard)
+from lucene_plugin_spark.query.plan import (Bool, Fuzzy, MatchAll, Phrase,
+                                            Range, Term, Wildcard)
 
 
 def test_bare_term():
@@ -102,6 +102,20 @@ def test_boost_forms():
     # boost on a camelCase token rides on the resulting phrase
     n = parse_query("getUserName^2")
     assert isinstance(n, Phrase) and n.boost == 2.0
+
+
+def test_match_all_in_any_clause():
+    # QueryParserBase.getWildcardQuery: field '*' + term '*' is
+    # MatchAllDocsQuery wherever the clause stands, not only alone
+    x = Term("text", "x")
+    assert parse_query("*:*") == MatchAll()
+    assert parse_query("*:* -x") == Bool(should=(MatchAll(),), must_not=(x,))
+    assert parse_query("+*:* -x") == Bool(must=(MatchAll(),), must_not=(x,))
+    assert parse_query("(*:*) -x") == Bool(should=(MatchAll(),),
+                                           must_not=(x,))
+    assert parse_query("*:*^2") == MatchAll(boost=2.0)
+    # a field wildcard is still a wildcard
+    assert parse_query("text:*") == Wildcard("text", "*")
 
 
 def test_sanitize_collection():

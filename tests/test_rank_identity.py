@@ -66,3 +66,19 @@ def test_rank_identity_collection_scoped(spark, built, engines, repo):
                                                 limit=50).collect()]
         assert [g[0] for g in got] == [w[0] for w in want], route
         assert np.allclose([g[1] for g in got], [w[1] for w in want], rtol=1e-9)
+
+
+@pytest.mark.parametrize("query", ["*:* -query", "+*:* -query",
+                                   "(*:*) -query"])
+@pytest.mark.parametrize("repo", [None, "repo-03"])
+def test_match_all_clause_matches_oracle(spark, built, engines, query, repo):
+    """``*:*`` inside a larger query is MatchAllDocsQuery (classic parser),
+    so ``*:* -query`` is every doc without 'query' at score 1.0."""
+    _, oracle = built
+    want = oracle.search(repo, query, limit=255)
+    assert want and all(s == 1.0 for _, _, s in want)
+    for route in ROUTES:
+        got = [(r["doc_id"], r["path"], r["score"]) for r in
+               engines[route]().search(repo, query, limit=255).collect()]
+        assert [g[:2] for g in got] == [w[:2] for w in want], route
+        assert np.allclose([g[2] for g in got], [w[2] for w in want])
