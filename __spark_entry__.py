@@ -489,6 +489,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         _, eng = _engine(spark, sf)
         return _hits_as_orig_ids(eng.search(None, "spark", limit=10))
 
+    def ft_term_k255(spark, sf):  # the reference's service depth
+        # (LuceneReaderImpl.java:104): a top-255 cut of the distributed
+        # route's per-slice heaps, paths read by the route kernel
+        _, eng = _engine(spark, sf)
+        return _hits_as_orig_ids(eng.search(None, "spark", limit=255))
+
     def ft_batch(spark, sf):
         # the batch route through the hard gate: search_many runs four
         # query shapes (term / OR / AND / phrase) through the one route in
@@ -594,7 +600,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                         "content_sha256")
 
     q.update(ft_batch=ft_batch)
-    q.update(ft_term_topk=ft_term_topk, ft_or_topk=ft_or_topk, ft_and=ft_and,
+    q.update(ft_term_topk=ft_term_topk, ft_term_k255=ft_term_k255,
+             ft_or_topk=ft_or_topk, ft_and=ft_and,
              ft_not=ft_not, ft_phrase=ft_phrase, ft_range=ft_range,
              ft_wildcard=ft_wildcard, ft_fuzzy=ft_fuzzy, ft_boost=ft_boost,
              ft_phrase_slop=ft_phrase_slop, ft_range_excl=ft_range_excl,
@@ -2096,40 +2103,44 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 #
 # Current window (exactly 50), in gate order:
 #
-# 1. the 9 entries this window's change reaches most directly: search_many
-#    now runs its queries through the one route (driver-route queries on
-#    the driver, the rest in one shared distributed job), the multi-query
-#    kernel and batch-only compile are gone, *:* parses to a match-all leaf
-#    in any clause (query/parser.py) and common terms is a Boolean query
-#    through search_node (query/advanced.py) — batch, common_terms,
-#    match_all, simple_qp and the term / OR / AND / phrase / collection
-#    searches that share the route with every batch;
+# 1. the 10 entries the distributed route's changes reach most directly:
+#    the route kernel now attaches each hit's stored path (no docs_meta
+#    join after it), table reads are typed by the manifest's schemas
+#    (storage/catalog.py), search_many runs its queries through the one
+#    route, *:* is a match-all leaf in any clause and common terms is a
+#    Boolean query through search_node — batch, common_terms, match_all,
+#    simple_qp, the term search at depths 10 and 255 (the reference's
+#    service depth) and the OR / AND / phrase / collection searches;
 # 2. 27 further entries over the same single-query route (sorted search,
 #    paging, more-like-this, nested and mm/filter trees, the classic query
 #    surface, synonyms, dismax, span_near, replica, stem) and the
 #    mutation-path searches;
-# 3. the 5 entries whose latest driver row is r2 (_GATE_TAIL below);
-# 4. 9 of the 11 advanced-operator entries of the previous window (their
-#    route operators are untouched here).
+# 3. 4 of the 5 entries whose latest driver row is r2 (_GATE_TAIL below);
+# 4. 9 of the 11 advanced-operator entries (per-slice scorers through the
+#    same route kernel).
 #
-# Pushed past slot 50: mut_docs_sha (mutation path, module untouched; its
-# latest driver row is r5) and, as before, ft_span_or, ft_span_not,
+# Pushed past slot 50: sim_ivf_kmeans (a stale-r2 entry over embeddings;
+# its module is untouched), mut_docs_sha (mutation path; its latest
+# driver row is r5) and, as before, ft_span_or, ft_span_not,
 # search_many siblings, phonetic, streaming windows, table statistics,
 # dedup / similarity / TPC-H / event analytics — every one keeps its
 # queries()+oracle_sql() pair and its local 3-SF gating.
 _GATE_TAIL = [
-    # the 5 stale-r2 entries (untouched modules; r2-green rows, re-confirmed
-    # by the local 3-SF sweeps)
+    # 4 of the 5 stale-r2 entries (untouched modules; r2-green rows,
+    # re-confirmed by the local 3-SF sweeps); the fifth, sim_ivf_kmeans,
+    # follows slot 50
     "ev_json_extract", "ev_hier_rollup", "ev_kmv_distinct",
-    "text_token_counts", "sim_ivf_kmeans",
+    "text_token_counts",
 ]
 
 
 def _rotate_for_gate(q: dict) -> dict:
     head_priority = [
-        # 1. the batch route, *:* in any clause, the common-terms rewrite
+        # 1. the route kernel's paths, typed reads, the batch route, *:*
+        #    in any clause, the common-terms rewrite
         "ft_batch", "ft_common_terms", "ft_match_all", "ft_simple_qp",
-        "ft_term_topk", "ft_or_topk", "ft_and", "ft_phrase", "ft_collection",
+        "ft_term_topk", "ft_term_k255", "ft_or_topk", "ft_and", "ft_phrase",
+        "ft_collection",
         # 2. the rest of the single-query route and the mutation searches
         "ft_sort_field", "ft_paging", "ft_more_like", "ft_nested",
         "ft_index_sort", "ft_min_should", "ft_filter", "mut_upsert_search",
@@ -2154,6 +2165,7 @@ def oracle_sql() -> dict[str, str]:
     o: dict[str, str] = {}
 
     o["ft_term_topk"] = _bm25_or_sql(["spark"], 10)
+    o["ft_term_k255"] = _bm25_or_sql(["spark"], 255)
     # the replica must rank/score EXACTLY like the source index
     o["ft_replica_search"] = _bm25_or_sql(["spark"], 10)
     o["ft_or_topk"] = _bm25_or_sql(["join", "hash", "merge"], 10)

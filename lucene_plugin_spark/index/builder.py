@@ -488,8 +488,9 @@ class IndexBuilder:
                 # field_lens is doc_norms minus the dslice column: share the
                 # same data files (Iceberg analogue: a second table over the
                 # same manifest) instead of rewriting them
+                norms_snap = self.catalog.table("doc_norms").snapshot()
                 self.catalog.table("field_lens").commit_dirs(
-                    self.catalog.table("doc_norms").snapshot().data_dirs,
+                    norms_snap.data_dirs, schemas=norms_snap.schemas,
                     properties={"stage": "field_lens", "fingerprint": fp})
             if not self._stage_done("stats", fp):
                 lens = (self.catalog.table("field_lens").read(self.spark)

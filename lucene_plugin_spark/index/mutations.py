@@ -265,8 +265,9 @@ class IndexMutator:
                     partition_by=["dslice"])
                 # field_lens shares doc_norms' data files (same schema
                 # minus layout)
+                norms_snap = self.catalog.table("doc_norms").snapshot()
                 self.catalog.table("field_lens").commit_dirs(
-                    self.catalog.table("doc_norms").snapshot().data_dirs,
+                    norms_snap.data_dirs, schemas=norms_snap.schemas,
                     properties={"stage": "field_lens"})
 
             # segment blocks for the new docs: pure append of fresh dslice
@@ -387,8 +388,10 @@ class IndexMutator:
             .sortWithinPartitions("field", "doc_id"),
             ["dslice"], [(d,) for d in dirty],
             properties={"stage": "doc_norms", "compacted_slices": dirty})
+        norms_snap = norms_t.snapshot()
         self.catalog.table("field_lens").commit_dirs(
-            norms_t.snapshot().data_dirs, properties={"stage": "field_lens"})
+            norms_snap.data_dirs, schemas=norms_snap.schemas,
+            properties={"stage": "field_lens"})
 
         # docs_meta: drop dead rows of dirty slices only
         meta_t = self.catalog.table("docs_meta")

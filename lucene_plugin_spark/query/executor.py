@@ -34,7 +34,8 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
+                               StructType)
 
 from lucene_plugin_spark.index import codec
 from lucene_plugin_spark.query import bm25
@@ -50,10 +51,12 @@ from lucene_plugin_spark.query.plan import (Bool, DisMax, Fuzzy, MatchAll,
                                             iter_all_leaves, simplify)
 from lucene_plugin_spark.storage.catalog import Catalog, SnapshotError
 
-#: the distributed route's kernel output: item index, docID, score
+#: the distributed route's kernel output: item index, docID, stored path,
+#: score
 ROUTE_HITS_SCHEMA = StructType([
     StructField("qi", LongType()),
     StructField("doc_id", LongType()),
+    StructField("path", StringType()),
     StructField("score", DoubleType()),
 ])
 
@@ -711,19 +714,18 @@ class SearchEngine:
     def _with_paths(self, hits, limit: int) -> DataFrame:
         """(score desc, doc_id asc) top-k of ``hits`` with stored paths, as
         DataFrame(doc_id, path, score).  A driver-route pandas top-k takes
-        its paths from the warmed path map (no job); a lazy DataFrame is cut
-        first (TakeOrderedAndProject on the per-slice heaps), THEN probes
-        docs_meta with the broadcast K-ROW side — broadcasting docs_meta
-        itself would serialize the whole corpus's path map on every query."""
+        its paths from the warmed path map (no job).  A distributed-route
+        frame already carries each hit's path (the route kernel reads them
+        from the slice's docs_meta partition), so its top-k is one
+        TakeOrderedAndProject over the per-slice heaps: collecting it is
+        the search's only Spark job."""
         if isinstance(hits, pd.DataFrame):
             pm = self._path_map
             res = hits.assign(path=[pm.get(int(d)) for d in hits["doc_id"]])
             return self.spark.createDataFrame(
                 res[["doc_id", "path", "score"]],
                 "doc_id long, path string, score double")
-        topk = (hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit))
-        return (self._meta_path_df().join(F.broadcast(topk), "doc_id")
-                .orderBy(F.desc("score"), F.asc("doc_id"))
+        return (hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
                 .select("doc_id", "path", "score"))
 
     def explain(self, repo: str | None, query: str, key: str) -> dict:
@@ -1495,10 +1497,7 @@ class SearchEngine:
             qids = self.spark.createDataFrame(
                 [(qi, qid) for qi, qid in fan if qi not in local],
                 "qi long, query_id string")
-            # broadcast the (batch x k)-row hit set, probe docs_meta
-            d = (self._meta_path_df()
-                 .join(F.broadcast(topk.join(F.broadcast(qids), "qi")),
-                       "doc_id")
+            d = (topk.join(F.broadcast(qids), "qi")
                  .select("query_id", "doc_id", "path", "score"))
             out = d if out is None else out.unionByName(d)
         if out is None:
@@ -1732,9 +1731,12 @@ class SearchEngine:
 
         Returns ``(local, dist)``: ``local`` maps an item's index to its
         driver-route top-k as pandas (doc_id, score); ``dist`` is the lazy
-        DataFrame (qi, doc_id, score) of the distributed items' per-slice
-        top-k hits (``qi`` the item index), or None when no item is
-        distributed.
+        DataFrame (qi, doc_id, path, score) of the distributed items'
+        per-slice top-k hits (``qi`` the item index, ``path`` the stored
+        path the kernel read from the slice's ``docs_meta`` partition), or
+        None when no item is distributed.  Building ``dist`` launches no
+        Spark job: the segments read is schema-typed (``Table.read``) and
+        docs_meta is read only inside the kernel.
 
         A match-all query visits every slice in its doc ranges, not only
         the slices its terms touch, with their tombstones; ``idx.all_ids``
@@ -1785,8 +1787,8 @@ class SearchEngine:
         # dslice-partitioned norms sidecar, read task-locally with pyarrow
         # (the analogue of Lucene reading its per-segment norms file) — no
         # per-query shuffle of corpus-sized data anywhere.
-        meta_dirs = None
-        if not any(s["match_all"] for s in scans):
+        match_all = any(s["match_all"] for s in scans)
+        if not match_all:
             rows = self._filtered_segments(union)
         else:
             # one marker row (dslice only) per slice in the doc ranges, so a
@@ -1802,11 +1804,10 @@ class SearchEngine:
                 max(1, min(len(slices),
                            self.spark.sparkContext.defaultParallelism)),
                 "dslice")
-            meta_dirs = self._tbl_snapshot("docs_meta").data_dirs
         kernel = _make_route_kernel(
             [(qi, items[qi][1], items[qi][0]["doc_ranges"]) for qi in dist],
             limit, norms_dirs, sorted({f for f, _ in union["pairs"]}),
-            tomb_dirs, meta_dirs)
+            tomb_dirs, self._tbl_snapshot("docs_meta").data_dirs, match_all)
         return local, rows.mapInPandas(kernel, schema=ROUTE_HITS_SCHEMA)
 
     def _doc_ids(self) -> np.ndarray:
@@ -1939,20 +1940,23 @@ class SearchEngine:
         return hit
 
 
-def _read_norms(norms_dirs: list, dslice: int, fields: list[str]) -> pd.DataFrame:
-    """Task-local read of the doc_norms sidecar partition for one doc-slice.
-    ``norms_dirs`` are snapshot data-dir entries (str roots or partition-dir
-    dicts from partition-level commits)."""
+def _slice_files(data_dirs: list, dslice: int) -> list[str]:
+    """Parquet files of one doc-slice's partition of a dslice-partitioned
+    table.  ``data_dirs`` are snapshot data-dir entries (str roots or
+    partition-dir dicts from partition-level commits)."""
     import glob
 
+    from lucene_plugin_spark.storage.catalog import partition_data_dirs
+    return [f for part in partition_data_dirs(data_dirs, "dslice", dslice)
+            for f in glob.glob(os.path.join(part, "*.parquet"))]
+
+
+def _read_norms(norms_dirs: list, dslice: int, fields: list[str]) -> pd.DataFrame:
+    """Task-local read of the doc_norms sidecar partition for one doc-slice."""
     import pyarrow.parquet as pq
 
-    from lucene_plugin_spark.storage.catalog import partition_data_dirs
-    frames = []
-    for part in partition_data_dirs(norms_dirs, "dslice", dslice):
-        for f in glob.glob(os.path.join(part, "*.parquet")):
-            t = pq.read_table(f, columns=["field", "doc_id", "dl"])
-            frames.append(t.to_pandas())
+    frames = [pq.read_table(f, columns=["field", "doc_id", "dl"]).to_pandas()
+              for f in _slice_files(norms_dirs, dslice)]
     if not frames:
         return pd.DataFrame({"field": [], "doc_id": [], "dl": []})
     out = pd.concat(frames, ignore_index=True)
@@ -1965,18 +1969,38 @@ def _read_doc_ids(data_dirs: list, dslice: int) -> np.ndarray:
     """Task-local read of the sorted unique docIDs in one slice's partition
     of a dslice-partitioned table: ``tombstones`` (the liveDocs mask) or
     ``docs_meta`` (every doc of the slice, for match-all)."""
-    import glob
-
     import pyarrow.parquet as pq
 
-    from lucene_plugin_spark.storage.catalog import partition_data_dirs
-    parts = []
-    for part in partition_data_dirs(data_dirs, "dslice", dslice):
-        for f in glob.glob(os.path.join(part, "*.parquet")):
-            parts.append(pq.read_table(f, columns=["doc_id"])["doc_id"].to_numpy())
+    parts = [pq.read_table(f, columns=["doc_id"])["doc_id"].to_numpy()
+             for f in _slice_files(data_dirs, dslice)]
     if not parts:
         return np.empty(0, np.int64)
     return np.unique(np.concatenate(parts)).astype(np.int64)
+
+
+def _read_paths(meta_dirs: list, dslice: int, ids: np.ndarray) -> np.ndarray:
+    """Task-local read of the stored paths of ``ids`` (docIDs of slice
+    ``dslice``), in ``ids`` order: one pyarrow read of the slice's
+    docs_meta partition filtered to those ids (None where docs_meta has no
+    row)."""
+    import pyarrow.dataset as pads
+
+    files = _slice_files(meta_dirs, dslice)
+    out = np.full(len(ids), None, dtype=object)
+    if not files or not len(ids):
+        return out
+    t = pads.dataset(files, format="parquet").to_table(
+        columns=["doc_id", "path"],
+        filter=pads.field("doc_id").isin(np.unique(ids)))
+    have = t["doc_id"].to_numpy()
+    if not len(have):
+        return out
+    order = np.argsort(have, kind="stable")
+    have = have[order]
+    pos = np.minimum(np.searchsorted(have, ids), len(have) - 1)
+    hit = have[pos] == ids
+    out[hit] = t["path"].to_numpy(zero_copy_only=False)[order][pos[hit]]
+    return out
 
 
 def _tombstones_of(tomb_dirs: list, slices) -> np.ndarray | None:
@@ -2049,19 +2073,22 @@ def _slice_topk(score_slice, idx, norms, dead, doc_ranges, k) -> pd.DataFrame:
                          "score": scores[order].astype(np.float64)})
 
 
-def _make_route_kernel(items, k, norms_dirs, fields, tomb_dirs,
-                       meta_dirs=None):
+def _make_route_kernel(items, k, norms_dirs, fields, tomb_dirs, meta_dirs,
+                       match_all=False):
     """The distributed route's per-task kernel (closure shipped to
     executors).  Input: arrow batches of segment block rows; a task's rows
     are whole doc-slices.  ``items``: ``(qi, score_slice, doc_ranges)`` per
     distributed query.  Per slice the :class:`_SliceIndex`, the norms
     lookup and the tombstones are built ONCE, then every item's scorer runs
     on them with its own doc ranges.  Output: each item's top-k
-    (qi, doc_id, score) per slice.
+    (qi, doc_id, path, score) per slice; once every item has scored, the
+    paths of the union of their hits come from ONE filtered read of the
+    slice's partition of ``meta_dirs`` (the engine's docs_meta snapshot,
+    tag pins included) — no docs_meta join after the kernel.
 
-    ``meta_dirs`` (some item holds a match-all leaf): the docs_meta
-    snapshot the slice's docIDs are read from; the input then also holds
-    one marker row per slice (dslice only, no term)."""
+    ``match_all`` (some item holds a match-all leaf): the slice's docIDs
+    are read from ``meta_dirs`` too, and the input also holds one marker
+    row per slice (dslice only, no term)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         frames = [b for b in batches if len(b)]
@@ -2074,17 +2101,23 @@ def _make_route_kernel(items, k, norms_dirs, fields, tomb_dirs,
                      if fields else {})
             dead = (_read_doc_ids(tomb_dirs, int(dslice))
                     if tomb_dirs else None)
-            if meta_dirs is None:
+            if not match_all:
                 idx = _SliceIndex(sl)
             else:
                 idx = _SliceIndex(sl[sl["term"].notna()]
                                   if "term" in sl else sl.iloc[:0])
                 idx.all_ids = _read_doc_ids(meta_dirs, int(dslice))
+            outs = []
             for qi, score_slice, doc_ranges in items:
                 out = _slice_topk(score_slice, idx, norms, dead, doc_ranges, k)
                 if len(out):
                     out.insert(0, "qi", qi)
-                    yield out
+                    outs.append(out)
+            if outs:
+                hits = pd.concat(outs, ignore_index=True)
+                hits.insert(2, "path", _read_paths(
+                    meta_dirs, int(dslice), hits["doc_id"].to_numpy()))
+                yield hits
 
     return kernel
 

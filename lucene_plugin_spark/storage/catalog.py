@@ -29,6 +29,15 @@ atomic on POSIX — so readers never observe a partial commit (the analogue of
 Iceberg optimistic commit; reference analogue: ``IndexWriter.commit()`` at
 LuceneIndexBean.java:490-509).
 
+Every manifest also records ``schemas``: the Spark schema of each parquet
+root it lists, as a list of ``{"schema": <json>, "roots": [<root dir
+names>]}`` — one entry per distinct schema, so a manifest grows by a name,
+not a schema, per appended root; names, not paths, so a replicated
+warehouse keeps them.  Reads pass each root's schema to
+``spark.read.schema``: Spark's footer inference is a Spark job per root,
+the larger part of a cold search's fixed cost.  Roots without one
+(manifests written before schemas were recorded) are still inferred.
+
 Partition-level commits (the Iceberg ``overwritePartitions`` analogue):
 ``replace_partitions`` / ``drop_partitions`` commit a snapshot whose data-dir
 list keeps the untouched hive partition directories of the parent and swaps
@@ -80,6 +89,29 @@ def entry_base(e) -> str:
     return e if isinstance(e, str) else e.get("base", e["path"])
 
 
+def root_name(e) -> str:
+    """Data-dir entry -> the key of its parquet root in a manifest's
+    ``schemas``."""
+    return os.path.basename(os.path.normpath(entry_base(e)))
+
+
+def _root_schemas(manifest: dict) -> dict[str, str]:
+    """A manifest's ``schemas`` as root name -> JSON schema."""
+    return {n: e["schema"] for e in manifest.get("schemas", [])
+            for n in e["roots"]}
+
+
+def _has_data_file(path: str) -> bool:
+    """Whether a parquet root or partition dir holds a data file, by
+    Spark's listing rule (names starting with ``_`` or ``.`` are not data);
+    stops at the first one."""
+    for _, dirs, files in os.walk(path):
+        if any(not f.startswith(("_", ".")) for f in files):
+            return True
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+    return False
+
+
 def partition_data_dirs(data_dirs: list, col: str, value) -> list[str]:
     """Directories holding files of hive partition ``col=value`` across a
     snapshot's data-dir entries (used by task-local sidecar readers: norms,
@@ -105,6 +137,8 @@ class Snapshot:
     properties: dict[str, Any] = field(default_factory=dict)
     parent_id: int | None = None
     timestamp_ms: int = 0
+    #: root name (:func:`root_name`) -> JSON schema of that root's files
+    schemas: dict[str, str] = field(default_factory=dict)
 
 
 class Table:
@@ -126,12 +160,15 @@ class Table:
         with open(cur) as f:
             return int(f.read().strip())
 
+    def _manifest(self, sid: int) -> dict:
+        with open(os.path.join(self._meta, f"manifest-{sid}.json")) as f:
+            return json.load(f)
+
     def snapshot(self, snapshot_id: int | None = None) -> Snapshot:
         sid = self.current_snapshot_id() if snapshot_id is None else snapshot_id
         if sid is None:
             raise SnapshotError(f"table {self.name} has no snapshots")
-        with open(os.path.join(self._meta, f"manifest-{sid}.json")) as f:
-            m = json.load(f)
+        m = self._manifest(sid)
         return Snapshot(
             snapshot_id=m["snapshot_id"],
             data_dirs=m["data_dirs"],
@@ -139,6 +176,7 @@ class Table:
             properties=m.get("properties", {}),
             parent_id=m.get("parent_id"),
             timestamp_ms=m.get("timestamp_ms", 0),
+            schemas=_root_schemas(m),
         )
 
     def exists(self) -> bool:
@@ -156,25 +194,41 @@ class Table:
         cur = self.current_snapshot_id()
         return 1 if cur is None else cur + 1
 
-    def _write_data(self, df: DataFrame, sid: int, partition_by: list[str] | None) -> str:
+    def _write_data(self, df: DataFrame, sid: int, partition_by: list[str] | None
+                    ) -> tuple[str, dict[str, str]]:
+        """Write ``df`` as a new parquet root; returns the root and its
+        ``schemas`` entry."""
         d = os.path.join(self._data, f"snap-{sid}-{uuid.uuid4().hex[:8]}")
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(d)
-        self._last_schema = df.schema.json()  # recorded in the manifest so an
-        # empty snapshot (no parquet files) can still be read back typed
-        return d
+        return d, {os.path.basename(d): df.schema.json()}
 
-    def _commit(self, sid: int, data_dirs: list[str], lineage: dict, properties: dict) -> Snapshot:
+    def _commit(self, sid: int, data_dirs: list, lineage: dict,
+                properties: dict, schemas: dict[str, str] | None = None
+                ) -> Snapshot:
+        """Write manifest ``sid`` and swap CURRENT to it.  ``schemas``: the
+        schemas of the roots this commit adds; the parent's carry over for
+        the roots it still lists.  ``schema_json`` (the last added schema,
+        else the parent's) types the read of a snapshot with no files."""
         parent = self.current_snapshot_id()
+        pm = self._manifest(parent) if parent is not None else {}
+        known = {**_root_schemas(pm), **(schemas or {})}
+        by_schema: dict[str, list[str]] = {}
+        for n in dict.fromkeys(root_name(e) for e in data_dirs):
+            if n in known:
+                by_schema.setdefault(known[n], []).append(n)
         manifest = {
             "snapshot_id": sid,
             "parent_id": parent,
             "data_dirs": data_dirs,
             "lineage": lineage,
             "properties": properties,
-            "schema_json": getattr(self, "_last_schema", None),
+            "schema_json": (list(schemas.values())[-1] if schemas
+                            else pm.get("schema_json")),
+            "schemas": [{"schema": j, "roots": ns}
+                        for j, ns in by_schema.items()],
             "timestamp_ms": int(time.time() * 1000),
         }
         mpath = os.path.join(self._meta, f"manifest-{sid}.json")
@@ -191,21 +245,27 @@ class Table:
     def append(self, df: DataFrame, partition_by: list[str] | None = None,
                lineage: dict | None = None, properties: dict | None = None) -> Snapshot:
         sid = self._next_id()
-        d = self._write_data(df, sid, partition_by)
+        d, schemas = self._write_data(df, sid, partition_by)
         parent_dirs = [] if self.current_snapshot_id() is None else self.snapshot().data_dirs
-        return self._commit(sid, parent_dirs + [d], lineage or {}, properties or {})
+        return self._commit(sid, parent_dirs + [d], lineage or {},
+                            properties or {}, schemas)
 
     def overwrite(self, df: DataFrame, partition_by: list[str] | None = None,
                   lineage: dict | None = None, properties: dict | None = None) -> Snapshot:
         sid = self._next_id()
-        d = self._write_data(df, sid, partition_by)
-        return self._commit(sid, [d], lineage or {}, properties or {})
+        d, schemas = self._write_data(df, sid, partition_by)
+        return self._commit(sid, [d], lineage or {}, properties or {}, schemas)
 
-    def commit_dirs(self, data_dirs: list[str], lineage: dict | None = None,
-                    properties: dict | None = None) -> Snapshot:
+    def commit_dirs(self, data_dirs: list, lineage: dict | None = None,
+                    properties: dict | None = None,
+                    schemas: dict[str, str] | None = None) -> Snapshot:
         """Commit pre-written data dirs (used by multi-stage builds where each
-        stage writes its own files; the commit only swaps the pointer)."""
-        return self._commit(self._next_id(), data_dirs, lineage or {}, properties or {})
+        stage writes its own files; the commit only swaps the pointer).
+        ``schemas``: the schemas of those files' roots — for another table's
+        data dirs, that table's :attr:`Snapshot.schemas`; roots without one
+        are read with schema inference."""
+        return self._commit(self._next_id(), data_dirs, lineage or {},
+                            properties or {}, schemas)
 
     # ---- partition-level commits (Iceberg overwritePartitions analogue) ----
     def _partition_leaves(self, entry, partition_by: list[str]):
@@ -259,10 +319,11 @@ class Table:
         the scale contract for mutations."""
         replaced = {tuple(str(v) for v in vals) for vals in replaced_values}
         sid = self._next_id()
-        d = self._write_data(df, sid, partition_by)
+        d, schemas = self._write_data(df, sid, partition_by)
         kept = self._kept_entries(partition_by, replaced) \
             if self.current_snapshot_id() is not None else []
-        return self._commit(sid, kept + [d], lineage or {}, properties or {})
+        return self._commit(sid, kept + [d], lineage or {}, properties or {},
+                            schemas)
 
     def drop_partitions(self, partition_by: list[str], dropped_values,
                         lineage: dict | None = None,
@@ -270,42 +331,49 @@ class Table:
         """Metadata-only delete of whole partitions (Iceberg partition-level
         DELETE): no data files written or read, just a manifest without them."""
         dropped = {tuple(str(v) for v in vals) for vals in dropped_values}
-        parent = self.snapshot()
-        with open(os.path.join(self._meta, f"manifest-{parent.snapshot_id}.json")) as f:
-            self._last_schema = json.load(f).get("schema_json")
         kept = self._kept_entries(partition_by, dropped)
         return self._commit(self._next_id(), kept, lineage or {}, properties or {})
 
     # ---- reads -----------------------------------------------------------
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
+        """The snapshot as one DataFrame, launching no Spark job for roots
+        whose schema the manifest records (:attr:`Snapshot.schemas`).
+
+        Each parquet root (possibly hive-partitioned) is read with its own
+        ``basePath`` and the roots are unioned by name — a multi-root read
+        would trip Spark's conflicting-directory-structure check; a root's
+        surviving partition dirs share one read, so plan size is O(roots).
+        A root with a recorded schema is read with it: the same columns,
+        column order (partition columns last) and types as schema inference
+        gives, without inference's footer job.  A root without files (a
+        zero-row write) is skipped; a snapshot with none at all reads as an
+        empty frame typed by the manifest's ``schema_json``."""
         snap = self.snapshot(snapshot_id)
-        # zero data dirs (e.g. every partition dropped) falls through to the
-        # schema-typed empty frame below
-        # each data dir is its own parquet root (possibly hive-partitioned);
-        # read each with its own basePath and union — a multi-root read would
-        # trip Spark's conflicting-directory-structure check
-        out = None
+        from pyspark.sql.types import StructType
         from pyspark.sql.utils import AnalysisException
-        # group partition-dir entries by their base so one read covers all of
-        # a root's surviving partitions (keeps scan/plan size O(roots))
+        out = None
         by_base: dict[str, list[str]] = {}
         for e in snap.data_dirs:
             by_base.setdefault(entry_base(e), []).append(entry_path(e))
         for base, paths in by_base.items():
+            schema = snap.schemas.get(root_name(base))
+            reader = spark.read.option("basePath", base)
+            if schema is not None:
+                if not any(_has_data_file(p) for p in paths):
+                    continue  # what inference would fail on (next line)
+                reader = reader.schema(StructType.fromJson(json.loads(schema)))
             try:
-                df = spark.read.option("basePath", base).parquet(*paths)
+                df = reader.parquet(*paths)
             except AnalysisException:
-                continue  # empty snapshot dir (zero-row write)
+                continue  # inference found no files, or the dir is gone
             out = df if out is None else out.unionByName(df, allowMissingColumns=True)
         if out is None:
-            # reconstruct an empty, correctly-typed frame from the manifest
-            with open(os.path.join(self._meta, f"manifest-{snap.snapshot_id}.json")) as f:
-                schema_json = json.load(f).get("schema_json")
+            schema_json = self._manifest(snap.snapshot_id).get("schema_json")
             if schema_json is None:
                 raise SnapshotError(
                     f"snapshot {snap.snapshot_id} of {self.name} is empty and untyped")
-            from pyspark.sql.types import StructType as _St
-            return spark.createDataFrame([], _St.fromJson(json.loads(schema_json)))
+            return spark.createDataFrame(
+                [], StructType.fromJson(json.loads(schema_json)))
         return out
 
 

@@ -1161,12 +1161,16 @@ def test_operator_routes_identical(spark, mutated, monkeypatch, op):
     monkeypatch.setattr(SearchEngine, "driver_exec_max_postings", 0)
     dist_warm = [(r["doc_id"], r["path"], r["score"])
                  for r in run(warm).collect()]
+    # the distributed route's paths come from its kernel's docs_meta read,
+    # with no warmed table behind it on a cold engine
+    dist_cold = [(r["doc_id"], r["path"], r["score"])
+                 for r in run(SearchEngine(spark, catalog)).collect()]
     monkeypatch.undo()
     cold = [(r["doc_id"], r["path"], r["score"])
             for r in run(SearchEngine(spark, catalog)).collect()]
     assert driver, op
     assert {p for _, p, _ in driver} <= repo_paths - {gone_path}
-    for other in (dist_warm, cold):
+    for other in (dist_warm, dist_cold, cold):
         assert [g[:2] for g in other] == [g[:2] for g in driver], op
         assert np.allclose([g[2] for g in other], [g[2] for g in driver])
 
@@ -1210,6 +1214,7 @@ def test_search_many_routes_identical(spark, mutated, monkeypatch):
               "cold": batch(SearchEngine(spark, catalog))}
     monkeypatch.setattr(SearchEngine, "driver_exec_max_postings", 0)
     states["distributed"] = batch(warm)
+    states["distributed_cold"] = batch(SearchEngine(spark, catalog))
     # half the batch under the ceiling, half above: both routes at once
     monkeypatch.setattr(SearchEngine, "driver_exec_max_postings",
                         est[len(est) // 2 - 1])
