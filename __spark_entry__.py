@@ -29,7 +29,7 @@ from lucene_plugin_spark.ops import similarity as S
 from lucene_plugin_spark.ops import textstats as T
 from lucene_plugin_spark.ops.hashing import md5_long, md5_long_sql
 from lucene_plugin_spark.query.executor import SearchEngine
-from lucene_plugin_spark.storage.catalog import Catalog
+from lucene_plugin_spark.storage.catalog import LAYOUT_VERSION, Catalog
 
 # --------------------------------------------------------------------------
 # engine bootstrap (index built once per sf_dir per process, snapshot-cached)
@@ -51,13 +51,27 @@ def _docs_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cached_warehouse(prefix: str, sf_dir: str) -> tuple[Catalog, bool]:
+    """The warehouse cache ``prefix`` keeps for ``sf_dir``, and whether it
+    holds a finished build in the current layout (stamped with
+    ``LAYOUT_VERSION`` once its build ends).  A stale or unfinished one is
+    emptied first, so no cache serves a layout older than the code."""
+    import shutil
+    wh = os.path.join(prefix, sf_dir.strip("/").replace("/", "_"))
+    catalog = Catalog(wh)
+    if catalog.layout_version() == LAYOUT_VERSION:
+        return catalog, True
+    shutil.rmtree(wh, ignore_errors=True)
+    return Catalog(wh), False
+
+
 def _engine(spark: SparkSession, sf_dir: str) -> tuple[Catalog, SearchEngine]:
     if sf_dir not in _ENGINES:
-        wh = os.path.join("/tmp/lps_entry", sf_dir.strip("/").replace("/", "_"))
-        catalog = Catalog(wh)
-        builder = IndexBuilder(spark, catalog, docs_per_slice=200)
-        if not catalog.table("segments").exists():
-            builder.build(_docs_source(spark, sf_dir), fields_map_col="fields")
+        catalog, ready = _cached_warehouse("/tmp/lps_entry", sf_dir)
+        if not ready:
+            IndexBuilder(spark, catalog, docs_per_slice=200).build(
+                _docs_source(spark, sf_dir), fields_map_col="fields")
+            catalog.stamp_layout()
         _ENGINES[sf_dir] = (catalog, SearchEngine(spark, catalog).warm())
     return _ENGINES[sf_dir]
 
@@ -77,13 +91,13 @@ def _punct_engine(spark: SparkSession, sf_dir: str) -> tuple[Catalog, SearchEngi
     (apostrophes, numeric tokens) visible to the DuckDB oracle, which
     re-expresses the same tokenization rule in SQL."""
     if sf_dir not in _PUNCT_ENGINES:
-        wh = os.path.join("/tmp/lps_entry_punct", sf_dir.strip("/").replace("/", "_"))
-        catalog = Catalog(wh)
-        if not catalog.table("segments").exists():
+        catalog, ready = _cached_warehouse("/tmp/lps_entry_punct", sf_dir)
+        if not ready:
             src = _docs_source(spark, sf_dir).withColumn(
                 "content", F.concat(F.col("content"), F.lit(_PUNCT_SUFFIX)))
             IndexBuilder(spark, catalog, docs_per_slice=200).build(
                 src, fields_map_col="fields")
+            catalog.stamp_layout()
         _PUNCT_ENGINES[sf_dir] = (catalog, SearchEngine(spark, catalog).warm())
     return _PUNCT_ENGINES[sf_dir]
 
@@ -96,16 +110,9 @@ def _mut_engine(spark: SparkSession, sf_dir: str) -> tuple[Catalog, SearchEngine
     the delta term_dict/stats updates — BM25 df/N/avgdl must equal exact
     live-set values for the scores to hash-match the oracle."""
     if sf_dir not in _MUT_ENGINES:
-        import shutil
-
         from lucene_plugin_spark.index.mutations import IndexMutator
-        wh = os.path.join("/tmp/lps_entry_mut", sf_dir.strip("/").replace("/", "_"))
-        catalog = Catalog(wh)
-        done = (catalog.table("segments").exists()
-                and catalog.table("tombstones").exists())
-        if not done:
-            shutil.rmtree(wh, ignore_errors=True)
-            catalog = Catalog(wh)
+        catalog, ready = _cached_warehouse("/tmp/lps_entry_mut", sf_dir)
+        if not ready:
             builder = IndexBuilder(spark, catalog, docs_per_slice=200)
             builder.build(_docs_source(spark, sf_dir), fields_map_col="fields")
             catalog.tag("pre_mutation")  # time-travel anchor (ft_asof)
@@ -118,13 +125,7 @@ def _mut_engine(spark: SparkSession, sf_dir: str) -> tuple[Catalog, SearchEngine
             mut.delete_keys(_docs_source(spark, sf_dir)
                             .where(F.col("repo") == "src3")
                             .select("repo", "path"))
-        if catalog.tag_pins("pre_mutation") is None:
-            # warehouse predates tags: the build committed each table exactly
-            # once, so first-history pins reconstruct the pre-mutation state
-            # (tombstones excluded — it did not exist before the deletes)
-            catalog.tag("pre_mutation",
-                        {t: catalog.table(t).history()[0]
-                         for t in catalog.table_names() if t != "tombstones"})
+            catalog.stamp_layout()
         _MUT_ENGINES[sf_dir] = (catalog, SearchEngine(spark, catalog).warm())
     return _MUT_ENGINES[sf_dir]
 
@@ -139,15 +140,9 @@ def _compact_engine(spark: SparkSession, sf_dir: str) -> tuple[Catalog, SearchEn
     results MUST be identical to the uncompacted index — the oracle for
     the compacted entries is byte-for-byte the post-mutation oracle."""
     if sf_dir not in _COMPACT_ENGINES:
-        import shutil
-
         from lucene_plugin_spark.index.mutations import IndexMutator
-        wh = os.path.join("/tmp/lps_entry_cmp", sf_dir.strip("/").replace("/", "_"))
-        catalog = Catalog(wh)
-        done = catalog.table("segments").exists()
-        if not done:
-            shutil.rmtree(wh, ignore_errors=True)
-            catalog = Catalog(wh)
+        catalog, ready = _cached_warehouse("/tmp/lps_entry_cmp", sf_dir)
+        if not ready:
             builder = IndexBuilder(spark, catalog, docs_per_slice=200)
             builder.build(_docs_source(spark, sf_dir), fields_map_col="fields")
             mut = IndexMutator(spark, catalog, builder)
@@ -160,6 +155,7 @@ def _compact_engine(spark: SparkSession, sf_dir: str) -> tuple[Catalog, SearchEn
                             .where(F.col("repo") == "src3")
                             .select("repo", "path"))
             mut.compact()
+            catalog.stamp_layout()
         _COMPACT_ENGINES[sf_dir] = (catalog, SearchEngine(spark, catalog).warm())
     return _COMPACT_ENGINES[sf_dir]
 
@@ -178,10 +174,8 @@ def _stem_engine(spark: SparkSession, sf_dir: str) -> tuple[Catalog, SearchEngin
     accented/plural forms on every third doc — the variant is persisted on
     the segments snapshot and picked up by the query side automatically."""
     if sf_dir not in _STEM_ENGINES:
-        wh = os.path.join("/tmp/lps_entry_stem",
-                          sf_dir.strip("/").replace("/", "_"))
-        catalog = Catalog(wh)
-        if not catalog.table("segments").exists():
+        catalog, ready = _cached_warehouse("/tmp/lps_entry_stem", sf_dir)
+        if not ready:
             builder = IndexBuilder(spark, catalog, docs_per_slice=200,
                                    analyzer="fold_stem")
             src = (_docs_source(spark, sf_dir)
@@ -190,6 +184,7 @@ def _stem_engine(spark: SparkSession, sf_dir: str) -> tuple[Catalog, SearchEngin
                        F.concat(F.col("content"), F.lit(_STEM_SALT)))
                        .otherwise(F.col("content"))))
             builder.build(src)
+            catalog.stamp_layout()
         _STEM_ENGINES[sf_dir] = (catalog, SearchEngine(spark, catalog).warm())
     return _STEM_ENGINES[sf_dir]
 
@@ -203,12 +198,11 @@ def _isort_engine(spark: SparkSession, sf_dir: str) -> tuple[Catalog, SearchEngi
     lang-sorted search takes the early-terminated fast path
     (query/executor.py search_sorted)."""
     if sf_dir not in _ISORT_ENGINES:
-        wh = os.path.join("/tmp/lps_entry_isort",
-                          sf_dir.strip("/").replace("/", "_"))
-        catalog = Catalog(wh)
-        if not catalog.table("segments").exists():
+        catalog, ready = _cached_warehouse("/tmp/lps_entry_isort", sf_dir)
+        if not ready:
             IndexBuilder(spark, catalog, docs_per_slice=200,
                          index_sort=["lang"]).build(_docs_source(spark, sf_dir))
+            catalog.stamp_layout()
         _ISORT_ENGINES[sf_dir] = (catalog, SearchEngine(spark, catalog).warm())
     return _ISORT_ENGINES[sf_dir]
 
@@ -226,16 +220,11 @@ def _stream_engine(spark: SparkSession, sf_dir: str) -> tuple[Catalog, SearchEng
     micro-batch commits one snapshot; the search below runs on the final
     snapshot, oracle-checked against the post-stream corpus."""
     if sf_dir not in _STREAM_ENGINES:
-        import shutil
-
         from lucene_plugin_spark.streaming.incremental import \
             start_indexing_stream
-        wh = os.path.join("/tmp/lps_entry_stream",
-                          sf_dir.strip("/").replace("/", "_"))
-        catalog = Catalog(wh)
-        if not catalog.table("segments").exists():
-            shutil.rmtree(wh, ignore_errors=True)
-            catalog = Catalog(wh)
+        catalog, ready = _cached_warehouse("/tmp/lps_entry_stream", sf_dir)
+        if not ready:
+            wh = catalog.root
             in1 = os.path.join(wh, "_in")
             ckpt = os.path.join(wh, "_ckpt")
             schema = ("repo string, path string, commit string, lang string, "
@@ -258,6 +247,7 @@ def _stream_engine(spark: SparkSession, sf_dir: str) -> tuple[Catalog, SearchEng
                 spark.readStream.schema(schema).json(in1), ckpt,
                 trigger={"availableNow": True}, docs_per_slice=200)
             q2.awaitTermination(600)
+            catalog.stamp_layout()
         _STREAM_ENGINES[sf_dir] = (catalog, SearchEngine(spark, catalog).warm())
     return _STREAM_ENGINES[sf_dir]
 

@@ -18,10 +18,13 @@ analogue of commit+reopen at SearcherUpdateServiceImpl.java:117-127;
 ``commit()`` forces it.  The first commit into an empty warehouse is a full
 build.  Every later commit clears the collections cleared since the last
 one, then applies all pending upserts and deletes as ONE IndexMutator pass
-at a new snapshot; deletes reach every live key, whoever wrote it.  That
-commit is the wait a searcher sees after writing: for 16 writes and 4
-deletes over a 10k-doc index at local[4] on a 4-vCPU host it takes about
-7 s, and the search that runs it about 10 s (perfbench ``index_refresh``).
+at a new snapshot; deletes reach every live key, whoever wrote it.  The
+pending rows reach the mutator as a local table, so a small commit runs
+the pass as one Spark task (``index/task_pass.py``).  That commit is the
+wait a searcher sees after writing: for 16 writes and 4 deletes over a
+10k-doc index at local[4] on a 4-vCPU host it takes about 0.4 s (one Spark
+job), and the search that runs it, on the cold engine the commit opens,
+about 1.9 s (perfbench ``index_refresh``).
 
 Each hit is a ``LuceneEntry(id, score, external_id)`` —
 client/src/main/java/com/caucho/lucene/LuceneEntry.java:3-28.
@@ -46,7 +49,8 @@ from __future__ import annotations
 import concurrent.futures
 from dataclasses import dataclass
 
-from pyspark.sql import Row, SparkSession
+import pandas as pd
+from pyspark.sql import SparkSession
 
 from lucene_plugin_spark.index.builder import IndexBuilder
 from lucene_plugin_spark.query.executor import SearchEngine
@@ -162,32 +166,31 @@ class LuceneFacade:
         full rebuild never happens again."""
         if not self._dirty:
             return
-        schema = ("repo string, path string, commit string, lang string, "
-                  "content string, fields map<string,string>")
-
-        def df_of(rows):
-            rows = [Row(repo=v["repo"], path=v["path"], commit=v["commit"],
-                        lang=v["lang"], content=v["content"], fields=v["fields"])
-                    for v in rows]
-            return self.spark.createDataFrame(rows, schema=schema) if rows else \
-                self.spark.createDataFrame([], schema=schema)
-
         if not self.catalog.table("docs_meta").exists():
-            live = [v for v in self._pending.values() if v is not None]
-            self.builder.build(df_of(live), fields_map_col="fields")
+            # a list-backed frame: for the 10k-doc perfbench build its
+            # driver peak memory was no higher than a pandas-backed one's
+            cols = ("repo", "path", "commit", "lang", "content", "fields")
+            live = [tuple(v[c] for c in cols)
+                    for v in self._pending.values() if v is not None]
+            self.builder.build(self.spark.createDataFrame(
+                live, "repo string, path string, commit string, "
+                "lang string, content string, fields map<string,string>"),
+                fields_map_col="fields")
         else:
-            from lucene_plugin_spark.index.mutations import KEY_SCHEMA, IndexMutator
+            from lucene_plugin_spark.index.mutations import IndexMutator
             mut = IndexMutator(self.spark, self.catalog, self.builder)
             for collection in sorted(self._cleared):
                 mut.clear(collection)
             # every pending delete goes to the pass, which resolves it
-            # against the live index (a delete of a missing key is a no-op)
+            # against the live index (a delete of a missing key is a no-op);
+            # the batch stays local, so a small one takes the one-task pass
             deletes = [k for k, v in self._pending.items() if v is None]
             upserts = [v for v in self._pending.values() if v is not None]
-            dels = (self.spark.createDataFrame(deletes, KEY_SCHEMA)
+            dels = (pd.DataFrame(deletes, columns=["repo", "path"])
                     if deletes else None)
             if upserts:
-                mut.upsert(df_of(upserts), deletes=dels, fields_map_col="fields")
+                mut.upsert(pd.DataFrame(upserts), deletes=dels,
+                           fields_map_col="fields")
             elif dels is not None:
                 mut.delete_keys(dels)
         self._pending = {}

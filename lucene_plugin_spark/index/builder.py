@@ -47,16 +47,10 @@ from pyspark.sql.types import (ArrayType, BinaryType, DoubleType, IntegerType,
 from lucene_plugin_spark.analysis.tokenizer import tokenize_series
 from lucene_plugin_spark.index import codec
 from lucene_plugin_spark.query import bm25
+from lucene_plugin_spark.session import local_frame
 from lucene_plugin_spark.storage.catalog import Catalog
 
 BLOCK_SIZE = 128  # postings per compressed block (Lucene uses 128 in its FOR blocks)
-
-TOKENS_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("field", StringType()),
-    StructField("term", StringType()),
-    StructField("pos", IntegerType()),
-])
 
 SEGMENT_SCHEMA = StructType([
     StructField("field", StringType()),
@@ -250,8 +244,8 @@ class IndexBuilder:
         for r in counts:
             offsets[int(r["_pid"]) + 1] = r["count"]
         offsets = np.cumsum(offsets)
-        offs_df = self.spark.createDataFrame(
-            [(int(p), int(offsets[p])) for p in range(n_parts)],
+        offs_df = local_frame(
+            self.spark, [(int(p), int(offsets[p])) for p in range(n_parts)],
             "_pid long, _off long")
         return (sorted_df
                 .withColumn("_pid", F.shiftrightunsigned("_mid", 33))
@@ -276,27 +270,6 @@ class IndexBuilder:
         mapped = (docs_meta.where(F.col("fields").isNotNull())
                   .select("doc_id", F.explode("fields").alias("field", "value")))
         return text.unionByName(mapped)
-
-    def tokens_df(self, docs_meta: DataFrame) -> DataFrame:
-        # explicit parallelism: file reads are whole-file tasks (session.py),
-        # so spread the tokenize work across the cluster ourselves
-        par = max(self.spark.sparkContext.defaultParallelism, 4)
-        fv = self._field_values(docs_meta).repartition(par)
-
-        variant = self.analyzer
-
-        def tok(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                t = tokenize_series(pdf["value"], variant=variant)
-                rows = t["row"].to_numpy()
-                yield pd.DataFrame({
-                    "doc_id": pdf["doc_id"].to_numpy()[rows],
-                    "field": pdf["field"].to_numpy()[rows],
-                    "term": t["term"],
-                    "pos": t["pos"].astype(np.int32),
-                })
-
-        return fv.mapInPandas(tok, schema=TOKENS_SCHEMA)
 
     def doc_postings_df(self, docs_meta: DataFrame) -> DataFrame:
         """Per-doc postings (field, term, doc_id, tf, dl, positions) computed

@@ -41,6 +41,25 @@ most once:
 Steps 2-5 write different tables and read only snapshots pinned before
 they start, so they run side by side (``_run_concurrently``).
 
+The pass runs in one of two places, picked by one function
+(``_task_plan``, the write-side twin of ``SearchEngine._route``):
+
+- **one task** — a batch that arrives as a local pandas / Arrow table (the
+  facade's pending rows) and whose whole-read bytes (the touched (repo, kb)
+  docs partitions, docs_meta and term_dict, sized from file lengths) fit
+  under ``task_pass_max_bytes``.  The batch becomes one pandas-backed frame
+  whose ``kb`` and ``content_sha256`` are the Spark expressions below, and
+  ONE ``mapInArrow`` task (``index/task_pass.py``) runs steps 1-5 with
+  pyarrow and the build's fused segment kernel, writing every table image
+  as zstd parquet in the table's recorded schema; the driver then commits
+  one snapshot per table (``Table.commit_dirs``).  A facade commit is one
+  Spark job.  The task runs in an executor's Python worker, not the
+  driver, so the driver's memory does not grow with the pass.
+- **Spark** — DataFrame batches (the streaming sink, bulk upserts) and
+  local batches over the ceiling: the steps above as Spark jobs.
+
+Both passes write the same rows (``test_commit_routes_identical``).
+
 ``clear`` tombstones a whole collection, drops its docs partitions as a
 metadata-only commit and takes the same re-analysed dead delta.
 ``compact()`` = the tiered merge stage (W7, the analogue of Lucene's
@@ -51,18 +70,33 @@ swap); clean slices' files are untouched, their manifests carried forward.
 
 from __future__ import annotations
 
+import json
+import os
+import re
 from concurrent.futures import ThreadPoolExecutor
-from functools import reduce
+from functools import partial, reduce
 
+import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
 
+from lucene_plugin_spark.index import task_pass
 from lucene_plugin_spark.index.builder import IndexBuilder, flat_postings_view
-from lucene_plugin_spark.storage.catalog import Catalog
+from lucene_plugin_spark.session import local_frame
+from lucene_plugin_spark.storage.catalog import Catalog, data_files, root_name
 
 KEY_SCHEMA = "repo string, path string"
 META_COLS = ("repo", "path", "commit", "lang", "doc_id", "dslice", "gen")
+DOC_COLS = ("repo", "path", "commit", "lang", "content")
+#: a local batch: upsert rows (up) and delete keys (not up) in one frame
+BATCH_SCHEMA = ("repo string, path string, commit string, lang string, "
+                "content string, fields map<string,string>, up boolean")
+#: the tables the one-task pass reads and rewrites, besides tombstones
+TASK_TABLES = ("docs", "docs_meta", "segments", "doc_norms", "term_dict", "stats")
+#: partition values that hive-encode to themselves (Spark escapes the rest)
+_HIVE_PLAIN = re.compile(r'[^\x00-\x1f\x7f"#%\'*/:=?\\{}\[\]^]+')
 
 
 def _run_concurrently(spark: SparkSession, writes: list) -> None:
@@ -139,31 +173,157 @@ class IndexMutator:
         return rows, rows[0]["max_doc"], rows[0]["max_gen"]
 
     # ------------------------------------------------------------ mutations
-    def upsert(self, updates: DataFrame, deletes: DataFrame | None = None,
+    #: the one-task pass runs when the bytes it reads whole — the touched
+    #: (repo, kb) docs partitions, docs_meta and term_dict — fit under this
+    task_pass_max_bytes = 32 << 20
+
+    def upsert(self, updates, deletes=None,
                fields_map_col: str | None = None) -> int:
         """Last-write-wins upsert of (repo, path, commit, lang, content
         [, fields]) rows and delete of the (repo, path) ``deletes`` keys, as
         one commit.  Deletes apply to the pre-batch state, so a key both
-        deleted and upserted ends upserted.  Returns the number of upserted
-        docs."""
-        cols = [F.col(c) for c in ("repo", "path", "commit", "lang", "content")]
+        deleted and upserted ends upserted.  Either may be a DataFrame or a
+        local pandas / Arrow table.  Returns the number of upserted docs."""
+        return self._apply(updates, deletes, fields_map_col)[0]
+
+    def delete_keys(self, keys) -> int:
+        """Delete by (repo, path) keys (a DataFrame or a local pandas /
+        Arrow table).  Returns count tombstoned."""
+        return self._apply(None, keys)[1]
+
+    def delete(self, repo: str, path: str) -> bool:
+        return self.delete_keys(pd.DataFrame({"repo": [repo], "path": [path]})) > 0
+
+    def _docs_rows(self, updates: DataFrame, fields_map_col: str | None) -> DataFrame:
+        """Upsert rows in docs-table shape, with the key bucket and the
+        content hash."""
+        cols = [F.col(c) for c in DOC_COLS]
         if fields_map_col:
             cols.append(F.col(fields_map_col).alias("fields"))
         else:
             cols.append(F.lit(None).cast("map<string,string>").alias("fields"))
-        updates = (updates.select(*cols)
-                   .withColumn("content_sha256", F.sha2(F.col("content"), 256))
-                   .withColumn("kb", self.builder.key_bucket(F.col("repo"),
-                                                             F.col("path"))))
-        return self._commit(updates, deletes)[0]
+        return self._hashed(updates.select(*cols))
 
-    def delete_keys(self, keys: DataFrame) -> int:
-        """Delete by (repo, path) keys.  Returns count tombstoned."""
-        return self._commit(None, keys)[1]
+    def _hashed(self, rows: DataFrame) -> DataFrame:
+        return (rows.withColumn("content_sha256", F.sha2(F.col("content"), 256))
+                .withColumn("kb", self.builder.key_bucket(F.col("repo"),
+                                                          F.col("path"))))
 
-    def delete(self, repo: str, path: str) -> bool:
-        keys = self.spark.createDataFrame([(repo, path)], KEY_SCHEMA)
-        return self.delete_keys(keys) > 0
+    def _apply(self, updates, deletes, fields_map_col: str | None = None
+               ) -> tuple[int, int]:
+        """Run one commit on the pass :meth:`_task_plan` picks for a local
+        batch; a batch with a DataFrame side takes the Spark pass.  Returns
+        (upserted, tombstoned)."""
+        if not any(isinstance(x, DataFrame) for x in (updates, deletes)):
+            batch = self._local_batch(updates, deletes, fields_map_col)
+            plan = self._task_plan(batch)
+            if plan is not None:
+                return self._task_pass(batch, plan)
+        if isinstance(updates, DataFrame):
+            updates = self._docs_rows(updates, fields_map_col)
+        elif updates is not None:
+            updates = self._local_batch(updates, None, fields_map_col).drop("up")
+        if deletes is not None and not isinstance(deletes, DataFrame):
+            deletes = self._local_batch(None, deletes, None).select("repo", "path")
+        return self._commit(updates, deletes)
+
+    def _local_batch(self, updates, deletes, fields_map_col) -> DataFrame:
+        """A local batch as ONE pandas-backed frame (a ``LocalTableScan``)
+        of :data:`BATCH_SCHEMA` rows plus ``content_sha256`` and ``kb``,
+        which Spark computes on the driver when the frame is planned."""
+        parts = []
+        for rows, up in ((updates, True), (deletes, False)):
+            if rows is None:
+                continue
+            if isinstance(rows, pa.Table):
+                rows = rows.to_pandas(maps_as_pydicts="strict")
+            n = len(rows)
+            part = pd.DataFrame({c: list(rows[c]) if c in rows.columns
+                                 else [None] * n for c in DOC_COLS})
+            part["fields"] = (list(rows[fields_map_col]) if up and fields_map_col
+                              else [None] * n)
+            part["up"] = up
+            parts.append(part)
+        return self._hashed(self.spark.createDataFrame(
+            pd.concat(parts, ignore_index=True), BATCH_SCHEMA))
+
+    def _task_plan(self, batch: DataFrame) -> dict | None:
+        """Where a local batch's pass runs, the write-side twin of
+        ``SearchEngine._route``: the plan of the one-task pass
+        (:mod:`task_pass`), or None for the Spark pass.  The one-task pass
+        needs every table it rewrites to exist with a recorded schema, the
+        batch's collections to be plain hive partition values, and the bytes
+        it reads whole under :attr:`task_pass_max_bytes`.  The batch's
+        (repo, kb) pairs come from the local frame without a Spark job."""
+        snaps = {}
+        for name in TASK_TABLES:
+            t = self.catalog.table(name)
+            snaps[name] = t.snapshot() if t.exists() else None
+            if snaps[name] is None or snaps[name].schema_json is None:
+                return None
+        pairs = {(r["repo"], r["kb"]) for r in batch.select("repo", "kb").collect()}
+        if not all(_HIVE_PLAIN.fullmatch(repo) for repo, _ in pairs):
+            return None
+        leaves = self.catalog.table("docs").partition_dirs(["repo", "kb"], pairs)
+        read = (data_files([d for dirs in leaves.values() for d in dirs])
+                + data_files(snaps["docs_meta"].data_dirs)
+                + data_files(snaps["term_dict"].data_dirs))
+        if sum(os.path.getsize(f) for f in read) > self.task_pass_max_bytes:
+            return None
+        tt = self.catalog.table("tombstones")
+        tomb = tt.snapshot() if tt.exists() else None
+        plan = {name: {"dirs": snaps[name].data_dirs,
+                       "schema": snaps[name].schema_json,
+                       "root": self.catalog.table(name).new_data_dir()}
+                for name in TASK_TABLES}
+        plan["docs"]["leaves"] = [(repo, int(kb), dirs)
+                                  for (repo, kb), dirs in leaves.items()]
+        plan["tombstones"] = {
+            "dirs": tomb.data_dirs if tomb else [],
+            "schema": (tomb and tomb.schema_json) or task_pass.TOMBSTONES_SCHEMA,
+            "root": tt.new_data_dir()}
+        plan.update(docs_per_slice=self.builder.docs_per_slice,
+                    block_size=self.builder.block_size,
+                    analyzer=self.builder.analyzer,
+                    index_sort=self.builder.index_sort)
+        return plan
+
+    def _task_pass(self, batch: DataFrame, plan: dict) -> tuple[int, int]:
+        """The one-task pass: one ``mapInArrow`` task writes every table
+        image (:mod:`task_pass`), then the driver commits one snapshot per
+        table.  Returns (upserted, tombstoned)."""
+        rows = {r["tbl"]: r for r in batch.coalesce(1).mapInArrow(
+            task_pass.make_commit_kernel(plan), task_pass.RESULT_DDL).collect()}
+        if not rows:
+            return 0, 0
+        props = {"docs": self._docs_properties(),
+                 "docs_meta": {"stage": "docs_meta"},
+                 "segments": self.builder.segments_properties(stage="segments"),
+                 "term_dict": {"stage": "term_dict", "delta_update": True},
+                 "stats": {"stage": "stats", "delta_update": True}}
+        for name in ("tombstones", "docs", "docs_meta", "doc_norms",
+                     "segments", "term_dict", "stats"):
+            r = rows.get(name)
+            if r is None:
+                continue
+            t = self.catalog.table(name)
+            kw = {"schemas": {root_name(r["root"]): r["schema"]},
+                  "properties": props.get(name, {})}
+            if name == "docs":
+                pairs = json.loads(r["replaced"])
+                t.commit_dirs([r["root"]], lineage={"replaced_buckets": pairs},
+                              partition_by=["repo", "kb"],
+                              replaced_values=pairs, **kw)
+            else:
+                t.commit_dirs([r["root"]],
+                              append=name not in ("term_dict", "stats"), **kw)
+        if "doc_norms" in rows:
+            norms_snap = self.catalog.table("doc_norms").snapshot()
+            self.catalog.table("field_lens").commit_dirs(
+                norms_snap.data_dirs, schemas=norms_snap.schemas,
+                properties={"stage": "field_lens"})
+        n = {name: r["n_rows"] for name, r in rows.items()}
+        return n.get("docs_meta", 0), n.get("tombstones", 0)
 
     def _commit(self, updates: DataFrame | None,
                 deletes: DataFrame | None) -> tuple[int, int]:
@@ -179,7 +339,7 @@ class IndexMutator:
         victims = {r["doc_id"]: r for r in rows if r["doc_id"] is not None}
         if not ups and not victims:
             return 0, 0
-        kv = self.spark.createDataFrame  # driver rows -> tiny local frames
+        kv = partial(local_frame, self.spark)  # driver rows -> tiny local frames
         writes = []
         if victims:
             tomb = kv([(int(d),) for d in victims], "doc_id long")

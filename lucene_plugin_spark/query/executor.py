@@ -49,6 +49,7 @@ from lucene_plugin_spark.query.plan import (Bool, DisMax, Fuzzy, MatchAll,
                                             Node, Phrase, SynSet, Term,
                                             Wildcard, is_nested,
                                             iter_all_leaves, simplify)
+from lucene_plugin_spark.session import local_frame
 from lucene_plugin_spark.storage.catalog import Catalog, SnapshotError
 
 #: the distributed route's kernel output: item index, docID, stored path,
@@ -294,17 +295,10 @@ class SearchEngine:
         if self._td_local is not None:
             return self._td_local
         try:
-            import glob as _glob
-
             import pyarrow.dataset as pads
 
-            from lucene_plugin_spark.storage.catalog import entry_path
-            snap = self._tbl_snapshot("term_dict")
-            files: list[str] = []
-            for e in snap.data_dirs:
-                files.extend(_glob.glob(
-                    os.path.join(entry_path(e), "**", "*.parquet"),
-                    recursive=True))
+            from lucene_plugin_spark.storage.catalog import data_files
+            files = data_files(self._tbl_snapshot("term_dict").data_dirs)
             if not files:
                 self._td_local = False
                 return None
@@ -360,9 +354,7 @@ class SearchEngine:
     # ------------------------------------------------------------ metadata
     def _field_stats(self) -> dict[str, tuple[float, float]]:
         if self._stats is None:
-            rows = self._tbl("stats").collect()
-            self._stats = {r["field"]: (float(r["n_docs"]), float(r["avgdl"]))
-                           for r in rows}
+            self._read_stats()
         return self._stats
 
     def _field_sum_dl(self, field: str) -> float:
@@ -370,25 +362,58 @@ class SearchEngine:
         integer by the builder and delta-updated by mutations), the
         ``numberOfFieldTokens`` Lucene's LM similarities normalize by."""
         if self._sum_dl is None:
-            rows = self._tbl("stats").collect()
-            self._sum_dl = {r["field"]: float(r["sum_dl"]) for r in rows}
+            self._read_stats()
         return self._sum_dl.get(field, 0.0)
 
+    def _read_stats(self) -> None:
+        """Fill ``_stats`` and ``_sum_dl`` from ONE pyarrow read of the
+        pinned stats snapshot's files: no Spark job."""
+        import pyarrow.dataset as pads
+
+        from lucene_plugin_spark.storage.catalog import data_files
+        files = data_files(self._tbl_snapshot("stats").data_dirs)
+        rows = (pads.dataset(files, format="parquet").to_table(
+            columns=["field", "n_docs", "sum_dl", "avgdl"]).to_pylist()
+            if files else [])
+        self._stats = {r["field"]: (float(r["n_docs"]), float(r["avgdl"]))
+                       for r in rows}
+        self._sum_dl = {r["field"]: float(r["sum_dl"]) for r in rows}
+
     def repo_doc_ranges(self, repo: str) -> list[tuple[int, int]]:
+        """A collection's contiguous docID runs, read once per engine from
+        the pinned docs_meta snapshot's files with pyarrow, one record
+        batch at a time (no Spark job; memory is one batch plus the runs).
+        The first search on the engine each facade commit opens pays
+        this."""
         if self._repo_ranges is None:
-            meta = self._tbl("docs_meta")
+            import pyarrow as pa
+            import pyarrow.dataset as pads
+
+            from lucene_plugin_spark.storage.catalog import data_files
+            self._repo_ranges = {}
+            files = data_files(self._tbl_snapshot("docs_meta").data_dirs)
+            if not files:
+                return []
+            dset = pads.dataset(files, format="parquet")
             # docIDs are contiguous per (repo, build generation) — without a
             # gen column there has been exactly one generation — and, on an
             # index_sort index (ids in (sort..., repo, path) order), per
             # (repo, gen, sort key)
-            keys = ["repo", "gen"] if "gen" in meta.columns else ["repo"]
+            keys = ["repo", "gen"] if "gen" in dset.schema.names else ["repo"]
             keys += self.index_sort or []
-            rows = (meta.groupBy(*keys)
-                    .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
-                    .collect())
-            self._repo_ranges = {}
-            for r in rows:
-                self._repo_ranges.setdefault(r["repo"], []).append((r["lo"], r["hi"]))
+            parts = [pa.Table.from_batches([b]).group_by(keys).aggregate(
+                [("doc_id", "min"), ("doc_id", "max")])
+                for b in dset.to_batches(columns=keys + ["doc_id"])
+                if b.num_rows]
+            if parts:
+                runs = pa.concat_tables(parts).group_by(keys).aggregate(
+                    [("doc_id_min", "min"), ("doc_id_max", "max")])
+                for r, lo, hi in zip(runs["repo"].to_pylist(),
+                                     runs["doc_id_min_min"].to_pylist(),
+                                     runs["doc_id_max_max"].to_pylist()):
+                    self._repo_ranges.setdefault(r, []).append((lo, hi))
+                for ranges in self._repo_ranges.values():
+                    ranges.sort()
         return self._repo_ranges.get(repo, [])
 
     @classmethod
@@ -1795,8 +1820,7 @@ class SearchEngine:
             # slice no query term touches is scored too; the hash exchange
             # on dslice puts a slice's marker and its block rows in ONE task
             slices = self._doc_slices(union["doc_ranges"])
-            rows = self.spark.createDataFrame([(d,) for d in slices],
-                                              "dslice int")
+            rows = local_frame(self.spark, [(d,) for d in slices], "dslice int")
             if union["pairs"]:
                 rows = self._filtered_segments(union).unionByName(
                     rows, allowMissingColumns=True)

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "lucene_plugin_spark", cores: int | None = None,
@@ -56,3 +56,15 @@ def get_spark(app_name: str = "lucene_plugin_spark", cores: int | None = None,
         .config("spark.driver.host", "127.0.0.1")
     )
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """Driver rows (tuples in ``schema``'s column order) as a pandas-backed
+    frame, which Spark plans as a ``LocalTableScan``.  A frame made from a
+    list plans an RDD scan whose rows a Python worker re-serializes: a
+    trivial 2-row ``mapInPandas`` took 0.67–0.77 s from a list and
+    0.32–0.40 s from pandas (4 vCPU, local[4])."""
+    import pandas as pd
+    from pyspark.sql.types import StructType
+    st = StructType.fromDDL(schema)
+    return spark.createDataFrame(pd.DataFrame(list(rows), columns=st.names), st)

@@ -38,6 +38,12 @@ warehouse keeps them.  Reads pass each root's schema to
 the larger part of a cold search's fixed cost.  Roots without one
 (manifests written before schemas were recorded) are still inferred.
 
+Data files are zstd-compressed parquet, from Spark (``_write_data``) and
+from the one-task mutation pass (pyarrow, ``index/task_pass.py``) alike.
+A warehouse records the :data:`LAYOUT_VERSION` its writer used
+(:meth:`Catalog.stamp_layout`), so a cache of built warehouses can tell a
+layout older than the code from a current one.
+
 Partition-level commits (the Iceberg ``overwritePartitions`` analogue):
 ``replace_partitions`` / ``drop_partitions`` commit a snapshot whose data-dir
 list keeps the untouched hive partition directories of the parent and swaps
@@ -61,6 +67,11 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+#: version of the on-disk layout: data-file codec and manifest shape.
+#: 2: zstd data files (1: Spark's default snappy).
+LAYOUT_VERSION = 2
 
 
 class SnapshotError(RuntimeError):
@@ -101,6 +112,14 @@ def _root_schemas(manifest: dict) -> dict[str, str]:
             for n in e["roots"]}
 
 
+def data_files(entries: list) -> list[str]:
+    """The parquet files under snapshot data-dir entries, found by a local
+    walk (no Spark job): what the pyarrow readers of a snapshot open."""
+    import glob
+    return [f for e in entries for f in sorted(glob.glob(
+        os.path.join(entry_path(e), "**", "*.parquet"), recursive=True))]
+
+
 def _has_data_file(path: str) -> bool:
     """Whether a parquet root or partition dir holds a data file, by
     Spark's listing rule (names starting with ``_`` or ``.`` are not data);
@@ -139,6 +158,9 @@ class Snapshot:
     timestamp_ms: int = 0
     #: root name (:func:`root_name`) -> JSON schema of that root's files
     schemas: dict[str, str] = field(default_factory=dict)
+    #: the schema of the last root a commit added (the parent's when it
+    #: added none): what a new image of the table is written in
+    schema_json: str | None = None
 
 
 class Table:
@@ -177,6 +199,7 @@ class Table:
             parent_id=m.get("parent_id"),
             timestamp_ms=m.get("timestamp_ms", 0),
             schemas=_root_schemas(m),
+            schema_json=m.get("schema_json"),
         )
 
     def exists(self) -> bool:
@@ -194,12 +217,17 @@ class Table:
         cur = self.current_snapshot_id()
         return 1 if cur is None else cur + 1
 
-    def _write_data(self, df: DataFrame, sid: int, partition_by: list[str] | None
+    def new_data_dir(self) -> str:
+        """A fresh parquet root for the next snapshot's files."""
+        return os.path.join(self._data,
+                            f"snap-{self._next_id()}-{uuid.uuid4().hex[:8]}")
+
+    def _write_data(self, df: DataFrame, partition_by: list[str] | None
                     ) -> tuple[str, dict[str, str]]:
-        """Write ``df`` as a new parquet root; returns the root and its
+        """Write ``df`` as a new zstd parquet root; returns the root and its
         ``schemas`` entry."""
-        d = os.path.join(self._data, f"snap-{sid}-{uuid.uuid4().hex[:8]}")
-        w = df.write.mode("overwrite")
+        d = self.new_data_dir()
+        w = df.write.mode("overwrite").option("compression", "zstd")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(d)
@@ -242,30 +270,51 @@ class Table:
         os.replace(cur_tmp, os.path.join(self._meta, "CURRENT"))  # atomic pointer swap
         return self.snapshot(sid)
 
+    def _parent_entries(self, append: bool = False,
+                        partition_by: list[str] | None = None,
+                        replaced_values=()) -> list:
+        """What a new snapshot keeps of the current one's data-dir entries:
+        none (an overwrite), all (``append``), or every partition of
+        ``partition_by`` but ``replaced_values`` (a partition replace)."""
+        if self.current_snapshot_id() is None:
+            return []
+        if partition_by:
+            return self._kept_entries(
+                partition_by, {tuple(str(v) for v in vals)
+                               for vals in replaced_values})
+        return list(self.snapshot().data_dirs) if append else []
+
     def append(self, df: DataFrame, partition_by: list[str] | None = None,
                lineage: dict | None = None, properties: dict | None = None) -> Snapshot:
-        sid = self._next_id()
-        d, schemas = self._write_data(df, sid, partition_by)
-        parent_dirs = [] if self.current_snapshot_id() is None else self.snapshot().data_dirs
-        return self._commit(sid, parent_dirs + [d], lineage or {},
-                            properties or {}, schemas)
+        d, schemas = self._write_data(df, partition_by)
+        return self._commit(self._next_id(),
+                            self._parent_entries(append=True) + [d],
+                            lineage or {}, properties or {}, schemas)
 
     def overwrite(self, df: DataFrame, partition_by: list[str] | None = None,
                   lineage: dict | None = None, properties: dict | None = None) -> Snapshot:
-        sid = self._next_id()
-        d, schemas = self._write_data(df, sid, partition_by)
-        return self._commit(sid, [d], lineage or {}, properties or {}, schemas)
+        d, schemas = self._write_data(df, partition_by)
+        return self._commit(self._next_id(), [d], lineage or {},
+                            properties or {}, schemas)
 
     def commit_dirs(self, data_dirs: list, lineage: dict | None = None,
                     properties: dict | None = None,
-                    schemas: dict[str, str] | None = None) -> Snapshot:
-        """Commit pre-written data dirs (used by multi-stage builds where each
-        stage writes its own files; the commit only swaps the pointer).
+                    schemas: dict[str, str] | None = None,
+                    append: bool = False,
+                    partition_by: list[str] | None = None,
+                    replaced_values=()) -> Snapshot:
+        """Commit data dirs written elsewhere: another table's (a multi-stage
+        build's stage files, field_lens over doc_norms' files) or roots that
+        the one-task mutation pass wrote with pyarrow.  The snapshot keeps
+        none of its parent's entries (an overwrite), all of them
+        (``append``) or, given ``partition_by``, all but the
+        ``replaced_values`` partitions (as :meth:`replace_partitions`).
         ``schemas``: the schemas of those files' roots — for another table's
         data dirs, that table's :attr:`Snapshot.schemas`; roots without one
         are read with schema inference."""
-        return self._commit(self._next_id(), data_dirs, lineage or {},
-                            properties or {}, schemas)
+        kept = self._parent_entries(append, partition_by, replaced_values)
+        return self._commit(self._next_id(), kept + list(data_dirs),
+                            lineage or {}, properties or {}, schemas)
 
     # ---- partition-level commits (Iceberg overwritePartitions analogue) ----
     def _partition_leaves(self, entry, partition_by: list[str]):
@@ -287,6 +336,19 @@ class Table:
                                     vals + (name.split("=", 1)[1],)))
             roots = nxt
         yield from roots
+
+    def partition_dirs(self, partition_by: list[str], values
+                       ) -> dict[tuple[str, ...], list[str]]:
+        """The current snapshot's leaf dirs of the named partitions, as
+        partition-value tuple -> dirs (values absent from the snapshot are
+        absent here)."""
+        want = {tuple(str(v) for v in vals) for vals in values}
+        out: dict[tuple[str, ...], list[str]] = {}
+        for e in self.snapshot().data_dirs:
+            for d, vals in self._partition_leaves(e, partition_by):
+                if vals in want:
+                    out.setdefault(vals, []).append(d)
+        return out
 
     def partition_values(self, partition_by: list[str],
                          snapshot_id: int | None = None
@@ -317,13 +379,11 @@ class Table:
         partition dirs plus newly-written files for ``df`` (which must contain
         only rows of the replaced partitions).  O(touched partitions) bytes —
         the scale contract for mutations."""
-        replaced = {tuple(str(v) for v in vals) for vals in replaced_values}
-        sid = self._next_id()
-        d, schemas = self._write_data(df, sid, partition_by)
-        kept = self._kept_entries(partition_by, replaced) \
-            if self.current_snapshot_id() is not None else []
-        return self._commit(sid, kept + [d], lineage or {}, properties or {},
-                            schemas)
+        d, schemas = self._write_data(df, partition_by)
+        kept = self._parent_entries(partition_by=partition_by,
+                                    replaced_values=replaced_values)
+        return self._commit(self._next_id(), kept + [d], lineage or {},
+                            properties or {}, schemas)
 
     def drop_partitions(self, partition_by: list[str], dropped_values,
                         lineage: dict | None = None,
@@ -386,6 +446,21 @@ class Catalog:
 
     def table(self, name: str) -> Table:
         return Table(self.root, name)
+
+    def layout_version(self) -> int | None:
+        """The layout version this warehouse was stamped with, or None."""
+        try:
+            with open(os.path.join(self.root, "LAYOUT")) as f:
+                return int(f.read().strip())
+        except (OSError, ValueError):
+            return None
+
+    def stamp_layout(self) -> None:
+        """Record :data:`LAYOUT_VERSION` as this warehouse's layout."""
+        path = os.path.join(self.root, "LAYOUT")
+        with open(path + ".tmp", "w") as f:
+            f.write(str(LAYOUT_VERSION))
+        os.replace(path + ".tmp", path)
 
     def drop(self, name: str) -> None:
         import shutil

@@ -13,12 +13,14 @@ the same policy is the trigger interval + per-trigger batch bound:
   delivery), and readers see it on their next snapshot acquire (the searcher
   reopen analogue, LuceneIndexBean.java:620-637).
 - ``trigger(processingTime='1 second')`` asks for softCommitMaxAge = 1 s
-  but cannot deliver it: a micro-batch's commit is one mutation pass, which
-  takes about 7 s for a 20-key batch over a 10k-doc index at local[4] on a
-  4-vCPU host (perfbench ``index_refresh``).  A trigger shorter than the
-  commit only makes the next batch start as soon as the previous one ends,
-  so new docs become visible about one commit after they arrive, not one
-  trigger interval.
+  but cannot deliver it: a micro-batch arrives as a DataFrame, so its
+  commit takes the Spark mutation pass, tens of small Spark jobs that
+  took about 7 s for a 20-key batch over a 10k-doc index at local[4] on a
+  4-vCPU host (perfbench ``index_refresh`` before the facade's commits
+  moved to the one-task pass, which a local batch takes; see
+  ``index/mutations.py``).  A trigger shorter than the commit only makes
+  the next batch start as soon as the previous one ends, so new docs become
+  visible about one commit after they arrive, not one trigger interval.
 
 No event-time semantics are needed (the reference has none): documents carry
 no timestamps and ordering is by arrival, so watermarks/windows don't apply —

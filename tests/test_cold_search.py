@@ -165,3 +165,26 @@ def test_tag_pinned_read_uses_its_own_schema(spark, every_commit):
     rows = generate_rows(120, seed=43)
     want = OracleEngine.from_rows(rows).search(None, "index", limit=50)
     assert got == [(p, round(s, 9)) for _, p, s in want]
+
+
+def test_stale_entry_cache_is_rebuilt(tmp_path):
+    """A cached gate warehouse stamped with another layout version (or not
+    stamped: an unfinished build) is emptied and reported not ready; one
+    stamped with the current version is reused as it is."""
+    import __spark_entry__ as E
+    from lucene_plugin_spark.storage.catalog import LAYOUT_VERSION
+
+    prefix, sf = str(tmp_path), "/data/sf0.01"
+    catalog, ready = E._cached_warehouse(prefix, sf)
+    assert not ready
+    marker = os.path.join(catalog.root, "built")
+    open(marker, "w").close()
+    with open(os.path.join(catalog.root, "LAYOUT"), "w") as f:
+        f.write(str(LAYOUT_VERSION - 1))
+    catalog, ready = E._cached_warehouse(prefix, sf)
+    assert not ready and not os.path.exists(marker)
+    open(marker, "w").close()
+    catalog.stamp_layout()
+    assert catalog.layout_version() == LAYOUT_VERSION
+    catalog, ready = E._cached_warehouse(prefix, sf)
+    assert ready and os.path.exists(marker)

@@ -327,3 +327,127 @@ def test_facade_adopts_persisted_docs_per_slice(spark, tmp_path):
         partition_by=["dslice"])
     assert any("tombstone doc_id 5" in e
                for e in check_index(spark, fac.catalog)["errors"])
+
+
+# ----------------------------------------- one-task pass vs the Spark pass
+def _table_rows(spark, cat, name):
+    """A table's rows as sorted, comparable tuples (maps as sorted items)."""
+    def norm(v):
+        return tuple(sorted(v.items())) if isinstance(v, dict) else v
+    t = cat.table(name).read(spark)
+    return sorted((tuple(norm(r[c]) for c in sorted(t.columns))
+                   for r in t.collect()), key=repr)
+
+
+def test_commit_routes_identical(spark, tmp_path, monkeypatch):
+    """The same two batches committed through the one-task pass and through
+    the Spark pass (the ceiling picks the pass) leave every table with
+    identical sorted rows, a CheckIndex-clean index, and searches equal to
+    the oracle on cold and warmed engines."""
+    import pandas as pd
+
+    from lucene_plugin_spark.storage.checker import check_index
+    rows = _facade_rows(300, seed=23)
+    rows[7] = dict(rows[7], path="src/naïve_東京.py", content="café naïve straße index")
+    rows[8] = dict(rows[8], content="", fields={"title": "user cache",
+                                                  "body": "parse token token"})
+    eff = {(r["repo"], r["path"]): r for r in rows}
+
+    def doc(repo, path, content, fields=None):
+        return {"repo": repo, "path": path, "commit": "0" * 8, "lang": "text",
+                "content": content, "fields": fields}
+
+    batches = [
+        ([doc("repo01", "new/a.py", "fresh index cache marker words"),
+          doc("repo02", "new/ü東.py", "marker naïve café token"),
+          doc("repo03", "new/stop.py", "the and of a"),
+          doc("repo01", "m1", "", {"title": "user marker", "body": "merge index"}),
+          doc(rows[7]["repo"], rows[7]["path"], "marker replaces the café"),
+          doc(rows[10]["repo"], rows[10]["path"], rows[10]["content"] + " marker"),
+          doc(rows[11]["repo"], rows[11]["path"], "rewritten after delete marker")],
+         [(rows[11]["repo"], rows[11]["path"]), (rows[40]["repo"], rows[40]["path"]),
+          (rows[8]["repo"], rows[8]["path"]), ("repo06", "never/written.py")]),
+        ([doc("repo01", "new/a.py", "rewritten index content marker"),
+          doc(rows[50]["repo"], rows[50]["path"], "user name marker")],
+         [("repo02", "new/ü東.py"), (rows[60]["repo"], rows[60]["path"])]),
+    ]
+    calls = []
+    real = IndexMutator._task_pass
+    monkeypatch.setattr(IndexMutator, "_task_pass",
+                        lambda self, *a: calls.append(1) or real(self, *a))
+    cats = {}
+    for route, ceiling in (("task", 1 << 30), ("spark", 0)):
+        monkeypatch.setattr(IndexMutator, "task_pass_max_bytes", ceiling)
+        cat = Catalog(str(tmp_path / route))
+        builder = IndexBuilder(spark, cat, docs_per_slice=64)
+        builder.build(spark.createDataFrame(
+            rows, "repo string, path string, commit string, lang string, "
+            "content string, fields map<string,string>"), fields_map_col="fields")
+        mut = IndexMutator(spark, cat, builder)
+        for ups, dels in batches:
+            mut.upsert(pd.DataFrame(ups), deletes=pd.DataFrame(
+                dels, columns=["repo", "path"]), fields_map_col="fields")
+        cats[route] = cat
+    assert len(calls) == len(batches)  # the task route ran every batch
+    for ups, dels in batches:
+        for k in dels:
+            eff.pop(k, None)
+        eff.update({(u["repo"], u["path"]): u for u in ups})
+
+    task, sparkp = cats["task"], cats["spark"]
+    assert task.table_names() == sparkp.table_names()
+    for name in task.table_names():
+        assert _table_rows(spark, task, name) == _table_rows(spark, sparkp, name), name
+    o = OracleEngine.from_rows(eff.values())
+    for cat in (task, sparkp):
+        assert check_index(spark, cat)["errors"] == []
+        for warm in (False, True):
+            eng = SearchEngine(spark, cat)
+            if warm:
+                eng.warm()
+            for repo in ("repo01", "repo02", rows[7]["repo"], rows[50]["repo"]):
+                for q in ("index", "marker", "café", "title:user", "body:merge",
+                          '"user name"', "parse AND token"):
+                    got = {r["path"]: r["score"] for r in
+                           eng.search(repo, q, limit=500).collect()}
+                    want = {p: s for _, p, s in o.search(repo, q, limit=500)}
+                    assert set(got) == set(want), (repo, q, warm)
+                    for p in want:
+                        assert np.isclose(got[p], want[p], rtol=1e-9), (repo, q, p)
+            eng.unwarm()
+
+
+def test_facade_commit_is_one_spark_job(spark, tmp_path):
+    """A facade commit of 16 writes and 4 deletes runs the one-task pass:
+    exactly one Spark job.  The first search on the engine the commit opens
+    is one more (its scoring job)."""
+    import uuid
+
+    from lucene_plugin_spark.api import LuceneFacade
+    rows = _facade_rows(200, seed=29)
+    fac = LuceneFacade(spark, str(tmp_path))
+    for r in rows:
+        fac.index_text(r["repo"], r["path"], r["content"])
+    fac.commit()
+    for i in range(16):
+        fac.index_text(rows[i]["repo"], f"new/{i}.py", f"marker{i} index cache")
+    for r in rows[100:104]:
+        fac.delete(r["repo"], r["path"])
+    sc = spark.sparkContext
+
+    def jobs(fn):
+        group = f"commit-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(fac.commit)[1] == 1
+    hits, n = jobs(lambda: fac.search(rows[3]["repo"], "marker3"))
+    assert n == 1
+    assert [e.external_id for e in hits] == ["new/3.py"]
+    gone = rows[100]
+    q = " ".join(gone["content"].split()[:3])
+    assert gone["path"] not in {e.external_id for e in fac.search(gone["repo"], q)}
