@@ -44,17 +44,18 @@ they start, so they run side by side (``_run_concurrently``).
 The pass runs in one of two places, picked by one function
 (``_task_plan``, the write-side twin of ``SearchEngine._route``):
 
-- **one task** — a batch that arrives as a local pandas / Arrow table (the
+- **one task** — a batch that arrives as a local pandas frame (the
   facade's pending rows) and whose whole-read bytes (the touched (repo, kb)
-  docs partitions, docs_meta and term_dict, sized from file lengths) fit
-  under ``task_pass_max_bytes``.  The batch becomes one pandas-backed frame
-  whose ``kb`` and ``content_sha256`` are the Spark expressions below, and
-  ONE ``mapInArrow`` task (``index/task_pass.py``) runs steps 1-5 with
-  pyarrow and the build's fused segment kernel, writing every table image
-  as zstd parquet in the table's recorded schema; the driver then commits
-  one snapshot per table (``Table.commit_dirs``).  A facade commit is one
-  Spark job.  The task runs in an executor's Python worker, not the
-  driver, so the driver's memory does not grow with the pass.
+  docs partitions, docs_meta, term_dict, tombstones and stats, sized from
+  file lengths) fit under ``task_pass_max_bytes``.  The batch becomes one
+  pandas-backed frame whose ``kb`` and ``content_sha256`` are the Spark
+  expressions below, and ONE ``mapInArrow`` task (``index/task_pass.py``)
+  runs steps 1-5 with pyarrow and the build's fused segment kernel, writing
+  every table image as zstd parquet in the table's recorded schema; the
+  driver then commits one snapshot per table (``Table.commit_dirs``).  A
+  facade commit is one Spark job.  The task runs in an executor's Python
+  worker, not the driver, so the driver's memory does not grow with the
+  pass.
 - **Spark** — DataFrame batches (the streaming sink, bulk upserts) and
   local batches over the ceiling: the steps above as Spark jobs.
 
@@ -77,7 +78,6 @@ from concurrent.futures import ThreadPoolExecutor
 from functools import partial, reduce
 
 import pandas as pd
-import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
@@ -173,9 +173,16 @@ class IndexMutator:
         return rows, rows[0]["max_doc"], rows[0]["max_gen"]
 
     # ------------------------------------------------------------ mutations
-    #: the one-task pass runs when the bytes it reads whole — the touched
-    #: (repo, kb) docs partitions, docs_meta and term_dict — fit under this
-    task_pass_max_bytes = 32 << 20
+    #: the one-task pass runs when the file bytes it reads whole — the
+    #: touched (repo, kb) docs partitions and docs_meta, term_dict,
+    #: tombstones and stats — fit under this.  It decodes them whole: for a
+    #: 16-write / 4-delete commit its Python worker grew 14-19 bytes per byte
+    #: read (+373-448 MB at 24.9 MB, +425-523 MB at 31.2 MB, +558-564 MB at
+    #: 38.3 MB), so 24 MB keeps it within Spark's default 512 MB
+    #: ``spark.python.worker.memory``.  Up to 38.3 MB it still beat the
+    #: Spark pass in every pair (0.6-2.5 s against 3.6-6.9 s, ``local[4]``
+    #: on 4 vCPU).
+    task_pass_max_bytes = 24 << 20
 
     def upsert(self, updates, deletes=None,
                fields_map_col: str | None = None) -> int:
@@ -183,12 +190,12 @@ class IndexMutator:
         [, fields]) rows and delete of the (repo, path) ``deletes`` keys, as
         one commit.  Deletes apply to the pre-batch state, so a key both
         deleted and upserted ends upserted.  Either may be a DataFrame or a
-        local pandas / Arrow table.  Returns the number of upserted docs."""
+        local pandas frame.  Returns the number of upserted docs."""
         return self._apply(updates, deletes, fields_map_col)[0]
 
     def delete_keys(self, keys) -> int:
-        """Delete by (repo, path) keys (a DataFrame or a local pandas /
-        Arrow table).  Returns count tombstoned."""
+        """Delete by (repo, path) keys (a DataFrame or a local pandas
+        frame).  Returns count tombstoned."""
         return self._apply(None, keys)[1]
 
     def delete(self, repo: str, path: str) -> bool:
@@ -219,12 +226,12 @@ class IndexMutator:
             plan = self._task_plan(batch)
             if plan is not None:
                 return self._task_pass(batch, plan)
+            return self._commit(
+                None if updates is None else batch.where("up").drop("up"),
+                None if deletes is None
+                else batch.where("NOT up").select("repo", "path"))
         if isinstance(updates, DataFrame):
             updates = self._docs_rows(updates, fields_map_col)
-        elif updates is not None:
-            updates = self._local_batch(updates, None, fields_map_col).drop("up")
-        if deletes is not None and not isinstance(deletes, DataFrame):
-            deletes = self._local_batch(None, deletes, None).select("repo", "path")
         return self._commit(updates, deletes)
 
     def _local_batch(self, updates, deletes, fields_map_col) -> DataFrame:
@@ -235,8 +242,6 @@ class IndexMutator:
         for rows, up in ((updates, True), (deletes, False)):
             if rows is None:
                 continue
-            if isinstance(rows, pa.Table):
-                rows = rows.to_pandas(maps_as_pydicts="strict")
             n = len(rows)
             part = pd.DataFrame({c: list(rows[c]) if c in rows.columns
                                  else [None] * n for c in DOC_COLS})
@@ -253,8 +258,10 @@ class IndexMutator:
         (:mod:`task_pass`), or None for the Spark pass.  The one-task pass
         needs every table it rewrites to exist with a recorded schema, the
         batch's collections to be plain hive partition values, and the bytes
-        it reads whole under :attr:`task_pass_max_bytes`.  The batch's
-        (repo, kb) pairs come from the local frame without a Spark job."""
+        it reads whole (the touched docs partitions and every file of
+        docs_meta, term_dict, tombstones and stats) under
+        :attr:`task_pass_max_bytes`.  The batch's (repo, kb) pairs come
+        from the local frame without a Spark job."""
         snaps = {}
         for name in TASK_TABLES:
             t = self.catalog.table(name)
@@ -265,13 +272,14 @@ class IndexMutator:
         if not all(_HIVE_PLAIN.fullmatch(repo) for repo, _ in pairs):
             return None
         leaves = self.catalog.table("docs").partition_dirs(["repo", "kb"], pairs)
-        read = (data_files([d for dirs in leaves.values() for d in dirs])
-                + data_files(snaps["docs_meta"].data_dirs)
-                + data_files(snaps["term_dict"].data_dirs))
-        if sum(os.path.getsize(f) for f in read) > self.task_pass_max_bytes:
-            return None
         tt = self.catalog.table("tombstones")
         tomb = tt.snapshot() if tt.exists() else None
+        read = data_files([d for dirs in leaves.values() for d in dirs]
+                          + (tomb.data_dirs if tomb else [])
+                          + [d for name in ("docs_meta", "term_dict", "stats")
+                             for d in snaps[name].data_dirs])
+        if sum(os.path.getsize(f) for f in read) > self.task_pass_max_bytes:
+            return None
         plan = {name: {"dirs": snaps[name].data_dirs,
                        "schema": snaps[name].schema_json,
                        "root": self.catalog.table(name).new_data_dir()}

@@ -417,6 +417,39 @@ def test_commit_routes_identical(spark, tmp_path, monkeypatch):
             eng.unwarm()
 
 
+def test_task_plan_flips_at_ceiling(spark, tmp_path):
+    """The one-task pass is picked exactly while the file bytes it reads
+    whole — the touched docs partitions and every file of docs_meta,
+    term_dict, tombstones and stats — fit under ``task_pass_max_bytes``."""
+    import os
+
+    import pandas as pd
+
+    from lucene_plugin_spark.storage.catalog import data_files
+    rows = _facade_rows(120, seed=37)
+    cat = Catalog(str(tmp_path))
+    builder = IndexBuilder(spark, cat, docs_per_slice=64)
+    builder.build(spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, "
+        "content string, fields map<string,string>"), fields_map_col="fields")
+    mut = IndexMutator(spark, cat, builder)
+    mut.delete(rows[0]["repo"], rows[0]["path"])  # tombstones exist
+    batch = mut._local_batch(pd.DataFrame([{
+        "repo": rows[5]["repo"], "path": "new/x.py", "commit": "0" * 8,
+        "lang": "text", "content": "index marker"}]), pd.DataFrame(
+        [(rows[9]["repo"], rows[9]["path"])], columns=["repo", "path"]), None)
+    pairs = {(r["repo"], r["kb"]) for r in batch.select("repo", "kb").collect()}
+    leaves = cat.table("docs").partition_dirs(["repo", "kb"], pairs)
+    entries = [d for dirs in leaves.values() for d in dirs]
+    for name in ("docs_meta", "term_dict", "tombstones", "stats"):
+        entries += cat.table(name).snapshot().data_dirs
+    size = sum(os.path.getsize(f) for f in data_files(entries))
+    mut.task_pass_max_bytes = size
+    assert mut._task_plan(batch) is not None
+    mut.task_pass_max_bytes = size - 1
+    assert mut._task_plan(batch) is None
+
+
 def test_facade_commit_is_one_spark_job(spark, tmp_path):
     """A facade commit of 16 writes and 4 deletes runs the one-task pass:
     exactly one Spark job.  The first search on the engine the commit opens
