@@ -106,8 +106,8 @@ def _mut_engine(spark: SparkSession, sf_dir: str) -> tuple[Catalog, SearchEngine
     """Index with REAL mutations applied through IndexMutator (W2/W3 end to
     end: build -> upsert (text||' updated marker' for doc_id%50==0) ->
     delete src3 -> search), oracle-checked against the post-state corpus.
-    Exercises tombstones, partition-scoped docs rewrite, segment append and
-    the delta term_dict/stats updates — BM25 df/N/avgdl must equal exact
+    Exercises tombstones, merge-on-read docs (appended rows and key
+    deletes), segment append and the delta term_dict/stats updates — BM25 df/N/avgdl must equal exact
     live-set values for the scores to hash-match the oracle."""
     if sf_dir not in _MUT_ENGINES:
         from lucene_plugin_spark.index.mutations import IndexMutator
@@ -2131,10 +2131,13 @@ def _rotate_for_gate(q: dict) -> dict:
         "ft_batch", "ft_common_terms", "ft_match_all", "ft_simple_qp",
         "ft_term_topk", "ft_term_k255", "ft_or_topk", "ft_and", "ft_phrase",
         "ft_collection",
-        # 2. the rest of the single-query route and the mutation searches
+        # 2. the rest of the single-query route, the mutation searches and
+        #    the merge-on-read docs reads (post-mutation docs, tags,
+        #    stored-field highlights)
         "ft_sort_field", "ft_paging", "ft_more_like", "ft_nested",
         "ft_index_sort", "ft_min_should", "ft_filter", "mut_upsert_search",
-        "mut_delete_search", "mut_compact_search", "ft_not", "ft_range",
+        "mut_delete_search", "mut_compact_search", "mut_docs_sha", "ft_asof",
+        "ft_highlight", "ft_not", "ft_range",
         "ft_wildcard", "ft_fuzzy", "ft_boost", "ft_phrase_slop",
         "ft_range_excl", "ft_regexp", "ft_field_lang", "ft_synonym",
         "ft_dismax", "ft_span_near", "ft_replica_search", "ft_stem",

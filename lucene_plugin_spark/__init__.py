@@ -25,4 +25,7 @@ environment); the commit/snapshot-pinning semantics map 1:1 to Iceberg.
 
 __version__ = "0.1.0"
 
+from lucene_plugin_spark import pyworker  # noqa: E402
 from lucene_plugin_spark.api import LuceneEntry, LuceneException, LuceneFacade  # noqa: E402,F401
+
+pyworker.install()  # every kernel's worker imports this package

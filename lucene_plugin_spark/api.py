@@ -20,11 +20,12 @@ build.  Every later commit clears the collections cleared since the last
 one, then applies all pending upserts and deletes as ONE IndexMutator pass
 at a new snapshot; deletes reach every live key, whoever wrote it.  The
 pending rows reach the mutator as a local table, so a small commit runs
-the pass as one Spark task (``index/task_pass.py``).  That commit is the
-wait a searcher sees after writing: for 16 writes and 4 deletes over a
-10k-doc index at local[4] on a 4-vCPU host it takes about 0.4 s (one Spark
-job), and the search that runs it, on the cold engine the commit opens,
-about 1.9 s (perfbench ``index_refresh``).
+the pass as one Spark task (``index/task_pass.py``), which appends the
+docs rows and key deletes (merge-on-read) instead of rewriting docs
+partitions.  That commit is the wait a searcher sees after writing: for 16
+writes and 4 deletes over a 10k-doc index at local[4] on a 4-vCPU host it
+takes about 0.2 s (one Spark job), and the search that runs it, on the
+cold engine the commit opens, about 0.7 s (perfbench ``index_refresh``).
 
 Each hit is a ``LuceneEntry(id, score, external_id)`` —
 client/src/main/java/com/caucho/lucene/LuceneEntry.java:3-28.

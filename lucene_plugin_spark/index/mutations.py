@@ -19,9 +19,15 @@ most once:
 2. tombstones: one append of the victims' docIDs, partitioned by dslice (the
    query kernel reads its slice's tombstones task-locally, like the norms
    sidecar, and the DataFrame path anti-joins — Lucene's liveDocs bitmap).
-3. docs: one ``Table.replace_partitions`` (Iceberg overwritePartitions) of
-   ONLY the touched (repo, kb) buckets — an upsert of k docs rewrites
-   O(k/doc_buckets · bucket size) bytes, never the table.
+3. docs: merge-on-read, as Lucene's ``updateDocument`` (a delete by key
+   plus an add; stored fields already written are never rewritten) and
+   Iceberg v2 equality deletes.  One snapshot appends the upserted rows as
+   a new root and a delete root listing every batch key it replaces or
+   deletes, both partitioned by (repo, kb) (``Table.row_delta``), so a
+   commit writes O(batch) docs bytes whatever the bucket size;
+   ``Table.read`` hides the replaced rows (``storage/catalog.py``).
+   ``compact()`` merges each partition that carries deletes back into one
+   file of its live rows.
 4. new docs get dense docIDs from the next slice boundary above max_doc, in
    (repo, path) order, so they only ever create FRESH doc-slices: docs_meta,
    doc_norms and segments take one pure append each and existing slice files
@@ -32,7 +38,7 @@ most once:
    opened with, and every new segments snapshot carries it forward.
 5. term_dict / stats: EXACT DELTAS, one overwrite each, never a full
    recompute.  The dead docs' stored ``docs`` rows — read from the
-   pre-rewrite snapshot, pruned to the touched buckets — are re-analysed in
+   pre-commit snapshot, pruned to the touched buckets — are re-analysed in
    the same tokenize pass as the new docs, signed −1 against the new docs'
    +1, so the delta is O(batch) work, not a decode of every posting in the
    victims' doc-slices.  BM25 df/N/avgdl always reflect the live doc set —
@@ -45,24 +51,27 @@ The pass runs in one of two places, picked by one function
 (``_task_plan``, the write-side twin of ``SearchEngine._route``):
 
 - **one task** — a batch that arrives as a local pandas frame (the
-  facade's pending rows) and whose whole-read bytes (the touched (repo, kb)
-  docs partitions, docs_meta, term_dict, tombstones and stats, sized from
-  file lengths) fit under ``task_pass_max_bytes``.  The batch becomes one
-  pandas-backed frame whose ``kb`` and ``content_sha256`` are the Spark
-  expressions below, and ONE ``mapInArrow`` task (``index/task_pass.py``)
-  runs steps 1-5 with pyarrow and the build's fused segment kernel, writing
-  every table image as zstd parquet in the table's recorded schema; the
-  driver then commits one snapshot per table (``Table.commit_dirs``).  A
-  facade commit is one Spark job.  The task runs in an executor's Python
-  worker, not the driver, so the driver's memory does not grow with the
-  pass.
+  facade's pending rows) and whose read bytes (the touched (repo, kb) docs
+  partitions' data and delete files, and docs_meta, term_dict, tombstones
+  and stats, sized from file lengths) fit under ``task_pass_max_bytes``.
+  The batch becomes one pandas-backed frame whose ``kb`` and
+  ``content_sha256`` are the Spark expressions below, and ONE
+  ``mapInArrow`` task (``index/task_pass.py``) runs steps 1-5 with pyarrow
+  and the build's fused segment kernel: it writes the docs rows and key
+  deletes of step 3 and every other table image as zstd parquet in the
+  table's recorded schema, and reads the victims' stored rows one docs
+  file at a time, filtered to their paths.  The driver then commits one
+  snapshot per table (``Table.commit_dirs``).  A facade commit is one Spark
+  job.  The task runs in an executor's Python worker, not the driver, so
+  the driver's memory does not grow with the pass.
 - **Spark** — DataFrame batches (the streaming sink, bulk upserts) and
   local batches over the ceiling: the steps above as Spark jobs.
 
 Both passes write the same rows (``test_commit_routes_identical``).
 
-``clear`` tombstones a whole collection, drops its docs partitions as a
-metadata-only commit and takes the same re-analysed dead delta.
+``clear`` tombstones a whole collection, drops its docs partitions (data
+and delete entries) as a metadata-only commit and takes the same
+re-analysed dead delta.
 ``compact()`` = the tiered merge stage (W7, the analogue of Lucene's
 TieredMergePolicy at LuceneIndexBean.java:681-686): only doc-slices whose
 tombstone fraction crosses a threshold are rewritten (dirty-slice partition
@@ -71,11 +80,11 @@ swap); clean slices' files are untouched, their manifests carried forward.
 
 from __future__ import annotations
 
-import json
 import os
 import re
 from concurrent.futures import ThreadPoolExecutor
 from functools import partial, reduce
+from urllib.parse import unquote
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -85,7 +94,8 @@ from pyspark.util import inheritable_thread_target
 from lucene_plugin_spark.index import task_pass
 from lucene_plugin_spark.index.builder import IndexBuilder, flat_postings_view
 from lucene_plugin_spark.session import local_frame
-from lucene_plugin_spark.storage.catalog import Catalog, data_files, root_name
+from lucene_plugin_spark.storage.catalog import (Catalog, data_files,
+                                                  entry_path, root_name)
 
 KEY_SCHEMA = "repo string, path string"
 META_COLS = ("repo", "path", "commit", "lang", "doc_id", "dslice", "gen")
@@ -173,9 +183,10 @@ class IndexMutator:
         return rows, rows[0]["max_doc"], rows[0]["max_gen"]
 
     # ------------------------------------------------------------ mutations
-    #: the one-task pass runs when the file bytes it reads whole — the
-    #: touched (repo, kb) docs partitions and docs_meta, term_dict,
-    #: tombstones and stats — fit under this.  It decodes them whole: for a
+    #: the one-task pass runs when the file bytes it reads — the touched
+    #: (repo, kb) docs partitions' data and delete files, and docs_meta,
+    #: term_dict, tombstones and stats — fit under this.  Measured when it
+    #: still decoded the touched docs partitions whole: for a
     #: 16-write / 4-delete commit its Python worker grew 14-19 bytes per byte
     #: read (+373-448 MB at 24.9 MB, +425-523 MB at 31.2 MB, +558-564 MB at
     #: 38.3 MB), so 24 MB keeps it within Spark's default 512 MB
@@ -256,10 +267,10 @@ class IndexMutator:
         """Where a local batch's pass runs, the write-side twin of
         ``SearchEngine._route``: the plan of the one-task pass
         (:mod:`task_pass`), or None for the Spark pass.  The one-task pass
-        needs every table it rewrites to exist with a recorded schema, the
+        needs every table it writes to exist with a recorded schema, the
         batch's collections to be plain hive partition values, and the bytes
-        it reads whole (the touched docs partitions and every file of
-        docs_meta, term_dict, tombstones and stats) under
+        it reads (the touched docs partitions' data and delete files, and
+        every file of docs_meta, term_dict, tombstones and stats) under
         :attr:`task_pass_max_bytes`.  The batch's (repo, kb) pairs come
         from the local frame without a Spark job."""
         snaps = {}
@@ -271,10 +282,13 @@ class IndexMutator:
         pairs = {(r["repo"], r["kb"]) for r in batch.select("repo", "kb").collect()}
         if not all(_HIVE_PLAIN.fullmatch(repo) for repo, _ in pairs):
             return None
-        leaves = self.catalog.table("docs").partition_dirs(["repo", "kb"], pairs)
+        docs_t = self.catalog.table("docs")
+        leaves, dels = (docs_t.partition_dirs(["repo", "kb"], pairs, deletes=d)
+                        for d in (False, True))
         tt = self.catalog.table("tombstones")
         tomb = tt.snapshot() if tt.exists() else None
-        read = data_files([d for dirs in leaves.values() for d in dirs]
+        read = data_files([e for part in (leaves, dels)
+                           for entries in part.values() for e in entries]
                           + (tomb.data_dirs if tomb else [])
                           + [d for name in ("docs_meta", "term_dict", "stats")
                              for d in snaps[name].data_dirs])
@@ -284,8 +298,13 @@ class IndexMutator:
                        "schema": snaps[name].schema_json,
                        "root": self.catalog.table(name).new_data_dir()}
                 for name in TASK_TABLES}
-        plan["docs"]["leaves"] = [(repo, int(kb), dirs)
-                                  for (repo, kb), dirs in leaves.items()]
+        snap = snaps["docs"]
+        plan["docs"]["leaves"] = [
+            (repo, int(kb), *([(entry_path(e), snap.seq(e))
+                               for e in part.get((repo, kb), [])]
+                              for part in (leaves, dels)))
+            for repo, kb in set(leaves) | set(dels)]
+        plan["docs"]["deletes"] = docs_t.new_data_dir()
         plan["tombstones"] = {
             "dirs": tomb.data_dirs if tomb else [],
             "schema": (tomb and tomb.schema_json) or task_pass.TOMBSTONES_SCHEMA,
@@ -318,10 +337,9 @@ class IndexMutator:
             kw = {"schemas": {root_name(r["root"]): r["schema"]},
                   "properties": props.get(name, {})}
             if name == "docs":
-                pairs = json.loads(r["replaced"])
-                t.commit_dirs([r["root"]], lineage={"replaced_buckets": pairs},
-                              partition_by=["repo", "kb"],
-                              replaced_values=pairs, **kw)
+                kw["schemas"][root_name(r["deletes"])] = task_pass.DOCS_DELETES_SCHEMA
+                t.commit_dirs([r["root"]] if r["n_rows"] else [], append=True,
+                              delete_dirs=[r["deletes"]], **kw)
             else:
                 t.commit_dirs([r["root"]],
                               append=name not in ("term_dict", "stats"), **kw)
@@ -353,32 +371,31 @@ class IndexMutator:
             tomb = kv([(int(d),) for d in victims], "doc_id long")
             writes.append(lambda: self._tombstone(tomb))
 
-        # docs: one partition-scoped copy-on-write of the touched buckets.
-        # ``touched`` is bound to the pre-rewrite snapshot's files, so the
-        # dead rows read from it still see the victims' content.
-        pairs = sorted({(r["repo"], int(r["kb"])) for r in ups}
-                       | {(r["repo"], int(r["kb"])) for r in victims.values()})
-        cond = reduce(lambda a, b: a | b,
-                      [(F.col("repo") == repo) & (F.col("kb") == kb)
-                       for repo, kb in pairs])
+        # docs, merge-on-read: the upserted rows and a delete of every gone
+        # key, one snapshot (``Table.row_delta``); no stored row is
+        # rewritten.  The victims' rows are read from the pre-commit
+        # snapshot, where they are still live.
         docs_t = self.catalog.table("docs")
-        touched = docs_t.read(self.spark).where(cond)
-        gone = kv(sorted({(r["repo"], r["path"]) for r in ups}
-                         | {(r["repo"], r["path"]) for r in victims.values()}),
-                  KEY_SCHEMA)
-        live = touched.join(F.broadcast(gone), ["repo", "path"], "left_anti")
-        if ups:
-            live = live.unionByName(updates.select(*touched.columns))
+        gone = kv(sorted({(r["repo"], r["path"], int(r["kb"]))
+                          for r in [*ups, *victims.values()]}),
+                  KEY_SCHEMA + ", kb int")
+        docs = docs_t.read(self.spark)
         props = self._docs_properties()
-        writes.append(lambda: docs_t.replace_partitions(
-            live, ["repo", "kb"], pairs, properties=props,
-            lineage={"replaced_buckets": [list(p) for p in pairs]}))
+        writes.append(lambda: docs_t.row_delta(
+            updates.select(*docs.columns) if ups else None, gone,
+            ["repo", "kb"], properties=props))
         dead_docs = None
         if victims:
+            # pruned to the victims' (repo, kb) partitions
+            cond = reduce(lambda a, b: a | b, [
+                (F.col("repo") == repo) & (F.col("kb") == kb)
+                for repo, kb in sorted({(r["repo"], int(r["kb"]))
+                                        for r in victims.values()})])
             dead_keys = kv([(r["repo"], r["path"], int(d))
                             for d, r in victims.items()],
                            KEY_SCHEMA + ", doc_id long")
-            dead_docs = touched.join(F.broadcast(dead_keys), ["repo", "path"])
+            dead_docs = docs.where(cond).join(F.broadcast(dead_keys),
+                                              ["repo", "path"])
 
         new_meta = None
         if ups:
@@ -490,7 +507,8 @@ class IndexMutator:
             victims.unpersist()
             return 0
         docs_t = self.catalog.table("docs")
-        dropped = [v for v in docs_t.partition_values(["repo", "kb"])
+        dropped = [v for d in (False, True)
+                   for v in docs_t.partition_values(["repo", "kb"], deletes=d)
                    if v[0] == repo]
         dead_docs = (docs_t.read(self.spark).where(F.col("repo") == repo)
                      .join(victims, ["repo", "path"]))
@@ -506,6 +524,24 @@ class IndexMutator:
         return n
 
     # ------------------------------------------------------------ compaction
+    def _merge_docs(self) -> None:
+        """The stored-fields half of a merge: every docs partition that
+        carries deletes becomes one file of its live rows, and its delete
+        entries go, in one ``replace_partitions``."""
+        docs_t = self.catalog.table("docs")
+        merged = sorted(docs_t.partition_values(["repo", "kb"], deletes=True))
+        if not merged:
+            return
+        # dir names are hive-escaped partition values
+        cond = reduce(lambda a, b: a | b, [
+            (F.col("repo") == unquote(repo)) & (F.col("kb") == int(kb))
+            for repo, kb in merged])
+        live = docs_t.read(self.spark).where(cond)
+        docs_t.replace_partitions(
+            live.repartition(F.col("repo"), F.col("kb")), ["repo", "kb"],
+            merged, properties=self._docs_properties(),
+            lineage={"merged_buckets": [list(v) for v in merged]})
+
     def compact(self, min_dead_fraction: float = 0.0) -> list[int]:
         """Tiered merge stage (W7): rewrite ONLY doc-slices whose tombstone
         fraction is >= ``min_dead_fraction`` (0.0 = every slice with any
@@ -515,7 +551,11 @@ class IndexMutator:
         Reference analogue: TieredMergePolicy(10,10) +
         ConcurrentMergeScheduler (LuceneIndexBean.java:671-686) — merge work
         is proportional to dirty segments, never the whole index.
+
+        The docs partitions that carry deletes are merged first, whatever
+        the threshold (:meth:`_merge_docs`).
         """
+        self._merge_docs()
         tt = self.catalog.table("tombstones")
         if not tt.exists():
             return []

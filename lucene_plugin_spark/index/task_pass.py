@@ -19,8 +19,12 @@ root per table.  It then
 
 1. resolves the batch keys against docs_meta minus tombstones: the live
    docs of the batch keys are the victims;
-2. rewrites the touched (repo, kb) docs partitions: old rows minus every
-   batch key that is upserted or has a victim, plus the upserted rows;
+2. writes docs merge-on-read: the upserted rows as a new root and every
+   batch key that is upserted or has a victim as a delete root, one file
+   each per touched (repo, kb) partition — no stored row is rewritten.  The
+   victims' stored rows are read from their partitions' data files one file
+   at a time, filtered to the victims' paths, and each victim's live row is
+   picked by the sequence rule (``storage/catalog.py``);
 3. gives new docs dense IDs from the next slice boundary above the largest
    docID, in (index_sort…, repo, path) order, with ``gen = max_gen + 1``;
 4. runs ``fused.make_fused_segment_kernel`` over the new docs (+1: their
@@ -47,9 +51,15 @@ from lucene_plugin_spark.index import fused
 from lucene_plugin_spark.storage.catalog import data_files
 
 #: one row per table image: the new root, its Spark schema, and for docs
-#: the replaced (repo, kb) partitions as JSON; ``n_rows`` counts tombstones
-#: (victims) and docs_meta rows (upserted docs)
-RESULT_DDL = "tbl string, root string, schema string, replaced string, n_rows long"
+#: the delete root; ``n_rows`` counts tombstones (victims) and docs and
+#: docs_meta rows (upserted docs)
+RESULT_DDL = "tbl string, root string, schema string, deletes string, n_rows long"
+
+#: the schema of the docs table's delete roots: the keys they delete
+DOCS_DELETES_SCHEMA = json.dumps({"type": "struct", "fields": [
+    {"name": "repo", "type": "string", "nullable": True, "metadata": {}},
+    {"name": "path", "type": "string", "nullable": True, "metadata": {}},
+    {"name": "kb", "type": "integer", "nullable": True, "metadata": {}}]})
 
 #: the tombstones table's schema, for the first pass that deletes anything
 TOMBSTONES_SCHEMA = json.dumps({"type": "struct", "fields": [
@@ -72,6 +82,29 @@ def _read(entries: list, columns: list[str] | None = None) -> pa.Table | None:
     if not files:
         return None
     return pads.dataset(files, format="parquet").to_table(columns=columns)
+
+
+def _live_rows(data: list, deletes: list, paths: list[str]) -> pa.Table | None:
+    """The live stored (path, content, fields) rows of ``paths`` in one docs
+    partition, from its data and delete dirs as (dir, sequence) pairs: each
+    file is read on its own, filtered to ``paths``, and a row is dropped
+    when a delete of its path has a higher sequence than the row's root."""
+    want = pc.field("path").isin(pa.array(paths, pa.string()))
+    hidden: dict[str, int] = {}
+    for d, seq in deletes:
+        for f in data_files([d]):
+            for p in pads.dataset(f, format="parquet").to_table(
+                    columns=["path"], filter=want)["path"].to_pylist():
+                hidden[p] = max(hidden.get(p, seq), seq)
+    out = []
+    for d, seq in data:
+        for f in data_files([d]):
+            t = pads.dataset(f, format="parquet").to_table(
+                columns=["path", "content", "fields"], filter=want)
+            if t.num_rows:
+                out.append(t.filter(pa.array(
+                    [hidden.get(p, seq) <= seq for p in t["path"].to_pylist()])))
+    return pa.concat_tables(out) if out else None
 
 
 def _write(tbl: pa.Table, schema: pa.Schema, root: str, part: str = "") -> None:
@@ -160,7 +193,7 @@ def make_commit_kernel(plan: dict):
         if rows:
             yield pa.RecordBatch.from_pylist(rows, schema=pa.schema([
                 ("tbl", pa.string()), ("root", pa.string()),
-                ("schema", pa.string()), ("replaced", pa.string()),
+                ("schema", pa.string()), ("deletes", pa.string()),
                 ("n_rows", pa.int64())]))
 
     return kernel
@@ -192,44 +225,42 @@ def _run_pass(batch: pa.Table, plan: dict) -> list[dict]:
     up_keys = set(zip(ups["repo"].to_pylist(), ups["path"].to_pylist()))
     victim_of = {k: d for d, k in victims.items()}
     gone = up_keys | set(victim_of)
-    pairs = sorted({(r, kb_of[(r, p)]) for r, p in gone})
+    by_pair: dict[tuple[str, int], list[str]] = {}
+    for r, p in sorted(gone):
+        by_pair.setdefault((r, kb_of[(r, p)]), []).append(p)
     out = []
 
-    def report(tbl, root, schema, replaced=None, n=0):
-        os.makedirs(root, exist_ok=True)
+    def report(tbl, root, schema, deletes=None, n=0):
+        if tbl != "docs" or n:
+            os.makedirs(root, exist_ok=True)
         out.append({"tbl": tbl, "root": root, "schema": schema,
-                    "replaced": None if replaced is None else json.dumps(replaced),
-                    "n_rows": n})
+                    "deletes": deletes, "n_rows": n})
 
-    # 2. docs: rewrite the touched partitions; the victims' stored rows
-    # leave for the dead delta
+    # 2. docs, merge-on-read: append the upserted rows, delete the gone
+    # keys; the victims' live stored rows leave for the dead delta
     dplan = plan["docs"]
     dschema = _file_schema(dplan["schema"], ("repo", "kb"))
-    leaves = {(r, int(kb)): dirs for r, kb, dirs in dplan["leaves"]}
+    kschema = _file_schema(DOCS_DELETES_SCHEMA, ("repo", "kb"))
+    leaves = {(r, int(kb)): (data, dels) for r, kb, data, dels in dplan["leaves"]}
     dead_parts = []
-    for repo, kb in pairs:
-        parts = []
-        old = _read(leaves.get((repo, kb), []))
-        if old is not None and old.num_rows:
-            old = old.select(dschema.names).cast(dschema)
-            keys = [(repo, p) for p in old["path"].to_pylist()]
-            parts.append(old.filter(pa.array([k not in gone for k in keys])))
-            di = [i for i, k in enumerate(keys) if k in victim_of]
-            if di:
-                d = old.take(pa.array(di, pa.int64()))
-                dead_parts.append(pa.table({
-                    "dslice": pa.array(np.zeros(len(di), np.int32)),
-                    "doc_id": pa.array([victim_of[keys[i]] for i in di], pa.int64()),
-                    "content": d["content"], "fields": d["fields"]}))
+    for (repo, kb), keys in by_pair.items():
+        part = f"repo={repo}/kb={kb}"
         mine = ups.filter(pc.and_(pc.equal(ups["repo"], repo),
                                   pc.equal(ups["kb"], kb)))
         if mine.num_rows:
-            parts.append(mine)
-        tbl = pa.concat_tables([t.select(dschema.names).cast(dschema)
-                                for t in parts]) if parts else None
-        if tbl is not None and tbl.num_rows:
-            _write(tbl, dschema, dplan["root"], f"repo={repo}/kb={kb}")
-    report("docs", dplan["root"], dplan["schema"], [list(p) for p in pairs])
+            _write(mine, dschema, dplan["root"], part)
+        _write(pa.table({"path": pa.array(keys, pa.string())}), kschema,
+               dplan["deletes"], part)
+        dead = [p for p in keys if (repo, p) in victim_of]
+        if dead:
+            d = _live_rows(*leaves.get((repo, kb), ([], [])), dead)
+            if d is not None and d.num_rows:
+                dead_parts.append(pa.table({
+                    "dslice": pa.array(np.zeros(d.num_rows, np.int32)),
+                    "doc_id": pa.array([victim_of[(repo, p)] for p in
+                                        d["path"].to_pylist()], pa.int64()),
+                    "content": d["content"], "fields": d["fields"]}))
+    report("docs", dplan["root"], dplan["schema"], dplan["deletes"], ups.num_rows)
 
     # 3-4. new docs: docIDs, docs_meta, segments and norms (+1)
     td_delta, st_delta = [], []

@@ -54,6 +54,20 @@ recovery via Spark's ``basePath`` option); plain-string entries remain whole
 parquet roots.  Partition values must hive-encode to themselves (ints and
 sanitized collection names do; arbitrary strings would need Iceberg's
 escaping).
+
+Merge-on-read rows (the Iceberg v2 ``RowDelta`` analogue, and Lucene's
+liveDocs for stored fields): a manifest also lists ``delete_dirs``, entries
+of the same shapes as ``data_dirs`` whose rows are KEYS, and ``seqs``, the
+sequence of every data and delete root it lists — the id of the snapshot
+that added the root, carried over like ``schemas``.  A delete row with
+sequence d hides the rows with the same values in its columns (the docs
+table's ``(repo, path, kb)``) in every data root whose sequence is below d,
+so one snapshot can add a key's replacement row and the delete of its old
+one (:meth:`Table.row_delta`).  :meth:`Table.read` applies the deletes with
+one left-anti join, only when the snapshot has any; delete roots record
+their schemas, so the read stays job-free.  Partition commits keep or drop a
+partition's delete entries with its data entries, and ``overwrite`` drops
+them all.
 """
 
 from __future__ import annotations
@@ -66,12 +80,14 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 
 #: version of the on-disk layout: data-file codec and manifest shape.
-#: 2: zstd data files (1: Spark's default snappy).
-LAYOUT_VERSION = 2
+#: 3: manifests list delete roots and root sequences (2: zstd data files;
+#: 1: Spark's default snappy).
+LAYOUT_VERSION = 3
 
 
 class SnapshotError(RuntimeError):
@@ -158,13 +174,23 @@ class Snapshot:
     timestamp_ms: int = 0
     #: root name (:func:`root_name`) -> JSON schema of that root's files
     schemas: dict[str, str] = field(default_factory=dict)
-    #: the schema of the last root a commit added (the parent's when it
-    #: added none): what a new image of the table is written in
+    #: the schema of the last data root a commit added (the parent's when
+    #: it added none): what a new image of the table is written in
     schema_json: str | None = None
+    #: merge-on-read key deletes: entries shaped like ``data_dirs``
+    delete_dirs: list = field(default_factory=list)
+    #: root name -> sequence: the id of the snapshot that added the root
+    seqs: dict[str, int] = field(default_factory=dict)
+
+    def seq(self, entry) -> int:
+        """The sequence of a data or delete entry's root (0 when the
+        manifest predates sequences)."""
+        return self.seqs.get(root_name(entry), 0)
 
 
 class Table:
-    """One snapshot-versioned parquet table."""
+    """One snapshot-versioned parquet table: data roots, merge-on-read
+    delete roots, and each root's sequence (module docstring)."""
 
     def __init__(self, root: str, name: str):
         self.root = os.path.join(root, name)
@@ -200,6 +226,8 @@ class Table:
             timestamp_ms=m.get("timestamp_ms", 0),
             schemas=_root_schemas(m),
             schema_json=m.get("schema_json"),
+            delete_dirs=m.get("delete_dirs", []),
+            seqs=m.get("seqs", {}),
         )
 
     def exists(self) -> bool:
@@ -234,27 +262,35 @@ class Table:
         return d, {os.path.basename(d): df.schema.json()}
 
     def _commit(self, sid: int, data_dirs: list, lineage: dict,
-                properties: dict, schemas: dict[str, str] | None = None
-                ) -> Snapshot:
+                properties: dict, schemas: dict[str, str] | None = None,
+                delete_dirs: list = ()) -> Snapshot:
         """Write manifest ``sid`` and swap CURRENT to it.  ``schemas``: the
         schemas of the roots this commit adds; the parent's carry over for
-        the roots it still lists.  ``schema_json`` (the last added schema,
-        else the parent's) types the read of a snapshot with no files."""
+        the roots it still lists, and so do their sequences (a root new to
+        the table gets ``sid``).  ``schema_json`` (the last added data
+        root's schema, else the parent's) types the read of a snapshot with
+        no files."""
         parent = self.current_snapshot_id()
         pm = self._manifest(parent) if parent is not None else {}
         known = {**_root_schemas(pm), **(schemas or {})}
+        parent_seqs = pm.get("seqs", {})
+        data_names = {root_name(e) for e in data_dirs}
+        added = [j for n, j in (schemas or {}).items() if n in data_names]
         by_schema: dict[str, list[str]] = {}
-        for n in dict.fromkeys(root_name(e) for e in data_dirs):
+        seqs: dict[str, int] = {}
+        for n in dict.fromkeys(root_name(e) for e in [*data_dirs, *delete_dirs]):
+            seqs[n] = parent_seqs.get(n, sid)
             if n in known:
                 by_schema.setdefault(known[n], []).append(n)
         manifest = {
             "snapshot_id": sid,
             "parent_id": parent,
             "data_dirs": data_dirs,
+            "delete_dirs": list(delete_dirs),
+            "seqs": seqs,
             "lineage": lineage,
             "properties": properties,
-            "schema_json": (list(schemas.values())[-1] if schemas
-                            else pm.get("schema_json")),
+            "schema_json": added[-1] if added else pm.get("schema_json"),
             "schemas": [{"schema": j, "roots": ns}
                         for j, ns in by_schema.items()],
             "timestamp_ms": int(time.time() * 1000),
@@ -272,24 +308,27 @@ class Table:
 
     def _parent_entries(self, append: bool = False,
                         partition_by: list[str] | None = None,
-                        replaced_values=()) -> list:
-        """What a new snapshot keeps of the current one's data-dir entries:
-        none (an overwrite), all (``append``), or every partition of
-        ``partition_by`` but ``replaced_values`` (a partition replace)."""
+                        replaced_values=()) -> tuple[list, list]:
+        """What a new snapshot keeps of the current one's data and delete
+        entries: none (an overwrite), all (``append``), or every partition
+        of ``partition_by`` but ``replaced_values`` (a partition replace)."""
         if self.current_snapshot_id() is None:
-            return []
+            return [], []
+        snap = self.snapshot()
         if partition_by:
-            return self._kept_entries(
-                partition_by, {tuple(str(v) for v in vals)
-                               for vals in replaced_values})
-        return list(self.snapshot().data_dirs) if append else []
+            replaced = {tuple(str(v) for v in vals) for vals in replaced_values}
+            return tuple(self._kept_entries(entries, partition_by, replaced)
+                         for entries in (snap.data_dirs, snap.delete_dirs))
+        if append:
+            return list(snap.data_dirs), list(snap.delete_dirs)
+        return [], []
 
     def append(self, df: DataFrame, partition_by: list[str] | None = None,
                lineage: dict | None = None, properties: dict | None = None) -> Snapshot:
         d, schemas = self._write_data(df, partition_by)
-        return self._commit(self._next_id(),
-                            self._parent_entries(append=True) + [d],
-                            lineage or {}, properties or {}, schemas)
+        kept, deletes = self._parent_entries(append=True)
+        return self._commit(self._next_id(), kept + [d], lineage or {},
+                            properties or {}, schemas, deletes)
 
     def overwrite(self, df: DataFrame, partition_by: list[str] | None = None,
                   lineage: dict | None = None, properties: dict | None = None) -> Snapshot:
@@ -297,29 +336,46 @@ class Table:
         return self._commit(self._next_id(), [d], lineage or {},
                             properties or {}, schemas)
 
+    def row_delta(self, rows: DataFrame | None, deletes: DataFrame,
+                  partition_by: list[str], lineage: dict | None = None,
+                  properties: dict | None = None) -> Snapshot:
+        """Append ``rows`` (if any) and the key rows ``deletes`` as one
+        snapshot (Iceberg ``RowDelta``): the deletes hide the older rows
+        with their keys — every column of ``deletes`` — and not ``rows``,
+        which share their sequence.  Nothing already written is rewritten."""
+        added, schemas = [], {}
+        if rows is not None:
+            d, schemas = self._write_data(rows, partition_by)
+            added.append(d)
+        dd, s = self._write_data(deletes, partition_by)
+        return self.commit_dirs(added, lineage, properties, {**schemas, **s},
+                                append=True, delete_dirs=[dd])
+
     def commit_dirs(self, data_dirs: list, lineage: dict | None = None,
                     properties: dict | None = None,
                     schemas: dict[str, str] | None = None,
                     append: bool = False,
                     partition_by: list[str] | None = None,
-                    replaced_values=()) -> Snapshot:
+                    replaced_values=(), delete_dirs: list = ()) -> Snapshot:
         """Commit data dirs written elsewhere: another table's (a multi-stage
         build's stage files, field_lens over doc_norms' files) or roots that
         the one-task mutation pass wrote with pyarrow.  The snapshot keeps
         none of its parent's entries (an overwrite), all of them
         (``append``) or, given ``partition_by``, all but the
-        ``replaced_values`` partitions (as :meth:`replace_partitions`).
+        ``replaced_values`` partitions (as :meth:`replace_partitions`), and
+        adds ``delete_dirs`` as delete roots (as :meth:`row_delta`).
         ``schemas``: the schemas of those files' roots — for another table's
         data dirs, that table's :attr:`Snapshot.schemas`; roots without one
         are read with schema inference."""
-        kept = self._parent_entries(append, partition_by, replaced_values)
+        kept, deletes = self._parent_entries(append, partition_by, replaced_values)
         return self._commit(self._next_id(), kept + list(data_dirs),
-                            lineage or {}, properties or {}, schemas)
+                            lineage or {}, properties or {}, schemas,
+                            deletes + list(delete_dirs))
 
     # ---- partition-level commits (Iceberg overwritePartitions analogue) ----
     def _partition_leaves(self, entry, partition_by: list[str]):
-        """Yield (path, base, values) leaf partition dirs of one data-dir
-        entry, where ``values`` is the tuple of hive partition values."""
+        """Yield (path, values) leaf partition dirs of one data-dir entry,
+        where ``values`` is the tuple of hive partition values."""
         p, base = entry_path(entry), entry_base(entry)
         rel = os.path.relpath(p, base)
         bound = [] if rel == "." else [seg.split("=", 1) for seg in rel.split(os.sep)]
@@ -337,35 +393,40 @@ class Table:
             roots = nxt
         yield from roots
 
-    def partition_dirs(self, partition_by: list[str], values
-                       ) -> dict[tuple[str, ...], list[str]]:
-        """The current snapshot's leaf dirs of the named partitions, as
-        partition-value tuple -> dirs (values absent from the snapshot are
-        absent here)."""
+    def partition_dirs(self, partition_by: list[str], values,
+                       deletes: bool = False) -> dict[tuple[str, ...], list]:
+        """The current snapshot's leaf entries (``{"path", "base"}``) of the
+        named partitions, as partition-value tuple -> entries (values absent
+        from the snapshot are absent here): its data entries, or with
+        ``deletes`` its delete entries."""
         want = {tuple(str(v) for v in vals) for vals in values}
-        out: dict[tuple[str, ...], list[str]] = {}
-        for e in self.snapshot().data_dirs:
+        snap = self.snapshot()
+        out: dict[tuple[str, ...], list] = {}
+        for e in snap.delete_dirs if deletes else snap.data_dirs:
             for d, vals in self._partition_leaves(e, partition_by):
                 if vals in want:
-                    out.setdefault(vals, []).append(d)
+                    out.setdefault(vals, []).append(
+                        {"path": d, "base": entry_base(e)})
         return out
 
     def partition_values(self, partition_by: list[str],
-                         snapshot_id: int | None = None
-                         ) -> set[tuple[str, ...]]:
-        """All live partition-value tuples of a snapshot (default: the
-        current one)."""
+                         snapshot_id: int | None = None,
+                         deletes: bool = False) -> set[tuple[str, ...]]:
+        """All partition-value tuples of a snapshot's (default: the current
+        one's) data entries, or with ``deletes`` its delete entries."""
         if self.current_snapshot_id() is None:
             return set()
+        snap = self.snapshot(snapshot_id)
         out: set[tuple[str, ...]] = set()
-        for e in self.snapshot(snapshot_id).data_dirs:
+        for e in snap.delete_dirs if deletes else snap.data_dirs:
             for _, vals in self._partition_leaves(e, partition_by):
                 out.add(vals)
         return out
 
-    def _kept_entries(self, partition_by: list[str], replaced: set) -> list:
+    def _kept_entries(self, entries: list, partition_by: list[str],
+                      replaced: set) -> list:
         kept = []
-        for e in self.snapshot().data_dirs:
+        for e in entries:
             base = entry_base(e)
             for d, vals in self._partition_leaves(e, partition_by):
                 if vals not in replaced:
@@ -377,43 +438,37 @@ class Table:
                            properties: dict | None = None) -> Snapshot:
         """Overwrite ONLY the named partitions: commit the parent's untouched
         partition dirs plus newly-written files for ``df`` (which must contain
-        only rows of the replaced partitions).  O(touched partitions) bytes —
+        only rows of the replaced partitions); the replaced partitions'
+        delete entries go with their data.  O(touched partitions) bytes —
         the scale contract for mutations."""
         d, schemas = self._write_data(df, partition_by)
-        kept = self._parent_entries(partition_by=partition_by,
-                                    replaced_values=replaced_values)
+        kept, deletes = self._parent_entries(partition_by=partition_by,
+                                             replaced_values=replaced_values)
         return self._commit(self._next_id(), kept + [d], lineage or {},
-                            properties or {}, schemas)
+                            properties or {}, schemas, deletes)
 
     def drop_partitions(self, partition_by: list[str], dropped_values,
                         lineage: dict | None = None,
                         properties: dict | None = None) -> Snapshot:
         """Metadata-only delete of whole partitions (Iceberg partition-level
-        DELETE): no data files written or read, just a manifest without them."""
-        dropped = {tuple(str(v) for v in vals) for vals in dropped_values}
-        kept = self._kept_entries(partition_by, dropped)
-        return self._commit(self._next_id(), kept, lineage or {}, properties or {})
+        DELETE): no data files written or read, just a manifest without
+        their data and delete entries."""
+        kept, deletes = self._parent_entries(partition_by=partition_by,
+                                             replaced_values=dropped_values)
+        return self._commit(self._next_id(), kept, lineage or {},
+                            properties or {}, None, deletes)
 
     # ---- reads -----------------------------------------------------------
-    def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
-        """The snapshot as one DataFrame, launching no Spark job for roots
-        whose schema the manifest records (:attr:`Snapshot.schemas`).
-
-        Each parquet root (possibly hive-partitioned) is read with its own
-        ``basePath`` and the roots are unioned by name — a multi-root read
-        would trip Spark's conflicting-directory-structure check; a root's
-        surviving partition dirs share one read, so plan size is O(roots).
-        A root with a recorded schema is read with it: the same columns,
-        column order (partition columns last) and types as schema inference
-        gives, without inference's footer job.  A root without files (a
-        zero-row write) is skipped; a snapshot with none at all reads as an
-        empty frame typed by the manifest's ``schema_json``."""
-        snap = self.snapshot(snapshot_id)
+    def _read_roots(self, spark: SparkSession, snap: Snapshot, entries: list,
+                    seq_col: str | None) -> DataFrame | None:
+        """``entries`` read root by root and unioned by name; ``seq_col``
+        names a column holding each row's root sequence.  None when no
+        root holds a file."""
         from pyspark.sql.types import StructType
         from pyspark.sql.utils import AnalysisException
         out = None
         by_base: dict[str, list[str]] = {}
-        for e in snap.data_dirs:
+        for e in entries:
             by_base.setdefault(entry_base(e), []).append(entry_path(e))
         for base, paths in by_base.items():
             schema = snap.schemas.get(root_name(base))
@@ -426,7 +481,31 @@ class Table:
                 df = reader.parquet(*paths)
             except AnalysisException:
                 continue  # inference found no files, or the dir is gone
+            if seq_col is not None:
+                df = df.withColumn(seq_col, F.lit(snap.seq(base)))
             out = df if out is None else out.unionByName(df, allowMissingColumns=True)
+        return out
+
+    def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
+        """The snapshot as one DataFrame, launching no Spark job for roots
+        whose schema the manifest records (:attr:`Snapshot.schemas`).
+
+        Each parquet root (possibly hive-partitioned) is read with its own
+        ``basePath`` and the roots are unioned by name — a multi-root read
+        would trip Spark's conflicting-directory-structure check; a root's
+        surviving partition dirs share one read, so plan size is O(roots).
+        A root with a recorded schema is read with it: the same columns,
+        column order (partition columns last) and types as schema inference
+        gives, without inference's footer job.  A root without files (a
+        zero-row write) is skipped; a snapshot with none at all reads as an
+        empty frame typed by the manifest's ``schema_json``.  A snapshot
+        with delete roots drops the rows they hide (module docstring) with
+        one left-anti join on the delete columns plus the sequence rule;
+        the columns are the same either way."""
+        snap = self.snapshot(snapshot_id)
+        from pyspark.sql.types import StructType
+        mor = bool(snap.delete_dirs)
+        out = self._read_roots(spark, snap, snap.data_dirs, "_seq" if mor else None)
         if out is None:
             schema_json = self._manifest(snap.snapshot_id).get("schema_json")
             if schema_json is None:
@@ -434,7 +513,13 @@ class Table:
                     f"snapshot {snap.snapshot_id} of {self.name} is empty and untyped")
             return spark.createDataFrame(
                 [], StructType.fromJson(json.loads(schema_json)))
-        return out
+        if not mor:
+            return out
+        dels = self._read_roots(spark, snap, snap.delete_dirs, "_dseq")
+        if dels is not None:
+            cond = [out[c] == dels[c] for c in dels.columns if c != "_dseq"]
+            out = out.join(dels, cond + [dels["_dseq"] > out["_seq"]], "left_anti")
+        return out.drop("_seq")
 
 
 class Catalog:

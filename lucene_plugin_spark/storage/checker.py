@@ -27,7 +27,12 @@ with whole doc-slices exactly like query execution — no shuffle):
 - ``stats.n_docs``/``sum_dl`` per field equal the live ``field_lens``;
 - every tombstone sits in its doc's slice, ``doc_id // docs_per_slice``
   (the width persisted on the segments snapshot) — the query kernels read
-  a slice's tombstones by that partition, so a misfiled one never masks.
+  a slice's tombstones by that partition, so a misfiled one never masks;
+- the merge-on-read docs table (``storage/catalog.py``) reads as exactly
+  the live set: every live docs key appears once and matches exactly one
+  live docs_meta row (docs_meta minus tombstones), every docs row's ``kb``
+  is its key bucket, and no delete entry sits in a partition without a
+  data dir.
 
 Returns a summary dict; a healthy index reports ``errors == []``.  Only
 violations are collected to the driver (bounded), never corpus-sized data.
@@ -202,5 +207,38 @@ def check_index(spark: SparkSession, catalog) -> dict:
             errors.append(f"tombstone doc_id {r['doc_id']} in dslice "
                           f"{r['dslice']}, not {r['doc_id'] // int(dps)}")
 
+    errors += _docs_errors(spark, catalog)
     return {"slices": int(agg["slices"]), "terms": int(agg["terms"] or 0),
             "postings": int(agg["postings"] or 0), "errors": errors}
+
+
+def _docs_errors(spark: SparkSession, catalog) -> list[str]:
+    """The merge-on-read docs checks (module docstring)."""
+    docs_t = catalog.table("docs")
+    if not docs_t.exists():
+        return []
+    errors = [f"docs delete entry for partition {v} has no data dir"
+              for v in sorted(docs_t.partition_values(["repo", "kb"], deletes=True)
+                              - docs_t.partition_values(["repo", "kb"]))]
+    docs = docs_t.read(spark)
+    buckets = docs_t.snapshot().properties.get("doc_buckets")
+    if buckets:
+        for r in (docs.where(F.col("kb") != F.pmod(F.hash("repo", "path"),
+                                                   F.lit(int(buckets))))
+                  .select("repo", "path", "kb").limit(20).collect()):
+            errors.append(f"docs ({r['repo']}, {r['path']}) in kb {r['kb']}, "
+                          f"not its key bucket")
+    meta = catalog.table("docs_meta").read(spark)
+    tt = catalog.table("tombstones")
+    if tt.exists():
+        meta = meta.join(tt.read(spark).select("doc_id"), "doc_id", "left_anti")
+    bad = (docs.groupBy("repo", "path").agg(F.count(F.lit(1)).alias("n_docs"))
+           .join(meta.groupBy("repo", "path")
+                 .agg(F.count(F.lit(1)).alias("n_meta")), ["repo", "path"], "full")
+           .where((F.coalesce("n_docs", F.lit(0)) != 1)
+                  | (F.coalesce("n_meta", F.lit(0)) != 1))
+           .limit(20).collect())
+    for r in bad:
+        errors.append(f"docs key ({r['repo']}, {r['path']}): {r['n_docs'] or 0} "
+                      f"live docs rows, {r['n_meta'] or 0} live docs_meta rows")
+    return errors

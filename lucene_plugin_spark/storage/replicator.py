@@ -9,11 +9,11 @@ the destination with the same size and a destination mtime no older than the
 source's, within the destination's timestamp granularity, is skipped —
 parquet part files are immutable and uuid-named, and the mtime guard
 additionally catches any fixed-name file rewritten in place with unchanged
-length), rewrites the absolute ``data_dirs`` in each manifest to the
-destination root, and only THEN installs every table's ``CURRENT`` pointer
-with an atomic rename — the replica serves the previous revision throughout
-the copy and flips over in one step per table, exactly the replicator
-client's ``revisionReady`` contract.
+length), rewrites the absolute ``data_dirs`` and ``delete_dirs`` in each
+manifest to the destination root, and only THEN installs every table's
+``CURRENT`` pointer with an atomic rename — the replica serves the previous
+revision throughout the copy and flips over in one step per table, exactly
+the replicator client's ``revisionReady`` contract.
 
 Scale notes: replication is pure file I/O on the driver (or an external
 copier at production scale — the manifest rewrite is the only
@@ -96,7 +96,7 @@ def replicate(src_root: str, dst_root: str) -> dict:
         shutil.copystat(src, dst)
         copied += 1
         nbytes += os.path.getsize(src)
-    # manifests: rewrite absolute data_dirs to the destination root
+    # manifests: rewrite absolute data and delete dirs to the destination root
     for src, dst in manifests:
         with open(src) as f:
             m = json.load(f)
@@ -105,14 +105,15 @@ def replicate(src_root: str, dst_root: str) -> dict:
                 return os.path.join(dst_root, os.path.relpath(p, src_root))
             return p
 
-        out = []
-        for d in m.get("data_dirs", []):
-            if isinstance(d, dict):       # partition-leaf entry {base, path}
-                out.append({k: (_rw(v) if isinstance(v, str) else v)
-                            for k, v in d.items()})
-            else:
-                out.append(_rw(d))
-        m["data_dirs"] = out
+        for key in ("data_dirs", "delete_dirs"):
+            out = []
+            for d in m.get(key, []):
+                if isinstance(d, dict):   # partition-leaf entry {base, path}
+                    out.append({k: (_rw(v) if isinstance(v, str) else v)
+                                for k, v in d.items()})
+                else:
+                    out.append(_rw(d))
+            m[key] = out
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         tmp = dst + ".tmp"
         with open(tmp, "w") as f:

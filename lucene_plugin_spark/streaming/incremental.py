@@ -14,10 +14,12 @@ the same policy is the trigger interval + per-trigger batch bound:
   reopen analogue, LuceneIndexBean.java:620-637).
 - ``trigger(processingTime='1 second')`` asks for softCommitMaxAge = 1 s
   but cannot deliver it: a micro-batch arrives as a DataFrame, so its
-  commit takes the Spark mutation pass, tens of small Spark jobs that
-  took about 7 s for a 20-key batch over a 10k-doc index at local[4] on a
-  4-vCPU host (perfbench ``index_refresh`` before the facade's commits
-  moved to the one-task pass, which a local batch takes; see
+  commit takes the Spark mutation pass, tens of small Spark jobs that took
+  3.8-6.0 s for a 16-write / 4-delete batch over a 10k-doc index at
+  local[4] on a 4-vCPU host; most of it is the new docs' postings writes.
+  The docs table is merge-on-read in both passes (appended rows and key
+  deletes, no partition rewrite), but only a local batch (the facade's)
+  takes the one-task pass, about 0.4 s for the same batch (see
   ``index/mutations.py``).  A trigger shorter than the commit only makes
   the next batch start as soon as the previous one ends, so new docs become
   visible about one commit after they arrive, not one trigger interval.

@@ -123,10 +123,10 @@ def test_typed_reads_equal_inferred_reads(spark, every_commit, tmp_path):
         t = catalog.table(name)
         for sid in t.history():
             snap = t.snapshot(sid)
-            # field_lens (committed over doc_norms' files) included: every
-            # root of every snapshot is read typed
-            assert {root_name(e) for e in snap.data_dirs} == set(snap.schemas), \
-                (name, sid)
+            # field_lens (committed over doc_norms' files) and docs' delete
+            # roots included: every root of every snapshot is read typed
+            assert {root_name(e) for e in snap.data_dirs + snap.delete_dirs} \
+                == set(snap.schemas), (name, sid)
             _same_read(spark, catalog, inferred, name, sid)
     def snaps(name):
         t = catalog.table(name)

@@ -128,7 +128,7 @@ def _live_files(catalog, table):
 
 def test_mutations_rewrite_O_of_k_not_O_of_N(spark, tmp_path_factory):
     """Scale contract: an upsert of k docs must leave every untouched docs
-    bucket's files byte-identical (partition-scoped copy-on-write), append —
+    bucket's files byte-identical (merge-on-read appends), append —
     never rewrite — segment files, and compaction must swap only dirty
     doc-slices."""
     import pyspark.sql.functions as F
@@ -418,9 +418,10 @@ def test_commit_routes_identical(spark, tmp_path, monkeypatch):
 
 
 def test_task_plan_flips_at_ceiling(spark, tmp_path):
-    """The one-task pass is picked exactly while the file bytes it reads
-    whole — the touched docs partitions and every file of docs_meta,
-    term_dict, tombstones and stats — fit under ``task_pass_max_bytes``."""
+    """The one-task pass is picked exactly while the file bytes it reads —
+    the touched docs partitions' data and delete files and every file of
+    docs_meta, term_dict, tombstones and stats — fit under
+    ``task_pass_max_bytes``."""
     import os
 
     import pandas as pd
@@ -437,10 +438,15 @@ def test_task_plan_flips_at_ceiling(spark, tmp_path):
     batch = mut._local_batch(pd.DataFrame([{
         "repo": rows[5]["repo"], "path": "new/x.py", "commit": "0" * 8,
         "lang": "text", "content": "index marker"}]), pd.DataFrame(
-        [(rows[9]["repo"], rows[9]["path"])], columns=["repo", "path"]), None)
+        [(rows[9]["repo"], rows[9]["path"]), (rows[0]["repo"], rows[0]["path"])],
+        columns=["repo", "path"]), None)
     pairs = {(r["repo"], r["kb"]) for r in batch.select("repo", "kb").collect()}
-    leaves = cat.table("docs").partition_dirs(["repo", "kb"], pairs)
-    entries = [d for dirs in leaves.values() for d in dirs]
+    leaves, dels = (cat.table("docs").partition_dirs(["repo", "kb"], pairs,
+                                                     deletes=d)
+                    for d in (False, True))
+    assert dels  # rows[0]'s partition carries its delete
+    entries = [d for part in (leaves, dels) for dirs in part.values()
+               for d in dirs]
     for name in ("docs_meta", "term_dict", "tombstones", "stats"):
         entries += cat.table(name).snapshot().data_dirs
     size = sum(os.path.getsize(f) for f in data_files(entries))
@@ -450,15 +456,12 @@ def test_task_plan_flips_at_ceiling(spark, tmp_path):
     assert mut._task_plan(batch) is None
 
 
-def test_facade_commit_is_one_spark_job(spark, tmp_path):
-    """A facade commit of 16 writes and 4 deletes runs the one-task pass:
-    exactly one Spark job.  The first search on the engine the commit opens
-    is one more (its scoring job)."""
-    import uuid
-
+def _facade_with_pending(spark, path):
+    """A facade over 200 committed docs with 16 writes and 4 deletes
+    pending."""
     from lucene_plugin_spark.api import LuceneFacade
     rows = _facade_rows(200, seed=29)
-    fac = LuceneFacade(spark, str(tmp_path))
+    fac = LuceneFacade(spark, path)
     for r in rows:
         fac.index_text(r["repo"], r["path"], r["content"])
     fac.commit()
@@ -466,6 +469,16 @@ def test_facade_commit_is_one_spark_job(spark, tmp_path):
         fac.index_text(rows[i]["repo"], f"new/{i}.py", f"marker{i} index cache")
     for r in rows[100:104]:
         fac.delete(r["repo"], r["path"])
+    return fac, rows
+
+
+def test_facade_commit_is_one_spark_job(spark, tmp_path):
+    """A facade commit of 16 writes and 4 deletes runs the one-task pass:
+    exactly one Spark job.  The first search on the engine the commit opens
+    is one more (its scoring job)."""
+    import uuid
+
+    fac, rows = _facade_with_pending(spark, str(tmp_path))
     sc = spark.sparkContext
 
     def jobs(fn):
@@ -484,3 +497,85 @@ def test_facade_commit_is_one_spark_job(spark, tmp_path):
     gone = rows[100]
     q = " ".join(gone["content"].split()[:3])
     assert gone["path"] not in {e.external_id for e in fac.search(gone["repo"], q)}
+
+
+def test_facade_commit_appends_docs(spark, tmp_path):
+    """A facade commit of 16 writes and 4 deletes rewrites no docs file:
+    every docs data file live before it is live after it, and it adds
+    exactly one data root and one delete root to docs."""
+    from lucene_plugin_spark.storage.catalog import root_name
+    fac, _ = _facade_with_pending(spark, str(tmp_path))
+    docs_t = fac.catalog.table("docs")
+    before, files = docs_t.snapshot(), _live_files(fac.catalog, "docs")
+    fac.commit()
+    after = docs_t.snapshot()
+    assert after.snapshot_id == before.snapshot_id + 1
+    assert files <= _live_files(fac.catalog, "docs")
+
+    def added(attr):
+        return ({root_name(e) for e in getattr(after, attr)}
+                - {root_name(e) for e in getattr(before, attr)})
+    assert len(added("data_dirs")) == 1
+    assert len(added("delete_dirs")) == 1
+
+
+@pytest.mark.parametrize("ceiling", [1 << 30, 0], ids=["task", "spark"])
+def test_docs_merge_on_read(spark, tmp_path, ceiling):
+    """One key updated in three commits, deleted, then re-added (and a
+    delete of a missing key), through either pass: after every commit the
+    docs table reads as exactly the live set and the index is
+    CheckIndex-clean; a tag taken midway still reads the old rows; after
+    ``compact()`` each docs partition is one data file with no deletes."""
+    import pandas as pd
+
+    from lucene_plugin_spark.storage.catalog import data_files
+    from lucene_plugin_spark.storage.checker import check_index
+    rows = _facade_rows(80, seed=41)
+    cat = Catalog(str(tmp_path))
+    builder = IndexBuilder(spark, cat, docs_per_slice=32)
+    builder.build(spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, "
+        "content string, fields map<string,string>"), fields_map_col="fields")
+    mut = IndexMutator(spark, cat, builder)
+    mut.task_pass_max_bytes = ceiling
+    live = {(r["repo"], r["path"]): r["content"] for r in rows}
+    repo, path = rows[3]["repo"], rows[3]["path"]
+    docs_t = cat.table("docs")
+
+    def docs(sid=None):
+        return {(r["repo"], r["path"]): r["content"]
+                for r in docs_t.read(spark, sid).collect()}
+
+    def upsert(content, dels=()):
+        mut.upsert(pd.DataFrame([{"repo": repo, "path": path, "commit": "0" * 8,
+                                  "lang": "text", "content": content}]),
+                   deletes=pd.DataFrame(list(dels), columns=["repo", "path"]))
+        live[(repo, path)] = content
+
+    def check():
+        assert docs() == live
+        assert check_index(spark, cat)["errors"] == []
+
+    upsert("first rewrite marker", [("repo06", "never/written.py")])
+    check()
+    upsert("second rewrite marker")
+    check()
+    pins = cat.tag("midway")
+    mid = dict(live)
+    upsert("third rewrite marker")
+    check()
+    mut.delete_keys(pd.DataFrame([(repo, path)], columns=["repo", "path"]))
+    live.pop((repo, path))
+    check()
+    upsert("added again marker")
+    check()
+    assert docs(pins["docs"]) == mid
+    assert docs_t.snapshot().delete_dirs
+
+    mut.compact()
+    snap = docs_t.snapshot()
+    assert snap.delete_dirs == []
+    parts = docs_t.partition_values(["repo", "kb"])
+    for entries in docs_t.partition_dirs(["repo", "kb"], parts).values():
+        assert len(data_files(entries)) == 1
+    check()
