@@ -48,6 +48,7 @@ default keeps the sane Python-API behavior (honor ``limit``).
 from __future__ import annotations
 
 import concurrent.futures
+from collections import OrderedDict
 from dataclasses import dataclass
 
 import pandas as pd
@@ -71,6 +72,9 @@ class LuceneEntry:
 
 
 class LuceneFacade:
+    # entries in each engine's results LRU (the reference's _resultsCache)
+    RESULTS_CACHE_SIZE = 512
+
     def __init__(self, spark: SparkSession, warehouse: str,
                  service_limit_drop: bool = False):
         self.spark = spark
@@ -212,18 +216,20 @@ class LuceneFacade:
             return []
         # per-searcher results LRU (the reference's 512-entry _resultsCache,
         # LuceneIndexBean.java:792,373-378; invalidated by searcher
-        # replacement = our engine replacement on commit)
+        # replacement = our engine replacement on commit): a hit becomes the
+        # most recent entry, a miss evicts the least recent
         key = (collection, query, limit)
         cache = getattr(eng, "_results_cache", None)
         if cache is None:
-            cache = eng._results_cache = {}
+            cache = eng._results_cache = OrderedDict()
         if key in cache:
+            cache.move_to_end(key)
             return cache[key]
         df = eng.search(sanitize_collection(collection), query, limit=limit)
         out = [LuceneEntry(id=r["doc_id"], score=r["score"], external_id=r["path"])
                for r in df.collect()]
-        if len(cache) >= 512:
-            cache.pop(next(iter(cache)))
+        if len(cache) >= self.RESULTS_CACHE_SIZE:
+            cache.popitem(last=False)
         cache[key] = out
         return out
 

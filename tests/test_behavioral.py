@@ -117,6 +117,18 @@ def test_paging_limit(facade):
     assert [e.id for e in r5] == sorted(e.id for e in r5)
 
 
+# --- results LRU (LuceneIndexBean.java:792,373-378) ---------------------------------
+def test_results_cache_keeps_recently_hit_entry(facade, monkeypatch):
+    monkeypatch.setattr(type(facade), "RESULTS_CACHE_SIZE", 2)
+    facade.index_text("default", "0", "mary had a little lamb")
+    facade.index_text("default", "1", "mary had a little dog")
+    facade.search("default", "lamb")
+    facade.search("default", "dog")
+    facade.search("default", "lamb")    # hit: now the most recent entry
+    facade.search("default", "little")  # evicts "dog", not "lamb"
+    assert [k[1] for k in facade._engine._results_cache] == ["lamb", "little"]
+
+
 # --- TestSearchShards.java:29-43 (same as text search; sharding is a config) --------
 def test_search_shards_equivalent(facade):
     facade.index_text("default", "0", "mary had a little lamb")

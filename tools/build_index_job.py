@@ -26,12 +26,11 @@ def main() -> None:
     ap.add_argument("--fields-map-col", default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from lucene_plugin_spark.index.builder import IndexBuilder
+    from lucene_plugin_spark.session import session_builder
     from lucene_plugin_spark.storage.catalog import Catalog
 
-    spark = SparkSession.builder.appName("lps-build-index").getOrCreate()
+    spark = session_builder("lps-build-index").getOrCreate()
     src = spark.read.parquet(args.input)
     t0 = time.perf_counter()
     res = IndexBuilder(spark, Catalog(args.warehouse),

@@ -17,12 +17,11 @@ def main() -> None:
     ap.add_argument("--warehouse", required=True)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
+    from lucene_plugin_spark.session import session_builder
     from lucene_plugin_spark.storage.catalog import Catalog
     from lucene_plugin_spark.storage.checker import check_index
 
-    spark = SparkSession.builder.appName("lps-check-index").getOrCreate()
+    spark = session_builder("lps-check-index").getOrCreate()
     rep = check_index(spark, Catalog(args.warehouse))
     print(json.dumps(rep))
     sys.exit(1 if rep["errors"] else 0)

@@ -5,7 +5,11 @@
         [--repo repo-00] [--k 255]
 
 Prints one JSON line per query with its latency, the number of Spark jobs
-it launched (counted in a job group of its own) and the top hits.
+it launched (counted in a job group of its own) and the top hits.  The
+session carries the library's ``SESSION_CONF``: PySpark's per-call
+call-site capture is off, so each query's ``ms`` no longer includes a
+stack walk and about 11 py4j round trips per DataFrame call, and reads
+lower than from a session with the PySpark default.
 """
 
 from __future__ import annotations
@@ -23,12 +27,11 @@ def main() -> None:
     ap.add_argument("--k", type=int, default=255)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from lucene_plugin_spark.query.executor import SearchEngine
+    from lucene_plugin_spark.session import session_builder
     from lucene_plugin_spark.storage.catalog import Catalog
 
-    spark = SparkSession.builder.appName("lps-query").getOrCreate()
+    spark = session_builder("lps-query").getOrCreate()
     engine = SearchEngine(spark, Catalog(args.warehouse))
     sc = spark.sparkContext
     for i, q in enumerate(args.query):
